@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every registered query once, full
   * materialization via the noop sink (a bare count() would let column
   * pruning skip the expensive expressions and flatter the numbers),
@@ -17,15 +15,8 @@ object Bench {
     // tier captures may too (BENCH_NOTES round-10 A/B)
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val base = SessionConf.withStateProvider(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
+    val base = SessionConf.builder(cpus, shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      // keep run artifacts (bucketed-join tables) out of the repo root
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     // SPARK_GRAFT_NO_EXT: attribution knob — run the identical bench
     // without GraftExtensions to separate extension cost from noise
     val spark = (if (sys.env.contains("SPARK_GRAFT_NO_EXT")) base

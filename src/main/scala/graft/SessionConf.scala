@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Process-wide session knobs shared by the gate mains and the test
-  * session.
+/** The one place graft sessions are configured: the gate mains (Bench,
+  * Verify) and the test session all start from [[builder]].
   *
   * `SPARK_GRAFT_STATE_PROVIDER=rocksdb` flips every stateful streaming
   * query in the process onto Spark's RocksDB state store provider —
@@ -21,8 +21,22 @@ object SessionConf {
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** The base every graft session shares: `local[cpus]`, the shuffle
+    * partition count, UTC session time, no UI, a throwaway warehouse dir
+    * (keeps run artifacts such as bucketed-join tables out of the
+    * working directory) and the config-gated state store provider.
+    * Callers add only what differs: app name, extensions, knobs. */
+  def builder(cpus: String, shufflePartitions: String): SparkSession.Builder =
+    withStateProvider(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
+
   /** Applies the config-gated state store provider to a session builder. */
-  def withStateProvider(b: SparkSession.Builder): SparkSession.Builder =
+  private def withStateProvider(b: SparkSession.Builder): SparkSession.Builder =
     sys.env.get("SPARK_GRAFT_STATE_PROVIDER") match {
       case Some("rocksdb") =>
         b.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)

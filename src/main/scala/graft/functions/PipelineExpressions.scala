@@ -82,7 +82,7 @@ case class LabelMarginScores(left: Expression, right: Expression)
           ArrayType(StructType(Array(
             StructField(_, IntegerType, _, _),
             StructField(_, ArrayType(LongType, _), _, _),
-            StructField(_, d: DecimalType, _, _))), _)) if d.scale == 0 =>
+            StructField(_, d: DecimalType, _, _))), _)) if d == DecimalType(38, 0) =>
       TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"label_margin_scores requires (ARRAY<BIGINT>, ARRAY<STRUCT<INT, ARRAY<BIGINT>, DECIMAL(38,0)>>), got $t")

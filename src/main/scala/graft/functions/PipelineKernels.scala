@@ -222,9 +222,13 @@ object PipelineKernels {
     * ONCE per vector instead of re-deriving both inside every pair:
     *   round(dot(a,b) / (l2norm(a) * l2norm(b)), 6)
     * replays round(cosine(a,b), 6) bit-for-bit (identical operands,
-    * identical op order), at one third the per-pair FLOPs. */
+    * identical op order), at one third the per-pair FLOPs. Unequal
+    * lengths fail: clamping to the shorter vector would silently break
+    * that identity, since [[l2norm]] sums the whole vector. */
   def dot(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
+    if (b.numElements() != n) throw new IllegalArgumentException(
+      s"graft_dot: vector lengths differ ($n vs ${b.numElements()})")
     var d = 0.0
     var i = 0
     while (i < n) {
@@ -254,8 +258,8 @@ object PipelineKernels {
     * two sub-cell member blocks (ARRAY<STRUCT<vec_id, vo, vn>>) and a
     * CONSERVATIVE threshold tauMinus (tau − 1e-6 < the exact
     * round-to-6 acceptance bound tau − 5e-7), emit one
-    * (id_a, id_b, qv, v, na, nb) struct per ordered pair with
-    * id_a < id_b and dot(vo_a, vo_b)/(vn_a·vn_b) >= tauMinus. The dot
+    * (id_a, id_b, c) struct per ordered pair with id_a < id_b and
+    * c = dot(vo_a, vo_b)/(vn_a·vn_b) >= tauMinus. The dot
     * accumulates left-to-right — the SAME IEEE ops the SQL verify
     * recomputes on the emitted rows — so the screen is a LOSSLESS
     * superset filter (a pair the exact round(...,6) >= tau predicate
@@ -298,7 +302,9 @@ object PipelineKernels {
       while (j < nb) {
         if (ida < bids(j)) {
           val bv = bvs(j)
-          val n = math.min(av.length, bv.length)
+          val n = av.length
+          if (bv.length != n) throw new IllegalArgumentException(
+            s"radius block screen: vector lengths differ ($n vs ${bv.length})")
           var d = 0.0
           var t = 0
           while (t < n) { d += av(t) * bv(t); t += 1 }

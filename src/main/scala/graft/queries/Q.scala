@@ -82,9 +82,18 @@ object Q {
     * deployment sizes this from target state bytes per partition
     * BEFORE the stream's first start — the partitioning is locked into
     * the checkpoint. Env, not a Spark conf: it must be fixed before
-    * any session exists, exactly like SPARK_GRAFT_CPUS. */
-  val statePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4").toInt
+    * any session exists, exactly like SPARK_GRAFT_CPUS. Lazy, so a
+    * malformed value fails on first use with the knob's name instead of
+    * as an ExceptionInInitializerError of Q. */
+  lazy val statePartitions: Int =
+    parseStatePartitions(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS"))
+
+  def parseStatePartitions(raw: Option[String]): Int = raw match {
+    case None => 4
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_STATE_PARTITIONS=$v — expected a positive integer"))
+  }
 
   def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")

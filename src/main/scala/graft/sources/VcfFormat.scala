@@ -159,8 +159,9 @@ object VcfFormat extends GraftFormat {
     val wantGts = split.needs("genotypes") || split.needs("format")
     val region = Regions.matcherFromOptions(options)
     // P.lines handles every split shape: index-chunk streams carry
-    // (0, MaxValue) bounds (pre-bounded by BgzfRangeStream), ranged and
-    // BGZF splits apply the line ownership protocol
+    // (0, MaxValue) split bounds (the chunk's end voff bounds the
+    // BgzfBlockStream itself), ranged and BGZF splits apply the line
+    // ownership protocol
     P.lines(split, in)
       .map(_._2)
       .filter(l => l.nonEmpty && !l.startsWith("#"))

@@ -203,63 +203,78 @@ object Bgzf {
           // from + got by the sequential reads above)
           val in = new java.io.SequenceInputStream(
             new java.io.ByteArrayInputStream(win, k, got - k), raw.stream)
-          return Some(new BgzfBlockStream(in, from + k, () => raw.in.close()))
+          return Some(new BgzfBlockStream(in, (from + k) << 16, () => raw.in.close()))
         }
       }
       k += 1
     }
     None
   }
+
+  /** Executor-side open of an index chunk [startVoff, endVoff): seeks to
+    * the chunk's first block and bounds the stream at endVoff, so a task
+    * reads ONLY the blocks its chunk covers — the I/O shape that makes
+    * indexed region queries sublinear at 100 TB. */
+  def openChunk(raw: FSDataStream, startVoff: Long, endVoff: Long): BgzfBlockStream = {
+    raw.seek(startVoff >>> 16)
+    new BgzfBlockStream(raw.stream, startVoff, () => raw.in.close(), endVoff)
+  }
 }
 
-/** Decompressed stream over consecutive BGZF blocks from a block boundary
-  * to file EOF, exposing virtual-offset positions (coff<<16|intra, the
-  * tabix addressing scheme). Bulk reads never cross a block boundary, so
+/** Decompressed stream over consecutive BGZF blocks from `startVoff` to
+  * `endVoff` (exclusive; unbounded by default, i.e. to file EOF),
+  * exposing virtual-offset positions (coff<<16|intra, the tabix
+  * addressing scheme). Bulk reads never cross a block boundary, so
   * callers can attribute every returned byte to its block — the
   * bookkeeping that lets split ownership be decided in compressed-file
   * coordinates. This is the executor-side engine of index-free parallel
   * scans over bgzipped files (the reference's single-producer Arrow
   * stream, exon arrow_table_function/module.cpp:36, is the serial design
-  * this replaces). */
-final class BgzfBlockStream(in: InputStream, startCoff: Long,
-                            closeUnderlying: () => Unit) extends InputStream {
-  private var blockCoff: Long = startCoff
-  private var nextCoff: Long = startCoff
+  * this replaces) and of index-chunk reads, where the end bound keeps a
+  * task from decompressing any block its chunk does not cover. */
+final class BgzfBlockStream(in: InputStream, startVoff: Long,
+                            closeUnderlying: () => Unit,
+                            endVoff: Long = Long.MaxValue) extends InputStream {
+  private var blockCoff: Long = startVoff >>> 16
+  private var nextCoff: Long = blockCoff
   private var block: Array[Byte] = _
+  /** bytes of `block` before endVoff (the whole block unless the end
+    * bound falls inside it) */
+  private var limit = 0
   private var pos = 0
   private var eof = false
   /** voff of the last byte returned; -1 before the first read. */
   var lastByteVoff: Long = -1L
 
-  // `in` must already be positioned at the block boundary `startCoff`
-  // (Bgzf.openSynced arranges this without a second source read)
+  // `in` must already be positioned at the block boundary
+  // `startVoff >>> 16` (Bgzf.openSynced / Bgzf.openChunk arrange this)
   loadBlock()
+  // an index chunk may begin mid-block
+  if (!eof && blockCoff == (startVoff >>> 16))
+    pos = math.min((startVoff & 0xffff).toInt, limit)
 
   private def loadBlock(): Unit = {
     blockCoff = nextCoff
+    // every byte of a block starting at or past the end bound is out of
+    // range: stop without reading it (an end voff with intra offset 0
+    // names the first block NOT covered)
+    if ((blockCoff << 16) >= endVoff) { eof = true; block = null; return }
     Bgzf.readBlock(in) match {
       case null => eof = true; block = null
       case (clen, data) =>
         nextCoff = blockCoff + clen
         block = data
+        limit =
+          if (blockCoff == (endVoff >>> 16)) math.min(data.length, (endVoff & 0xffff).toInt)
+          else data.length
         pos = 0
         if (data.length == 0) loadBlock() // skip EOF-marker/empty blocks
     }
   }
 
-  /** voff of the byte the next read returns; Long.MaxValue at EOF.
-    * CAUTION: at a block boundary this reports the offset of the next
-    * RAW block, which may be an empty/EOF-marker block that read() will
-    * skip — for exact attribution derive positions from `lastByteVoff`
-    * after reading instead (VoffLineReader.fill, BgzfWindow.ensure). */
-  def nextVoff: Long =
-    if (eof) Long.MaxValue
-    else if (pos >= block.length) nextCoff << 16
-    else (blockCoff << 16) | pos.toLong
-
   override def read(): Int = {
     if (eof) return -1
-    if (pos >= block.length) { loadBlock(); if (eof) return -1 }
+    if (pos >= limit) { loadBlock(); if (eof) return -1 }
     val b = block(pos) & 0xff
     lastByteVoff = (blockCoff << 16) | pos.toLong
     pos += 1
@@ -269,8 +284,8 @@ final class BgzfBlockStream(in: InputStream, startCoff: Long,
   override def read(b: Array[Byte], off: Int, len: Int): Int = {
     if (len == 0) return 0 // InputStream contract; must not touch state
     if (eof) return -1
-    if (pos >= block.length) { loadBlock(); if (eof) return -1 }
-    val n = math.min(len, block.length - pos)
+    if (pos >= limit) { loadBlock(); if (eof) return -1 }
+    val n = math.min(len, limit - pos)
     System.arraycopy(block, pos, b, off, n)
     pos += n
     lastByteVoff = (blockCoff << 16) | (pos - 1).toLong
@@ -477,74 +492,6 @@ object BgzfRecordSplit {
       }
     }
   }
-}
-
-/** An InputStream over the BGZF-decompressed bytes of [startVoff,
-  * endVoff): seeks the raw stream to the start block, skips into it, and
-  * reports EOF once the virtual offset passes endVoff. This is what lets
-  * an executor read ONLY the blocks its index chunk covers — the I/O
-  * shape that makes indexed region queries sublinear at 100 TB.
-  */
-final class BgzfRangeStream(raw: FSDataStream, startVoff: Long, endVoff: Long)
-    extends InputStream {
-
-  private var blockCoff: Long = startVoff >>> 16
-  private var block: Array[Byte] = _
-  private var pos: Int = 0
-  private var nextCoff: Long = blockCoff
-  private var eof = false
-
-  { // position + first block + intra-block skip
-    raw.seek(blockCoff)
-    loadBlock()
-    pos = (startVoff & 0xffff).toInt
-    if (block != null && pos > block.length) pos = block.length
-  }
-
-  private def loadBlock(): Unit = {
-    blockCoff = nextCoff
-    if (blockCoff >= (endVoff >>> 16) && (endVoff & 0xffff) == 0) { eof = true; block = null; return }
-    Bgzf.readBlock(raw.stream) match {
-      case null => eof = true; block = null
-      case (clen, data) =>
-        nextCoff = blockCoff + clen
-        block = data
-        pos = 0
-        if (data.length == 0) loadBlock() // EOF marker block
-    }
-  }
-
-  private def currentVoff: Long = (blockCoff << 16) | pos.toLong
-
-  override def read(): Int = {
-    if (eof || currentVoff >= endVoff) return -1
-    if (block == null || pos >= block.length) {
-      loadBlock()
-      if (eof || block == null) return -1
-      if (currentVoff >= endVoff) return -1
-    }
-    val b = block(pos) & 0xff
-    pos += 1
-    b
-  }
-
-  override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    if (eof || currentVoff >= endVoff) return -1
-    if (block == null || pos >= block.length) {
-      loadBlock()
-      if (eof || block == null) return -1
-    }
-    val limit =
-      if ((endVoff >>> 16) == blockCoff) math.min(block.length, (endVoff & 0xffff).toInt)
-      else block.length
-    if (pos >= limit) return -1
-    val n = math.min(len, limit - pos)
-    System.arraycopy(block, pos, b, off, n)
-    pos += n
-    n
-  }
-
-  override def close(): Unit = raw.in.close()
 }
 
 /** BGZF writer: payload chunked into <=64 KiB blocks, each a gzip member

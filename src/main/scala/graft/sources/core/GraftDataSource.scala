@@ -313,8 +313,8 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
                                     sconf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
 
-  /** The shared open path: (filtered full-schema value iterator, close).
-    * Both the row and the columnar reader are thin shapes over this. */
+  /** The open path: (filtered full-schema value iterator, close);
+    * `createReader` projects it to the required columns. */
   private def openIterator(p: GraftInputPartition): (Iterator[Array[Any]], () => Unit) = {
     // session Hadoop conf shipped from the driver: spark.hadoop.* (s3a
     // credentials, endpoints, ...) must reach executor-side FS access
@@ -349,7 +349,7 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
       }
     }
     val stream =
-      if (p.bgzfChunk) new BgzfRangeStream(raw, p.start, p.end) // index chunk, pre-decompressed
+      if (p.bgzfChunk) Bgzf.openChunk(raw, p.start, p.end) // index chunk, bounded at its end voff
       else if (ranged) raw.stream
       else Compression.wrap(raw.stream, codec)
     val split = GraftSplit(p.path, if (ranged) p.start else 0,
@@ -371,143 +371,6 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
       private var current: InternalRow = _
       override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
       override def get(): InternalRow = current
-      override def close(): Unit = closeFn()
-    }
-  }
-
-  /** Columnar batch reads (option columnar=true): the same parser fills
-    * OnHeapColumnVectors 4096 rows at a time instead of allocating one
-    * GenericInternalRow per record, and Spark's codegen'd
-    * ColumnarToRow (or a fully columnar consumer) takes over above —
-    * the Arrow-native shape of the reference's scan
-    * (arrow_reader.rs:153), opt-in while the measured win is profiled
-    * per format. Offered for flat atomic projections AND one level of
-    * nesting — array-of-atomic and struct-of-(atomic | array-of-atomic)
-    * — which covers the VCF record shape end-to-end (alt/genotypes
-    * arrays, the header-typed `info` struct); deeper nesting (maps,
-    * array-of-struct) falls back to the row path per partition. */
-  private def columnarEnabled: Boolean = options.exists { case (k, v) =>
-    k.equalsIgnoreCase("columnar") && v.equalsIgnoreCase("true") }
-
-  private def atomic(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.LongType |
-         org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.FloatType |
-         org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.BooleanType => true
-    case _ => false
-  }
-
-  private def columnarSupported(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types.{ArrayType, StructType}
-    dt match {
-      case t if atomic(t) => true
-      case ArrayType(et, _) => atomic(et)
-      case st: StructType => st.fields.forall(f => f.dataType match {
-        case t if atomic(t) => true
-        case ArrayType(et, _) => atomic(et)
-        case _ => false
-      })
-      case _ => false
-    }
-  }
-
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnarEnabled && required.fields.forall(f => columnarSupported(f.dataType))
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-    val (fullIter, closeFn) = openIterator(partition.asInstanceOf[GraftInputPartition])
-    val fieldIdx = required.fieldNames.map(full.fieldIndex)
-    import org.apache.spark.sql.execution.vectorized.WritableColumnVector
-    val capacity = 4096
-    val vectors = required.fields.map(f => new OnHeapColumnVector(capacity, f.dataType))
-    val batch = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]))
-
-    // positional write of an atomic at rowId n (top-level and struct
-    // children share the batch's row addressing)
-    def putAtomic(vec: WritableColumnVector, n: Int, dt: DataType, v: Any): Unit =
-      dt match {
-        case StringType =>
-          val b = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-          vec.putByteArray(n, b, 0, b.length): Unit
-        case LongType    => vec.putLong(n, v.asInstanceOf[Long])
-        case IntegerType => vec.putInt(n, v.asInstanceOf[Int])
-        case FloatType   => vec.putFloat(n, v.asInstanceOf[Float])
-        case DoubleType  => vec.putDouble(n, v.asInstanceOf[Double])
-        case BooleanType => vec.putBoolean(n, v.asInstanceOf[Boolean])
-        case other => throw new IllegalStateException(s"non-atomic $other in columnar path")
-      }
-
-    // array elements APPEND to the shared child vector (offset/length
-    // recorded per row); struct children write positionally at n
-    def putValue(vec: WritableColumnVector, n: Int, dt: DataType, v: Any): Unit =
-      dt match {
-        case st: StructType =>
-          if (v == null) {
-            vec.putNull(n)
-            // keep children positionally defined at n
-            var i = 0
-            while (i < st.fields.length) { vec.getChild(i).putNull(n); i += 1 }
-          } else {
-            vec.putNotNull(n)
-            val row = v.asInstanceOf[InternalRow]
-            var i = 0
-            while (i < st.fields.length) {
-              val f = st.fields(i)
-              putValue(vec.getChild(i), n, f.dataType,
-                if (row.isNullAt(i)) null else row.get(i, f.dataType))
-              i += 1
-            }
-          }
-        case ArrayType(et, _) =>
-          if (v == null) vec.putNull(n)
-          else {
-            val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-            val child = vec.arrayData()
-            val offset = child.getElementsAppended
-            var i = 0
-            while (i < arr.numElements()) {
-              if (arr.isNullAt(i)) child.appendNull()
-              else et match {
-                case StringType =>
-                  val b = arr.getUTF8String(i).getBytes
-                  child.appendByteArray(b, 0, b.length): Unit
-                case LongType    => child.appendLong(arr.getLong(i))
-                case IntegerType => child.appendInt(arr.getInt(i))
-                case FloatType   => child.appendFloat(arr.getFloat(i))
-                case DoubleType  => child.appendDouble(arr.getDouble(i))
-                case BooleanType => child.appendBoolean(arr.getBoolean(i))
-                case other => throw new IllegalStateException(
-                  s"non-atomic array element $other in columnar path")
-              }
-              i += 1
-            }
-            vec.putArray(n, offset, arr.numElements()): Unit
-          }
-        case t =>
-          if (v == null) vec.putNull(n) else putAtomic(vec, n, t, v)
-      }
-
-    new PartitionReader[ColumnarBatch] {
-      override def next(): Boolean = {
-        if (!fullIter.hasNext) return false
-        var n = 0
-        vectors.foreach(_.reset())
-        while (n < capacity && fullIter.hasNext) {
-          val vals = fullIter.next()
-          var c = 0
-          while (c < fieldIdx.length) {
-            putValue(vectors(c), n, required.fields(c).dataType, vals(fieldIdx(c)))
-            c += 1
-          }
-          n += 1
-        }
-        batch.setNumRows(n)
-        true
-      }
-      override def get(): ColumnarBatch = batch
       override def close(): Unit = closeFn()
     }
   }

@@ -118,7 +118,7 @@ final class VoffLineReader(bs: BgzfBlockStream, splitStart: Long, splitEnd: Long
     bufPos = 0
     // voff of buf(0) from the voff of the LAST byte read: accurate even
     // when empty/EOF-marker blocks sit between data blocks (concatenated
-    // BGZF files) — a pre-read nextVoff would report the marker's offset
+    // BGZF files) — a voff taken before the read would name the marker
     // while the bytes come from the block after it, shifting ownership
     if (bufLen > 0) bufVoff = bs.lastByteVoff - (bufLen - 1)
     bufLen > 0

@@ -101,4 +101,15 @@ class LabelMarginKernelSpec extends AnyFunSuite {
       (r.getInt(1), if (r.isNullAt(2)) null else r.getLong(2))).toMap
     assert(a == b, s"\nhof=$a\nkernel=$b")
   }
+
+  test("a DECIMAL(10,0) bb is refused at analysis, not misread by the kernel") {
+    // the kernel reads bb as DECIMAL(38,0); a narrower decimal has a
+    // different physical layout, so the type check must refuse it
+    graft.functions.GraftFunctions.registerAll(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("""SELECT graft_label_margin_scores(array(5L, 6L), array(named_struct(
+        'clabel', 1, 'slv', array(1L, 2L), 'bb', CAST(5 AS DECIMAL(10,0)))))""").collect()
+    }
+    assert(e.getMessage.contains("DECIMAL(38,0)"), e.getMessage)
+  }
 }

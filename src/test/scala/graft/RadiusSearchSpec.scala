@@ -18,6 +18,29 @@ class RadiusSearchSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.get
 
+  test("radius kernels refuse unequal vector lengths instead of clamping") {
+    // dot / (l2norm * l2norm) replays graft_cosine_sim only over equal
+    // lengths: l2norm sums the whole vector, so a clamped dot diverges
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.PipelineKernels
+    def vec(xs: Double*) = new GenericArrayData(xs.toArray[Any])
+    assert(PipelineKernels.dot(vec(1, 2), vec(3, 4)) == 11.0)
+    val e1 = intercept[IllegalArgumentException](PipelineKernels.dot(vec(1, 2, 3), vec(1, 2)))
+    assert(e1.getMessage.contains("lengths differ"), e1.getMessage)
+    def block(id: Long, v: Double*) = new GenericArrayData(
+      Array[Any](InternalRow(id, vec(v: _*), PipelineKernels.l2norm(vec(v: _*)))))
+    val e2 = intercept[IllegalArgumentException](
+      PipelineKernels.radiusBlockScreen(block(1L, 1, 0, 0), block(2L, 1, 0), -1.0))
+    assert(e2.getMessage.contains("lengths differ"), e2.getMessage)
+    // and loudly through SQL
+    graft.functions.GraftFunctions.registerAll(spark)
+    val e3 = intercept[Exception](
+      spark.sql("SELECT graft_dot(array(1d, 2d, 3d), array(1d, 2d))").collect())
+    assert(Iterator.iterate[Throwable](e3)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("lengths differ")), e3.toString)
+  }
+
   test("pruned radius search equals brute force on random clustered inputs") {
     import spark.implicits._
     graft.functions.GraftFunctions.registerAll(spark)

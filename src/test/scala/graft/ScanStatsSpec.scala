@@ -1,17 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.GraftIO
 
-/** Scan-level statistics + the columnar read path:
-  *   1. numRows estimates (sampled extrapolation) reach Catalyst and
-  *      land within sane bounds of the true count;
-  *   2. columnar=true returns IDENTICAL rows to the row path and the
-  *      physical plan actually carries a ColumnarToRow over the scan;
-  *   3. nested projections refuse the columnar path (fall back) rather
-  *      than corrupting structs.
+/** Scan-level statistics: numRows estimates (sampled extrapolation)
+  * reach Catalyst and land within sane bounds of the true count.
+  *
+  * Row-reader behaviours that sit next to these are pinned in other
+  * specs:
+  *   - split FASTA reads: SplitReadSpec "fasta: splits sync to '>'
+  *     record starts" and "fasta.gz (BGZF): block splits sync '>'
+  *     records across blocks";
+  *   - the VCF info/alt projection with null AF: BinaryFormatsSpec
+  *     "vcf: header-driven info struct, typed fields, flag semantics";
+  *   - GFF map columns: FormatScanSpec "gff scan incl. attributes map".
   */
 class ScanStatsSpec extends AnyFunSuite {
 
@@ -62,62 +65,5 @@ class ScanStatsSpec extends AnyFunSuite {
     assert(whole.isDefined && whole.get > 0)
     assert(sparse == whole, s"region estimate $sparse != full estimate $whole")
     assert(GraftIO.vcf_query(spark, path, "chrNOPE:1-2").count() == 0)
-  }
-
-  test("columnar=true: identical rows, batch-shaped plan, split-compatible") {
-    val path = writeBigFasta(5000)
-    val rows = GraftIO.read_fasta(spark, path, Map("maxsplitbytes" -> (256 * 1024).toString))
-    val cols = GraftIO.read_fasta(spark, path,
-      Map("columnar" -> "true", "maxsplitbytes" -> (256 * 1024).toString))
-    assert(rows.rdd.getNumPartitions > 1, "fixture too small to prove split-compat")
-    val a = rows.selectExpr("id", "length(sequence) AS n").orderBy("id")
-      .collect().map(_.toString).toSeq
-    val b = cols.selectExpr("id", "length(sequence) AS n").orderBy("id")
-      .collect().map(_.toString).toSeq
-    assert(a == b && a.size == 5000)
-    // a zero-column projection (count(*)) may skip the batch bridge;
-    // gate the plan shape on a real projection
-    val plan = cols.selectExpr("id", "sequence").queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"),
-      s"expected a ColumnarToRow over the scan, plan:\n$plan")
-    // filters still arrive (reader-side skip + Spark re-check)
-    val f = cols.where(col("id") === "seq42").selectExpr("id").collect()
-    assert(f.map(_.getString(0)).toSeq == Seq("seq42"))
-  }
-
-  test("nested projections fall back to the row path") {
-    val gff = GraftIO.read_gff(spark, s"$F/gff/test.gff", Map("columnar" -> "true"))
-    // attributes is a map column — must still answer, via rows
-    val n = gff.selectExpr("attributes['gene_id'][0] AS g").count()
-    assert(n == 2)
-  }
-
-  test("columnar VCF: info struct + alt array batch-read identically to the row path") {
-    // one level of nesting rides the batch path (the reference's Arrow
-    // scan is columnar end-to-end incl. the info struct — SURVEY §4):
-    // array-of-atomic (alt) and struct-of-(atomic|array) (info)
-    def flat(opts: Map[String, String]) =
-      GraftIO.read_vcf_file_records(spark, s"$F/vcf/test.vcf", opts)
-        .selectExpr("chrom", "pos", "ref",
-          "array_join(alt, ',') AS alts",
-          "info.indel", "info.dp", "array_join(transform(info.af, " +
-            "x -> cast(round(x * 1000) as string)), ',') AS af_milli")
-        .orderBy("chrom", "pos")
-        .collect().map(_.toString).toSeq
-    val rows = flat(Map.empty)
-    val cols = flat(Map("columnar" -> "true"))
-    assert(rows == cols && rows.size == 5, s"row=$rows\ncol=$cols")
-    // and the plan really is batch-shaped for the nested projection
-    val plan = GraftIO.read_vcf_file_records(spark, s"$F/vcf/test.vcf",
-        Map("columnar" -> "true"))
-      .selectExpr("pos", "alt", "info.dp")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"),
-      s"nested VCF projection did not ride the batch path:\n$plan")
-    // null handling through the batch: missing AF rows stay null
-    val af = GraftIO.read_vcf_file_records(spark, s"$F/vcf/test.vcf",
-        Map("columnar" -> "true"))
-      .selectExpr("info.af IS NULL AS no_af").collect().map(_.getBoolean(0))
-    assert(af.count(identity) == 3, af.mkString(","))
   }
 }

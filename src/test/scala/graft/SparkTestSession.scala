@@ -5,14 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run. */
 object SparkTestSession {
   lazy val get: SparkSession = {
-    val s = SessionConf.withStateProvider(SparkSession.builder()
-      .master("local[4]")
+    val s = SessionConf.builder("4", "4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false"))
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -655,4 +655,89 @@ class SplitReadSpec extends AnyFunSuite {
     assert(split.toSeq == whole.toSeq)
     assert(whole.length == 120 * 3)
   }
+
+  test("bounded BgzfBlockStream: every [startVoff, endVoff) reads exactly that slice of the inflated file") {
+    // the index-chunk contract: seek to startVoff's block, skip its
+    // intra offset, stop before the first byte at or past endVoff, skip
+    // empty/EOF-marker blocks; checked against Bgzf.inflateAll
+    import graft.sources.core.{Bgzf, BgzfBlockStream, GraftFiles}
+    val F = "src/test/resources/fixtures"
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val vcf = Files.readAllBytes(Paths.get(s"$F/vcf/indexed.vcf.gz"))
+    // two copies back to back: the first copy's EOF marker sits mid-file
+    val concat = Files.createTempDirectory("graft-voff").resolve("concat.vcf.gz")
+    Files.write(concat, vcf ++ vcf)
+    val rnd = new scala.util.Random(17)
+    for (path <- Seq(s"$F/vcf/indexed.vcf.gz", s"$F/bam/indexed.bam", concat.toString)) {
+      val bytes = Files.readAllBytes(Paths.get(path))
+      val all = Bgzf.inflateAll(bytes)
+      // (coff, isize, uncompressed start) per block, EOF markers included
+      val blocks = {
+        val in = new java.io.ByteArrayInputStream(bytes)
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
+        var coff = 0L
+        var u = 0L
+        var b = Bgzf.readBlock(in)
+        while (b != null) {
+          out += ((coff, b._2.length, u))
+          coff += b._1; u += b._2.length
+          b = Bgzf.readBlock(in)
+        }
+        out.toIndexedSeq
+      }
+      val fileEnd = bytes.length.toLong << 16
+      val uOf: Map[Long, Long] = blocks.map(b => b._1 -> b._3).toMap
+      def u(voff: Long): Long =
+        if (voff >= fileEnd) all.length else uOf(voff >>> 16) + (voff & 0xffff)
+      def randomVoff(): Long = {
+        val k = rnd.nextInt(blocks.length + 1)
+        if (k == blocks.length) fileEnd
+        else (blocks(k)._1 << 16) | rnd.nextInt(blocks(k)._2 + 1).toLong
+      }
+      def slice(s: Long, e: Long): Seq[Byte] = all.slice(u(s).toInt, u(e).toInt).toSeq
+      def readBulk(bs: BgzfBlockStream): Seq[Byte] = {
+        val out = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](1 + rnd.nextInt(300))
+        var n = bs.read(buf)
+        while (n >= 0) { out.write(buf, 0, n); n = bs.read(buf) }
+        bs.close()
+        out.toByteArray.toSeq
+      }
+      def readBytes(bs: BgzfBlockStream): Seq[Byte] = {
+        val out = new java.io.ByteArrayOutputStream()
+        var c = bs.read()
+        while (c >= 0) { out.write(c); c = bs.read() }
+        bs.close()
+        out.toByteArray.toSeq
+      }
+      def open(s: Long, e: Long) = Bgzf.openChunk(GraftFiles.open(path, conf), s, e)
+      val last = blocks.filter(_._2 > 0).last
+      val m = blocks.indexWhere(_._2 == 0) // first EOF marker
+      val afterMarker = if (m + 1 < blocks.length) (blocks(m + 1)._1 << 16) | 4L else fileEnd
+      val named = Seq(
+        "whole file" -> (0L, Long.MaxValue),
+        "intra-block start" -> ((blocks(3)._1 << 16) | 5L, fileEnd),
+        "end on a block boundary" -> ((blocks(1)._1 << 16) | 2L, blocks(4)._1 << 16),
+        "end inside the last block" -> (blocks(2)._1 << 16, (last._1 << 16) | (last._2 / 2).toLong),
+        "across the EOF marker" -> ((blocks(m - 1)._1 << 16) | 1L, afterMarker),
+        "empty: start == end" -> ((blocks(2)._1 << 16) | 7L, (blocks(2)._1 << 16) | 7L))
+      val random = (1 to 150).map { i =>
+        val (a, b) = (randomVoff(), randomVoff())
+        s"random $i" -> (math.min(a, b), math.max(a, b))
+      }
+      for ((name, (s, e)) <- named ++ random) {
+        val want = slice(s, e)
+        assert(readBulk(open(s, e)) == want, s"$path $name [$s, $e) bulk read")
+        assert(readBytes(open(s, e)) == want, s"$path $name [$s, $e) byte read")
+        // an end voff on a block boundary names a block the chunk does
+        // not cover: garbage there must never be touched
+        if ((e & 0xffff) == 0 && (e >>> 16) < bytes.length && (s >>> 16) < (e >>> 16)) {
+          val in = new java.io.ByteArrayInputStream(
+            bytes.slice((s >>> 16).toInt, (e >>> 16).toInt) ++ Array.fill[Byte](64)(0x5a))
+          assert(readBulk(new BgzfBlockStream(in, s, () => (), e)) == want,
+            s"$path $name [$s, $e) read past its end block boundary")
+        }
+      }
+    }
+  }
 }

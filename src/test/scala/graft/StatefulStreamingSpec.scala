@@ -29,6 +29,16 @@ class StatefulStreamingSpec extends AnyFunSuite {
         s"RocksDB provider set without the env gate: $conf")
   }
 
+  test("SPARK_GRAFT_STREAM_STATE_PARTITIONS: default 4, a malformed value names the knob") {
+    import graft.queries.Q
+    assert(Q.parseStatePartitions(None) == 4)
+    assert(Q.parseStatePartitions(Some("8")) == 8)
+    for (bad <- Seq("four", "", "0", "-2", "8 ")) {
+      val e = intercept[IllegalArgumentException](Q.parseStatePartitions(Some(bad)))
+      assert(e.getMessage.contains(s"SPARK_GRAFT_STREAM_STATE_PARTITIONS=$bad "), e.getMessage)
+    }
+  }
+
   test("stream-stream join purges both sides' buffered state at the watermark") {
     // THE scale property of stream_stream_join: with watermarks on both
     // sides and a time-bounded condition, Spark derives a state
