@@ -115,17 +115,45 @@ object Q {
     * a no-op, not an extra corpus shuffle. */
   def spread(df: DataFrame, key: String): DataFrame = {
     val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // Cheap positive exit first: a scan over >= target/2 FILES is at
-    // least that many partitions, and `inputFiles` reads the already-
-    // listed relation off the analyzed plan — no physical planning. The
-    // `df.rdd` probe (which plans the pipeline once and builds a
-    // throwaway lineage — fine for the staged single-file gate, a
-    // real planning tax on derived frames at scale) only runs when the
-    // file count alone cannot prove the scan wide: the one-big-
-    // splittable-file case still passes through it and stays a no-op.
-    if (df.inputFiles.length * 2 >= target) df
-    else if (df.rdd.getNumPartitions * 2 < target) df.repartition(target, col(key))
-    else df
+    // the `df.rdd` probe plans the pipeline once and builds a throwaway
+    // lineage: it runs only where the file listing cannot decide
+    val wide = scanPartitionBounds(df) match {
+      case Some((lo, _)) if lo * 2 >= target => true
+      case Some((_, hi)) if hi * 2 < target  => false
+      case _ => df.rdd.getNumPartitions * 2 >= target
+    }
+    if (wide) df else df.repartition(target, col(key))
+  }
+
+  /** Bounds on the partitions of a plain file scan (under projections
+    * and filters) from its file sizes: Spark cuts files into chunks of at
+    * most maxSplitBytes, charges each openCostInBytes, and packs them
+    * greedily, so a partition weighs at most maxSplit + open and two
+    * neighbours more than maxSplit. None for any other plan. */
+  private def scanPartitionBounds(df: DataFrame): Option[(Long, Long)] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+    def relation(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case l: LogicalRelation => Some(l.relation).collect {
+        case r: HadoopFsRelation if r.partitionSchema.isEmpty && r.bucketSpec.isEmpty => r }
+      case _: Project | _: Filter | _: SubqueryAlias => relation(p.children.head)
+      case _ => None
+    }
+    val s = df.sparkSession
+    val conf = s.sessionState.conf
+    relation(df.queryExecution.analyzed).filter(_ => conf.filesMaxPartitionNum.isEmpty).flatMap { r =>
+      val dirs = r.location.listFiles(Nil, Nil)
+      val files = dirs.flatMap(_.files).filter(_.getLen > 0)
+      val maxSplit = FilePartition.maxSplitBytes(s, dirs)
+      val open = conf.filesOpenCostInBytes
+      if (files.exists(f => f.getLen > maxSplit && !r.fileFormat.isSplitable(s, r.options, f.getPath))) None
+      else {
+        val chunks = files.map(f => (f.getLen + maxSplit - 1) / maxSplit).sum
+        val weight = files.map(_.getLen).sum + chunks * open
+        Some(((weight + maxSplit + open - 1) / (maxSplit + open),
+          math.min(chunks, 2 * weight / maxSplit + 1)))
+      }
+    }
   }
 
   /** Materialize-once + lineage-truncation barrier. Reliable checkpoint

@@ -18,23 +18,14 @@ private[sources] object P {
   /** Iterate lines of a split with the Hadoop boundary protocol.
     * Positions are raw byte offsets for plain streams and anchor voffs
     * for BGZF block splits — same protocol, different coordinates. */
-  def lines(split: GraftSplit, in: InputStream): Iterator[(Long, String)] = in match {
-    case bs: BgzfBlockStream => new VoffLineReader(bs, split.start, split.end)
-    case _ =>
-      new LineReader(in, split.start, if (split.end == Long.MaxValue) Long.MaxValue else split.end)
-  }
+  def lines(split: GraftSplit, in: InputStream): Iterator[(Long, String)] =
+    new LineReader(in, split.start, split.end).lines
 
   /** Like `lines` but without the end bound: record-structured formats
     * (FASTA/FASTQ) bound at record starts themselves and must read body
     * lines past the split end. */
-  def linesUnbounded(split: GraftSplit, in: InputStream): Iterator[(Long, String)] = in match {
-    case bs: BgzfBlockStream => new VoffLineReader(bs, split.start, Long.MaxValue)
-    case _ => new LineReader(in, split.start, Long.MaxValue)
-  }
-
-  /** Simple whole-stream lines (non-splittable formats). */
-  def allLines(in: InputStream): Iterator[String] =
-    new LineReader(in, 0, Long.MaxValue).map(_._2)
+  def linesUnbounded(split: GraftSplit, in: InputStream): Iterator[(Long, String)] =
+    new LineReader(in, split.start, Long.MaxValue).lines
 }
 
 /** FASTA: '>'-headed records, sequence over following lines.
@@ -97,41 +88,44 @@ object FastqFormat extends GraftFormat {
       StructField("sequence", StringType),
       StructField("quality_scores", StringType)))
 
+  /** Records are four non-empty lines: `@` header, a sequence line
+    * that does not start with `+`, a `+` separator and the quality
+    * line. A ranged split first syncs to the first line that begins
+    * that pattern (quality lines may themselves start with `@`); from
+    * there every header at or before the split end must start a whole
+    * record, so malformed or truncated input fails instead of ending
+    * the scan early. Fields are byte slices of the lines. */
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
                     options: Map[String, String]): Iterator[Array[Any]] = {
-    val it = P.linesUnbounded(split, in)
-      .filter(_._2.nonEmpty).buffered
-    val lookahead = scala.collection.mutable.Queue.empty[(Long, String)]
-    def peek(k: Int): Option[(Long, String)] = {
-      while (lookahead.length <= k && it.hasNext) lookahead += it.next()
-      if (lookahead.length > k) Some(lookahead(k)) else None
+    val cur = new LineReader(in, split.start, Long.MaxValue)
+    // non-empty lines as owned copies; fields are slices of them
+    val lines = Iterator.continually(cur.advance()).takeWhile(identity).filter(_ => cur.len > 0)
+      .map(_ => (cur.pos, java.util.Arrays.copyOfRange(cur.buf, cur.off, cur.off + cur.len)))
+    val ahead = scala.collection.mutable.Queue.empty[(Long, Array[Byte])]
+    def peek(k: Int): Array[Byte] = {
+      while (ahead.length <= k && lines.hasNext) ahead += lines.next()
+      if (ahead.length > k) ahead(k)._2 else null
     }
-    def pop(): (Long, String) = { peek(0); lookahead.dequeue() }
-    def atRecordStart: Boolean =
-      peek(0).exists(_._2.startsWith("@")) &&
-        !peek(1).exists(_._2.startsWith("+")) &&
-        peek(2).exists(_._2.startsWith("+"))
-
-    new Iterator[Array[Any]] {
-      private def sync(): Unit = {
-        if (split.start != 0) while (peek(0).isDefined && !atRecordStart) pop()
-      }
-      sync()
-      override def hasNext: Boolean =
-        peek(0).exists(_._1 <= split.end) && atRecordStart
-      override def next(): Array[Any] = {
-        val (_, header) = pop()
-        require(header.startsWith("@"), s"malformed FASTQ record header '$header'")
-        val body = header.substring(1)
-        val sp = body.indexOf(' ')
-        val (nm, desc) = if (sp < 0) (body, null) else (body.substring(0, sp), body.substring(sp + 1))
-        val seq = pop()._2
-        val plus = pop()._2
-        require(plus.startsWith("+"), s"malformed FASTQ separator '$plus'")
-        val qual = pop()._2
-        Array[Any](P.s(nm), P.s(desc), P.s(seq), P.s(qual))
-      }
+    def starts(k: Int, c: Char): Boolean = { val l = peek(k); l != null && l(0) == c }
+    if (split.start != 0)
+      while (peek(0) != null && !(starts(0, '@') && !starts(1, '+') && starts(2, '+'))) ahead.dequeue()
+    def record(): Array[Any] = {
+      val (at, h) = ahead.dequeue()
+      def bad(what: String): Nothing = throw new IllegalArgumentException(
+        s"malformed FASTQ record in ${split.path} at ${cur.where(at)}: $what")
+      def line(what: String): Array[Byte] =
+        if (peek(0) == null) bad(s"truncated record: no $what line") else ahead.dequeue()._2
+      if (h(0) != '@') bad("expected an '@' header line")
+      val seq = line("sequence")
+      if (seq(0) == '+') bad("a '+' line where the sequence belongs")
+      if (line("'+'")(0) != '+') bad("expected a '+' separator line")
+      val sp = h.indexOf(' '.toByte)
+      Array[Any](UTF8String.fromBytes(h, 1, (if (sp < 0) h.length else sp) - 1),
+        if (sp < 0) null else UTF8String.fromBytes(h, sp + 1, h.length - sp - 1),
+        UTF8String.fromBytes(seq), UTF8String.fromBytes(line("quality")))
     }
+    Iterator.continually(peek(0) != null && ahead.head._1 <= split.end).takeWhile(identity)
+      .map(_ => record())
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.io.InputStream
+import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -77,21 +78,32 @@ object VcfFormat extends GraftFormat {
     * FORMAT (or '.') are NULL. */
   def typedGenotypes(format: String, gts: Seq[String], st: StructType): GenericArrayData = {
     if (format == null) return new GenericArrayData(Array.empty[Any])
-    val keys = format.split(":").map(_.toLowerCase)
-    val idx = st.fields.map(f => keys.indexOf(f.name))
-    new GenericArrayData(gts.map { g =>
-      val parts = g.split(":", -1)
-      val vals = new Array[Any](st.fields.length)
-      var i = 0
-      while (i < st.fields.length) {
-        val j = idx(i)
-        vals(i) =
-          if (j < 0 || j >= parts.length || parts(j) == "." || parts(j).isEmpty) null
-          else typedInfoValue(parts(j), st.fields(i).dataType)
-        i += 1
-      }
-      new GenericInternalRow(vals): Any
-    }.toArray)
+    val cols = (format +: gts).map(_.getBytes(UTF_8))
+    val ends = cols.scanLeft(0)(_ + _.length).toArray
+    val sc = new Scratch
+    sc.cols.from = ends.init; sc.cols.to = ends.tail; sc.cols.n = cols.length
+    typedGenotypes(Array.concat(cols: _*), 0, st, nameBytes(st), sc)
+  }
+
+  /** [[typedGenotypes]] over one record's bytes cut into `sc.cols`:
+    * column `fmt` is FORMAT, the columns after it are the samples. */
+  private def typedGenotypes(b: Array[Byte], fmt: Int, st: StructType,
+                             names: Array[Array[Byte]], sc: Scratch): GenericArrayData = {
+    val cols = sc.cols
+    if (fmt >= cols.n) return new GenericArrayData(Array.empty[Any])
+    // struct field -> index of the first FORMAT key naming it
+    val keys = sc.keys.cut(b, cols.from(fmt), cols.to(fmt), ':')
+    val idx = names.map(name => (0 until keys.n).indexWhere(k => keyIs(b, keys.from(k), keys.to(k), name)))
+    val want = idx.foldLeft(-1)(math.max) + 1
+    new GenericArrayData(Array.tabulate[Any](cols.n - fmt - 1) { i =>
+      val c = fmt + 1 + i
+      val parts = sc.parts.cut(b, cols.from(c), cols.to(c), ':', want)
+      new GenericInternalRow(Array.tabulate[Any](idx.length) { f =>
+        val j = idx(f)
+        if (j < 0 || j >= parts.n || parts.to(j) == parts.from(j) || isDot(b, parts.from(j), parts.to(j))) null
+        else typedValue(b, parts.from(j), parts.to(j), st.fields(f).dataType, sc.items)
+      })
+    })
   }
 
   private def headerOf(path: Path, conf: Configuration,
@@ -100,7 +112,7 @@ object VcfFormat extends GraftFormat {
     val (codec, _) = Compression.of(path.toString, options)
     val in = Compression.wrap(raw.stream, codec)
     try {
-      val it = new LineReader(in, 0, Long.MaxValue).map(_._2)
+      val it = new LineReader(in, 0, Long.MaxValue).lines.map(_._2)
       it.takeWhile(_.startsWith("#")).toList
     } finally in.close()
   }
@@ -148,89 +160,158 @@ object VcfFormat extends GraftFormat {
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
                     options: Map[String, String]): Iterator[Array[Any]] = {
     val infoSchema = schema("info").dataType.asInstanceOf[StructType]
-    val withSamples = schema.fieldNames.contains("genotypes")
-    val hasTyped = schema.fieldNames.contains("genotypes_typed")
+    val width = schema.length
     // runtime pruning: skip the parse work for unprojected expensive
     // columns (rows stay full-schema shaped — ordinals must not shift)
     val typedStruct = schema.fields.find(_.name == "genotypes_typed")
       .map(_.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType])
       .filter(_ => split.needs("genotypes_typed"))
+    val typedNames = typedStruct.map(nameBytes).orNull
     val wantInfo = split.needs("info")
-    val wantGts = split.needs("genotypes") || split.needs("format")
+    val wantGts = width > 8 && (split.needs("genotypes") || split.needs("format"))
+    val cols = if (wantGts || typedNames != null) Int.MaxValue else 8 // columns to cut
     val region = Regions.matcherFromOptions(options)
-    // P.lines handles every split shape: index-chunk streams carry
+    val infoNames = nameBytes(infoSchema)
+    /** value range per info field of the current record; -1 = absent */
+    val infoAt, infoEnd = new Array[Int](infoNames.length)
+    val sc = new Scratch
+    // the cursor handles every split shape: index-chunk streams carry
     // (0, MaxValue) split bounds (the chunk's end voff bounds the
     // BgzfBlockStream itself), ranged and BGZF splits apply the line
     // ownership protocol
-    P.lines(split, in)
-      .map(_._2)
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map(parseRecord(_, infoSchema, withSamples, hasTyped, typedStruct, wantInfo, wantGts))
-      .filter { vals =>
-        region match {
-          case None => true
-          case Some(m) =>
-            vals(0) != null && vals(1) != null && m.containsPoint(
-              vals(0).asInstanceOf[UTF8String].toString, vals(1).asInstanceOf[Long])
-        }
-      }
-  }
+    val cur = new LineReader(in, split.start, split.end)
+    def where = s"VCF record in ${split.path} at ${cur.where(cur.pos)}"
 
-  private def typedInfoValue(raw: String, dt: DataType): Any = dt match {
-    case IntegerType => java.lang.Integer.parseInt(raw)
-    case FloatType   => java.lang.Float.parseFloat(raw)
-    case StringType  => UTF8String.fromString(raw)
-    case ArrayType(et, _) =>
-      new GenericArrayData(raw.split(",").map(v => typedInfoValue(v, et)).toArray[Any])
-    case _ => UTF8String.fromString(raw)
-  }
-
-  private def parseRecord(line: String, infoSchema: StructType,
-                          withSamples: Boolean, hasTyped: Boolean,
-                          typedStruct: Option[StructType],
-                          wantInfo: Boolean, wantGts: Boolean): Array[Any] = {
-    val c = line.split("\t", -1)
-    require(c.length >= 8, s"VCF record has ${c.length} columns")
-    val infoVals: Array[Any] =
-      if (!wantInfo) new Array[Any](infoSchema.length)
-      else {
-        val infoKv: Map[String, String] =
-          if (c(7) == "." || c(7).isEmpty) Map.empty
-          else c(7).split(";").iterator.map { seg =>
-            val eq = seg.indexOf('=')
-            if (eq < 0) (seg.toLowerCase, "") else (seg.substring(0, eq).toLowerCase, seg.substring(eq + 1))
-          }.toMap
-        infoSchema.fields.map[Any] { f =>
-          f.dataType match {
-            case BooleanType => if (infoKv.contains(f.name)) java.lang.Boolean.TRUE else null
-            case dt          => infoKv.get(f.name).map(typedInfoValue(_, dt)).orNull
+    /** One pass over the record's tab, `;`, `=`, `,` and `:` offsets;
+      * strings are UTF8String slices of `b` (a copy owned by the row). */
+    def record(b: Array[Byte]): Array[Any] = {
+      val c = sc.cols.cut(b, 0, b.length, '\t', cols)
+      require(c.n >= 8, s"$where has ${c.n} columns")
+      def str(k: Int) = slice(b, c.from(k), c.to(k))
+      def dot(k: Int) = isDot(b, c.from(k), c.to(k))
+      val vals = new Array[Any](width)
+      vals(0) = str(0)
+      vals(1) = parseNum(b, c.from(1), c.to(1), 18, java.lang.Long.parseLong)
+      vals(2) = if (dot(2)) null else str(2)
+      vals(3) = str(3)
+      vals(4) = if (dot(4)) new GenericArrayData(Array.empty[Any]) else commaList(b, c.from(4), c.to(4), StringType, sc.items)
+      vals(5) = if (dot(5)) null else typedValue(b, c.from(5), c.to(5), FloatType, null)
+      vals(6) = if (dot(6)) null else str(6)
+      // INFO `k=v;flag;…`: keys lowercased, the last duplicate wins
+      val info = new Array[Any](infoNames.length)
+      if (wantInfo && c.to(7) > c.from(7) && !dot(7)) {
+        java.util.Arrays.fill(infoAt, -1)
+        val segs = sc.segs.cut(b, c.from(7), c.to(7), ';')
+        var k = 0
+        while (k < segs.n) {
+          val (s, e) = (segs.from(k), segs.to(k))
+          val eq = next(b, s, e, '=')
+          var f = 0
+          while (f < info.length) {
+            if (keyIs(b, s, eq, infoNames(f))) { infoAt(f) = math.min(eq + 1, e); infoEnd(f) = e }
+            f += 1
           }
+          k += 1
+        }
+        var f = 0
+        while (f < info.length) {
+          if (infoAt(f) >= 0) info(f) = infoSchema(f).dataType match {
+            case BooleanType => java.lang.Boolean.TRUE
+            case dt => typedValue(b, infoAt(f), infoEnd(f), dt, sc.items)
+          }
+          f += 1
         }
       }
-    val base = Array[Any](
-      UTF8String.fromString(c(0)),
-      java.lang.Long.parseLong(c(1)),
-      if (c(2) == ".") null else UTF8String.fromString(c(2)),
-      UTF8String.fromString(c(3)),
-      if (c(4) == ".") new GenericArrayData(Array.empty[Any])
-      else new GenericArrayData(c(4).split(",").map(a => UTF8String.fromString(a): Any)),
-      if (c(5) == ".") null else java.lang.Float.parseFloat(c(5)),
-      if (c(6) == ".") null else UTF8String.fromString(c(6)),
-      new GenericInternalRow(infoVals))
-    if (!withSamples) base
-    else {
-      val withFmt = base ++ (
-        if (!wantGts) Array[Any](null, null)
-        else Array[Any](
-          if (c.length > 8) UTF8String.fromString(c(8)) else null,
-          new GenericArrayData(c.drop(9).map(g => UTF8String.fromString(g): Any))))
-      if (hasTyped) {
-        typedStruct match {
-          case None     => withFmt :+ null // pruned: slot kept, work skipped
-          case Some(st) =>
-            withFmt :+ typedGenotypes(if (c.length > 8) c(8) else null, c.drop(9).toSeq, st)
-        }
-      } else withFmt
+      vals(7) = new GenericInternalRow(info)
+      if (wantGts) {
+        vals(8) = if (c.n > 8) str(8) else null
+        vals(9) = new GenericArrayData(Array.tabulate[Any](math.max(0, c.n - 9))(i => str(9 + i)))
+      }
+      // typed pruned: slot kept (null), work skipped
+      if (typedNames != null) vals(10) = typedGenotypes(b, 8, typedStruct.get, typedNames, sc)
+      vals
     }
+
+    // lazy one record at a time: each stage reads the cursor before it advances
+    Iterator.continually(cur.advance()).takeWhile(identity)
+      .filter(_ => cur.len > 0 && cur.buf(cur.off) != '#')
+      .map { _ =>
+        try record(java.util.Arrays.copyOfRange(cur.buf, cur.off, cur.off + cur.len))
+        catch { case e: NumberFormatException => throw new IllegalArgumentException(s"$where: bad number (${e.getMessage})", e) }
+      }
+      .filter(vals => region.forall(m => vals(0) != null && vals(1) != null && m.containsPoint(
+        vals(0).asInstanceOf[UTF8String].toString, vals(1).asInstanceOf[Long])))
+  }
+
+  /** Offsets of a byte field cut at a separator, in the shape of
+    * `String.split(sep, -1)`: part k is b(from(k) until to(k)). */
+  private final class Cuts {
+    var from, to = new Array[Int](16)
+    var n = 0
+    def cut(b: Array[Byte], s: Int, e: Int, sep: Char, max: Int = Int.MaxValue): Cuts = {
+      n = 0
+      var p = s
+      while (n < max && p <= e) {
+        if (n == from.length) { from = java.util.Arrays.copyOf(from, 2 * n); to = java.util.Arrays.copyOf(to, 2 * n) }
+        from(n) = p; to(n) = next(b, p, e, sep)
+        p = to(n) + 1
+        n += 1
+      }
+      this
+    }
+  }
+
+  /** Reused cut buffers: columns, INFO segments, FORMAT keys, sample
+    * sub-fields and comma lists. */
+  private final class Scratch { val cols, segs, keys, parts, items = new Cuts }
+
+  private def nameBytes(st: StructType): Array[Array[Byte]] = st.fieldNames.map(_.getBytes(UTF_8))
+
+  /** Index of the first `c` in b(s until e), else e. */
+  private def next(b: Array[Byte], s: Int, e: Int, c: Char): Int = {
+    var i = s
+    while (i < e && b(i) != c) i += 1
+    i
+  }
+
+  private def isDot(b: Array[Byte], s: Int, e: Int): Boolean = e - s == 1 && b(s) == '.'
+
+  private def slice(b: Array[Byte], s: Int, e: Int): UTF8String = UTF8String.fromBytes(b, s, e - s)
+
+  /** Whether key b(s until e), lowercased as `String.toLowerCase` does,
+    * equals `name`: ASCII folds in place, other keys go through String. */
+  private def keyIs(b: Array[Byte], s: Int, e: Int, name: Array[Byte]): Boolean = {
+    var i = s
+    while (i < e && b(i) >= 0 && i - s < name.length &&
+      (if (b(i) >= 'A' && b(i) <= 'Z') b(i) + 32 else b(i)) == name(i - s)) i += 1
+    if (i == e) e - s == name.length
+    else b(i) < 0 && java.util.Arrays.equals(new String(b, s, e - s, UTF_8).toLowerCase.getBytes(UTF_8), name)
+  }
+
+  private def typedValue(b: Array[Byte], s: Int, e: Int, dt: DataType, items: Cuts): Any = dt match {
+    case IntegerType      => parseNum(b, s, e, 9, java.lang.Integer.parseInt(_)).toInt
+    case FloatType        => java.lang.Float.parseFloat(new String(b, s, e - s, UTF_8))
+    case ArrayType(et, _) => commaList(b, s, e, et, items)
+    case _                => slice(b, s, e)
+  }
+
+  /** `String.split(",")` semantics: a field without a comma is one
+    * element (even when empty); otherwise trailing empty elements drop. */
+  private def commaList(b: Array[Byte], s: Int, e: Int, et: DataType, items: Cuts): GenericArrayData = {
+    val c = items.cut(b, s, e, ',')
+    if (c.n > 1) while (c.n > 0 && c.to(c.n - 1) == c.from(c.n - 1)) c.n -= 1
+    new GenericArrayData(Array.tabulate[Any](c.n)(k => typedValue(b, c.from(k), c.to(k), et, null)))
+  }
+
+  /** A decimal of at most `digits` ASCII digits, optionally signed;
+    * anything else goes to the JDK parser, which decides (and words)
+    * every other case exactly as before. */
+  private def parseNum(b: Array[Byte], s: Int, e: Int, digits: Int, jdk: String => Long): Long = {
+    val sign = if (s < e && (b(s) == '-' || b(s) == '+')) 1 else 0
+    var i = s + sign
+    var v = 0L
+    if (e - i <= digits) while (i < e && b(i) >= '0' && b(i) <= '9') { v = v * 10 + (b(i) - '0'); i += 1 }
+    if (i == e && e > s + sign) (if (b(s) == '-') -v else v)
+    else jdk(new String(b, s, e - s, UTF_8))
   }
 }

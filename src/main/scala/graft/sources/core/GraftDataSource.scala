@@ -358,19 +358,21 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
     (format.read(split, full, stream, options).filter(pred), () => stream.close())
   }
 
+  /** One row per partition, refilled per record: Spark plans a
+    * projection to UnsafeRow above every row-based DSv2 scan, so no
+    * consumer holds a returned row across `next()`. */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val (fullIter, closeFn) = openIterator(partition.asInstanceOf[GraftInputPartition])
     val fieldIdx = required.fieldNames.map(full.fieldIndex)
-    val it = fullIter.map { vals =>
-      val out = new Array[Any](fieldIdx.length)
-      var i = 0
-      while (i < fieldIdx.length) { out(i) = vals(fieldIdx(i)); i += 1 }
-      new GenericInternalRow(out): InternalRow
-    }
+    val row = new GenericInternalRow(fieldIdx.length)
     new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
-      override def get(): InternalRow = current
+      override def next(): Boolean = fullIter.hasNext && {
+        val vals = fullIter.next()
+        var i = 0
+        while (i < fieldIdx.length) { row.update(i, vals(fieldIdx(i))); i += 1 }
+        true
+      }
+      override def get(): InternalRow = row
       override def close(): Unit = closeFn()
     }
   }

@@ -1,160 +1,135 @@
 package graft.sources.core
 
 import java.io.InputStream
+import java.nio.charset.StandardCharsets.UTF_8
 
-/** Byte-offset-tracking line iterator implementing the Hadoop
-  * LineRecordReader split protocol:
+/** Line cursor over one split, implementing the Hadoop LineRecordReader
+  * split protocol:
   *
   *  - a split [start, end) with start != 0 discards the first (possibly
   *    partial) line it sees;
-  *  - lines whose start offset is <= end are produced (the straddling
-  *    line at the boundary belongs to the earlier split; the later split
+  *  - lines whose position is <= end are produced (the straddling line
+  *    at the boundary belongs to the earlier split; the later split
   *    discards it as its first line).
   *
-  * This is what makes uncompressed line formats (GFF/GTF/BED/SAM/HMM)
-  * readable with one task per ~128 MB instead of one per file — the
-  * property that keeps a single 1 TB file from serializing a cluster.
+  * This is what makes line formats readable with one task per ~128 MB
+  * instead of one per file — the property that keeps a single 1 TB file
+  * from serializing a cluster.
   *
-  * Offsets are in the raw (uncompressed) byte stream. Handles \n and
-  * \r\n; tolerates a missing trailing newline.
+  * Positions. Over a plain stream (positioned at `splitStart`) a line's
+  * position is the raw byte offset of its first byte. Over a
+  * [[BgzfBlockStream]] it is the line's anchor: the voff of the byte
+  * immediately BEFORE its first byte (its predecessor's terminating
+  * newline; 0 for the stream's first line), and `splitStart`/`splitEnd`
+  * are voffs — (S<<16) and (E<<16)-1 for a compressed byte range [S, E),
+  * so `anchor <= (E<<16)-1` iff the anchor's block starts before E.
+  * Ownership by anchor is what makes block-boundary splits airtight: a
+  * task that syncs mid-file cannot tell whether its first block begins
+  * mid-line or exactly at a line start, so it always discards its first
+  * line; anchoring a boundary-starting line to the PREVIOUS block routes
+  * it to the earlier task, which reads past its own end until anchors
+  * leave its range. Both positions are taken when a line's terminator is
+  * consumed, so they stay exact across refills, block boundaries and
+  * buffer compaction.
+  *
+  * Lines. The current line is `buf(off until off + len)`, valid until
+  * the next [[advance]]; the scan finds each `\n` in bulk over one
+  * buffer, compacting a line that runs off the end to the buffer front
+  * (and growing the buffer for a line longer than it). Every `\r` is
+  * dropped, not only a trailing one; a missing final newline is
+  * tolerated. Bytes pass through undecoded: invalid UTF-8 reaches a
+  * byte-native parser as-is (as in Spark's own text source), while the
+  * [[string]] view decodes it with U+FFFD replacement.
   */
-final class LineReader(in: InputStream, splitStart: Long, splitEnd: Long)
-    extends Iterator[(Long, String)] {
+final class LineReader(in: InputStream, splitStart: Long, splitEnd: Long) {
+  private val bgzf: BgzfBlockStream = in match { case bs: BgzfBlockStream => bs; case _ => null }
+  var buf = new Array[Byte](1 << 16)
+  var off, len = 0
+  /** Position of the current line (byte offset or anchor voff). */
+  var pos = 0L
 
-  private val buf = new Array[Byte](1 << 16)
-  private var bufLen = 0
-  private var bufPos = 0
-  /** Absolute offset of buf(bufPos). */
-  private var pos: Long = splitStart
-  private var nextLine: (Long, String) = _
-  private var done = false
-  /** per-line byte accumulator, decoded as UTF-8 once per line (a
-    * per-byte toChar would mangle multi-byte sequences); declared before
-    * the constructor statements below that already read lines. */
-  private val lineBuf = new java.io.ByteArrayOutputStream(120)
+  /** valid bytes in buf / next unscanned byte */
+  private var lim, scan = 0
+  /** buf index and position of the latest chunk's first byte: a chunk
+    * read never crosses a BGZF block boundary, so positions within it
+    * are exact arithmetic */
+  private var chunkAt = 0
+  private var chunkPos = 0L
+  /** plain streams: offset of the next unread byte */
+  private var streamPos = splitStart
+  /** position the next line takes */
+  private var anchor = if (bgzf == null) splitStart else 0L
+  private var eof, done = false
 
-  if (splitStart != 0) readLine() // discard partial first line
-  advance()
+  if (splitStart != 0) readLine() // discard the first (possibly partial) line
 
-  private def fill(): Boolean = {
-    bufLen = in.read(buf)
-    bufPos = 0
-    bufLen > 0
+  /** Move to the next line owned by the split; false at its end. */
+  def advance(): Boolean = {
+    if (!done && (anchor > splitEnd || !readLine())) done = true
+    !done
   }
 
-  /** Read one line starting at `pos`; null at EOF. */
-  private def readLine(): String = {
-    if (bufPos >= bufLen && !fill()) return null
-    lineBuf.reset()
+  /** The current line decoded as UTF-8. */
+  def string: String = new String(buf, off, len, UTF_8)
+
+  /** A line position named for error messages. */
+  def where(p: Long): String = if (bgzf == null) s"byte offset $p" else s"voff $p"
+
+  /** `(position, string)` per line, for the line formats that parse text. */
+  def lines: Iterator[(Long, String)] =
+    Iterator.continually(advance()).takeWhile(identity).map(_ => (pos, string))
+
+  /** Read more bytes after `lim`, first moving the bytes from `keep` on
+    * to the buffer front; false at EOF. */
+  private def fill(keep: Int): Boolean = {
+    if (keep > 0) {
+      System.arraycopy(buf, keep, buf, 0, lim - keep)
+      lim -= keep; scan -= keep; chunkAt -= keep
+    }
+    if (eof) return false
+    if (lim == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+    val n = in.read(buf, lim, buf.length - lim)
+    if (n <= 0) { eof = true; return false }
+    chunkAt = lim
+    // the chunk's voff from the voff of its LAST byte: exact even when
+    // empty/EOF-marker blocks sit between data blocks
+    chunkPos = if (bgzf == null) streamPos else bgzf.lastByteVoff - (n - 1)
+    streamPos += n
+    lim += n
+    true
+  }
+
+  /** Consume one line into (off, len, pos); false at EOF. */
+  private def readLine(): Boolean = {
+    if (scan >= lim && !fill(scan)) return false
+    var start = scan
+    var i = scan
+    var cr = false
     var found = false
     while (!found) {
-      if (bufPos >= bufLen && !fill()) {
-        found = true // EOF terminates the final line
-      } else {
-        val b = buf(bufPos)
-        bufPos += 1
-        pos += 1
-        if (b == '\n') found = true
-        else if (b != '\r') lineBuf.write(b)
+      while (i < lim && buf(i) != '\n') { if (buf(i) == '\r') cr = true; i += 1 }
+      if (i < lim) found = true
+      else {
+        val keep = start
+        scan = i
+        if (!fill(keep)) found = true // EOF terminates the final line
+        start -= keep; i = scan
       }
     }
-    lineBuf.toString("UTF-8")
-  }
-
-  private def advance(): Unit = {
-    if (pos > splitEnd) { done = true; nextLine = null; return }
-    val lineStart = pos
-    val line = readLine()
-    if (line == null) { done = true; nextLine = null }
-    else nextLine = (lineStart, line)
-  }
-
-  override def hasNext: Boolean = !done
-  override def next(): (Long, String) = {
-    val r = nextLine
-    advance()
-    r
-  }
-}
-
-/** LineReader's protocol over a BGZF-compressed split, with positions in
-  * virtual-offset (compressed-file) coordinates.
-  *
-  * Reported position of a line = the voff of the byte immediately BEFORE
-  * its first byte (its predecessor line's terminating newline) — the
-  * "anchor". Ownership by anchor is what makes block-boundary splits
-  * airtight: a task that syncs mid-file cannot tell whether its first
-  * block begins mid-line or exactly at a line start, so it must always
-  * discard its first line; anchoring a boundary-starting line to the
-  * PREVIOUS block (where its predecessor's newline lives) routes it to
-  * the earlier task, which reads past its own end until anchors leave its
-  * range — exactly the Hadoop LineRecordReader contract, so all existing
-  * format sync logic (FASTA '>'-headers, FASTQ structural sync) works
-  * unchanged against these positions.
-  *
-  * splitStart/splitEnd are voffs: (S<<16) and (E<<16)-1 for a compressed
-  * byte range [S, E) — `anchor <= (E<<16)-1` iff the anchor's block
-  * starts before E. */
-final class VoffLineReader(bs: BgzfBlockStream, splitStart: Long, splitEnd: Long)
-    extends Iterator[(Long, String)] {
-
-  private val buf = new Array[Byte](1 << 16)
-  private var bufLen = 0
-  private var bufPos = 0
-  /** voff of buf(0) for the current chunk; chunk refills never cross a
-    * BGZF block boundary, so voff arithmetic within a chunk is exact. */
-  private var bufVoff = 0L
-  /** voff of the last consumed byte; -1 before any byte. */
-  private var lastVoff: Long = -1L
-  private var nextLine: (Long, String) = _
-  private var done = false
-  private val lineBuf = new java.io.ByteArrayOutputStream(120)
-
-  if (splitStart != 0) readLine() // discard first (possibly partial) line
-  advance()
-
-  private def fill(): Boolean = {
-    bufLen = bs.read(buf)
-    bufPos = 0
-    // voff of buf(0) from the voff of the LAST byte read: accurate even
-    // when empty/EOF-marker blocks sit between data blocks (concatenated
-    // BGZF files) — a voff taken before the read would name the marker
-    // while the bytes come from the block after it, shifting ownership
-    if (bufLen > 0) bufVoff = bs.lastByteVoff - (bufLen - 1)
-    bufLen > 0
-  }
-
-  /** Read one line; returns its anchor voff, or -1 at EOF. */
-  private def readLine(): Long = {
-    if (bufPos >= bufLen && !fill()) return -1
-    val anchor = if (lastVoff < 0) 0L else lastVoff
-    lineBuf.reset()
-    var found = false
-    while (!found) {
-      if (bufPos >= bufLen && !fill()) {
-        found = true // EOF terminates the final line
-      } else {
-        val b = buf(bufPos)
-        lastVoff = bufVoff + bufPos
-        bufPos += 1
-        if (b == '\n') found = true
-        else if (b != '\r') lineBuf.write(b)
-      }
+    // i is the terminator (or lim at EOF); its byte is the last consumed
+    val last = if (i < lim) i else i - 1
+    val lastPos = chunkPos + (last - chunkAt)
+    pos = anchor
+    anchor = if (bgzf == null) lastPos + 1 else lastPos
+    scan = math.min(i + 1, lim)
+    off = start
+    len = i - start
+    if (cr) {
+      var w = start
+      var r = start
+      while (r < i) { if (buf(r) != '\r') { buf(w) = buf(r); w += 1 }; r += 1 }
+      len = w - start
     }
-    anchor
-  }
-
-  private def advance(): Unit = {
-    if ((if (lastVoff < 0) 0L else lastVoff) > splitEnd) { done = true; nextLine = null; return }
-    val anchor = readLine()
-    if (anchor < 0) { done = true; nextLine = null }
-    else nextLine = (anchor, lineBuf.toString("UTF-8"))
-  }
-
-  override def hasNext: Boolean = !done
-  override def next(): (Long, String) = {
-    val r = nextLine
-    advance()
-    r
+    true
   }
 }

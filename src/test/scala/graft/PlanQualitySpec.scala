@@ -903,6 +903,23 @@ class PlanQualitySpec extends AnyFunSuite {
       s"expected $target partitions, got ${sprd.rdd.getNumPartitions}")
   }
 
+  test("Q.spread: many small files that scan as one partition still get spread") {
+    // Spark packs small files into few partitions (maxPartitionBytes +
+    // openCostInBytes), so a file count >= half the target proves nothing
+    val dir = java.nio.file.Files.createTempDirectory("spread-small").toString
+    spark.range(64).toDF("doc_id").repartition(8).write.mode("overwrite").parquet(dir)
+    val k = "spark.sql.files.minPartitionNum"
+    spark.conf.set(k, "1")
+    try graft.queries.Q.withShufflePartitions(spark, 16) {
+      val narrow = spark.read.parquet(dir)
+      assert(narrow.inputFiles.length * 2 >= 16, "fixture needs >= target/2 files")
+      assert(narrow.rdd.getNumPartitions <= 2, "fixture should scan as 1-2 partitions")
+      val sprd = graft.queries.Q.spread(narrow, "doc_id")
+      assert(sprd.rdd.getNumPartitions == 16,
+        s"expected 16 partitions, got ${sprd.rdd.getNumPartitions}")
+    } finally spark.conf.unset(k)
+  }
+
   test("rel_pareto_share / rel_discount_lift: rank windows and baselines stay off the corpus") {
     // pareto's global rank runs on the per-customer AGGREGATE frame
     // (partial_sum below the shuffle proves the corpus collapsed

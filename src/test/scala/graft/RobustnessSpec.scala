@@ -256,4 +256,75 @@ class RobustnessSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("partitions"))
   }
+
+  // ---- malformed text records fail naming the file and line position ----
+
+  /** A format's rows read straight from a one-split scan of `content`. */
+  private def scan(fmt: graft.sources.core.GraftFormat, name: String,
+                   content: Array[Byte]): (String, Seq[Seq[Any]]) = {
+    import graft.sources.core.GraftSplit
+    val p = Files.createTempDirectory("graft-malformed").resolve(name)
+    Files.write(p, content)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val schema = fmt.schema(Seq(new org.apache.hadoop.fs.Path(p.toString)), conf, Map.empty)
+    val in = Files.newInputStream(p)
+    try (p.toString, fmt.read(GraftSplit(p.toString, 0, Long.MaxValue, content.length, conf = conf),
+      schema, in, Map.empty).map(_.toSeq).toList)
+    finally in.close()
+  }
+
+  private def malformed(fmt: graft.sources.core.GraftFormat, name: String, content: String,
+                        offset: Long): String = {
+    val e = intercept[IllegalArgumentException](scan(fmt, name, content.getBytes("UTF-8")))
+    assert(e.getMessage.contains(name) && e.getMessage.contains(s"byte offset $offset"),
+      s"error does not name the file and line: ${e.getMessage}")
+    e.getMessage
+  }
+
+  private val fq = "@a\nAC\n+\nII\n" // 11 bytes
+
+  test("fastq: a record without its '+' line mid-file fails, not a silent end of scan") {
+    malformed(graft.sources.FastqFormat, "mid.fastq", fq + "@b\nAC\nII\n" + fq + fq, 11)
+  }
+
+  test("fastq: a final record of header and sequence only fails, not a silent drop") {
+    malformed(graft.sources.FastqFormat, "tail2.fastq", fq + "@b\nAC\n", 11)
+  }
+
+  test("fastq: a final record missing only its quality line fails with a named error") {
+    malformed(graft.sources.FastqFormat, "tail3.fastq", fq + "@b\nAC\n+\n", 11)
+  }
+
+  private val vcfHead = "##fileformat=VCFv4.2\n" +
+    "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"d\">\n" +
+    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+  private val vcfOk = "1\t5\t.\tA\tG\t9\tPASS\tDP=3\n"
+  private val vcfAt = (vcfHead + vcfOk).length.toLong
+
+  test("vcf: a record with too few columns names the file and position") {
+    assert(malformed(graft.sources.VcfFormat, "cols.vcf",
+      vcfHead + vcfOk + "1\t6\t.\tA\n", vcfAt).contains("has 4 columns"))
+  }
+
+  test("vcf: a bad pos names the file and position") {
+    malformed(graft.sources.VcfFormat, "pos.vcf", vcfHead + vcfOk + "1\t6x\t.\tA\tG\t9\tPASS\tDP=3\n", vcfAt)
+  }
+
+  test("vcf: a bad Integer INFO value names the file and position") {
+    malformed(graft.sources.VcfFormat, "int.vcf", vcfHead + vcfOk + "1\t6\t.\tA\tG\t9\tPASS\tDP=x\n", vcfAt)
+  }
+
+  test("vcf: a bad Float qual names the file and position") {
+    malformed(graft.sources.VcfFormat, "float.vcf", vcfHead + vcfOk + "1\t6\t.\tA\tG\tq9\tPASS\tDP=3\n", vcfAt)
+  }
+
+  test("text fields pass invalid UTF-8 through as raw bytes; valid UTF-8 is unchanged") {
+    val bad = Array(0xff, 0xfe).map(_.toByte)
+    val content = "@r1 d\u00e9".getBytes("UTF-8") ++ bad ++ "\nAC\n+\nII\n".getBytes("UTF-8")
+    val (_, rows) = scan(graft.sources.FastqFormat, "raw.fastq", content)
+    assert(rows.map(_.map(v => if (v == null) null else v.toString)) == Seq(
+      Seq("r1", new String("d\u00e9".getBytes("UTF-8") ++ bad, "UTF-8"), "AC", "II")))
+    assert(rows.head(1).asInstanceOf[UTF8String].getBytes.toSeq ==
+      ("d\u00e9".getBytes("UTF-8") ++ bad).toSeq, "description bytes were re-encoded")
+  }
 }

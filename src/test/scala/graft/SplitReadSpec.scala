@@ -740,4 +740,179 @@ class SplitReadSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("line cursor == a per-byte model of the old readers over plain and BGZF splits and chunks") {
+    import java.io.{ByteArrayInputStream, InputStream}
+    import scala.collection.mutable.ArrayBuffer
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.sources.core.{Bgzf, BgzfBlockStream, BgzfOutputStream, GraftFiles, LineReader}
+    type Lines = Seq[(Long, Seq[Byte])]
+
+    // the old readers, byte by byte: '\n' ends a line, every '\r' is
+    // dropped, EOF ends the last line; a split not at 0 discards its first
+    // line and a line is owned while its position is <= end
+    def modelPlain(b: Array[Byte], start: Int, end: Long): Lines = {
+      var p = start
+      def line(): Option[Seq[Byte]] =
+        if (p >= b.length) None
+        else {
+          val out = ArrayBuffer.empty[Byte]
+          while (p < b.length && b(p) != '\n') { if (b(p) != '\r') out += b(p); p += 1 }
+          p += 1
+          Some(out.toSeq)
+        }
+      if (start != 0) line()
+      val res = ArrayBuffer.empty[(Long, Seq[Byte])]
+      var more = true
+      while (more && p <= end) {
+        val at = p.toLong
+        line() match { case Some(l) => res += ((at, l)); case None => more = false }
+      }
+      res.toSeq
+    }
+    // over (voff, byte) pairs: a line's position is the voff of the byte
+    // consumed before it (0 for the first)
+    def modelVoff(bs: BgzfBlockStream, start: Long, end: Long): Lines = {
+      val bytes = ArrayBuffer.empty[(Long, Byte)]
+      var c = bs.read()
+      while (c >= 0) { bytes += ((bs.lastByteVoff, c.toByte)); c = bs.read() }
+      bs.close()
+      var p = 0
+      var last = -1L
+      def anchor = math.max(last, 0L)
+      def line(): Option[(Long, Seq[Byte])] =
+        if (p >= bytes.length) None
+        else {
+          val a = anchor
+          val out = ArrayBuffer.empty[Byte]
+          var eol = false
+          while (!eol && p < bytes.length) {
+            val (v, x) = bytes(p)
+            last = v; p += 1
+            if (x == '\n') eol = true else if (x != '\r') out += x
+          }
+          Some((a, out.toSeq))
+        }
+      if (start != 0) line()
+      val res = ArrayBuffer.empty[(Long, Seq[Byte])]
+      var more = true
+      while (more && anchor <= end) line() match { case Some(l) => res += l; case None => more = false }
+      res.toSeq
+    }
+    def cursor(in: InputStream, start: Long, end: Long): Lines = {
+      val c = new LineReader(in, start, end)
+      val res = ArrayBuffer.empty[(Long, Seq[Byte])]
+      while (c.advance())
+        res += ((c.pos, java.util.Arrays.copyOfRange(c.buf, c.off, c.off + c.len).toSeq))
+      in.close()
+      res.toSeq
+    }
+    // refills of random size: multi-byte characters and CRLF pairs get cut
+    final class Trickle(b: Array[Byte], from: Int, rnd: scala.util.Random) extends InputStream {
+      private var p = from
+      override def read(): Int = if (p >= b.length) -1 else { p += 1; b(p - 1) & 0xff }
+      override def read(out: Array[Byte], off: Int, len: Int): Int =
+        if (p >= b.length) -1
+        else {
+          val n = math.min(math.min(len, b.length - p), 1 + rnd.nextInt(if (rnd.nextBoolean()) 8 else 40000))
+          System.arraycopy(b, p, out, off, n)
+          p += n
+          n
+        }
+    }
+    def cuts(rnd: scala.util.Random, len: Int): Seq[Int] =
+      (0 +: Seq.fill(rnd.nextInt(6))(rnd.nextInt(len + 1)) :+ len).distinct.sorted
+
+    val piece = Gen.oneOf("a", "ACGT", "\t", "\r", "\u00e9", "\u6e2c", "\ud834\udd1e", "#", " ")
+    val lineGen = Gen.frequency(1 -> Gen.const(""),
+      6 -> Gen.choose(0, 30).flatMap(Gen.listOfN(_, piece)).map(_.mkString))
+    val fileGen = for {
+      lines <- Gen.choose(0, 40).flatMap(Gen.listOfN(_, lineGen))
+      long <- Gen.prob(0.3) // > 64 KiB: spans refills and grows the buffer
+      at <- Gen.choose(0, lines.length)
+      crlf <- Gen.prob(0.3)
+      trailing <- Gen.prob(0.7)
+    } yield {
+      val ls = if (long) lines.patch(at, Seq("L" * 70000 + "\u00e9"), 0) else lines
+      val eol = if (crlf) "\r\n" else "\n"
+      (ls.mkString(eol) + (if (trailing && ls.nonEmpty) eol else "")).getBytes("UTF-8")
+    }
+    val dir = Files.createTempDirectory("graft-cursor")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    for (i <- 1 to 40) {
+      val text = fileGen.pureApply(Gen.Parameters.default, Seed(i.toLong))
+      val rnd = new scala.util.Random(i)
+      val ctx = s"case $i (${text.length} bytes)"
+
+      // plain: random [start, end) byte splits
+      val whole = cursor(new Trickle(text, 0, rnd), 0, Long.MaxValue)
+      assert(whole == modelPlain(text, 0, Long.MaxValue), s"$ctx plain whole file")
+      val plainCuts = cuts(rnd, text.length)
+      val plainSplits = plainCuts.zip(plainCuts.tail).map { case (s, e) =>
+        val got = cursor(new Trickle(text, s, rnd), s, e)
+        assert(got == modelPlain(text, s, e), s"$ctx plain split [$s, $e)")
+        got
+      }
+      assert(plainSplits.flatten == whole, s"$ctx plain splits union")
+
+      // BGZF: random block cuts (one or two concatenated streams, so an
+      // EOF marker may sit mid-file), random compressed-range splits
+      val bout = new java.io.ByteArrayOutputStream()
+      val halves =
+        if (rnd.nextBoolean()) Seq(text)
+        else { val (x, y) = text.splitAt(rnd.nextInt(text.length + 1)); Seq(x, y) }
+      halves.foreach { h =>
+        val out = new BgzfOutputStream(bout)
+        var k = 0
+        while (k < h.length) {
+          val n = math.min(h.length - k, 1 + rnd.nextInt(300))
+          out.write(h, k, n); out.flush(); k += n
+        }
+        out.close()
+      }
+      val gz = bout.toByteArray
+      val blocks = {
+        val in = new ByteArrayInputStream(gz)
+        val coffs = ArrayBuffer.empty[(Long, Int)]
+        var coff = 0L
+        var b = Bgzf.readBlock(in)
+        while (b != null) { coffs += ((coff, b._2.length)); coff += b._1; b = Bgzf.readBlock(in) }
+        coffs.toIndexedSeq
+      }
+      def from(coff: Long) =
+        new BgzfBlockStream(new ByteArrayInputStream(gz, coff.toInt, gz.length - coff.toInt), coff << 16, () => ())
+      val bgzfWhole = cursor(from(0), 0, Long.MaxValue)
+      assert(bgzfWhole == modelVoff(from(0), 0, Long.MaxValue), s"$ctx BGZF whole file")
+      assert(bgzfWhole.map(_._2) == whole.map(_._2), s"$ctx BGZF whole file bytes")
+      val gzCuts = cuts(rnd, gz.length)
+      val gzSplits = gzCuts.zip(gzCuts.tail).map { case (s, e) =>
+        val (vs, ve) = (if (s == 0) 0L else s.toLong << 16, (e.toLong << 16) - 1)
+        blocks.find(b => b._1 >= s && b._1 < e) match {
+          case None => Seq.empty
+          case Some((coff, _)) =>
+            val got = cursor(from(coff), vs, ve)
+            assert(got == modelVoff(from(coff), vs, ve), s"$ctx BGZF split [$s, $e)")
+            got
+        }
+      }
+      assert(gzSplits.flatten == bgzfWhole, s"$ctx BGZF splits union")
+
+      // index chunks: random [startVoff, endVoff) through Bgzf.openChunk
+      val path = dir.resolve(s"c$i.gz")
+      Files.write(path, gz)
+      def voff(): Long = {
+        val k = rnd.nextInt(blocks.length + 1)
+        if (k == blocks.length) gz.length.toLong << 16
+        else (blocks(k)._1 << 16) | rnd.nextInt(blocks(k)._2 + 1).toLong
+      }
+      for (_ <- 1 to 5) {
+        val (a, b) = (voff(), voff())
+        val (s, e) = (math.min(a, b), math.max(a, b))
+        def open() = Bgzf.openChunk(GraftFiles.open(path.toString, conf), s, e)
+        assert(cursor(open(), 0, Long.MaxValue) == modelVoff(open(), 0, Long.MaxValue),
+          s"$ctx chunk [$s, $e)")
+      }
+    }
+  }
 }
