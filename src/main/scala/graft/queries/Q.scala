@@ -116,22 +116,17 @@ object Q {
   def spread(df: DataFrame, key: String): DataFrame = {
     val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // the `df.rdd` probe plans the pipeline once and builds a throwaway
-    // lineage: it runs only where the file listing cannot decide
-    val wide = scanPartitionBounds(df) match {
-      case Some((lo, _)) if lo * 2 >= target => true
-      case Some((_, hi)) if hi * 2 < target  => false
-      case _ => df.rdd.getNumPartitions * 2 >= target
-    }
-    if (wide) df else df.repartition(target, col(key))
+    // lineage: it runs only where the plan is not a plain file scan
+    val parts = scanPartitions(df).getOrElse(df.rdd.getNumPartitions)
+    if (parts * 2 >= target) df else df.repartition(target, col(key))
   }
 
-  /** Bounds on the partitions of a plain file scan (under projections
-    * and filters) from its file sizes: Spark cuts files into chunks of at
-    * most maxSplitBytes, charges each openCostInBytes, and packs them
-    * greedily, so a partition weighs at most maxSplit + open and two
-    * neighbours more than maxSplit. None for any other plan. */
-  private def scanPartitionBounds(df: DataFrame): Option[(Long, Long)] = {
+  /** The partition count of a plain file scan (under projections and
+    * filters), from Spark's own split and packing of the listed files
+    * (as FileSourceScanExec does it); None for any other plan. */
+  private def scanPartitions(df: DataFrame): Option[Int] = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+    import org.apache.spark.sql.execution.PartitionedFileUtil
     import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     def relation(p: LogicalPlan): Option[HadoopFsRelation] = p match {
       case l: LogicalRelation => Some(l.relation).collect {
@@ -140,19 +135,12 @@ object Q {
       case _ => None
     }
     val s = df.sparkSession
-    val conf = s.sessionState.conf
-    relation(df.queryExecution.analyzed).filter(_ => conf.filesMaxPartitionNum.isEmpty).flatMap { r =>
+    relation(df.queryExecution.analyzed).map { r =>
       val dirs = r.location.listFiles(Nil, Nil)
-      val files = dirs.flatMap(_.files).filter(_.getLen > 0)
       val maxSplit = FilePartition.maxSplitBytes(s, dirs)
-      val open = conf.filesOpenCostInBytes
-      if (files.exists(f => f.getLen > maxSplit && !r.fileFormat.isSplitable(s, r.options, f.getPath))) None
-      else {
-        val chunks = files.map(f => (f.getLen + maxSplit - 1) / maxSplit).sum
-        val weight = files.map(_.getLen).sum + chunks * open
-        Some(((weight + maxSplit + open - 1) / (maxSplit + open),
-          math.min(chunks, 2 * weight / maxSplit + 1)))
-      }
+      val splits = dirs.flatMap(d => d.files.flatMap(f => PartitionedFileUtil.splitFiles(
+        f, f.getPath, r.fileFormat.isSplitable(s, r.options, f.getPath), maxSplit, d.values)))
+      FilePartition.getFilePartitions(s, splits.sortBy(-_.length), maxSplit).length
     }
   }
 

@@ -152,6 +152,7 @@ object BcfFormat extends GraftFormat {
     val typedStruct = schema.fields.find(_.name == "genotypes_typed")
       .map(_.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType])
       .filter(_ => split.needs("genotypes_typed"))
+    val typed = typedStruct.map(new VcfFormat.TypedGenotypes(_))
     val wantInfo = split.needs("info")
     val wantGts = typedStruct.isDefined ||
       split.needs("format") || split.needs("genotypes")
@@ -235,15 +236,12 @@ object BcfFormat extends GraftFormat {
           val (fmt, gts) = decodeGenotypes(indiv, nFmt, nSample, dict)
           val withFmt = base ++ Array[Any](fmt, gts)
           if (!hasTyped) withFmt
-          else typedStruct match {
-            case None     => withFmt :+ null // typed pruned, strings kept
-            case Some(st) =>
+          else typed match {
+            case None    => withFmt :+ null // typed pruned, strings kept
+            case Some(t) =>
               // typed structs derive from the SAME rendered strings the
               // text source parses — identical values by construction
-              val fmtStr = if (fmt == null) null else fmt.asInstanceOf[UTF8String].toString
-              val gtStrs = gts.asInstanceOf[GenericArrayData].array
-                .map(v => v.asInstanceOf[UTF8String].toString).toSeq
-              withFmt :+ VcfFormat.typedGenotypes(fmtStr, gtStrs, st)
+              withFmt :+ t(fmt.asInstanceOf[UTF8String], gts.asInstanceOf[GenericArrayData].array)
           }
         }
     }

@@ -75,35 +75,48 @@ object VcfFormat extends GraftFormat {
 
   /** Typed structs from the rendered surface: record FORMAT keys align
     * sample sub-fields positionally; fields absent from this record's
-    * FORMAT (or '.') are NULL. */
-  def typedGenotypes(format: String, gts: Seq[String], st: StructType): GenericArrayData = {
-    if (format == null) return new GenericArrayData(Array.empty[Any])
-    val cols = (format +: gts).map(_.getBytes(UTF_8))
-    val ends = cols.scanLeft(0)(_ + _.length).toArray
-    val sc = new Scratch
-    sc.cols.from = ends.init; sc.cols.to = ends.tail; sc.cols.n = cols.length
-    typedGenotypes(Array.concat(cols: _*), 0, st, nameBytes(st), sc)
-  }
+    * FORMAT (or '.') are NULL. One per read: it holds the struct's key
+    * index and the reused cut buffers. */
+  final class TypedGenotypes(st: StructType) {
+    private val keys = new KeyIndex(st)
+    /** key id -> the first FORMAT key naming it, for the current record */
+    private val first = new Array[Int](keys.size)
+    private val cols, fmtKeys, parts, items = new Cuts
 
-  /** [[typedGenotypes]] over one record's bytes cut into `sc.cols`:
-    * column `fmt` is FORMAT, the columns after it are the samples. */
-  private def typedGenotypes(b: Array[Byte], fmt: Int, st: StructType,
-                             names: Array[Array[Byte]], sc: Scratch): GenericArrayData = {
-    val cols = sc.cols
-    if (fmt >= cols.n) return new GenericArrayData(Array.empty[Any])
-    // struct field -> index of the first FORMAT key naming it
-    val keys = sc.keys.cut(b, cols.from(fmt), cols.to(fmt), ':')
-    val idx = names.map(name => (0 until keys.n).indexWhere(k => keyIs(b, keys.from(k), keys.to(k), name)))
-    val want = idx.foldLeft(-1)(math.max) + 1
-    new GenericArrayData(Array.tabulate[Any](cols.n - fmt - 1) { i =>
-      val c = fmt + 1 + i
-      val parts = sc.parts.cut(b, cols.from(c), cols.to(c), ':', want)
-      new GenericInternalRow(Array.tabulate[Any](idx.length) { f =>
-        val j = idx(f)
-        if (j < 0 || j >= parts.n || parts.to(j) == parts.from(j) || isDot(b, parts.from(j), parts.to(j))) null
-        else typedValue(b, parts.from(j), parts.to(j), st.fields(f).dataType, sc.items)
+    /** From FORMAT and sample strings (the binary source's surface). */
+    def apply(format: UTF8String, gts: Array[Any]): GenericArrayData = {
+      if (format == null) return new GenericArrayData(Array.empty[Any])
+      val bs = (format +: gts.map(_.asInstanceOf[UTF8String])).map(_.getBytes)
+      cols.n = 0
+      var at = 0
+      bs.foreach { x => cols.add(at, at + x.length); at += x.length }
+      apply(bs.flatten, 0, cols)
+    }
+
+    /** Over one record's bytes cut into `c`: column `fmt` is FORMAT, the
+      * columns after it are the samples. */
+    private[VcfFormat] def apply(b: Array[Byte], fmt: Int, c: Cuts): GenericArrayData = {
+      if (fmt >= c.n) return new GenericArrayData(Array.empty[Any])
+      fmtKeys.cut(b, c.from(fmt), c.to(fmt), ':')
+      java.util.Arrays.fill(first, -1)
+      var k = fmtKeys.n - 1
+      while (k >= 0) {
+        val id = keys.find(b, fmtKeys.from(k), fmtKeys.to(k))
+        if (id >= 0) first(id) = k
+        k -= 1
+      }
+      val idx = keys.of.map(first(_))
+      val want = idx.foldLeft(-1)(math.max) + 1
+      new GenericArrayData(Array.tabulate[Any](c.n - fmt - 1) { i =>
+        val s = fmt + 1 + i
+        parts.cut(b, c.from(s), c.to(s), ':', want)
+        new GenericInternalRow(Array.tabulate[Any](idx.length) { f =>
+          val j = idx(f)
+          if (j < 0 || j >= parts.n || parts.to(j) == parts.from(j) || isDot(b, parts.from(j), parts.to(j))) null
+          else typedValue(b, parts.from(j), parts.to(j), st.fields(f).dataType, items)
+        })
       })
-    })
+    }
   }
 
   private def headerOf(path: Path, conf: Configuration,
@@ -163,18 +176,18 @@ object VcfFormat extends GraftFormat {
     val width = schema.length
     // runtime pruning: skip the parse work for unprojected expensive
     // columns (rows stay full-schema shaped — ordinals must not shift)
-    val typedStruct = schema.fields.find(_.name == "genotypes_typed")
+    val typed = schema.fields.find(_.name == "genotypes_typed")
       .map(_.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType])
       .filter(_ => split.needs("genotypes_typed"))
-    val typedNames = typedStruct.map(nameBytes).orNull
+      .map(new TypedGenotypes(_)).orNull
     val wantInfo = split.needs("info")
     val wantGts = width > 8 && (split.needs("genotypes") || split.needs("format"))
-    val cols = if (wantGts || typedNames != null) Int.MaxValue else 8 // columns to cut
+    val cols = if (wantGts || typed != null) Int.MaxValue else 8 // columns to cut
     val region = Regions.matcherFromOptions(options)
-    val infoNames = nameBytes(infoSchema)
-    /** value range per info field of the current record; -1 = absent */
-    val infoAt, infoEnd = new Array[Int](infoNames.length)
-    val sc = new Scratch
+    val infoKeys = new KeyIndex(infoSchema)
+    /** value range per info key id of the current record; -1 = absent */
+    val infoAt, infoEnd = new Array[Int](infoKeys.size)
+    val cuts, segs, items = new Cuts
     // the cursor handles every split shape: index-chunk streams carry
     // (0, MaxValue) split bounds (the chunk's end voff bounds the
     // BgzfBlockStream itself), ranged and BGZF splits apply the line
@@ -185,7 +198,7 @@ object VcfFormat extends GraftFormat {
     /** One pass over the record's tab, `;`, `=`, `,` and `:` offsets;
       * strings are UTF8String slices of `b` (a copy owned by the row). */
     def record(b: Array[Byte]): Array[Any] = {
-      val c = sc.cols.cut(b, 0, b.length, '\t', cols)
+      val c = cuts.cut(b, 0, b.length, '\t', cols)
       require(c.n >= 8, s"$where has ${c.n} columns")
       def str(k: Int) = slice(b, c.from(k), c.to(k))
       def dot(k: Int) = isDot(b, c.from(k), c.to(k))
@@ -194,30 +207,28 @@ object VcfFormat extends GraftFormat {
       vals(1) = parseNum(b, c.from(1), c.to(1), 18, java.lang.Long.parseLong)
       vals(2) = if (dot(2)) null else str(2)
       vals(3) = str(3)
-      vals(4) = if (dot(4)) new GenericArrayData(Array.empty[Any]) else commaList(b, c.from(4), c.to(4), StringType, sc.items)
+      vals(4) = if (dot(4)) new GenericArrayData(Array.empty[Any]) else commaList(b, c.from(4), c.to(4), StringType, items)
       vals(5) = if (dot(5)) null else typedValue(b, c.from(5), c.to(5), FloatType, null)
       vals(6) = if (dot(6)) null else str(6)
       // INFO `k=v;flag;…`: keys lowercased, the last duplicate wins
-      val info = new Array[Any](infoNames.length)
+      val info = new Array[Any](infoSchema.length)
       if (wantInfo && c.to(7) > c.from(7) && !dot(7)) {
         java.util.Arrays.fill(infoAt, -1)
-        val segs = sc.segs.cut(b, c.from(7), c.to(7), ';')
+        segs.cut(b, c.from(7), c.to(7), ';')
         var k = 0
         while (k < segs.n) {
           val (s, e) = (segs.from(k), segs.to(k))
           val eq = next(b, s, e, '=')
-          var f = 0
-          while (f < info.length) {
-            if (keyIs(b, s, eq, infoNames(f))) { infoAt(f) = math.min(eq + 1, e); infoEnd(f) = e }
-            f += 1
-          }
+          val id = infoKeys.find(b, s, eq)
+          if (id >= 0) { infoAt(id) = math.min(eq + 1, e); infoEnd(id) = e }
           k += 1
         }
         var f = 0
         while (f < info.length) {
-          if (infoAt(f) >= 0) info(f) = infoSchema(f).dataType match {
+          val id = infoKeys.of(f)
+          if (infoAt(id) >= 0) info(f) = infoSchema(f).dataType match {
             case BooleanType => java.lang.Boolean.TRUE
-            case dt => typedValue(b, infoAt(f), infoEnd(f), dt, sc.items)
+            case dt => typedValue(b, infoAt(id), infoEnd(id), dt, items)
           }
           f += 1
         }
@@ -228,7 +239,7 @@ object VcfFormat extends GraftFormat {
         vals(9) = new GenericArrayData(Array.tabulate[Any](math.max(0, c.n - 9))(i => str(9 + i)))
       }
       // typed pruned: slot kept (null), work skipped
-      if (typedNames != null) vals(10) = typedGenotypes(b, 8, typedStruct.get, typedNames, sc)
+      if (typed != null) vals(10) = typed(b, 8, c)
       vals
     }
 
@@ -251,21 +262,28 @@ object VcfFormat extends GraftFormat {
     def cut(b: Array[Byte], s: Int, e: Int, sep: Char, max: Int = Int.MaxValue): Cuts = {
       n = 0
       var p = s
-      while (n < max && p <= e) {
-        if (n == from.length) { from = java.util.Arrays.copyOf(from, 2 * n); to = java.util.Arrays.copyOf(to, 2 * n) }
-        from(n) = p; to(n) = next(b, p, e, sep)
-        p = to(n) + 1
-        n += 1
-      }
+      while (n < max && p <= e) { add(p, next(b, p, e, sep)); p = to(n - 1) + 1 }
       this
+    }
+    def add(s: Int, e: Int): Unit = {
+      if (n == from.length) { from = java.util.Arrays.copyOf(from, 2 * n); to = java.util.Arrays.copyOf(to, 2 * n) }
+      from(n) = s; to(n) = e
+      n += 1
     }
   }
 
-  /** Reused cut buffers: columns, INFO segments, FORMAT keys, sample
-    * sub-fields and comma lists. */
-  private final class Scratch { val cols, segs, keys, parts, items = new Cuts }
-
-  private def nameBytes(st: StructType): Array[Array[Byte]] = st.fieldNames.map(_.getBytes(UTF_8))
+  /** Dense ids for a struct's field names (fields sharing a name share
+    * an id), found in O(1) from a key lowercased as the String path did. */
+  private final class KeyIndex(st: StructType) {
+    private val ids = new java.util.HashMap[String, Integer]
+    st.fieldNames.foreach(n => ids.putIfAbsent(n, ids.size))
+    /** field ordinal -> id */
+    val of: Array[Int] = st.fieldNames.map(ids.get(_).intValue)
+    def size: Int = ids.size
+    /** The id of key b(s until e), else -1. */
+    def find(b: Array[Byte], s: Int, e: Int): Int =
+      ids.getOrDefault(new String(b, s, e - s, UTF_8).toLowerCase, -1)
+  }
 
   /** Index of the first `c` in b(s until e), else e. */
   private def next(b: Array[Byte], s: Int, e: Int, c: Char): Int = {
@@ -277,16 +295,6 @@ object VcfFormat extends GraftFormat {
   private def isDot(b: Array[Byte], s: Int, e: Int): Boolean = e - s == 1 && b(s) == '.'
 
   private def slice(b: Array[Byte], s: Int, e: Int): UTF8String = UTF8String.fromBytes(b, s, e - s)
-
-  /** Whether key b(s until e), lowercased as `String.toLowerCase` does,
-    * equals `name`: ASCII folds in place, other keys go through String. */
-  private def keyIs(b: Array[Byte], s: Int, e: Int, name: Array[Byte]): Boolean = {
-    var i = s
-    while (i < e && b(i) >= 0 && i - s < name.length &&
-      (if (b(i) >= 'A' && b(i) <= 'Z') b(i) + 32 else b(i)) == name(i - s)) i += 1
-    if (i == e) e - s == name.length
-    else b(i) < 0 && java.util.Arrays.equals(new String(b, s, e - s, UTF_8).toLowerCase.getBytes(UTF_8), name)
-  }
 
   private def typedValue(b: Array[Byte], s: Int, e: Int, dt: DataType, items: Cuts): Any = dt match {
     case IntegerType      => parseNum(b, s, e, 9, java.lang.Integer.parseInt(_)).toInt

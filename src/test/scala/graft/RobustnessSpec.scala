@@ -318,6 +318,36 @@ class RobustnessSpec extends AnyFunSuite {
     malformed(graft.sources.VcfFormat, "float.vcf", vcfHead + vcfOk + "1\t6\t.\tA\tG\tq9\tPASS\tDP=3\n", vcfAt)
   }
 
+  test("vcf: INFO keys over a wide header match case-insensitively, last duplicate wins") {
+    // 200 declared fields (annotation-style headers) plus one non-ASCII ID
+    val ids = (0 until 200).map(i => s"K$i") :+ "\u00c4q"
+    val head = "##fileformat=VCFv4.2\n" +
+      ids.map(id => s"##INFO=<ID=$id,Number=1,Type=Integer,Description=\"d\">\n").mkString +
+      "##INFO=<ID=FL,Number=0,Type=Flag,Description=\"f\">\n" +
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+    val rnd = new scala.util.Random(7)
+    val recs = (1 to 20).map { r =>
+      val segs = Seq.fill(30) {
+        val id = ids(rnd.nextInt(ids.length))
+        val key = if (rnd.nextBoolean()) id.toLowerCase else id.toUpperCase
+        (key, rnd.nextInt(1000))
+      }
+      val flag = if (r % 3 == 0) Seq("fl") else Nil
+      (segs, flag)
+    }
+    val body = recs.zipWithIndex.map { case ((segs, flag), i) =>
+      s"1\t${i + 1}\t.\tA\tG\t.\t.\t" + (segs.map { case (k, v) => s"$k=$v" } ++ flag :+ "zz=1").mkString(";") + "\n"
+    }.mkString
+    val (_, rows) = scan(graft.sources.VcfFormat, "wide.vcf", (head + body).getBytes("UTF-8"))
+    val names = ids.map(_.toLowerCase) :+ "fl"
+    rows.zip(recs).foreach { case (row, (segs, flag)) =>
+      val want = segs.map { case (k, v) => k.toLowerCase -> v }.toMap
+      val info = row(7).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      val got = names.indices.map(f => if (info.isNullAt(f)) null else info.get(f, if (f == ids.length) BooleanType else IntegerType))
+      assert(got == names.map(n => if (n == "fl") (if (flag.nonEmpty) true else null) else want.get(n).map(Int.box).orNull))
+    }
+  }
+
   test("text fields pass invalid UTF-8 through as raw bytes; valid UTF-8 is unchanged") {
     val bad = Array(0xff, 0xfe).map(_.toByte)
     val content = "@r1 d\u00e9".getBytes("UTF-8") ++ bad ++ "\nAC\n+\nII\n".getBytes("UTF-8")
