@@ -333,11 +333,10 @@ object VariantQC {
       require(df.columns.contains(c), s"VariantQC.leftAlign: no column '$c'"))
     val spark = df.sparkSession
     import spark.implicits._
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val bconf = graft.sources.core.GraftConf.broadcast(spark)
     // driver-side: entries only (a .fai line per contig), never bases
-    val entries = graft.sources.Faidx.load(fastaPath, sconf.value)
-      .getOrElse(graft.sources.Faidx.build(fastaPath, sconf.value))
+    val entries = graft.sources.Faidx.load(fastaPath, bconf.value.value)
+      .getOrElse(graft.sources.Faidx.build(fastaPath, bconf.value.value))
       .map(e => e.name -> e).toMap
 
     val BlockBases = 4096L
@@ -347,7 +346,7 @@ object VariantQC {
         col("pos").cast("long").as("pos"), col("ref"), col("alt"))
       .as[VariantSite]
       .mapPartitions { it =>
-        val conf = sconf.value
+        val conf = bconf.value.value
         val cache = new java.util.LinkedHashMap[(String, Long), String](
           MaxCachedBlocks, 0.75f, true) {
           override def removeEldestEntry(

@@ -173,10 +173,9 @@ object GraftIO {
     * distributed point-read workload, not a million file scans. */
   def fasta_query(s: SparkSession, path: String, regions: Seq[String]): DataFrame = {
     require(regions.nonEmpty, "fasta_query: no regions given")
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      s.sessionState.newHadoopConf())
-    val entries = Faidx.load(path, sconf.value)
-      .getOrElse(Faidx.build(path, sconf.value))
+    val bconf = GraftConf.broadcast(s)
+    val entries = Faidx.load(path, bconf.value.value)
+      .getOrElse(Faidx.build(path, bconf.value.value))
     val byName = s.sparkContext.broadcast(entries.map(e => e.name -> e).toMap)
     import s.implicits._
     s.createDataset(regions)
@@ -186,7 +185,7 @@ object GraftIO {
         byName.value.get(name).map { e =>
           val lo2 = math.max(lo, 1L)
           val hi2 = math.min(hi, e.length)
-          (name, lo2, hi2, Faidx.fetch(path, sconf.value, e, lo2, hi2))
+          (name, lo2, hi2, Faidx.fetch(path, bconf.value.value, e, lo2, hi2))
         }
       }
       .toDF("name", "start", "end", "sequence")
@@ -196,15 +195,14 @@ object GraftIO {
     * ([[TwoBit.index]]), and each task point-reads its own sequence's
     * packed bytes. `mask=false` returns everything uppercase. */
   def read_twobit(s: SparkSession, path: String, mask: Boolean = true): DataFrame = {
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      s.sessionState.newHadoopConf())
-    val entries = TwoBit.index(path, sconf.value)
+    val bconf = GraftConf.broadcast(s)
+    val entries = TwoBit.index(path, bconf.value.value)
     import s.implicits._
     s.createDataset(entries.map(_.name))
       .repartition(math.min(math.max(entries.size, 1), 32))
       .map { name =>
         val e = entries.find(_.name == name).get
-        (name, e.dnaSize, TwoBit.fetch(path, sconf.value, e, 1L, e.dnaSize, mask))
+        (name, e.dnaSize, TwoBit.fetch(path, bconf.value.value, e, 1L, e.dnaSize, mask))
       }
       .toDF("name", "length", "sequence")
   }
@@ -217,10 +215,9 @@ object GraftIO {
   def twobit_query(s: SparkSession, path: String, regions: Seq[String],
                    mask: Boolean = true): DataFrame = {
     require(regions.nonEmpty, "twobit_query: no regions given")
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      s.sessionState.newHadoopConf())
+    val bconf = GraftConf.broadcast(s)
     val byName = s.sparkContext.broadcast(
-      TwoBit.index(path, sconf.value).map(e => e.name -> e).toMap)
+      TwoBit.index(path, bconf.value.value).map(e => e.name -> e).toMap)
     import s.implicits._
     s.createDataset(regions)
       .repartition(math.min(regions.size, 32))
@@ -229,7 +226,7 @@ object GraftIO {
         byName.value.get(name).map { e =>
           val lo2 = math.max(lo, 1L)
           val hi2 = math.min(hi, e.dnaSize)
-          (name, lo2, hi2, TwoBit.fetch(path, sconf.value, e, lo2, hi2, mask))
+          (name, lo2, hi2, TwoBit.fetch(path, bconf.value.value, e, lo2, hi2, mask))
         }
       }
       .toDF("name", "start", "end", "sequence")

@@ -5,6 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -15,6 +16,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, Suppo
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** DSv2 TableProvider for one GraftFormat. Mirrors the reference's
   * generic table function (bind = inferSchema, init = planInputPartitions,
@@ -68,7 +70,8 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
       override def truncate(): WriteBuilder = { doTruncate = true; this }
       override def build(): Write = new Write {
         override def toBatch: BatchWrite = {
-          val hconf = SparkSession.active.sessionState.newHadoopConf()
+          val spark = SparkSession.active
+          val hconf = spark.sessionState.newHadoopConf()
           val p = new org.apache.hadoop.fs.Path(path)
           val fs = p.getFileSystem(hconf)
           if (doTruncate) {
@@ -84,7 +87,7 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
           val writeOpts = Seq("compression", "partitionby", "index")
             .flatMap(k => Option(info.options().get(k)).map(k -> _))
           GraftBatchWrite(fmt, info.schema(), path, options ++ writeOpts,
-            new org.apache.spark.util.SerializableConfiguration(hconf))
+            GraftConf.broadcast(spark))
         }
 
         /** writeStream into a format directory: per-epoch appends with
@@ -96,11 +99,10 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
           // format directory cannot express — append only
           require(!doTruncate,
             "streaming writes into format directories support append output mode only")
-          val hconf = SparkSession.active.sessionState.newHadoopConf()
           val writeOpts = Seq("compression", "partitionby", "index")
             .flatMap(k => Option(info.options().get(k)).map(k -> _))
           GraftStreamingWrite(fmt, info.schema(), path, options ++ writeOpts,
-            new org.apache.spark.util.SerializableConfiguration(hconf))
+            GraftConf.broadcast(SparkSession.active))
         }
       }
     }
@@ -144,6 +146,16 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  /** Driver-side Hadoop conf and this scan's files, listed ONCE and
+    * shared by statistics and partition planning (the optimizer asks
+    * for statistics more than once per query). */
+  private lazy val conf = SparkSession.active.sessionState.newHadoopConf()
+  private lazy val files = GraftFiles.pathSpecs(options).flatMap(GraftFiles.resolve(_, conf))
+
+  /** One broadcast conf per scan, shared by every reader factory it
+    * creates (see [[GraftConf]]). */
+  private lazy val bconf = GraftConf.broadcast(SparkSession.active)
+
   /** Size + sampled-cardinality estimates (the analog of the
     * reference's ArrowScanCardinality hint) so Catalyst can pick
     * broadcast sides and join orders when a genomic table joins a
@@ -151,12 +163,11 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
     * extrapolate by bytes, session-cached); disable with option
     * stats.sample=false when even the bounded driver read is unwanted
     * (e.g. high-latency object stores). */
-  override def estimateStatistics(): Statistics = new Statistics {
+  override def estimateStatistics(): Statistics = stats
+  private lazy val stats: Statistics = new Statistics {
     private val (bytes: Long, rows: java.util.OptionalLong) =
       try {
         val session = SparkSession.active
-        val conf = session.sessionState.newHadoopConf()
-        val files = GraftFiles.pathSpecs(options).flatMap(GraftFiles.resolve(_, conf))
         val raw = files.map(_.getLen).sum
         // compressed files underreport their in-memory row size; scale
         // by Spark's own fileCompressionFactor knob so a ~30 MB-of-rows
@@ -180,13 +191,10 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
     s"GraftScan(${format.name}, cols=[${required.fieldNames.mkString(",")}], " +
       s"filters=[${filters.mkString(",")}])"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val files = GraftFiles.pathSpecs(options).flatMap(GraftFiles.resolve(_, conf))
+  override def planInputPartitions(): Array[InputPartition] =
     files.flatMap(st =>
       GraftPlanning.partitionsFor(format, st, GraftPlanning.maxSplitOf(options),
         options, conf, filters.toSeq)).toArray
-  }
 
   /** Micro-batch streaming over an arriving-files directory: the same
     * formats, split planning, projection/filter plumbing, and reader as
@@ -194,13 +202,10 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
     * [[GraftMicroBatchStream]]). */
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     GraftMicroBatchStream(format, full, required, filters, options,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+      GraftConf.broadcast(SparkSession.active))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(format, full, required, filters, options,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+    GraftReaderFactory(format, full, required, filters, options, bconf)
 }
 
 /** Input-partition planning shared by the batch scan and the
@@ -310,15 +315,15 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
 final case class GraftReaderFactory(format: GraftFormat, full: StructType,
                                     required: StructType, filters: Array[Filter],
                                     options: Map[String, String],
-                                    sconf: org.apache.spark.util.SerializableConfiguration)
+                                    bconf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
   /** The open path: (filtered full-schema value iterator, close);
     * `createReader` projects it to the required columns. */
   private def openIterator(p: GraftInputPartition): (Iterator[Array[Any]], () => Unit) = {
-    // session Hadoop conf shipped from the driver: spark.hadoop.* (s3a
+    // session Hadoop conf broadcast from the driver: spark.hadoop.* (s3a
     // credentials, endpoints, ...) must reach executor-side FS access
-    val conf = sconf.value
+    val conf = bconf.value.value
     // projection + pushed-filter references: parsers may skip the work
     // of materializing any other top-level column
     val needed = Some(required.fieldNames.toSet ++ filters.flatMap(_.references))

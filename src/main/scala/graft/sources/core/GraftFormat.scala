@@ -85,7 +85,7 @@ trait GraftFormat extends Serializable {
   * index-resolved BGZF chunk (stream already decompressed and positioned
   * at a record boundary; binary formats that need their file header
   * must re-read it separately — see BamFormat). `conf` is the executor's
-  * view of the session Hadoop configuration (shipped by the scan
+  * view of the session Hadoop configuration (broadcast with the scan
   * factory), so header re-reads hit the same filesystem/credentials as
   * the main stream — a bare `new Configuration()` would drop
   * spark.hadoop.* settings on a real cluster. Constructed executor-side;
@@ -195,57 +195,56 @@ final class MultiMemberGzipInputStream(raw: InputStream) extends InputStream {
 
 object GraftFiles {
   /** Path specs from DSv2 options: `path` (single) and/or `paths`
-    * (DataFrameReader.load(paths: _*) encodes a JSON string array). */
+    * (DataFrameReader.load(paths: _*) encodes a JSON string array with
+    * Jackson; decode it with Jackson too, so commas, quotes and
+    * backslashes inside a path survive). */
   def pathSpecs(options: Map[String, String]): Seq[String] = {
     val single = options.get("path").toSeq
     val multi = options.get("paths").toSeq.flatMap { json =>
-      json.stripPrefix("[").stripSuffix("]").split(",")
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(json, classOf[Array[String]]).toSeq.filter(_.nonEmpty)
     }
     single ++ multi
   }
 
+  /** Index sidecars (.tbi/.csi/.bai/...) live next to the data they
+    * index — including ones this library's own writers emit — and are
+    * never themselves records. */
+  private def isIndexSidecar(name: String): Boolean = {
+    val l = name.toLowerCase
+    l.endsWith(".tbi") || l.endsWith(".csi") || l.endsWith(".bai") ||
+      l.endsWith(".crai") || l.endsWith(".fai") || l.endsWith(".gzi")
+  }
+
   /** Expand a path/glob/directory into concrete files (mirrors the
     * reference's directory-scan support, test_fasta_scan.test "Test
-    * glob"). Runs on the driver at plan time. */
+    * glob"). Runs on the driver at plan time.
+    *
+    * Directories are walked with `listStatus`, never descending into a
+    * hidden (`.`/`_`) entry: files inside `_temporary/<id>/` (the
+    * writers' staging namespace) have plain names, and a scan racing an
+    * in-flight write must never read them as data. `listStatus` rather
+    * than `listFiles`: the latter builds a LocatedFileStatus per file,
+    * which loads its permissions — on a local filesystem without native
+    * Hadoop, one forked shell command per file, on every listing of a
+    * part directory. Spark's own leaf-file listing (`HadoopFSUtils`)
+    * walks the same way. */
   def resolve(pathSpec: String, conf: Configuration): Seq[FileStatus] = {
     val path = new Path(pathSpec)
     val fs = path.getFileSystem(conf)
     val globbed = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
     if (globbed.isEmpty)
       throw new java.io.FileNotFoundException(s"no files match '$pathSpec'")
+    def walk(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith(".") || n.startsWith("_")) Nil
+        else if (st.isDirectory) walk(st.getPath)
+        else if (isIndexSidecar(n)) Nil
+        else Seq(st)
+      }
     globbed.flatMap { st =>
-      if (st.isDirectory) {
-        // hidden-ness applies to every path component BELOW the listed
-        // root, not just the basename: files inside `_temporary/<id>/`
-        // (the writers' staging namespace) have plain names, and a scan
-        // racing an in-flight write must never read them as data
-        val root = st.getPath.toString
-        def hidden(p: Path): Boolean = {
-          var cur = p
-          while (cur != null && cur.toString != root) {
-            val n = cur.getName
-            if (n.startsWith(".") || n.startsWith("_")) return true
-            cur = cur.getParent
-          }
-          false
-        }
-        // index sidecars (.tbi/.csi/.bai/...) live next to the data they
-        // index — including ones this library's own writers emit — and
-        // are never themselves records
-        def isIndexSidecar(n: String): Boolean = {
-          val l = n.toLowerCase
-          l.endsWith(".tbi") || l.endsWith(".csi") || l.endsWith(".bai") ||
-            l.endsWith(".crai") || l.endsWith(".fai") || l.endsWith(".gzi")
-        }
-        val it = fs.listFiles(st.getPath, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-        while (it.hasNext) {
-          val f = it.next()
-          if (!hidden(f.getPath) && !isIndexSidecar(f.getPath.getName)) buf += f
-        }
-        buf.toSeq.sortBy(_.getPath.toString)
-      } else Seq(st)
+      if (st.isDirectory) walk(st.getPath).sortBy(_.getPath.toString) else Seq(st)
     }
   }
 

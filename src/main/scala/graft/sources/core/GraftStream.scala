@@ -2,6 +2,7 @@ package graft.sources.core
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.Filter
@@ -63,13 +64,13 @@ final case class GraftMicroBatchStream(format: GraftFormat, full: StructType,
                                        required: StructType,
                                        filters: Array[Filter],
                                        options: Map[String, String],
-                                       sconf: SerializableConfiguration)
+                                       bconf: Broadcast[SerializableConfiguration])
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
   private def listNow(): Map[String, Long] =
     GraftFiles.pathSpecs(options)
-      .flatMap(GraftFiles.resolve(_, sconf.value))
+      .flatMap(GraftFiles.resolve(_, bconf.value.value))
       .map(st => st.getPath.toString -> st.getLen).toMap
 
   override def initialOffset(): Offset = GraftStreamOffset(Map.empty)
@@ -161,7 +162,7 @@ final case class GraftMicroBatchStream(format: GraftFormat, full: StructType,
     require(grown.isEmpty,
       s"streaming input files must be immutable once they appear; " +
         s"grown/rewritten: ${grown.mkString(", ")}")
-    val conf = sconf.value
+    val conf = bconf.value.value
     val maxSplit = GraftPlanning.maxSplitOf(options)
     (to.keySet -- from.keySet).toSeq.sorted.flatMap { path =>
       val statuses = GraftFiles.resolve(path, conf)
@@ -177,7 +178,7 @@ final case class GraftMicroBatchStream(format: GraftFormat, full: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(format, full, required, filters, options, sconf)
+    GraftReaderFactory(format, full, required, filters, options, bconf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -4,6 +4,7 @@ import java.io.{BufferedOutputStream, OutputStream}
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
@@ -90,7 +91,7 @@ final case class GraftWriteCommit(files: Seq[(String, String)])
   */
 final case class GraftBatchWrite(formatter: RecordFormatter, schema: StructType,
                                  path: String, options: Map[String, String],
-                                 sconf: SerializableConfiguration)
+                                 bconf: Broadcast[SerializableConfiguration])
     extends BatchWrite {
 
   /** Per-job staging namespace `_temporary/<writeId>`: two concurrent
@@ -101,10 +102,10 @@ final case class GraftBatchWrite(formatter: RecordFormatter, schema: StructType,
   private def stagingRoot = new Path(new Path(path, "_temporary"), writeId)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriterFactory(formatter, schema, path, options, sconf, writeId)
+    GraftWriterFactory(formatter, schema, path, options, bconf, writeId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(sconf.value)
+    val fs = new Path(path).getFileSystem(bconf.value.value)
     messages.foreach {
       case GraftWriteCommit(files) => files.foreach { case (temp, dest) =>
         val d = new Path(dest)
@@ -125,7 +126,7 @@ final case class GraftBatchWrite(formatter: RecordFormatter, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(sconf.value)
+    val fs = new Path(path).getFileSystem(bconf.value.value)
     if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
     cleanupTempRoot(fs)
   }
@@ -152,7 +153,7 @@ final case class GraftBatchWrite(formatter: RecordFormatter, schema: StructType,
   */
 final case class GraftStreamingWrite(formatter: RecordFormatter, schema: StructType,
                                      path: String, options: Map[String, String],
-                                     sconf: SerializableConfiguration)
+                                     bconf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
@@ -163,12 +164,12 @@ final case class GraftStreamingWrite(formatter: RecordFormatter, schema: StructT
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
                                 epochId: Long): DataWriter[InternalRow] =
-        GraftWriterFactory(formatter, schema, path, options, sconf, writeId,
+        GraftWriterFactory(formatter, schema, path, options, bconf, writeId,
           epoch = Some(epochId)).createWriter(partitionId, taskId)
     }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(sconf.value)
+    val fs = new Path(path).getFileSystem(bconf.value.value)
     messages.foreach {
       case GraftWriteCommit(files) => files.foreach { case (temp, dest) =>
         val d = new Path(dest)
@@ -196,14 +197,14 @@ final case class GraftStreamingWrite(formatter: RecordFormatter, schema: StructT
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(sconf.value)
+    val fs = new Path(path).getFileSystem(bconf.value.value)
     if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
   }
 }
 
 final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructType,
                                     path: String, options: Map[String, String],
-                                    sconf: SerializableConfiguration,
+                                    bconf: Broadcast[SerializableConfiguration],
                                     writeId: String,
                                     epoch: Option[Long] = None)
     extends DataWriterFactory {
@@ -255,7 +256,7 @@ final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructTy
       options.get("partitionby").orElse(options.get("partitionBy")).toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
         .map(schema.fieldIndex)
-    val fs = new Path(path).getFileSystem(sconf.value)
+    val fs = new Path(path).getFileSystem(bconf.value.value)
 
     // escape the UTF-8 BYTES of a non-safe char, one %XX per byte
     // (Hive's ESCAPE_CHAR convention) — escaping the code point would

@@ -14,8 +14,9 @@ import graft.sources.{FastaFormat, GraftIO}
   * object stores per-URI at rust/src/arrow_reader.rs:108) must reach
   * the PartitionReader that opens the file on an executor. Round-1
   * defect: readers built `new Configuration()`, dropping all of it —
-  * fixed by shipping a SerializableConfiguration; this spec pins the
-  * fix against regression.
+  * fixed by shipping a SerializableConfiguration (now broadcast once
+  * per scan/write, see GraftConf); this spec pins the fix against
+  * regression.
   */
 class HadoopConfPropagationSpec extends AnyFunSuite {
 
@@ -47,7 +48,7 @@ class HadoopConfPropagationSpec extends AnyFunSuite {
       // the factory is what Spark serializes to executors — prove the
       // session key survives the wire, not just the driver-side object
       val shipped = roundTrip(factory)
-      assert(shipped.sconf.value.get("graft.test.marker") == "propagated-42")
+      assert(shipped.bconf.value.value.get("graft.test.marker") == "propagated-42")
 
       // and the shipped factory's conf actually opens the filesystem
       val parts = scan.toBatch.planInputPartitions()
@@ -64,7 +65,7 @@ class HadoopConfPropagationSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration.set("graft.test.marker", "w-7")
     try {
       // build the REAL write path (newWriteBuilder -> toBatch) and
-      // inspect the SerializableConfiguration embedded in the
+      // inspect the broadcast SerializableConfiguration embedded in the
       // GraftBatchWrite it produces — asserting on a freshly built
       // newHadoopConf() would stay green even if the builder regressed
       // to `new Configuration()`
@@ -82,7 +83,7 @@ class HadoopConfPropagationSpec extends AnyFunSuite {
       val batch = table.newWriteBuilder(info).build().toBatch
         .asInstanceOf[GraftBatchWrite]
       val shipped = roundTrip(batch)
-      assert(shipped.sconf.value.get("graft.test.marker") == "w-7")
+      assert(shipped.bconf.value.value.get("graft.test.marker") == "w-7")
     } finally spark.sparkContext.hadoopConfiguration.unset("graft.test.marker")
   }
 }

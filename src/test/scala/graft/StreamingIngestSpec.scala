@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, StandardOpenOption}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.util.SerializableConfiguration
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.core.{GraftMicroBatchStream, GraftStreamOffset}
@@ -146,7 +145,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     val schema = graft.sources.GraftIO.read_fasta(spark, dir.toString).schema
     val stream = GraftMicroBatchStream(graft.sources.FastaFormat, schema, schema,
       Array.empty, Map("path" -> dir.toString, "maxsplitbytes" -> "128"),
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+      graft.sources.core.GraftConf.broadcast(spark))
     val end = stream.latestOffset(stream.initialOffset(),
       org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
     val parts = stream.planInputPartitions(stream.initialOffset(), end)

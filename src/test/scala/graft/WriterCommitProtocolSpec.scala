@@ -29,10 +29,14 @@ class WriterCommitProtocolSpec extends AnyFunSuite {
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(id), null, UTF8String.fromString(seq)))
 
+  /** The writers take the job's Hadoop conf as a broadcast; a bare
+    * local-filesystem conf is all the commit protocol needs. */
+  private lazy val localConf = SparkTestSession.get.sparkContext.broadcast(
+    new SerializableConfiguration(new org.apache.hadoop.conf.Configuration()))
+
   private def freshWrite(): (GraftBatchWrite, String) = {
     val dir = Files.createTempDirectory("graft-commit").resolve("out").toString
-    val bw = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map.empty,
-      new SerializableConfiguration(new org.apache.hadoop.conf.Configuration()))
+    val bw = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map.empty, localConf)
     (bw, dir)
   }
 
@@ -68,8 +72,7 @@ class WriterCommitProtocolSpec extends AnyFunSuite {
     // shared staging dir it would delete job A's in-flight file and A's
     // later rename would fail (the ADVICE r3 concurrency finding)
     val (bwA, dir) = freshWrite()
-    val bwB = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map.empty,
-      new SerializableConfiguration(new org.apache.hadoop.conf.Configuration()))
+    val bwB = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map.empty, localConf)
     val wA = bwA.createBatchWriterFactory(null).createWriter(0, 1L)
     val wB = bwB.createBatchWriterFactory(null).createWriter(0, 2L)
     wA.write(row("jobA", "AAAA"))
@@ -86,10 +89,8 @@ class WriterCommitProtocolSpec extends AnyFunSuite {
 
     // abort variant: job D ABORTING must not destroy job C's in-flight
     // staging either
-    val bwC = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map("force" -> "true"),
-      new SerializableConfiguration(new org.apache.hadoop.conf.Configuration()))
-    val bwD = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map("force" -> "true"),
-      new SerializableConfiguration(new org.apache.hadoop.conf.Configuration()))
+    val bwC = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map("force" -> "true"), localConf)
+    val bwD = GraftBatchWrite(FastaFormat.formatter.get, schema, dir, Map("force" -> "true"), localConf)
     val wC = bwC.createBatchWriterFactory(null).createWriter(0, 3L)
     val wD = bwD.createBatchWriterFactory(null).createWriter(0, 4L)
     wC.write(row("jobC", "TTTT"))
@@ -129,8 +130,7 @@ class WriterCommitProtocolSpec extends AnyFunSuite {
   test("partitioned twin attempts commit per-key files exactly once") {
     val dir = Files.createTempDirectory("graft-commit").resolve("p").toString
     val bw = GraftBatchWrite(FastaFormat.formatter.get, schema, dir,
-      Map("partitionby" -> "id"),
-      new SerializableConfiguration(new org.apache.hadoop.conf.Configuration()))
+      Map("partitionby" -> "id"), localConf)
     val factory = bw.createBatchWriterFactory(null)
     val w1 = factory.createWriter(0, 1L)
     val w2 = factory.createWriter(0, 2L)
