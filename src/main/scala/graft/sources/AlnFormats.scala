@@ -40,31 +40,25 @@ object PafFormat extends GraftFormat {
       StructField("mapq", IntegerType),
       StructField("tags", MapType(StringType, StringType))))
 
-  override def regionColumns: Option[(String, String)] = Some(("target_name", "target_start"))
+  /** `region`/`regions` overlap the TARGET span, 0-based half-open. */
+  override def coordinates: Option[Coordinates] =
+    Some(Coordinates("target_name", "target_start", "target_end", zeroBasedStart = true))
 
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
-                    options: Map[String, String]): Iterator[Array[Any]] = {
-    // `region`/`regions` filter by overlap against the TARGET span
-    // (half-open end folded to inclusive for the matcher), the
-    // convention of every ranged scan here.
-    val region = core.Regions.matcherFromOptions(options)
-    P.lines(split, in).map(_._2).filter(_.nonEmpty).flatMap { l =>
+                    options: Map[String, String]): Iterator[Array[Any]] =
+    P.lines(split, in).map(_._2).filter(_.nonEmpty).map { l =>
       val f = l.split("\t", -1)
       require(f.length >= 12, s"paf line needs 12 mandatory fields, got ${f.length}: '$l'")
-      if (region.exists(m => !m.overlaps(f(5), f(7).toLong + 1, f(8).toLong))) None
-      else {
-        val tags = f.iterator.drop(12).map { t =>
-          val c1 = t.indexOf(':'); val c2 = t.indexOf(':', c1 + 1)
-          require(c1 > 0 && c2 > c1, s"malformed paf tag '$t'")
-          (P.s(t.substring(0, c1)): Any, P.s(t.substring(c2 + 1)): Any)
-        }.toArray
-        Some(Array[Any](P.s(f(0)), f(1).toLong, f(2).toLong, f(3).toLong, P.s(f(4)),
-          P.s(f(5)), f(6).toLong, f(7).toLong, f(8).toLong, f(9).toLong,
-          f(10).toLong, f(11).toInt,
-          ArrayBasedMapData(tags.map(_._1), tags.map(_._2))))
-      }
+      val tags = f.iterator.drop(12).map { t =>
+        val c1 = t.indexOf(':'); val c2 = t.indexOf(':', c1 + 1)
+        require(c1 > 0 && c2 > c1, s"malformed paf tag '$t'")
+        (P.s(t.substring(0, c1)): Any, P.s(t.substring(c2 + 1)): Any)
+      }.toArray
+      Array[Any](P.s(f(0)), f(1).toLong, f(2).toLong, f(3).toLong, P.s(f(4)),
+        P.s(f(5)), f(6).toLong, f(7).toLong, f(8).toLong, f(9).toLong,
+        f(10).toLong, f(11).toInt,
+        ArrayBasedMapData(tags.map(_._1), tags.map(_._2)))
     }
-  }
 }
 
 /** GFA 1.0 assembly graphs (gfa-spec.github.io): one row per record

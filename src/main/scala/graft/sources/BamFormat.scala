@@ -98,21 +98,7 @@ object BamFormat extends GraftFormat {
       })
     }
 
-  override def regionColumns: Option[(String, String)] = Some(("reference", "start"))
-
-  private def regionPasses(vals: Array[Any],
-                           region: Option[Regions.Matcher]): Boolean = region match {
-    case None => true
-    case Some(m) =>
-      val ref = vals(2)
-      val start = vals(3)
-      val end = vals(4)
-      ref != null && start != null && {
-        val s = start.asInstanceOf[Long]
-        val e = if (end == null) s else end.asInstanceOf[Long]
-        m.overlaps(ref.asInstanceOf[UTF8String].toString, s, e)
-      }
-  }
+  override def coordinates: Option[Coordinates] = Some(Coordinates("reference", "start", "end"))
 
   /** Reference dictionary re-read from the file head (for streams that
     * do not start at the BAM header). */
@@ -135,31 +121,13 @@ object BamFormat extends GraftFormat {
       if (split.bgzfChunk) refsFromHead(split)
       else readHeader(d)
 
-    val region = Regions.matcherFromOptions(options)
     val wantSeq = split.needs("sequence")
     val wantQual = split.needs("quality_score")
     val tags = wantTags(options)
-
-    new Iterator[Array[Any]] {
-      private var nextRow: Array[Any] = _
-      private var done = false
-      advance()
-
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null && !done) {
-          // no EOFException catch: decodeRecord returns null only at a
-          // clean record boundary; truncation exceptions must fail the
-          // task, not end the iterator
-          val rec = decodeRecord(d, refs, wantSeq, wantQual, tags)
-          if (rec == null) done = true
-          else if (regionPasses(rec, region)) nextRow = rec
-        }
-      }
-
-      override def hasNext: Boolean = nextRow != null
-      override def next(): Array[Any] = { val r = nextRow; advance(); r }
-    }
+    // no EOFException catch: decodeRecord returns null only at a clean
+    // record boundary; truncation exceptions must fail the task, not
+    // end the iterator
+    Iterator.continually(decodeRecord(d, refs, wantSeq, wantQual, tags)).takeWhile(_ != null)
   }
 
   /** Byte-range split of a BGZF BAM over the shared anchor-ownership
@@ -169,7 +137,6 @@ object BamFormat extends GraftFormat {
   private def readBgzfSplit(split: GraftSplit,
                             bs: graft.sources.core.BgzfBlockStream,
                             options: Map[String, String]): Iterator[Array[Any]] = {
-    val region = Regions.matcherFromOptions(options)
     val wantSeq = split.needs("sequence")
     val wantQual = split.needs("quality_score")
     val tags = wantTags(options)
@@ -187,7 +154,6 @@ object BamFormat extends GraftFormat {
       recordLen = (w, c) => 4L + w.i32(c),
       decode = (w, c, len) =>
         decodeBody(w.copy(c + 4, (len - 4).toInt), refs, wantSeq, wantQual, tags))
-      .filter(regionPasses(_, region))
   }
 
   /** Plausibility of a BAM record start at window offset k: validates

@@ -109,7 +109,7 @@ object BcfFormat extends GraftFormat {
       })
     }
 
-  override def regionColumns: Option[(String, String)] = Some(("chrom", "pos"))
+  override def coordinates: Option[Coordinates] = Some(Coordinates("chrom", "pos", "pos"))
 
   /** Shared FILTER/INFO/FORMAT dictionary + contig dictionary. */
   private def dictionaries(header: Seq[String]): (IndexedSeq[String], IndexedSeq[String]) = {
@@ -156,15 +156,6 @@ object BcfFormat extends GraftFormat {
     val wantInfo = split.needs("info")
     val wantGts = typedStruct.isDefined ||
       split.needs("format") || split.needs("genotypes")
-    val region = Regions.matcherFromOptions(options)
-
-    def passes(vals: Array[Any]): Boolean = region match {
-      case None => true
-      case Some(m) =>
-        m.containsPoint(vals(0).asInstanceOf[UTF8String].toString,
-          vals(1).asInstanceOf[Long])
-    }
-
     def decodeArrays(shared: Array[Byte], indiv: Array[Byte]): Array[Any] = {
       val bb = ByteBuffer.wrap(shared).order(ByteOrder.LITTLE_ENDIAN)
 
@@ -248,45 +239,28 @@ object BcfFormat extends GraftFormat {
 
     if (split.bgzfSplit)
       return readBgzfSplit(split, in.asInstanceOf[BgzfBlockStream], header,
-        withSamples && wantGts, decodeArrays, passes)
+        withSamples && wantGts, decodeArrays)
 
-    new Iterator[Array[Any]] {
-      private var nextRow: Array[Any] = _
-      advance()
-
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null) {
-          // no EOFException catch: decode() returns null only at a clean
-          // record boundary; a truncation exception (mid-length,
-          // mid-body, or an inflater EOF from a cut gzip stream) must
-          // fail the task, never end the iterator early
-          val rec = decode()
-          if (rec == null) return
-          if (passes(rec)) nextRow = rec
-        }
-      }
-
-      override def hasNext: Boolean = nextRow != null
-      override def next(): Array[Any] = { val r = nextRow; advance(); r }
-
-      /** One record, or null at EOF exactly on a record boundary. */
-      private def decode(): Array[Any] = {
-        val a = d.read()
-        if (a < 0) return null
-        val b = d.read(); val c = d.read(); val e = d.read()
-        if ((b | c | e) < 0)
-          throw new java.util.zip.ZipException("EOF inside BCF record length")
-        val lShared = a | (b << 8) | (c << 16) | (e << 24)
-        val lIndiv = readIntLE(d)
-        val shared = new Array[Byte](lShared)
-        d.readFully(shared)
-        val indiv =
-          if (withSamples && wantGts) { val a = new Array[Byte](lIndiv); d.readFully(a); a }
-          else { d.skipBytes(lIndiv); null } // sample-less or pruned scan
-        decodeArrays(shared, indiv)
-      }
+    /** One record, or null at EOF exactly on a record boundary. No
+      * EOFException catch: a truncation exception (mid-length,
+      * mid-body, or an inflater EOF from a cut gzip stream) must fail
+      * the task, never end the iterator early. */
+    def decode(): Array[Any] = {
+      val a = d.read()
+      if (a < 0) return null
+      val b = d.read(); val c = d.read(); val e = d.read()
+      if ((b | c | e) < 0)
+        throw new java.util.zip.ZipException("EOF inside BCF record length")
+      val lShared = a | (b << 8) | (c << 16) | (e << 24)
+      val lIndiv = readIntLE(d)
+      val shared = new Array[Byte](lShared)
+      d.readFully(shared)
+      val indiv =
+        if (withSamples && wantGts) { val a = new Array[Byte](lIndiv); d.readFully(a); a }
+        else { d.skipBytes(lIndiv); null } // sample-less or pruned scan
+      decodeArrays(shared, indiv)
     }
+    Iterator.continually(decode()).takeWhile(_ != null)
   }
 
   /** Byte-range split of a BGZF BCF over the shared anchor-ownership
@@ -294,8 +268,7 @@ object BcfFormat extends GraftFormat {
     * (l_shared, l_indiv) framing, the prologue check, and the decoder. */
   private def readBgzfSplit(split: GraftSplit, bs: BgzfBlockStream,
                             header: Seq[String], withSamples: Boolean,
-                            decodeArrays: (Array[Byte], Array[Byte]) => Array[Any],
-                            passes: Array[Any] => Boolean): Iterator[Array[Any]] = {
+                            decodeArrays: (Array[Byte], Array[Byte]) => Array[Any]): Iterator[Array[Any]] = {
     val nContig = dictionaries(header)._2.length
     // the #CHROM line pins the exact per-record sample count — the
     // strongest prologue validation signal BCF offers the guesser
@@ -313,7 +286,6 @@ object BcfFormat extends GraftFormat {
         val indiv = if (withSamples) w.copy(c + 8 + lShared, lIndiv) else null
         decodeArrays(shared, indiv)
       })
-      .filter(passes)
   }
 
   /** Plausibility of a BCF record start at window offset k: validates

@@ -152,17 +152,16 @@ abstract class GffLikeFormat(val name: String, col8: String) extends GraftFormat
   /** Tabix fast path for bgzipped gff-like files — the read side of the
     * writer's `index=tabix` sidecar (falls back to scan+filter when no
     * .tbi sits next to the data). Same contract as the VCF/BCF/BAM
-    * indexed queries: the index only prunes I/O; the row-level overlap
-    * filter below decides membership. */
+    * indexed queries: the index only prunes I/O; the scan's region row
+    * test decides membership. */
   override def regionChunks(path: String, regions: Seq[String],
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     TabixChunks.forRegions(path, regions, conf)
 
+  override def coordinates: Option[Coordinates] = Some(Coordinates("seqname", "start", "end"))
+
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
-                    options: Map[String, String]): Iterator[Array[Any]] = {
-    // region semantics for interval records: OVERLAP with the 1-based
-    // inclusive query (VCF anchors on POS; a feature line is a range)
-    val region = core.Regions.matcherFromOptions(options)
+                    options: Map[String, String]): Iterator[Array[Any]] =
     P.lines(split, in)
       .map(_._2)
       .filter(l => l.nonEmpty && !l.startsWith("#"))
@@ -178,16 +177,6 @@ abstract class GffLikeFormat(val name: String, col8: String) extends GraftFormat
           P.s(P.dotNull(c(7))),
           parseAttributes(c(8)))
       }
-      .filter { vals =>
-        region match {
-          case None => true
-          case Some(m) =>
-            vals(0) != null && m.overlaps(
-              vals(0).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString,
-              vals(3).asInstanceOf[Long], vals(4).asInstanceOf[Long])
-        }
-      }
-  }
 }
 
 object GffFormat extends GffLikeFormat("gff", "phase") {
@@ -268,17 +257,18 @@ object BedFormat extends GraftFormat {
       StructField("block_starts", StringType)))
 
   /** Tabix fast path for bgzipped BED, same contract as the GFF-like
-    * formats (the index only prunes; the overlap filter below decides
+    * formats (the index only prunes; the scan's region row test decides
     * membership). */
   override def regionChunks(path: String, regions: Seq[String],
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     TabixChunks.forRegions(path, regions, conf)
 
+  /** Stored 1-based inclusive: `start` already carries the +1 shift. */
+  override def coordinates: Option[Coordinates] =
+    Some(Coordinates("reference_sequence_name", "start", "end"))
+
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
-                    options: Map[String, String]): Iterator[Array[Any]] = {
-    // region semantics: OVERLAP against the stored 1-based inclusive
-    // coordinates (start already carries the BED->1-based +1 shift)
-    val region = core.Regions.matcherFromOptions(options)
+                    options: Map[String, String]): Iterator[Array[Any]] =
     P.lines(split, in)
       .map(_._2)
       .filter(l => l.nonEmpty && !l.startsWith("#") && !l.startsWith("track") && !l.startsWith("browser"))
@@ -296,16 +286,6 @@ object BedFormat extends GraftFormat {
           P.s(c(0)), longAt(1, 1), longAt(2), P.s(at(3)), score, P.s(at(5)),
           longAt(6, 1), longAt(7), P.s(color), longAt(9), P.s(at(10)), P.s(at(11)))
       }
-      .filter { vals =>
-        region match {
-          case None => true
-          case Some(m) =>
-            vals(0) != null && vals(1) != null && vals(2) != null && m.overlaps(
-              vals(0).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString,
-              vals(1).asInstanceOf[Long], vals(2).asInstanceOf[Long])
-        }
-      }
-  }
 }
 
 /** SAM text alignments. Ref schema (10 cols): test_sam_record_scan.test;

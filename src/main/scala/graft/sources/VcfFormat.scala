@@ -165,7 +165,7 @@ object VcfFormat extends GraftFormat {
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     TabixChunks.forRegions(path, regions, conf)
 
-  override def regionColumns: Option[(String, String)] = Some(("chrom", "pos"))
+  override def coordinates: Option[Coordinates] = Some(Coordinates("chrom", "pos", "pos"))
 
   /** Region grammar: 'chr' or 'chr:start-end' (1-based inclusive). */
   def parseRegion(r: String): (String, Long, Long) = Regions.parse(r)
@@ -183,7 +183,6 @@ object VcfFormat extends GraftFormat {
     val wantInfo = split.needs("info")
     val wantGts = width > 8 && (split.needs("genotypes") || split.needs("format"))
     val cols = if (wantGts || typed != null) Int.MaxValue else 8 // columns to cut
-    val region = Regions.matcherFromOptions(options)
     val infoKeys = new KeyIndex(infoSchema)
     /** value range per info key id of the current record; -1 = absent */
     val infoAt, infoEnd = new Array[Int](infoKeys.size)
@@ -250,8 +249,6 @@ object VcfFormat extends GraftFormat {
         try record(java.util.Arrays.copyOfRange(cur.buf, cur.off, cur.off + cur.len))
         catch { case e: NumberFormatException => throw new IllegalArgumentException(s"$where: bad number (${e.getMessage})", e) }
       }
-      .filter(vals => region.forall(m => vals(0) != null && vals(1) != null && m.containsPoint(
-        vals(0).asInstanceOf[UTF8String].toString, vals(1).asInstanceOf[Long])))
   }
 
   /** Offsets of a byte field cut at a separator, in the shape of

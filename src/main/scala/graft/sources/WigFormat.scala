@@ -19,8 +19,7 @@ import graft.sources.core._
   * Declarations carry parse state across every following data line,
   * so a WIG file is inherently single-split (an arbitrary byte offset
   * cannot know its chrom/step); directory layouts parallelize by
-  * file, the same contract as the compressed formats. The `region`
-  * option filters by overlap against (chrom, start, end).
+  * file, the same contract as the compressed formats.
   */
 object WigFormat extends GraftFormat {
   override def name = "wig"
@@ -34,11 +33,10 @@ object WigFormat extends GraftFormat {
       StructField("end", LongType),
       StructField("value", DoubleType)))
 
-  override def regionColumns: Option[(String, String)] = Some(("chrom", "start"))
+  override def coordinates: Option[Coordinates] = Some(Coordinates("chrom", "start", "end"))
 
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
                     options: Map[String, String]): Iterator[Array[Any]] = {
-    val region = core.Regions.matcherFromOptions(options)
     val it = P.lines(split, in).map(_._2)
     new Iterator[Array[Any]] {
       private var fixed = false
@@ -65,13 +63,6 @@ object WigFormat extends GraftFormat {
         }
       }
 
-      private def passes(r: Array[Any]): Boolean = region match {
-        case None => true
-        case Some(m) => m.overlaps(
-          r(0).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString,
-          r(1).asInstanceOf[Long], r(2).asInstanceOf[Long])
-      }
-
       private def advance(): Unit = {
         nextRow = null
         while (nextRow == null && it.hasNext) {
@@ -83,17 +74,15 @@ object WigFormat extends GraftFormat {
           else if (chrom == null)
             throw new IllegalArgumentException(s"wig data line before any declaration: '$l'")
           else if (fixed) {
-            val r = Array[Any](P.s(chrom), nextStart, nextStart + span - 1,
+            nextRow = Array[Any](P.s(chrom), nextStart, nextStart + span - 1,
               java.lang.Double.parseDouble(l))
             nextStart += step
-            if (passes(r)) nextRow = r
           } else {
             val p = l.split("\\s+")
             require(p.length == 2, s"variableStep line needs 'pos value': '$l'")
             val s0 = java.lang.Long.parseLong(p(0))
-            val r = Array[Any](P.s(chrom), s0, s0 + span - 1,
+            nextRow = Array[Any](P.s(chrom), s0, s0 + span - 1,
               java.lang.Double.parseDouble(p(1)))
-            if (passes(r)) nextRow = r
           }
         }
       }
@@ -115,7 +104,7 @@ object BedGraphFormat extends GraftFormat {
   override def extensions = Seq("bedgraph", "bg")
   override def splittable = true
   override def formatter: Option[RecordFormatter] = Some(BedGraphFormatter)
-  override def regionColumns: Option[(String, String)] = Some(("chrom", "start"))
+  override def coordinates: Option[Coordinates] = Some(Coordinates("chrom", "start", "end"))
 
   override def schema(paths: Seq[Path], conf: Configuration,
                       options: Map[String, String]): StructType =
@@ -126,8 +115,7 @@ object BedGraphFormat extends GraftFormat {
       StructField("value", DoubleType)))
 
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
-                    options: Map[String, String]): Iterator[Array[Any]] = {
-    val region = core.Regions.matcherFromOptions(options)
+                    options: Map[String, String]): Iterator[Array[Any]] =
     P.lines(split, in)
       .map(_._2)
       .filter(l => l.nonEmpty && !l.startsWith("#") && !l.startsWith("track") &&
@@ -140,8 +128,4 @@ object BedGraphFormat extends GraftFormat {
           java.lang.Long.parseLong(c(2)),
           java.lang.Double.parseDouble(c(3)))
       }
-      .filter(r => region.forall(_.overlaps(
-        r(0).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString,
-        r(1).asInstanceOf[Long], r(2).asInstanceOf[Long])))
-  }
 }

@@ -125,18 +125,24 @@ final case class GraftScanBuilder(format: GraftFormat, full: StructType,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = StructType(requiredSchema.fields.map(f => full(full.fieldIndex(f.name))))
 
-  /** Accept simple filters for reader-side evaluation but report them all
-    * back so Spark re-applies them — the reader-side pass is purely an
-    * early-skip optimization (same division of labor as the reference,
-    * where DataFusion re-evaluates pushed predicates; correctness never
-    * depends on the source's filter implementation). */
+  /** Keep every filter for index pruning ([[GraftPlanning]]) and hand
+    * all of them back: Spark's Filter above the scan evaluates them (the
+    * reference's division of labor — DataFusion applies pushed
+    * predicates above its scan too). The scan's only row test of its own
+    * is region membership. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(FilterEval.supported)
+    pushed = filters
     filters
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = GraftScan(format, full, required, pushed, options)
+  override def build(): Scan = {
+    val regionOpt = options.keys.find(k => k.equalsIgnoreCase("region") || k.equalsIgnoreCase("regions"))
+    if (regionOpt.isDefined && format.coordinates.isEmpty)
+      throw new IllegalArgumentException(s"option '${regionOpt.get}' needs genomic " +
+        s"coordinates; format '${format.name}' has none")
+    GraftScan(format, full, required, pushed, options)
+  }
 }
 
 final case class GraftScan(format: GraftFormat, full: StructType, required: StructType,
@@ -205,7 +211,7 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
       GraftConf.broadcast(SparkSession.active))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(format, full, required, filters, options, bconf)
+    GraftReaderFactory(format, full, required, options, bconf)
 }
 
 /** Input-partition planning shared by the batch scan and the
@@ -291,12 +297,11 @@ private[core] object GraftPlanning {
     // no explicit region? infer one from the pushed filters — a
     // declarative `WHERE chrom = '1' AND pos BETWEEN a AND b` prunes
     // through the index exactly like the region option (soundness
-    // argument at [[GraftFormat.regionColumns]]; Spark re-applies the
-    // filters above the scan either way)
+    // argument at [[Coordinates]]; Spark re-applies the filters above
+    // the scan either way)
     val inferred: Option[Seq[String]] =
       if (explicit.nonEmpty) Some(explicit)
-      else format.regionColumns
-        .flatMap { case (cc, pc) => Regions.fromFilters(filters, cc, pc) }
+      else format.coordinates.flatMap(_.regionsFrom(filters))
     inferred match {
       case None => None
       // contradictory conjunction: zero partitions, PROVABLE from the
@@ -313,20 +318,30 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
     extends InputPartition
 
 final case class GraftReaderFactory(format: GraftFormat, full: StructType,
-                                    required: StructType, filters: Array[Filter],
-                                    options: Map[String, String],
+                                    required: StructType, options: Map[String, String],
                                     bconf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
-  /** The open path: (filtered full-schema value iterator, close);
+  /** The open path: (full-schema value iterator, close), filtered by
+    * region membership when the read carries a region option;
     * `createReader` projects it to the required columns. */
   private def openIterator(p: GraftInputPartition): (Iterator[Array[Any]], () => Unit) = {
     // session Hadoop conf broadcast from the driver: spark.hadoop.* (s3a
     // credentials, endpoints, ...) must reach executor-side FS access
     val conf = bconf.value.value
-    // projection + pushed-filter references: parsers may skip the work
-    // of materializing any other top-level column
-    val needed = Some(required.fieldNames.toSet ++ filters.flatMap(_.references))
+    // the scan's one row test, from the format's declared coordinates
+    // (build() rejects a region option on a format without them); every
+    // other predicate is left to Spark's Filter above the scan
+    val inRegion = Regions.matcherFromOptions(options).map(m => (format.coordinates.get, m))
+    // projection (Spark adds the post-scan filters' columns) plus the
+    // coordinates the region test reads: parsers may skip the work of
+    // materializing any other top-level column
+    val needed = Some(required.fieldNames.toSet ++
+      inRegion.toSeq.flatMap { case (c, _) => Seq(c.contig, c.start, c.end) })
+    def rows(split: GraftSplit, stream: java.io.InputStream): Iterator[Array[Any]] = {
+      val it = format.read(split, full, stream, options)
+      inRegion.fold(it) { case (c, m) => it.filter(c.matches(full, m)) }
+    }
     val raw = GraftFiles.open(p.path, conf)
     val codec = format.forcedCodec.getOrElse(Compression.of(p.path, options)._1)
     val ranged = !p.bgzfChunk && !p.bgzfSplit && (p.start != 0 || p.end != Long.MaxValue)
@@ -334,7 +349,6 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
       require(codec == "none", "ranged split over compressed input")
       raw.seek(p.start) // LineReader expects the stream positioned at split start
     }
-    val pred = FilterEval.build(filters, full)
     if (p.bgzfSplit) {
       // executor-side sync + open in one read: first BGZF block header
       // in [start, end); a range interior to one block owns nothing
@@ -349,8 +363,7 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
           val split = GraftSplit(p.path,
             if (p.start == 0) 0L else p.start << 16, (p.end << 16) - 1,
             p.fileLen, bgzfSplit = true, conf = conf, neededCols = needed)
-          return (format.read(split, full, stream, options).filter(pred),
-            () => stream.close())
+          return (rows(split, stream), () => stream.close())
       }
     }
     val stream =
@@ -360,7 +373,7 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
     val split = GraftSplit(p.path, if (ranged) p.start else 0,
       if (ranged) p.end else Long.MaxValue, p.fileLen, bgzfChunk = p.bgzfChunk,
       conf = conf, neededCols = needed)
-    (format.read(split, full, stream, options).filter(pred), () => stream.close())
+    (rows(split, stream), () => stream.close())
   }
 
   /** One row per partition, refilled per record: Spark plans a

@@ -52,24 +52,18 @@ trait GraftFormat extends Serializable {
     * virtual-offset chunks to scan; None = full scan + filter fallback.
     * Implementations load the index and any header dictionary ONCE and
     * probe it per region — a thousand-region panel must not mean a
-    * thousand index loads. The region filter is always applied to chunk
-    * rows, so an index can only prune I/O, never change results. */
+    * thousand index loads. The scan's region row test (see
+    * [[Coordinates]]) is applied to chunk rows too, so an index can only
+    * prune I/O, never change results. */
   def regionChunks(path: String, regions: Seq[String],
                    conf: org.apache.hadoop.conf.Configuration): Option[Seq[(Long, Long)]] = None
 
-  /** (contig column, start-coordinate column) that lets the planner
-    * infer index-pruning regions from pushed filters: `WHERE chrom =
-    * '1' AND pos BETWEEN a AND b` hits the tabix/CSI/BAI index with no
-    * region option — declarative predicates become index pruning the
-    * way parquet predicates become partition pruning (see
-    * [[Regions.fromFilters]]). Soundness for every indexed format,
-    * point- or interval-anchored: a record whose START lies in
-    * [lo, hi] necessarily OVERLAPS [lo, hi], and the binning index
-    * returns every record overlapping the query region — so the
-    * pruned chunk set covers every row the filters can accept, and
-    * Spark re-applies the filters above the scan. Filters on an `end`
-    * column are ignored (less pruning, never less data). */
-  def regionColumns: Option[(String, String)] = None
+  /** The columns that place a record on the genome, or None for a
+    * format whose records have no position (FASTQ, SAM text, ...). One
+    * declaration serves both region uses: the scan's row test for the
+    * `region`/`regions` options, and index-pruning regions inferred from
+    * pushed filters (see [[Coordinates]]). */
+  def coordinates: Option[Coordinates] = None
 
   /** Schema; `paths` lets header-driven formats (VCF) peek at a file. */
   def schema(paths: Seq[Path], conf: Configuration, options: Map[String, String]): StructType
@@ -79,6 +73,44 @@ trait GraftFormat extends Serializable {
     * (UTF8String / primitives / ArrayData / MapData). */
   def read(split: GraftSplit, schema: StructType, stream: InputStream,
            options: Map[String, String]): Iterator[Array[Any]]
+}
+
+/** Where a format's records sit on the genome: the contig, start and
+  * end columns of its full schema, 1-based inclusive unless
+  * `zeroBasedStart` (PAF keeps its on-disk 0-based half-open target
+  * span; a 0-based start s is the 1-based s + 1, and a half-open end is
+  * already the inclusive last base). Point formats (VCF, BCF) name
+  * `pos` as both start and end.
+  *
+  * Row test ([[matches]]): the record overlaps a region. A null contig
+  * or start never matches; a null end matches as the point at start.
+  *
+  * Filter inference: `WHERE contig = '1' AND start BETWEEN a AND b`
+  * hits the tabix/CSI/BAI index with no region option — declarative
+  * predicates become index pruning the way parquet predicates become
+  * partition pruning (see [[Regions.fromFilters]]). Soundness for
+  * every indexed format, point- or interval-anchored: a record whose
+  * START lies in [lo, hi] necessarily OVERLAPS [lo, hi], and the
+  * binning index returns every record overlapping the query region —
+  * so the pruned chunk set covers every row the filters can accept,
+  * and Spark re-applies the filters above the scan. Filters on the end
+  * column are ignored (less pruning, never less data). */
+final case class Coordinates(contig: String, start: String, end: String,
+                             zeroBasedStart: Boolean = false) {
+
+  /** Row test over full-schema rows of `schema` for one read's regions. */
+  def matches(schema: StructType, regions: Regions.Matcher): Array[Any] => Boolean = {
+    val (c, s, e) = (schema.fieldIndex(contig), schema.fieldIndex(start), schema.fieldIndex(end))
+    val shift = if (zeroBasedStart) 1L else 0L
+    vals => vals(c) != null && vals(s) != null && {
+      val lo = vals(s).asInstanceOf[Long] + shift
+      regions.overlaps(vals(c).toString, lo, if (vals(e) == null) lo else vals(e).asInstanceOf[Long])
+    }
+  }
+
+  /** Index-pruning regions implied by pushed filters. */
+  def regionsFrom(filters: Seq[org.apache.spark.sql.sources.Filter]): Option[Seq[String]] =
+    Regions.fromFilters(filters, contig, start, if (zeroBasedStart) 1L else 0L)
 }
 
 /** One unit of parallel work: a file, a byte range of one, or an
@@ -95,8 +127,9 @@ final case class GraftSplit(path: String, start: Long, end: Long, fileLen: Long,
                             bgzfSplit: Boolean = false,
                             conf: Configuration = new Configuration(),
                             neededCols: Option[Set[String]] = None) {
-  /** Runtime column-needs from Catalyst's pruning (projection + pushed
-    * filter references). Parsers still emit full-schema rows — ordinals
+  /** Runtime column-needs from Catalyst's pruning (projection and
+    * post-scan filter columns, plus the declared coordinates when the
+    * read filters by region). Parsers still emit full-schema rows — ordinals
     * must not shift — but may SKIP THE WORK of materializing expensive
     * unneeded columns (VCF info struct / genotype strings, BAM
     * sequence/quality decode): declared pruning in ReadSchema is only

@@ -170,15 +170,15 @@ final case class GraftMicroBatchStream(format: GraftFormat, full: StructType,
         s"streaming input file vanished before its batch was planned: $path")
       statuses.flatMap(st =>
         // same index pruning as the batch path, including regions
-        // inferred from pushed filters — each arriving file reads only
-        // its matching chunks
+        // inferred from pushed filters (their only use in the stream) —
+        // each arriving file reads only its matching chunks
         GraftPlanning.partitionsFor(format, st, maxSplit, options, conf,
           filters.toSeq))
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(format, full, required, filters, options, bconf)
+    GraftReaderFactory(format, full, required, options, bconf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -56,11 +56,8 @@ object Regions {
   final class Matcher private[Regions] (
       byChr: Map[String, (Array[Long], Array[Long])]) extends Serializable {
 
-    /** Point semantics (VCF/BCF anchor on POS). */
-    def containsPoint(chr: String, pos: Long): Boolean =
-      byChr.get(chr).exists { case (los, his) =>
-        val i = floorIdx(los, pos); i >= 0 && his(i) >= pos
-      }
+    /** Point semantics: the one-base interval [pos, pos]. */
+    def containsPoint(chr: String, pos: Long): Boolean = overlaps(chr, pos, pos)
 
     /** Interval-overlap semantics (BAM reads, GFF/GTF/BED features):
       * true iff [s, e] intersects any region. Disjoint sorted intervals
@@ -112,13 +109,16 @@ object Regions {
     * merely less effective and one that cannot be made (no contig
     * constraint, OR-shapes, casts) returns Nil = full scan. The
     * filters array is an implicit conjunction, which is what makes
-    * combining the chrom and pos constraints sound. */
+    * combining the chrom and pos constraints sound. `posShift` maps a
+    * position column value to its 1-based coordinate (1 for a 0-based
+    * start column). */
   /** Result grammar: None = cannot infer (full scan); Some(Nil) = the
     * conjunction is PROVABLY EMPTY (contradictory chrom equalities or
     * an inverted position range — zero partitions, no index needed);
     * Some(regions) = prune through the index with these. */
   def fromFilters(filters: Seq[org.apache.spark.sql.sources.Filter],
-                  chromCol: String, posCol: String): Option[Seq[String]] = {
+                  chromCol: String, posCol: String,
+                  posShift: Long = 0L): Option[Seq[String]] = {
     import org.apache.spark.sql.sources._
     val chroms = filters.collect {
       case EqualTo(c, v: String) if c == chromCol => Seq(v)
@@ -152,8 +152,8 @@ object Regions {
     // clamp to 1-based coordinates: 'pos > -2' must not emit a region
     // string with a leading '-' (widening a lower bound is always
     // sound for pruning)
-    val lo = math.max(1L, if (los.isEmpty) 1L else los.max)
-    val hi = if (his.isEmpty) Long.MaxValue else his.min
+    val lo = math.max(1L, if (los.isEmpty) 1L else los.max + posShift)
+    val hi = if (his.isEmpty) Long.MaxValue else math.min(his.min, Long.MaxValue - posShift) + posShift
     // intersect the per-conjunct chrom sets (multiple EqualTo on the
     // same column is a contradiction unless equal; In ∧ EqualTo narrows)
     val set = chroms.map(_.toSet).reduce(_ intersect _)

@@ -45,18 +45,8 @@ private[core] object RowStats {
                    schema: StructType, sampleRows: Int = 1000): OptionalLong = {
     if (files.isEmpty) return OptionalLong.of(0L)
     val head = files.head
-    // Sample WITHOUT region filters: a region-filtered iterator can
-    // silently stream arbitrarily far inside one hasNext() (the byte
-    // cap below only checks between RETURNED records), turning plan
-    // time into a driver-side scan — and a no-match region would
-    // declare the whole table empty. The raw-record estimate is a
-    // conservative (over-)estimate for a region query's scan, which is
-    // the safe direction for broadcast decisions; it also makes the
-    // cache key honestly region-independent.
-    val sampleOpts = options.filterNot { case (k, _) =>
-      k.equalsIgnoreCase("region") || k.equalsIgnoreCase("regions") }
     val codec = format.forcedCodec.getOrElse(
-      Compression.of(head.getPath.toString, sampleOpts)._1)
+      Compression.of(head.getPath.toString, options)._1)
     val totalBytes = files.map(_.getLen).sum
     val key = s"${format.name}|$codec|${head.getPath}|${head.getLen}|" +
       s"${head.getModificationTime}|${files.length}|$totalBytes"
@@ -73,7 +63,7 @@ private[core] object RowStats {
           // framing, not values
           val split = GraftSplit(head.getPath.toString, 0, Long.MaxValue,
             head.getLen, conf = conf, neededCols = Some(Set.empty))
-          val it = format.read(split, schema, stream, sampleOpts)
+          val it = format.read(split, schema, stream, options)
           var n = 0L
           // bound BOTH rows and compressed bytes so a huge-record file
           // cannot turn planning into a scan

@@ -109,6 +109,28 @@ class FilterIndexPruningSpec extends AnyFunSuite {
     assert(filtered.collect().map(_.toString).sorted.toSeq == want && want.nonEmpty)
   }
 
+  test("GFF: seqname/start filters prune through a written .tbi; rows exact") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-gff-where").toString
+    spark.range(600).selectExpr(
+      "concat('chr', id % 2) AS seqname", "'synth' AS source", "'feature' AS type",
+      "id * 1000 + 1 AS start", "id * 1000 + 1500 AS end", "cast(1.0 as float) AS score",
+      "'+' AS strand", "cast(null as string) AS phase",
+      "map('rid', array(cast(id as string))) AS attributes")
+      .repartition(1).sortWithinPartitions("seqname", "start")
+      .write.mode("overwrite").option("compression", "bgzf").option("index", "tabix")
+      .format("gff").save(dir)
+    val filtered = GraftIO.read_gff(spark, dir)
+      .where(col("seqname") === "chr1" && col("start").between(100000L, 200000L))
+      .selectExpr("seqname", "start", "end")
+    val parts = chunkParts(filtered)
+    assert(parts.nonEmpty && parts.forall(_.bgzfChunk),
+      s"expected .tbi chunk partitions, got ${parts.take(3)}")
+    val want = GraftIO.read_gff(spark, dir).selectExpr("seqname", "start", "end").collect()
+      .filter(r => r.getString(0) == "chr1" && r.getLong(1) >= 100000L && r.getLong(1) <= 200000L)
+      .map(_.toString).sorted.toSeq
+    assert(filtered.collect().map(_.toString).sorted.toSeq == want && want.size == 50)
+  }
+
   test("BAM: reference/start filters prune through the .bai") {
     val path = s"$F/bam/indexed.bam"
     val refs = GraftIO.read_bam_file_records(spark, path)

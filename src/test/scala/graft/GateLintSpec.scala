@@ -42,6 +42,17 @@ class GateLintSpec extends AnyFunSuite {
     assert(!e3.getMessage.contains("array_join"))
   }
 
+  test("region options become a row test in one place: the scan's reader factory") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val users = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readAllLines(p).asScala.exists(l =>
+        l.contains("matcherFromOptions(") && !l.contains("def matcherFromOptions(")))
+      .map(root.relativize(_).toString).toSeq.sorted
+    assert(users == Seq("graft/sources/core/GraftDataSource.scala"), users)
+  }
+
   test("coreSet names only live registry entries") {
     val dead = SparkEntry.coreSet -- SparkEntry.registry.keySet
     assert(dead.isEmpty, s"coreSet references unknown entries: $dead")

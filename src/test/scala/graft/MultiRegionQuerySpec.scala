@@ -64,6 +64,54 @@ class MultiRegionQuerySpec extends AnyFunSuite {
     assert(far.size == 2)
   }
 
+  // ---- the scan's one region row test ----
+
+  test("region reads == full read filtered by the declared coordinates, all nine formats") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-coords")
+    def file(name: String, body: String): String =
+      java.nio.file.Files.writeString(dir.resolve(name), body).toString
+    // (format, path, regions, rows expected): each spec mixes hits and
+    // misses; PAF's 0-based target_start 2000 is base 2001 (outside
+    // t1:2000-2000), and BED's '.' end matches as the point at start
+    val cases = Seq(
+      ("vcf", s"$F/vcf/test.vcf", "1:200-999;2:700-", 3),
+      ("bcf", s"$F/vcf/test.bcf", "1:200-999", 2),
+      ("bam", s"$F/bam/test.bam", "ref1:5-24", 1),
+      ("paf", s"$F/paf/test.paf", "t1:2000-2000;t2:660-660", 1),
+      ("wig", s"$F/wig/test.wig", "chr1:105-110;chr2:301-", 4),
+      ("bedgraph", file("t.bedgraph", "chr1\t0\t10\t1.5\nchr1\t10\t20\t2\nchr2\t5\t6\t3\n"),
+        "chr1:11-11;chr2:6-", 2),
+      ("gff", s"$F/gff/test.gff", "sq1:14-20", 1),
+      ("gtf", s"$F/gtf/test.gtf", "chr1:12228-12613", 1),
+      ("bed", file("t.bed", "chr1\t99\t.\tpt\nchr1\t100\t200\tiv\nchr2\t5\t6\tx\n"),
+        "chr1:100-100", 1))
+    for ((fmt, path, spec, n) <- cases) {
+      val c = graft.sources.Formats.byName(fmt).coordinates.get
+      val shift = if (c.zeroBasedStart) 1L else 0L
+      val m = Regions.matcher(Regions.split(spec).map(Regions.parse))
+      val full = spark.read.format(fmt).load(path).selectExpr(c.contig, c.start, c.end).collect()
+      val want = full.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && {
+        val lo = r.getLong(1) + shift
+        m.overlaps(r.getString(0), lo, if (r.isNullAt(2)) lo else r.getLong(2))
+      }).map(_.toString).sorted.toSeq
+      assert(want.size == n && full.length > n, s"$fmt: ${want.size} of ${full.length}")
+      val opt = if (spec.contains(';')) "regions" else "region"
+      val got = spark.read.format(fmt).option(opt, spec).load(path)
+        .selectExpr(c.contig, c.start, c.end).collect().map(_.toString).sorted.toSeq
+      assert(got == want, s"$fmt $opt=$spec")
+    }
+  }
+
+  test("a region option on a format without coordinates fails naming option and format") {
+    for ((fmt, path, opt) <- Seq(("fastq", s"$F/fastq/test.fastq", "region"),
+                                 ("sam", s"$F/sam/example.sam", "regions"))) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format(fmt).option(opt, "chr9:1-2").load(path).count()
+      }
+      assert(e.getMessage.contains(s"'$opt'") && e.getMessage.contains(s"'$fmt'"), e.getMessage)
+    }
+  }
+
   // ---- fixture-level union semantics ----
 
   test("vcf_query with a region list == union of single-region queries, no duplicates") {

@@ -5,13 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.GraftIO
-import graft.sources.core.FilterEval
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Edge-of-format hardening: CRLF, missing trailing newline, empty
-  * files, missing paths, and the conservative filter-eval contract. */
+  * files, missing paths, and pushed predicates keeping Spark's own
+  * comparison semantics. */
 class RobustnessSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkTestSession.get
@@ -57,24 +56,23 @@ class RobustnessSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
-  test("FilterEval never drops a matching row (conservative contract)") {
-    val schema = StructType(Seq(
-      StructField("s", StringType), StructField("n", LongType)))
-    def ev(f: Filter, s: String, n: java.lang.Long): Boolean =
-      FilterEval.build(Array(f), schema)(
-        Array[Any](if (s == null) null else UTF8String.fromString(s), n))
-    assert(ev(EqualTo("s", "x"), "x", 1L))
-    assert(!ev(EqualTo("s", "x"), "y", 1L))
-    assert(ev(GreaterThan("n", 5L), "a", 6L))
-    assert(!ev(GreaterThan("n", 5L), "a", 5L))
-    assert(ev(IsNull("s"), null, 1L))
-    assert(!ev(IsNotNull("s"), null, 1L))
-    // unknown column / unsupported comparison: keep the row
-    assert(ev(EqualTo("missing_col", "x"), "y", 1L))
-    assert(ev(EqualTo("n", "not_a_number"), "y", 1L))
-    assert(ev(Or(EqualTo("s", "x"), EqualTo("missing_col", 1)), "y", 1L))
-    // And short-circuits to definite-false even with one unknown side
-    assert(!ev(And(EqualTo("s", "x"), EqualTo("missing_col", 1)), "y", 1L))
+  test("a pushed predicate returns the rows of its unpushed twin") {
+    // -0 equals 0 for Spark's float comparison, and UTF8String orders by
+    // code point: U+FFFD sorts below U+1F600 although its UTF-16 unit
+    // sorts above the surrogate pair's
+    val p = tmpFile("q.vcf", "##fileformat=VCFv4.2\n" +
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n" +
+      "1\t1\t\uFFFD\tA\tT\t-0\t.\t.\n" +
+      "1\t2\ta\tA\tT\t1\t.\t.\n" +
+      "1\t3\tb\tA\tT\t60\t.\t.\n")
+    val df = GraftIO.read_vcf_file_records(spark, p)
+    for ((pushed, unpushed, n) <- Seq(
+        ("qual >= 0", "qual + 0 >= 0", 3),
+        ("qual = 0", "qual + 0 = 0", 1),
+        ("id < '\uD83D\uDE00'", "concat(id, '') < '\uD83D\uDE00'", 3))) {
+      assert(df.where(unpushed).count() == n, unpushed)
+      assert(df.where(pushed).count() == n, pushed)
+    }
   }
 
   test("truncated BGZF deflate payload fails cleanly, never hangs") {
