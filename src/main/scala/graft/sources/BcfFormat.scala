@@ -182,26 +182,21 @@ object BcfFormat extends GraftFormat {
             (dict(key).toLowerCase, readValues(bb, tpe, count))
           }.toMap
 
+        // one INFO value as the schema's type; a MISSING one stays null
+        def asType(dt: DataType, v: Any): Any = dt match {
+          case _ if v == null => null
+          case IntegerType    => Int.box(v.asInstanceOf[Number].intValue())
+          case FloatType      => Float.box(v.asInstanceOf[Number].floatValue())
+          case _              => UTF8String.fromString(v.toString)
+        }
         val infoVals = infoSchema.fields.map { f =>
           f.dataType match {
             case BooleanType =>
               if (infoKv.contains(f.name)) java.lang.Boolean.TRUE else null
-            case IntegerType =>
-              infoKv.get(f.name).flatMap(_.headOption).map(v => Int.box(v.asInstanceOf[Number].intValue())).orNull
-            case FloatType =>
-              infoKv.get(f.name).flatMap(_.headOption).map(v => Float.box(v.asInstanceOf[Number].floatValue())).orNull
-            case StringType =>
-              infoKv.get(f.name).flatMap(_.headOption).map(v => UTF8String.fromString(v.toString)).orNull
+            case dt @ (IntegerType | FloatType | StringType) =>
+              infoKv.get(f.name).flatMap(_.headOption).map(asType(dt, _)).orNull
             case ArrayType(et, _) =>
-              infoKv.get(f.name).map { vs =>
-                new GenericArrayData(vs.map { v =>
-                  et match {
-                    case IntegerType => Int.box(v.asInstanceOf[Number].intValue()): Any
-                    case FloatType   => Float.box(v.asInstanceOf[Number].floatValue()): Any
-                    case _           => UTF8String.fromString(v.toString): Any
-                  }
-                }.toArray)
-              }.orNull
+              infoKv.get(f.name).map(vs => new GenericArrayData(vs.map(asType(et, _)).toArray)).orNull
             case _ => null
           }
         }
@@ -427,11 +422,18 @@ object BcfFormat extends GraftFormat {
     else (0 until count).map(_ => readOneInt(bb, tpe))
   }
 
-  /** Values of an INFO entry as boxed numbers/strings. */
+  /** Values of an INFO entry as boxed numbers/strings; a width's
+    * MISSING sentinel (int8 -128, int16 -32768, int32 Int.MinValue,
+    * float 0x7f800001) reads as null. */
   private def readValues(bb: ByteBuffer, tpe: Int, count: Int): Seq[Any] = tpe match {
     case 0 => Seq.empty // MISSING (Flag)
-    case 1 | 2 | 3 => (0 until count).map(_ => Int.box(readOneInt(bb, tpe)))
-    case 5 => (0 until count).map(_ => Float.box(bb.getFloat))
+    case 1 | 2 | 3 =>
+      val missing = tpe match { case 1 => Byte.MinValue.toInt; case 2 => Short.MinValue.toInt; case _ => Int.MinValue }
+      (0 until count).map { _ => val v = readOneInt(bb, tpe); if (v == missing) null else Int.box(v) }
+    case 5 => (0 until count).map { _ =>
+      val bits = bb.getInt
+      if (bits == 0x7f800001) null else Float.box(java.lang.Float.intBitsToFloat(bits))
+    }
     case 7 =>
       val bytes = new Array[Byte](count)
       bb.get(bytes)

@@ -6,8 +6,6 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-import graft.sources.core.RecordFormatter
-
 /** BCF2 binary rendering — the inverse of [[BcfFormat]]'s decoder at
   * the record level, inside the real BGZF container (forced; a .bcf IS
   * bgzf, so the codec suffix is suppressed). `parse ∘ write = id` holds
@@ -38,28 +36,9 @@ import graft.sources.core.RecordFormatter
   * otherwise — every choice mirrors what `BcfFormat.renderFmtValue`
   * renders back.
   */
-object BcfFormatter extends graft.sources.core.GenomicRecordFormatter {
+object BcfFormatter extends VcfLikeFormatter {
   override def fileExtension = ".bcf"
   override def writeForcedCodec: Option[String] = Some("bgzf")
-  override def suppressCodecSuffix: Boolean = true
-  override def format(row: InternalRow, schema: StructType): String =
-    throw new UnsupportedOperationException("BCF is binary — formatBytes is the write path")
-
-  /** index=csi support: record interval [pos-1, pos-1+len(ref)), the
-    * same convention the VCF writer indexes. The sidecar's aux block
-    * carries reference NAMES (tabix-flavored CSI), which the read
-    * side's region query prefers over rid arithmetic — a part file
-    * holding only later contigs would otherwise renumber rids. */
-  override def coordsOf(row: InternalRow, schema: StructType): (String, Long, Long) = {
-    val pos = row.getLong(schema.fieldIndex("pos"))
-    val ref = row.getUTF8String(schema.fieldIndex("ref"))
-    (row.getUTF8String(schema.fieldIndex("chrom")).toString,
-      pos - 1, pos - 1 + math.max(ref.numChars(), 1))
-  }
-
-  /** Advisory only — BCF is binary, htslib resolves coordinates from
-    * the records; kept VCF-shaped for tools that read the aux block. */
-  override def tabixConfig: (Int, Int, Int, Int, Char) = (2, 1, 2, 0, '#')
 
   // BCF typed-encoding type codes
   private val T_MISSING = 0
@@ -151,19 +130,6 @@ object BcfFormatter extends graft.sources.core.GenomicRecordFormatter {
     })
   }
 
-  private def infoFields(schema: StructType): Array[StructField] =
-    schema("info").dataType.asInstanceOf[StructType].fields
-
-  private def numberAndType(dt: DataType): (String, String) = dt match {
-    case BooleanType               => ("0", "Flag")
-    case IntegerType               => ("1", "Integer")
-    case FloatType                 => ("1", "Float")
-    case StringType                => ("1", "String")
-    case ArrayType(IntegerType, _) => (".", "Integer")
-    case ArrayType(FloatType, _)   => (".", "Float")
-    case _                         => (".", "String")
-  }
-
   override def fileHeaderBytes(firstRow: Option[InternalRow], schema: StructType,
                                options: Map[String, String]): Option[Array[Byte]] = {
     val ds = dicts(schema, options)
@@ -172,47 +138,28 @@ object BcfFormatter extends graft.sources.core.GenomicRecordFormatter {
     options.get("filters").iterator.flatMap(_.split(","))
       .map(_.trim).filter(_.nonEmpty)
       .foreach(f => sb.append(s"""##FILTER=<ID=$f,Description="">""").append('\n'))
-    infoFields(schema).foreach { f =>
-      val (num, tpe) = numberAndType(f.dataType)
-      sb.append(s"""##INFO=<ID=${f.name.toUpperCase},Number=$num,Type=$tpe,Description="">""").append('\n')
-    }
-    val withSamples = schema.fieldNames.contains("genotypes")
-    ds.formatKeys.foreach { k =>
-      // GT is Number=1 Type=String by spec regardless of struct shape
-      val (num, tpe) =
-        if (k == "GT") ("1", "String")
-        else numberAndType(ds.fmtTypes.getOrElse(k, StringType))
-      sb.append(s"""##FORMAT=<ID=$k,Number=$num,Type=$tpe,Description="">""").append('\n')
-    }
+    sb.append(infoDeclarations(schema))
+    // GT is Number=1 Type=String by spec: declaredFormats types it so
+    ds.formatKeys.foreach(k => sb.append(declaration("FORMAT", k, ds.fmtTypes(k))))
     contigSpec(options).split(",").iterator.map(_.trim).filter(_.nonEmpty).foreach { c =>
       val i = c.lastIndexOf(':')
       if (i > 0) sb.append(s"##contig=<ID=${c.substring(0, i)},length=${c.substring(i + 1)}>\n")
       else sb.append(s"##contig=<ID=$c>\n")
     }
-    sb.append("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO")
     // header sample count: option("samples", n) is authoritative when
     // set (and the first record must agree); otherwise the first record
     // fixes it and recordInvariant holds every later record to it.
-    val fromRow =
-      if (!withSamples) None
-      else firstRow.map { r =>
-        val i = schema.fieldIndex("genotypes")
-        if (r.isNullAt(i)) 0 else r.getArray(i).numElements()
-      }
+    val fromRow = firstRow.flatMap(sampleCount(_, schema))
     val nSamples = options.get("samples") match {
       case Some(n) =>
         val want = n.toInt
         fromRow.foreach(got => require(got == want,
           s"first record carries $got genotypes but option(\"samples\") declares " +
             s"$want — records would disagree with the header sample columns"))
-        if (withSamples) want else 0
+        if (schema.fieldNames.contains("genotypes")) want else 0
       case None => fromRow.getOrElse(0)
     }
-    if (nSamples > 0) {
-      sb.append("\tFORMAT")
-      (1 to nSamples).foreach(i => sb.append(s"\ts$i"))
-    }
-    sb.append('\n')
+    sb.append(columnsLine(nSamples))
     val text = (sb.toString + "\u0000").getBytes(StandardCharsets.UTF_8)
     val bb = ByteBuffer.allocate(9 + text.length).order(ByteOrder.LITTLE_ENDIAN)
     bb.put('B'.toByte).put('C'.toByte).put('F'.toByte)
@@ -220,18 +167,6 @@ object BcfFormatter extends graft.sources.core.GenomicRecordFormatter {
     bb.putInt(text.length).put(text)
     Some(bb.array())
   }
-
-  // ragged genotype arrays would write records whose n_sample disagrees
-  // with the header — htslib/bcftools reject such files (mirrors
-  // VcfFormatter.recordInvariant)
-  override def recordInvariant(row: InternalRow, schema: StructType,
-      options: Map[String, String]): Option[(String, Long)] =
-    if (!schema.fieldNames.contains("genotypes")) None
-    else {
-      val i = schema.fieldIndex("genotypes")
-      Some(("sample count",
-        if (row.isNullAt(i)) 0L else row.getArray(i).numElements().toLong))
-    }
 
   // ---- typed-encoding primitives (inverses of BcfFormat's readers) ----
 
@@ -272,12 +207,13 @@ object BcfFormatter extends graft.sources.core.GenomicRecordFormatter {
     bb.put(bytes)
   }
 
-  private def putIntVector(bb: ByteBuffer, vs: Seq[Long]): Unit =
+  /** A missing (None) element is the chosen width's MISSING sentinel. */
+  private def putIntVector(bb: ByteBuffer, vs: Seq[Option[Long]]): Unit =
     if (vs.isEmpty) putDescriptor(bb, T_INT8, 0)
     else {
-      val t = vs.map(intWidth).max
+      val t = vs.flatten.map(intWidth).foldLeft(T_INT8)(math.max)
       putDescriptor(bb, t, vs.length)
-      vs.foreach(putInt(bb, t, _))
+      vs.foreach(v => putInt(bb, t, v.getOrElse(missingOf(t))))
     }
 
   // ---- record encoding ----
@@ -302,11 +238,11 @@ object BcfFormatter extends graft.sources.core.GenomicRecordFormatter {
       if (row.isNullAt(qI)) FLOAT_MISSING_BITS
       else java.lang.Float.floatToRawIntBits(row.getFloat(qI))
     val fI = idx("filter")
-    val filterIds: Seq[Long] =
+    val filterIds: Seq[Option[Long]] =
       if (row.isNullAt(fI)) Seq.empty
       else row.getUTF8String(fI).toString.split(";").toSeq.map(f =>
-        ds.dictIdx.getOrElse(f, throw new IllegalArgumentException(
-          s"FILTER '$f' is not PASS or in option(\"filters\") — declare every filter id")).toLong)
+        Some(ds.dictIdx.getOrElse(f, throw new IllegalArgumentException(
+          s"FILTER '$f' is not PASS or in option(\"filters\") — declare every filter id")).toLong))
 
     // INFO entries present on this row, in schema order
     val infoStruct = schema("info").dataType.asInstanceOf[StructType]
@@ -428,11 +364,13 @@ object BcfFormatter extends graft.sources.core.GenomicRecordFormatter {
     case StringType => putString(bb, v.toString)
     case ArrayType(IntegerType, _) =>
       val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      putIntVector(bb, (0 until arr.numElements()).map(arr.getInt(_).toLong))
+      putIntVector(bb, (0 until arr.numElements()).map(i =>
+        if (arr.isNullAt(i)) None else Some(arr.getInt(i).toLong)))
     case ArrayType(FloatType, _) =>
       val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       putDescriptor(bb, T_FLOAT, arr.numElements())
-      (0 until arr.numElements()).foreach(i => bb.putFloat(arr.getFloat(i)))
+      (0 until arr.numElements()).foreach(i =>
+        if (arr.isNullAt(i)) bb.putInt(FLOAT_MISSING_BITS) else bb.putFloat(arr.getFloat(i)))
     case ArrayType(StringType, _) =>
       // BCF stores string lists as one comma-joined char vector
       val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]

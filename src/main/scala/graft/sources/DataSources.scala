@@ -236,16 +236,19 @@ object GraftIO {
   def read_auto(s: SparkSession, path: String, options: Map[String, String] = Map.empty): DataFrame = rd(s, "exon", path, options)
 
   /** COPY ... TO STDOUT analog (the reference's commented
-    * test_fasta_copy.test stdout cases): render each row to the
-    * format's text representation, one element per record, trailing
-    * record terminator stripped. Distributed — the caller decides
-    * whether to collect/show (the stdout part) or write elsewhere. */
+    * test_fasta_copy.test stdout cases): each row's byte rendering
+    * decoded as UTF-8, one element per record, trailing record
+    * terminator stripped. Binary formats (those with a forced codec)
+    * are refused here, not at the first collect. Distributed — the
+    * caller decides whether to collect/show (the stdout part) or write
+    * elsewhere. */
   def render_text(df: DataFrame, format: String): org.apache.spark.sql.Dataset[String] = {
     val fmt = Formats.byName(format).formatter.getOrElse(
       throw new UnsupportedOperationException(s"format '$format' has no text rendering"))
+    require(fmt.writeForcedCodec.isEmpty, s"format '$format' is binary; render_text needs a text format")
     val schema = df.schema
-    val rendered = df.queryExecution.toRdd.mapPartitions(
-      _.map(row => fmt.format(row, schema).stripLineEnd))
+    val rendered = df.queryExecution.toRdd.mapPartitions(_.map(row =>
+      new String(fmt.formatBytes(row, schema, Map.empty), "UTF-8").stripLineEnd))
     df.sparkSession.createDataset(rendered)(org.apache.spark.sql.Encoders.STRING)
   }
 }

@@ -1,33 +1,34 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.StructType
+import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.sources.core.RecordFormatter
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.core.{GenomicRecordFormatter, RecordFormatter, TextBytes}
 
 /** Writers' record renderers (reference §2.B: the commented COPY tests
   * document FASTA/FASTQ/GFF writing; recreated here for round-trips). */
 
 object FastaFormatter extends RecordFormatter {
   override def fileExtension = ".fasta"
-  override def format(row: InternalRow, schema: StructType): String = {
-    val id = row.getUTF8String(0)
-    val desc = if (row.isNullAt(1)) null else row.getUTF8String(1)
-    val seq = row.getUTF8String(2)
-    val sb = new java.lang.StringBuilder(">").append(id)
-    if (desc != null) sb.append(' ').append(desc)
-    sb.append('\n').append(seq).append('\n').toString
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    val b = new TextBytes().add('>').add(row.getUTF8String(0))
+    if (!row.isNullAt(1)) b.add(' ').add(row.getUTF8String(1))
+    b.add('\n').add(row.getUTF8String(2)).add('\n').bytes
   }
 }
 
 object FastqFormatter extends RecordFormatter {
   override def fileExtension = ".fastq"
-  override def format(row: InternalRow, schema: StructType): String = {
-    val sb = new java.lang.StringBuilder("@").append(row.getUTF8String(0))
-    if (!row.isNullAt(1)) sb.append(' ').append(row.getUTF8String(1))
-    sb.append('\n').append(row.getUTF8String(2)).append("\n+\n")
-      .append(row.getUTF8String(3)).append('\n')
-    sb.toString
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    val b = new TextBytes().add('@').add(row.getUTF8String(0))
+    if (!row.isNullAt(1)) b.add(' ').add(row.getUTF8String(1))
+    b.add('\n').add(row.getUTF8String(2)).add("\n+\n").add(row.getUTF8String(3)).add('\n').bytes
   }
 }
 
@@ -42,17 +43,16 @@ object FastqFormatter extends RecordFormatter {
 object SamFormatter extends RecordFormatter {
   override def fileExtension = ".sam"
 
-  override def fileHeader(firstRow: Option[InternalRow],
-                          schema: StructType): Option[String] =
-    Some("@HD\tVN:1.6\tSO:unknown\n")
+  override def fileHeaderBytes(firstRow: Option[InternalRow], schema: StructType,
+                               options: Map[String, String]): Option[Array[Byte]] =
+    Some("@HD\tVN:1.6\tSO:unknown\n".getBytes(UTF_8))
 
-  override def format(row: InternalRow, schema: StructType): String = {
-    def s(i: Int, nul: String): String =
-      if (row.isNullAt(i)) nul else row.getUTF8String(i).toString
-    val pos = if (row.isNullAt(3)) 0L else row.getLong(3)
-    val mapq = s(5, "255")
-    s"${s(0, "*")}\t${row.getInt(1)}\t${s(2, "*")}\t$pos\t$mapq\t" +
-      s"${s(6, "*")}\t${s(7, "*")}\t0\t0\t${s(8, "*")}\t${s(9, "*")}\n"
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    val b = new TextBytes().str(row, 0, "*").add('\t').add(row.getInt(1)).add('\t')
+      .str(row, 2, "*").add('\t').add(if (row.isNullAt(3)) 0L else row.getLong(3)).add('\t')
+    b.str(row, 5, "255").add('\t').str(row, 6, "*").add('\t').str(row, 7, "*").add("\t0\t0\t")
+      .str(row, 8, "*").add('\t').str(row, 9, "*").add('\n').bytes
   }
 }
 
@@ -60,41 +60,33 @@ object SamFormatter extends RecordFormatter {
   * attributes; a multi-valued key re-renders as repeated `key "v"`
   * segments, exactly what the reader groups back into an array, so
   * parse ∘ write = id at the record level. */
-object GtfFormatter extends graft.sources.core.GenomicRecordFormatter {
+object GtfFormatter extends GenomicRecordFormatter {
   override def fileExtension = ".gtf"
 
   override def coordsOf(row: InternalRow, schema: StructType): (String, Long, Long) =
-    (row.getUTF8String(0).toString, row.getLong(3) - 1, row.getLong(4))
+    GffFormatter.coordsOf(row, schema)
 
   /** Generic preset over (seqname, start, end) — `tabix -p gff` works
     * for GTF too (same 1-based inclusive columns). */
-  override def tabixConfig: (Int, Int, Int, Int, Char) = (0, 1, 4, 5, '#')
+  override def tabixConfig: (Int, Int, Int, Int, Char) = GffFormatter.tabixConfig
 
-  override def format(row: InternalRow, schema: StructType): String = {
-    def s(i: Int): String = if (row.isNullAt(i)) "." else row.getUTF8String(i).toString
-    val score = if (row.isNullAt(5)) "." else row.getFloat(5).toString
-    val attrs =
-      if (row.isNullAt(8)) "."
-      else {
-        val m = row.getMap(8)
-        val keys = m.keyArray()
-        val vals = m.valueArray()
-        val sb = new java.lang.StringBuilder()
-        var i = 0
-        while (i < m.numElements()) {
-          val k = keys.getUTF8String(i).toString
-          val vs = vals.getArray(i)
-          var j = 0
-          while (j < vs.numElements()) {
-            if (sb.length() > 0) sb.append(' ')
-            sb.append(k).append(" \"").append(vs.getUTF8String(j)).append("\";")
-            j += 1
-          }
-          i += 1
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    val b = GffFormatter.columns(row)
+    var any = false
+    if (!row.isNullAt(8)) {
+      val m = row.getMap(8)
+      (0 until m.numElements()).foreach { i =>
+        val vs = m.valueArray().getArray(i)
+        (0 until vs.numElements()).foreach { j =>
+          if (any) b.add(' ')
+          b.add(m.keyArray().getUTF8String(i)).add(" \"").add(vs.getUTF8String(j)).add("\";")
+          any = true
         }
-        if (sb.length() == 0) "." else sb.toString
       }
-    s"${s(0)}\t${s(1)}\t${s(2)}\t${row.getLong(3)}\t${row.getLong(4)}\t$score\t${s(6)}\t${s(7)}\t$attrs\n"
+    }
+    if (!any) b.add('.')
+    b.add('\n').bytes
   }
 }
 
@@ -104,7 +96,7 @@ object GtfFormatter extends graft.sources.core.GenomicRecordFormatter {
   * positional), interior nulls render as the spec's placeholders
   * ('.' for text fields, '0' for score/color — exactly the values the
   * reader maps back to NULL, so parse ∘ write = id holds). */
-object BedFormatter extends graft.sources.core.GenomicRecordFormatter {
+object BedFormatter extends GenomicRecordFormatter {
   override def fileExtension = ".bed"
 
   /** UCSC preset (0-based half-open coordinates on columns 1,2,3) —
@@ -114,181 +106,167 @@ object BedFormatter extends graft.sources.core.GenomicRecordFormatter {
   override def coordsOf(row: InternalRow, schema: StructType): (String, Long, Long) =
     (row.getUTF8String(0).toString, row.getLong(1) - 1, row.getLong(2))
 
-  override def format(row: InternalRow, schema: StructType): String = {
-    // column -> rendered text (null = absent); starts shift back -1
-    val cells: IndexedSeq[String] = IndexedSeq(
-      row.getUTF8String(0).toString,
-      (row.getLong(1) - 1).toString,
-      row.getLong(2).toString,
-      if (row.isNullAt(3)) null else row.getUTF8String(3).toString,
-      if (row.isNullAt(4)) null else row.getLong(4).toString,
-      if (row.isNullAt(5)) null else row.getUTF8String(5).toString,
-      if (row.isNullAt(6)) null else (row.getLong(6) - 1).toString,
-      if (row.isNullAt(7)) null else row.getLong(7).toString,
-      if (row.isNullAt(8)) null else row.getUTF8String(8).toString,
-      if (row.isNullAt(9)) null else row.getLong(9).toString,
-      if (row.isNullAt(10)) null else row.getUTF8String(10).toString,
-      if (row.isNullAt(11)) null else row.getUTF8String(11).toString)
-    val last = cells.lastIndexWhere(_ != null)
-    val out = (0 to last).map { i =>
-      cells(i) match {
-        case null if i == 4 || i == 8 => "0" // score / color placeholders
-        case null                     => "."
-        case v                        => v
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    var last = 11
+    while (last > 2 && row.isNullAt(last)) last -= 1
+    val b = new TextBytes().add(row.getUTF8String(0)).add('\t')
+      .add(row.getLong(1) - 1).add('\t').add(row.getLong(2))
+    (3 to last).foreach { i =>
+      b.add('\t')
+      if (row.isNullAt(i)) b.add(if (i == 4 || i == 8) '0' else '.') // score / color placeholders
+      else i match {
+        case 4 | 7 | 9 => b.add(row.getLong(i))
+        case 6         => b.add(row.getLong(6) - 1)
+        case _         => b.add(row.getUTF8String(i))
       }
     }
-    out.mkString("\t") + "\n"
+    b.add('\n').bytes
   }
 }
 
-/** VCF text rendering — the inverse of VcfFormat's parser at the
-  * RECORD level (`parse ∘ write = id` on values; the original byte
-  * text is not preserved — '1.0' may re-render as '1.0' vs '1', field
-  * case normalizes). The header is RECONSTRUCTED from the Spark
-  * schema: ##INFO lines from the info struct's field types (the same
-  * Number/Type mapping the reader's schema inference applies, run
-  * backwards), ##FORMAT lines from the genotypes_typed element struct
-  * when present, and the #CHROM sample list sized from the first
-  * record's genotype array (names s1..sN — original sample names are
-  * not part of the read schema). `genotypes_typed` is derived data and
-  * is never rendered.
-  */
-object VcfFormatter extends graft.sources.core.GenomicRecordFormatter {
-  override def fileExtension = ".vcf"
-
+/** The rules VCF text and BCF share: the record interval, the tabix
+  * preset, the sample-count invariant and the header's ##INFO/##FORMAT
+  * declarations and #CHROM line. The header is RECONSTRUCTED from the
+  * Spark schema: a declaration's Number/Type is the reader's schema
+  * inference run backwards, and the sample columns are sized from the
+  * first record's genotype array (names s1..sN — original sample names
+  * are not part of the read schema). */
+trait VcfLikeFormatter extends GenomicRecordFormatter {
   /** VCF tabix preset: coordinates on columns (1, 2), record interval
-    * [pos-1, pos-1+len(ref)) — htslib's `tabix -p vcf`. */
+    * [pos-1, pos-1+len(ref)) — htslib's `tabix -p vcf`. Advisory only
+    * for BCF (htslib resolves its coordinates from the records); its
+    * CSI aux block carries reference NAMES, which the read side's
+    * region query prefers over rid arithmetic. */
   override def tabixConfig: (Int, Int, Int, Int, Char) = (2, 1, 2, 0, '#')
 
   override def coordsOf(row: InternalRow, schema: StructType): (String, Long, Long) = {
-    val chrom = row.getUTF8String(schema.fieldIndex("chrom")).toString
     val pos = row.getLong(schema.fieldIndex("pos"))
     val ref = row.getUTF8String(schema.fieldIndex("ref"))
-    (chrom, pos - 1, pos - 1 + math.max(ref.numChars(), 1))
+    (row.getUTF8String(schema.fieldIndex("chrom")).toString,
+      pos - 1, pos - 1 + math.max(ref.numChars(), 1))
   }
 
-  private def numberAndType(dt: org.apache.spark.sql.types.DataType): (String, String) = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case BooleanType          => ("0", "Flag")
-      case IntegerType          => ("1", "Integer")
-      case FloatType            => ("1", "Float")
-      case StringType           => ("1", "String")
-      case ArrayType(IntegerType, _) => (".", "Integer")
-      case ArrayType(FloatType, _)   => (".", "Float")
-      case _                    => (".", "String")
-    }
+  /** The row's genotype count; None when the schema has no samples. */
+  protected def sampleCount(row: InternalRow, schema: StructType): Option[Int] = {
+    val i = schema.fields.indexWhere(_.name == "genotypes")
+    if (i < 0) None else Some(if (row.isNullAt(i)) 0 else row.getArray(i).numElements())
   }
 
-  override def fileHeader(firstRow: Option[InternalRow],
-                          schema: StructType): Option[String] = {
-    import org.apache.spark.sql.types._
-    val sb = new java.lang.StringBuilder("##fileformat=VCFv4.2\n")
-    val infoStruct = schema("info").dataType.asInstanceOf[StructType]
-    infoStruct.fields.foreach { f =>
-      val (num, tpe) = numberAndType(f.dataType)
-      sb.append(s"##INFO=<ID=${f.name.toUpperCase},Number=$num,Type=$tpe,Description=${"\""}${"\""}>\n")
-    }
-    schema.fields.find(_.name == "genotypes_typed").foreach { tf =>
-      tf.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-        .fields.foreach { f =>
-          val (num, tpe) = numberAndType(f.dataType)
-          sb.append(s"##FORMAT=<ID=${f.name.toUpperCase},Number=$num,Type=$tpe,Description=${"\""}${"\""}>\n")
-        }
-    }
-    sb.append("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO")
-    if (schema.fieldNames.contains("genotypes")) {
-      val n = firstRow.map { r =>
-        val i = schema.fieldIndex("genotypes")
-        if (r.isNullAt(i)) 0 else r.getArray(i).numElements()
-      }.getOrElse(0)
-      if (n > 0) {
-        sb.append("\tFORMAT")
-        (1 to n).foreach(i => sb.append(s"\ts$i"))
-      }
-    }
-    sb.append('\n')
-    Some(sb.toString)
-  }
-
-  override def format(row: InternalRow, schema: StructType): String = {
-    import org.apache.spark.sql.types._
-    def idx(n: String) = schema.fieldIndex(n)
-    val sb = new java.lang.StringBuilder()
-    sb.append(row.getUTF8String(idx("chrom"))).append('\t')
-      .append(row.getLong(idx("pos"))).append('\t')
-    val idI = idx("id")
-    sb.append(if (row.isNullAt(idI)) "." else row.getUTF8String(idI)).append('\t')
-    sb.append(row.getUTF8String(idx("ref"))).append('\t')
-    val altA = row.getArray(idx("alt"))
-    if (altA == null || altA.numElements() == 0) sb.append('.')
-    else {
-      var i = 0
-      while (i < altA.numElements()) {
-        if (i > 0) sb.append(',')
-        sb.append(altA.getUTF8String(i))
-        i += 1
-      }
-    }
-    sb.append('\t')
-    val qI = idx("qual")
-    sb.append(if (row.isNullAt(qI)) "." else row.getFloat(qI).toString).append('\t')
-    val fI = idx("filter")
-    sb.append(if (row.isNullAt(fI)) "." else row.getUTF8String(fI)).append('\t')
-
-    val infoStruct = schema("info").dataType.asInstanceOf[StructType]
-    val info = row.getStruct(idx("info"), infoStruct.length)
-    def scalarText(v: Any): String = v match {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case other => other.toString
-    }
-    val parts = infoStruct.fields.zipWithIndex.flatMap { case (f, i) =>
-      if (info.isNullAt(i)) None
-      else f.dataType match {
-        case BooleanType =>
-          if (info.getBoolean(i)) Some(f.name.toUpperCase) else None
-        case ArrayType(et, _) =>
-          val arr = info.getArray(i)
-          val vs = (0 until arr.numElements())
-            .map(j => scalarText(arr.get(j, et))).mkString(",")
-          Some(s"${f.name.toUpperCase}=$vs")
-        case dt => Some(s"${f.name.toUpperCase}=${scalarText(info.get(i, dt))}")
-      }
-    }
-    sb.append(if (parts.isEmpty) "." else parts.mkString(";"))
-
-    if (schema.fieldNames.contains("genotypes")) {
-      val gI = idx("genotypes")
-      val gts = if (row.isNullAt(gI)) null else row.getArray(gI)
-      if (gts != null && gts.numElements() > 0) {
-        val fmtI = idx("format")
-        sb.append('\t')
-          .append(if (row.isNullAt(fmtI)) "." else row.getUTF8String(fmtI))
-        var i = 0
-        while (i < gts.numElements()) {
-          sb.append('\t').append(gts.getUTF8String(i))
-          i += 1
-        }
-      }
-    }
-    sb.append('\n').toString
-  }
-
-  // ragged genotype arrays would render rows whose sample-column count
+  // ragged genotype arrays would write records whose sample count
   // disagrees with the header's #CHROM line — htslib/bcftools reject
   // such files; the writer holds every record to the first record's
   // count via this invariant (see RecordFormatter.recordInvariant)
   override def recordInvariant(row: InternalRow, schema: StructType,
       options: Map[String, String]): Option[(String, Long)] =
-    if (!schema.fieldNames.contains("genotypes")) None
-    else {
-      val i = schema.fieldIndex("genotypes")
-      Some(("sample count",
-        if (row.isNullAt(i)) 0L else row.getArray(i).numElements().toLong))
+    sampleCount(row, schema).map(n => ("sample count", n.toLong))
+
+  /** A `##INFO` / `##FORMAT` line declaring `id` with the Number/Type
+    * the reader would infer the Spark type `dt` from. */
+  protected def declaration(kind: String, id: String, dt: DataType): String = {
+    val (num, tpe) = dt match {
+      case BooleanType               => ("0", "Flag")
+      case IntegerType               => ("1", "Integer")
+      case FloatType                 => ("1", "Float")
+      case StringType                => ("1", "String")
+      case ArrayType(IntegerType, _) => (".", "Integer")
+      case ArrayType(FloatType, _)   => (".", "Float")
+      case _                         => (".", "String")
+    }
+    s"""##$kind=<ID=$id,Number=$num,Type=$tpe,Description="">""" + "\n"
+  }
+
+  protected def infoFields(schema: StructType): Array[StructField] =
+    schema("info").dataType.asInstanceOf[StructType].fields
+
+  protected def infoDeclarations(schema: StructType): String =
+    infoFields(schema).map(f => declaration("INFO", f.name.toUpperCase, f.dataType)).mkString
+
+  protected def columnsLine(nSamples: Int): String =
+    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO" +
+      (if (nSamples > 0) "\tFORMAT" + (1 to nSamples).map(i => s"\ts$i").mkString else "") + "\n"
+}
+
+/** VCF text rendering — the inverse of VcfFormat's parser at the
+  * RECORD level (`parse ∘ write = id` on values; the original byte
+  * text is not preserved — '1.0' may re-render as '1.0' vs '1', field
+  * case normalizes). String fields copy as their UTF-8 bytes; a null
+  * INFO list element renders as the spec's missing value '.'. ##FORMAT
+  * lines come from the genotypes_typed element struct when present;
+  * `genotypes_typed` is derived data and is never rendered.
+  */
+object VcfFormatter extends VcfLikeFormatter {
+  override def fileExtension = ".vcf"
+
+  override def fileHeaderBytes(firstRow: Option[InternalRow], schema: StructType,
+                               options: Map[String, String]): Option[Array[Byte]] = {
+    val formats = schema.fields.find(_.name == "genotypes_typed").toSeq.flatMap(
+      _.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType].fields)
+    Some(("##fileformat=VCFv4.2\n" + infoDeclarations(schema) +
+      formats.map(f => declaration("FORMAT", f.name.toUpperCase, f.dataType)).mkString +
+      columnsLine(firstRow.flatMap(sampleCount(_, schema)).getOrElse(0))).getBytes(UTF_8))
+  }
+
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    def idx(n: String) = schema.fieldIndex(n)
+    val b = new TextBytes().add(row.getUTF8String(idx("chrom"))).add('\t')
+      .add(row.getLong(idx("pos"))).add('\t').str(row, idx("id")).add('\t')
+      .add(row.getUTF8String(idx("ref"))).add('\t')
+    val alt = row.getArray(idx("alt"))
+    if (alt == null || alt.numElements() == 0) b.add('.')
+    else (0 until alt.numElements()).foreach { i =>
+      if (i > 0) b.add(',')
+      b.add(alt.getUTF8String(i))
+    }
+    val qI = idx("qual")
+    b.add('\t')
+    if (row.isNullAt(qI)) b.add('.') else b.add(row.getFloat(qI))
+    b.add('\t').str(row, idx("filter")).add('\t')
+
+    val fields = infoFields(schema)
+    val info = row.getStruct(idx("info"), fields.length)
+    var any = false
+    fields.indices.foreach { i =>
+      val dt = fields(i).dataType
+      if (!info.isNullAt(i) && (dt != BooleanType || info.getBoolean(i))) {
+        if (any) b.add(';')
+        any = true
+        b.add(fields(i).name.toUpperCase)
+        dt match {
+          case BooleanType => // a Flag is its key
+          case ArrayType(et, _) =>
+            b.add('=')
+            val a = info.getArray(i)
+            (0 until a.numElements()).foreach { j =>
+              if (j > 0) b.add(',')
+              value(b, a, j, et)
+            }
+          case _ => value(b.add('='), info, i, dt)
+        }
+      }
+    }
+    if (!any) b.add('.')
+
+    sampleCount(row, schema).filter(_ > 0).foreach { _ =>
+      val gts = row.getArray(idx("genotypes"))
+      b.add('\t').str(row, idx("format"))
+      (0 until gts.numElements()).foreach(i => b.add('\t').add(gts.getUTF8String(i)))
+    }
+    b.add('\n').bytes
+  }
+
+  /** One INFO value: a string as its bytes, a number in its Java text
+    * form, a missing (null) list element as '.'. */
+  private def value(b: TextBytes, a: SpecializedGetters, i: Int, dt: DataType): Unit =
+    if (a.isNullAt(i)) b.add('.')
+    else dt match {
+      case StringType => b.add(a.getUTF8String(i))
+      case _          => b.add(a.get(i, dt).toString)
     }
 }
 
-object GffFormatter extends graft.sources.core.GenomicRecordFormatter {
+object GffFormatter extends GenomicRecordFormatter {
   override def fileExtension = ".gff"
 
   /** GFF text is 1-based inclusive; tabix wants 0-based half-open. */
@@ -299,44 +277,40 @@ object GffFormatter extends graft.sources.core.GenomicRecordFormatter {
     * '#' comment lines — the stock `tabix -p gff` configuration. */
   override def tabixConfig: (Int, Int, Int, Int, Char) = (0, 1, 4, 5, '#')
 
+  /** The eight columns GFF and GTF share, each followed by a tab. */
+  private[sources] def columns(row: InternalRow): TextBytes = {
+    val b = new TextBytes().str(row, 0).add('\t').str(row, 1).add('\t').str(row, 2).add('\t')
+      .add(row.getLong(3)).add('\t').add(row.getLong(4)).add('\t')
+    if (row.isNullAt(5)) b.add('.') else b.add(row.getFloat(5))
+    b.add('\t').str(row, 6).add('\t').str(row, 7).add('\t')
+  }
+
   /** GFF3 reserved characters must be percent-encoded in attribute keys
     * and values, or a value containing ';' / '=' / ',' / tab re-parses as
     * extra separators; the reader percent-decodes, so enc∘dec = id. */
-  private def enc(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    s.foreach {
-      case '%'  => sb.append("%25")
-      case ';'  => sb.append("%3B")
-      case '='  => sb.append("%3D")
-      case ','  => sb.append("%2C")
-      case '&'  => sb.append("%26")
-      case '\t' => sb.append("%09")
-      case '\n' => sb.append("%0A")
-      case '\r' => sb.append("%0D")
-      case c    => sb.append(c)
-    }
+  private def enc(s: UTF8String): String = {
+    val sb = new java.lang.StringBuilder(s.numBytes)
+    s.toString.foreach(c => if ("%;=,&\t\n\r".indexOf(c) < 0) sb.append(c) else sb.append(f"%%${c.toInt}%02X"))
     sb.toString
   }
 
-  override def format(row: InternalRow, schema: StructType): String = {
-    def s(i: Int): String = if (row.isNullAt(i)) "." else row.getUTF8String(i).toString
-    val start = row.getLong(3)
-    val end = row.getLong(4)
-    val score = if (row.isNullAt(5)) "." else row.getFloat(5).toString
-    val attrs =
-      if (row.isNullAt(8)) "."
-      else {
-        val m = row.getMap(8)
-        val keys = m.keyArray()
-        val vals = m.valueArray()
-        (0 until m.numElements()).map { i =>
-          val vs = vals.getArray(i)
-          val joined = (0 until vs.numElements())
-            .map(j => enc(vs.getUTF8String(j).toString)).mkString(",")
-          s"${enc(keys.getUTF8String(i).toString)}=$joined"
-        }.mkString(";")
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    val b = columns(row)
+    if (row.isNullAt(8)) b.add('.')
+    else {
+      val m = row.getMap(8)
+      (0 until m.numElements()).foreach { i =>
+        if (i > 0) b.add(';')
+        b.add(enc(m.keyArray().getUTF8String(i))).add('=')
+        val vs = m.valueArray().getArray(i)
+        (0 until vs.numElements()).foreach { j =>
+          if (j > 0) b.add(',')
+          b.add(enc(vs.getUTF8String(j)))
+        }
       }
-    s"${s(0)}\t${s(1)}\t${s(2)}\t$start\t$end\t$score\t${s(6)}\t${s(7)}\t$attrs\n"
+    }
+    b.add('\n').bytes
   }
 }
 
@@ -352,12 +326,9 @@ object GffFormatter extends graft.sources.core.GenomicRecordFormatter {
   * header, and any record naming an undeclared reference fails loudly
   * instead of silently renumbering.
   */
-object BamFormatter extends graft.sources.core.RecordFormatter {
+object BamFormatter extends RecordFormatter {
   override def fileExtension = ".bam"
   override def writeForcedCodec: Option[String] = Some("bgzf")
-  override def suppressCodecSuffix: Boolean = true
-  override def format(row: InternalRow, schema: StructType): String =
-    throw new UnsupportedOperationException("BAM is binary — formatBytes is the write path")
 
   private val CigarOps = "MIDNSHP=X"
   private val SeqCode = "=ACMGRSVTWYHKDBN"
@@ -575,45 +546,45 @@ object BamFormatter extends graft.sources.core.RecordFormatter {
   * half-open disk form; a NULL mate renders as '.' with -1 coords (the
   * convention the reader folds back to NULLs — parse ∘ write = id);
   * extras re-append verbatim. */
-object BedpeFormatter extends graft.sources.core.RecordFormatter {
+object BedpeFormatter extends RecordFormatter {
   override def fileExtension = ".bedpe"
-  override def format(row: InternalRow, schema: StructType): String = {
-    def s(i: Int): String = if (row.isNullAt(i)) "." else row.getUTF8String(i).toString
-    def locus(ci: Int): String =
-      if (row.isNullAt(ci)) ".\t-1\t-1"
-      else s"${row.getUTF8String(ci)}\t${row.getLong(ci + 1) - 1}\t${row.getLong(ci + 2)}"
-    val extra =
-      if (row.isNullAt(10)) ""
-      else {
-        val arr = row.getArray(10)
-        (0 until arr.numElements()).map(i => "\t" + arr.getUTF8String(i)).mkString
-      }
-    s"${locus(0)}\t${locus(3)}\t${s(6)}\t${s(7)}\t${s(8)}\t${s(9)}$extra\n"
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    val b = new TextBytes()
+    Seq(0, 3).foreach { ci =>
+      if (row.isNullAt(ci)) b.add(".\t-1\t-1")
+      else b.add(row.getUTF8String(ci)).add('\t').add(row.getLong(ci + 1) - 1).add('\t').add(row.getLong(ci + 2))
+      b.add('\t')
+    }
+    b.str(row, 6).add('\t').str(row, 7).add('\t').str(row, 8).add('\t').str(row, 9)
+    if (!row.isNullAt(10)) {
+      val arr = row.getArray(10)
+      (0 until arr.numElements()).foreach(i => b.add('\t').add(arr.getUTF8String(i)))
+    }
+    b.add('\n').bytes
   }
 }
 
 /** bedGraph rendering: 1-based inclusive back to 0-based half-open. */
-object BedGraphFormatter extends graft.sources.core.RecordFormatter {
+object BedGraphFormatter extends RecordFormatter {
   override def fileExtension = ".bedgraph"
-  override def format(row: InternalRow, schema: StructType): String =
-    s"${row.getUTF8String(0)}\t${row.getLong(1) - 1}\t${row.getLong(2)}" +
-      s"\t${row.getDouble(3)}\n"
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] =
+    new TextBytes().add(row.getUTF8String(0)).add('\t').add(row.getLong(1) - 1).add('\t')
+      .add(row.getLong(2)).add('\t').add(row.getDouble(3)).add('\n').bytes
 }
 
 /** BLAST -outfmt 6 rendering: 12 tab-separated fields, doubles in
   * Java's shortest-round-trip form (the VALUES survive parse ∘ write
   * exactly; the text spelling of '1e-5' does not, which is the normal
   * contract for float text formats). */
-object Blast6Formatter extends graft.sources.core.RecordFormatter {
+object Blast6Formatter extends RecordFormatter {
   override def fileExtension = ".blast6"
-  override def format(row: InternalRow, schema: StructType): String = {
-    val sb = new java.lang.StringBuilder
-    sb.append(row.getUTF8String(0)).append('\t').append(row.getUTF8String(1))
-    sb.append('\t').append(row.getDouble(2))
-    var i = 3
-    while (i <= 9) { sb.append('\t').append(row.getLong(i)); i += 1 }
-    sb.append('\t').append(row.getDouble(10))
-    sb.append('\t').append(row.getDouble(11))
-    sb.append('\n').toString
+  override def formatBytes(row: InternalRow, schema: StructType,
+                           options: Map[String, String]): Array[Byte] = {
+    val b = new TextBytes().add(row.getUTF8String(0)).add('\t').add(row.getUTF8String(1))
+      .add('\t').add(row.getDouble(2))
+    (3 to 9).foreach(i => b.add('\t').add(row.getLong(i)))
+    b.add('\t').add(row.getDouble(10)).add('\t').add(row.getDouble(11)).add('\n').bytes
   }
 }

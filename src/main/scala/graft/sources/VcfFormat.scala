@@ -294,6 +294,7 @@ object VcfFormat extends GraftFormat {
   private def slice(b: Array[Byte], s: Int, e: Int): UTF8String = UTF8String.fromBytes(b, s, e - s)
 
   private def typedValue(b: Array[Byte], s: Int, e: Int, dt: DataType, items: Cuts): Any = dt match {
+    case IntegerType | FloatType if isDot(b, s, e) => null // the spec's missing value
     case IntegerType      => parseNum(b, s, e, 9, java.lang.Integer.parseInt(_)).toInt
     case FloatType        => java.lang.Float.parseFloat(new String(b, s, e - s, UTF_8))
     case ArrayType(et, _) => commaList(b, s, e, et, items)

@@ -65,6 +65,8 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
       throw new UnsupportedOperationException(s"format '${format.name}' is read-only"))
     val path = options.getOrElse("path",
       throw new IllegalArgumentException("write requires a path"))
+    val writeOpts = options ++ Seq("compression", "partitionby", "index")
+      .flatMap(k => Option(info.options().get(k)).map(k -> _))
     new WriteBuilder with SupportsTruncate {
       private var doTruncate = false
       override def truncate(): WriteBuilder = { doTruncate = true; this }
@@ -84,10 +86,7 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
               s"target '$path' already contains data; pass option force=true " +
                 "to append, or use mode(\"overwrite\") to replace (COPY ... FORCE semantics)")
           }
-          val writeOpts = Seq("compression", "partitionby", "index")
-            .flatMap(k => Option(info.options().get(k)).map(k -> _))
-          GraftBatchWrite(fmt, info.schema(), path, options ++ writeOpts,
-            GraftConf.broadcast(spark))
+          GraftBatchWrite(fmt, info.schema(), path, writeOpts, GraftConf.broadcast(spark))
         }
 
         /** writeStream into a format directory: per-epoch appends with
@@ -99,9 +98,7 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
           // format directory cannot express — append only
           require(!doTruncate,
             "streaming writes into format directories support append output mode only")
-          val writeOpts = Seq("compression", "partitionby", "index")
-            .flatMap(k => Option(info.options().get(k)).map(k -> _))
-          GraftStreamingWrite(fmt, info.schema(), path, options ++ writeOpts,
+          GraftStreamingWrite(fmt, info.schema(), path, writeOpts,
             GraftConf.broadcast(SparkSession.active))
         }
       }

@@ -3,43 +3,42 @@ package graft.sources.core
 import java.io.{BufferedOutputStream, OutputStream}
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Per-format record rendering for writers (SURVEY.md §2.B — the
   * reference's commented-out COPY TO 'f.fasta' semantics: per-format
-  * text rendering, optional gzip/zstd compression). */
+  * rendering, optional gzip/zstd compression). One contract, in bytes:
+  * text formats render UTF-8 (through [[TextBytes]], string fields
+  * copied as their bytes), binary formats (BAM, BCF) their record
+  * encoding. `options` carries write-time parameters a binary format
+  * needs (BAM's reference dictionary, BCF's contigs). */
 trait RecordFormatter extends Serializable {
-  /** Render one full-schema row, INCLUDING the record terminator. */
-  def format(row: InternalRow, schema: StructType): String
   def fileExtension: String
 
-  /** Header text each part file starts with (None = headerless format).
+  /** Render one full-schema row, INCLUDING the record terminator. */
+  def formatBytes(row: InternalRow, schema: StructType,
+                  options: Map[String, String]): Array[Byte]
+
+  /** Header each part file starts with (None = headerless format).
     * Called once per output file with the FIRST record (None when the
     * file commits empty) — formats whose header depends on record shape
     * (VCF's #CHROM sample list) need the row; the writer emits it
     * before the first record's bytes so index virtual offsets stay
     * correct. */
-  def fileHeader(firstRow: Option[InternalRow], schema: StructType): Option[String] = None
-
-  /** Byte-level rendering hooks — the write path calls THESE, and the
-    * defaults delegate to the text methods, so text formatters stay
-    * one-method. Binary formats (BAM) override the byte pair and leave
-    * `format` unimplemented; `options` carries write-time parameters a
-    * binary header may need (BAM's reference dictionary). */
-  def formatBytes(row: InternalRow, schema: StructType,
-                  options: Map[String, String]): Array[Byte] =
-    format(row, schema).getBytes("UTF-8")
   def fileHeaderBytes(firstRow: Option[InternalRow], schema: StructType,
-                      options: Map[String, String]): Option[Array[Byte]] =
-    fileHeader(firstRow, schema).map(_.getBytes("UTF-8"))
+                      options: Map[String, String]): Option[Array[Byte]] = None
 
-  /** A codec the format REQUIRES on the write side (BAM is BGZF by
-    * definition); overrides any `compression` option. */
+  /** A codec the format REQUIRES on the write side (BAM and BCF are
+    * BGZF by definition); overrides any `compression` option, and the
+    * file name carries no codec suffix (a .bam IS bgzf —
+    * "part-*.bam.gz" would be wrong). */
   def writeForcedCodec: Option[String] = None
 
   /** Per-file record invariant: a (label, value) every record in a part
@@ -52,10 +51,38 @@ trait RecordFormatter extends Serializable {
     * would round-trip it silently. */
   def recordInvariant(row: InternalRow, schema: StructType,
                       options: Map[String, String]): Option[(String, Long)] = None
+}
 
-  /** True when the codec suffix must not decorate the file name (a
-    * .bam IS bgzf — "part-*.bam.gz" would be wrong). */
-  def suppressCodecSuffix: Boolean = false
+/** Growable byte buffer a text formatter renders one record into:
+  * strings copy as their UTF-8 bytes (a null string as `null`, the
+  * text java.lang.StringBuilder gave it), numbers as their Java text
+  * forms, chars as one byte (ASCII only). */
+final class TextBytes {
+  private var buf = new Array[Byte](256)
+  private var n = 0
+
+  private def room(k: Int): Unit =
+    if (n + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, n + k))
+
+  def add(u: UTF8String): TextBytes =
+    if (u == null) add("null")
+    else {
+      room(u.numBytes)
+      u.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + n)
+      n += u.numBytes
+      this
+    }
+  def add(s: String): TextBytes = add(UTF8String.fromString(s))
+  def add(c: Char): TextBytes = { room(1); buf(n) = c.toByte; n += 1; this }
+  def add(v: Long): TextBytes = add(java.lang.Long.toString(v))
+  def add(v: Float): TextBytes = add(java.lang.Float.toString(v))
+  def add(v: Double): TextBytes = add(java.lang.Double.toString(v))
+
+  /** String column `i` of `row`, or `nul` when it is null. */
+  def str(row: InternalRow, i: Int, nul: String = "."): TextBytes =
+    if (row.isNullAt(i)) add(nul) else add(row.getUTF8String(i))
+
+  def bytes: Array[Byte] = java.util.Arrays.copyOf(buf, n)
 }
 
 /** A formatter whose records carry genomic coordinates, making its
@@ -76,6 +103,43 @@ trait GenomicRecordFormatter extends RecordFormatter {
 final case class GraftWriteCommit(files: Seq[(String, String)])
     extends WriterCommitMessage
 
+/** What a batch and a streaming write share: the per-job staging
+  * namespace `_temporary/<writeId>` — two concurrent jobs appending to
+  * the same target (force=true) sweep only their own staged files on
+  * commit/abort; a shared `_temporary` would let one job delete the
+  * other's in-flight staging mid-write — and the job-side rename that
+  * moves each task's staged files into place. */
+sealed trait GraftStagedWrite {
+  def path: String
+  def bconf: Broadcast[SerializableConfiguration]
+
+  protected val writeId: String = UUID.randomUUID().toString.take(12)
+  protected def tempRoot = new Path(path, "_temporary")
+  protected def stagingRoot = new Path(tempRoot, writeId)
+  protected lazy val fs: FileSystem = new Path(path).getFileSystem(bconf.value.value)
+
+  /** Rename every staged file of `messages` into place; `replace`
+    * deletes an existing destination first. */
+  protected def renameStaged(messages: Array[WriterCommitMessage], replace: Boolean): Unit =
+    messages.foreach {
+      case GraftWriteCommit(files) => files.foreach { case (temp, dest) =>
+        val d = new Path(dest)
+        val parent = d.getParent
+        if (parent != null && !fs.exists(parent)) fs.mkdirs(parent)
+        if (replace && fs.exists(d)) fs.delete(d, false)
+        if (!fs.rename(new Path(temp), d))
+          throw new java.io.IOException(s"commit failed renaming $temp -> $dest")
+      }
+      case _ =>
+    }
+
+  /** Remove `dir` once it is empty (the non-recursive delete fails
+    * harmlessly while another job still stages under it). */
+  protected def dropIfEmpty(dir: Path): Unit =
+    try if (fs.exists(dir) && fs.listStatus(dir).isEmpty) fs.delete(dir, false): Unit
+    catch { case _: Exception => }
+}
+
 /** DSv2 BatchWrite: one part file per task partition, optional
   * compression via the `compression` option ("gzip" | "zstd").
   * Distributed by construction — each executor streams its partition to
@@ -92,51 +156,23 @@ final case class GraftWriteCommit(files: Seq[(String, String)])
 final case class GraftBatchWrite(formatter: RecordFormatter, schema: StructType,
                                  path: String, options: Map[String, String],
                                  bconf: Broadcast[SerializableConfiguration])
-    extends BatchWrite {
-
-  /** Per-job staging namespace `_temporary/<writeId>`: two concurrent
-    * jobs appending to the same target (force=true) sweep only their own
-    * staged files on commit/abort — a shared `_temporary` would let one
-    * job delete the other's in-flight staging mid-write. */
-  private val writeId: String = UUID.randomUUID().toString.take(12)
-  private def stagingRoot = new Path(new Path(path, "_temporary"), writeId)
+    extends BatchWrite with GraftStagedWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftWriterFactory(formatter, schema, path, options, bconf, writeId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(bconf.value.value)
-    messages.foreach {
-      case GraftWriteCommit(files) => files.foreach { case (temp, dest) =>
-        val d = new Path(dest)
-        val parent = d.getParent
-        if (parent != null && !fs.exists(parent)) fs.mkdirs(parent)
-        if (!fs.rename(new Path(temp), d))
-          throw new java.io.IOException(s"commit failed renaming $temp -> $dest")
-      }
-      case _ =>
-    }
-    if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
-    // the partitioned path opens streams lazily, so an empty frame can
-    // commit zero files — the target must still exist and read as 0 rows
-    // (same zero-row guarantee the non-partitioned fast path gives via
-    // its eagerly-opened stream)
-    if (!fs.exists(new Path(path))) fs.mkdirs(new Path(path))
-    cleanupTempRoot(fs)
+    renameStaged(messages, replace = false)
+    // a partitioned write opens its streams lazily, so an empty frame
+    // commits zero files — the target must still exist and read as 0 rows
+    fs.mkdirs(new Path(path))
+    abort(messages)
   }
 
+  /** Drop this job's staging and, once no job's remains, `_temporary`. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(bconf.value.value)
     if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
-    cleanupTempRoot(fs)
-  }
-
-  /** Remove `_temporary` itself once no job's namespace remains (the
-    * non-recursive delete fails harmlessly while another job is live). */
-  private def cleanupTempRoot(fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val root = new Path(path, "_temporary")
-    try if (fs.exists(root) && fs.listStatus(root).isEmpty) fs.delete(root, false): Unit
-    catch { case _: Exception => }
+    dropIfEmpty(tempRoot)
   }
 }
 
@@ -154,11 +190,8 @@ final case class GraftBatchWrite(formatter: RecordFormatter, schema: StructType,
 final case class GraftStreamingWrite(formatter: RecordFormatter, schema: StructType,
                                      path: String, options: Map[String, String],
                                      bconf: Broadcast[SerializableConfiguration])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
+    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite with GraftStagedWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-
-  private val writeId: String = UUID.randomUUID().toString.take(12)
-  private def stagingRoot = new Path(new Path(path, "_temporary"), writeId)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new StreamingDataWriterFactory {
@@ -168,38 +201,19 @@ final case class GraftStreamingWrite(formatter: RecordFormatter, schema: StructT
           epoch = Some(epochId)).createWriter(partitionId, taskId)
     }
 
+  /** Epoch replay: the deterministic destination may exist from the
+    * failed attempt — replace it, never duplicate it. Then drop this
+    * query's (now empty) staging namespace so a stream running for
+    * months doesn't park a zombie _temporary/<writeId> in the target
+    * (next epoch's writers recreate it; create() makes parents). */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(bconf.value.value)
-    messages.foreach {
-      case GraftWriteCommit(files) => files.foreach { case (temp, dest) =>
-        val d = new Path(dest)
-        val parent = d.getParent
-        if (parent != null && !fs.exists(parent)) fs.mkdirs(parent)
-        // epoch replay: the deterministic destination may exist from the
-        // failed attempt — replace it, never duplicate it
-        if (fs.exists(d)) fs.delete(d, false)
-        if (!fs.rename(new Path(temp), d))
-          throw new java.io.IOException(s"epoch $epochId commit failed renaming $temp -> $dest")
-      }
-      case _ =>
-    }
-    // every staged file was just renamed out: drop this query's (now
-    // empty) staging namespace so a stream running for months doesn't
-    // park a zombie _temporary/<writeId> in the target for its lifetime
-    // (next epoch's writers recreate it; create() makes parents)
-    try {
-      if (fs.exists(stagingRoot) && fs.listStatus(stagingRoot).isEmpty)
-        fs.delete(stagingRoot, false): Unit
-      val tempRoot = new Path(path, "_temporary")
-      if (fs.exists(tempRoot) && fs.listStatus(tempRoot).isEmpty)
-        fs.delete(tempRoot, false): Unit
-    } catch { case _: Exception => } // best-effort hygiene, never fail an epoch
+    renameStaged(messages, replace = true)
+    dropIfEmpty(stagingRoot)
+    dropIfEmpty(tempRoot)
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(bconf.value.value)
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
-  }
 }
 
 final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructType,
@@ -240,7 +254,7 @@ final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructTy
     val csiMinShift = options.get("index.minshift").map(_.toInt).getOrElse(14)
     val csiDepth = options.get("index.depth").map(_.toInt).getOrElse(5)
     val ext = formatter.fileExtension + (codec match {
-      case _ if formatter.suppressCodecSuffix => ""
+      case _ if formatter.writeForcedCodec.isDefined => ""
       case Some("gzip") | Some("bgzf") => ".gz" // bgzf IS gzip on the wire
       case Some("zstd")                => ".zst"
       case _                           => ""
@@ -399,29 +413,19 @@ final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructTy
       }
     }
 
-    if (partCols.isEmpty) {
-      // fast path: one eagerly-opened stream, no per-record key work.
-      // Eager also means a zero-record task still commits an EMPTY part
-      // file — an overwrite with an empty frame must leave a readable
-      // (0-row) target, not a missing directory.
-      val s = openStream("")
-      new DataWriter[InternalRow] {
-        override def write(record: InternalRow): Unit = writeRecord(s, record)
-        override def commit(): WriterCommitMessage = {
-          GraftWriteCommit(closeSink(s))
-        }
-        override def abort(): Unit = quietClean(s)
-        override def close(): Unit = ()
-      }
-    } else new DataWriter[InternalRow] {
+    new DataWriter[InternalRow] {
       private val streams = scala.collection.mutable.LinkedHashMap.empty[String, Sink]
+      // without partitionBy every record has the key "" and its stream
+      // opens now, so a zero-record task still commits an EMPTY part
+      // file — an overwrite with an empty frame must leave a readable
+      // (0-row) target, not a missing directory
+      if (partCols.isEmpty) streams("") = openStream("")
       override def write(record: InternalRow): Unit = {
         val k = keyOf(record)
         writeRecord(streams.getOrElseUpdate(k, openStream(k)), record)
       }
-      override def commit(): WriterCommitMessage = {
+      override def commit(): WriterCommitMessage =
         GraftWriteCommit(streams.values.flatMap(closeSink).toSeq)
-      }
       override def abort(): Unit = streams.values.foreach(quietClean)
       override def close(): Unit = ()
     }

@@ -215,4 +215,19 @@ class BcfWriteSpec extends AnyFunSuite {
       .format("bcf").save(ok)
     assert(GraftIO.read_bcf_file_records(spark, ok).count() == src.count())
   }
+
+  test("missing INFO vector elements round-trip as null, not 0, at every width") {
+    val dir = queries.Stage.tempDir("bcf_miss").toString
+    val src = spark.sql("""SELECT '1' AS chrom, 10L AS pos, cast(null AS string) AS id,
+        'A' AS ref, array('C', 'G') AS alt, cast(null AS float) AS qual,
+        cast(null AS string) AS filter,
+        named_struct('ac', array(1, cast(null AS int)), 'mid', array(cast(null AS int), 1000),
+          'big', array(100000, cast(null AS int)),
+          'af', array(cast(0.5 AS float), cast(null AS float))) AS info""")
+    src.write.mode("overwrite").option("contigs", "1").format("bcf").save(dir)
+    val back = GraftIO.read_bcf_file_records(spark, dir)
+      .selectExpr("info.ac", "info.mid", "info.big", "info.af").collect()
+      .map(r => (0 until 4).map(r.getSeq[Any])).toSeq
+    assert(back == Seq(Seq(Seq(1, null), Seq(null, 1000), Seq(100000, null), Seq(0.5f, null))))
+  }
 }

@@ -89,4 +89,24 @@ class VcfWriteSpec extends AnyFunSuite {
     assert(back.schema.fieldNames.take(8).toSeq ==
       Seq("chrom", "pos", "id", "ref", "alt", "qual", "filter", "info"))
   }
+
+  test("'.' is the missing Integer/Float INFO value, as a scalar and as a list element") {
+    val src = java.nio.file.Files.createTempDirectory("graft-vcfmiss")
+    java.nio.file.Files.write(src.resolve("m.vcf"), ("##fileformat=VCFv4.2\n" +
+      "##INFO=<ID=AC,Number=A,Type=Integer,Description=\"\">\n" +
+      "##INFO=<ID=AF,Number=A,Type=Float,Description=\"\">\n" +
+      "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"\">\n" +
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n" +
+      "1\t10\t.\tA\tC,G\t.\t.\tAC=1,.;AF=0.5,.;DP=.\n").getBytes("UTF-8"))
+    def values(df: DataFrame) = df.selectExpr("info.ac", "info.af", "info.dp").collect()
+      .map(r => (r.getSeq[Any](0), r.getSeq[Any](1), r.get(2))).toSeq
+    val orig = GraftIO.read_vcf_file_records(spark, src.resolve("m.vcf").toString)
+    assert(values(orig) == Seq((Seq(1, null), Seq(0.5f, null), null)))
+    val dir = src.resolve("out").toString
+    orig.write.mode("overwrite").format("vcf").save(dir)
+    val text = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".vcf"))
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString
+    assert(text.contains("\tAC=1,.;AF=0.5,.\n"), text)
+    assert(values(GraftIO.read_vcf_file_records(spark, dir)) == values(orig))
+  }
 }

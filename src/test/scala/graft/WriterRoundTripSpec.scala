@@ -110,6 +110,15 @@ class WriterRoundTripSpec extends AnyFunSuite {
     assert(gffOut.length == 2 && gffOut.forall(_.split("\t").length == 9))
   }
 
+  test("render_text rejects a binary format when called, naming it") {
+    val bam = GraftIO.read_bam_file_records(spark, "src/test/resources/fixtures/bam/test.bam")
+    val bcf = GraftIO.read_bcf_file_records(spark, "src/test/resources/fixtures/vcf/test.bcf")
+    Seq("bam" -> bam, "bcf" -> bcf).foreach { case (f, df) =>
+      val e = intercept[IllegalArgumentException](GraftIO.render_text(df, f))
+      assert(e.getMessage.contains(s"'$f'"), e.getMessage)
+    }
+  }
+
   test("bgzf writer: spec-conformant blocks, EOF marker, round-trips; >64KiB spans blocks") {
     val schema = StructType(Seq(
       StructField("id", StringType), StructField("description", StringType),
