@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Hash parity: h32(token) = unsigned first 4 md5 bytes — identical to
   * SQL `CAST('0x' || substr(md5(tok),1,8) AS BIGINT)`, so the DuckDB
-  * oracles (Dedup.scala / TextOps.scala) check these kernels bit-exactly.
+  * oracles of the SimHash and text gate entries check these kernels
+  * bit-exactly.
   */
 object PipelineKernels {
 

@@ -133,7 +133,8 @@ object SeqOps {
     "AGT" -> 'S', "AGC" -> 'S', "AGA" -> 'R', "AGG" -> 'R',
     "GGT" -> 'G', "GGC" -> 'G', "GGA" -> 'G', "GGG" -> 'G')
 
-  /** Exposed for oracle-SQL generation (graft.queries.ScalarFns). */
+  /** Exposed so the DuckDB oracle of the codon-translation gate entry
+    * can spell the same table. */
   def codonPairs: Seq[(String, Char)] = CodonTable.toSeq.sortBy(_._1)
 
   def translateDnaToAa(s: UTF8String): UTF8String = {

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph propagation over edge frames — the iterative-join family the
-  * connected-components labeler ([[graft.queries.Dedup]] pointer
-  * doubling) opened, extended to weighted mass propagation.
+  * connected-components labeler ([[CorpusOps.connectedComponents]]
+  * pointer doubling) opened, extended to weighted mass propagation.
   *
   * Everything runs in SCALED INTEGER arithmetic (micro-units): float
   * mass propagation is partition-order-dependent under distributed
@@ -49,9 +49,7 @@ object GraphOps {
     // scheduling floor × partition count term, so a global knob tuned
     // for corpus-sized shuffles inverts on the tiny per-round frames).
     val e = edges.localCheckpoint()
-    val nEdges = e.count()
-    val loopParts = math.max(4L, math.min(nEdges / 250000L + 1L, 4096L)).toInt
-    graft.queries.Q.withShufflePartitions(e.sparkSession, loopParts) {
+    Exec.withShufflePartitions(e.sparkSession, Exec.loopPartitions(e.count())) {
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .distinct()
@@ -107,9 +105,7 @@ object GraphOps {
     // count term over frames bounded by the edge list, so inheriting a
     // corpus-tuned global knob inverts here (same rationale and sizing
     // as the CC labeler)
-    val loopParts =
-      math.max(4L, math.min(sym.count() / 250000L + 1L, 4096L)).toInt
-    graft.queries.Q.withShufflePartitions(sym.sparkSession, loopParts) {
+    Exec.withShufflePartitions(sym.sparkSession, Exec.loopPartitions(sym.count())) {
       val nodes = sym.select(col("src").as("node")).distinct()
       var labels = nodes.withColumn("label", col("node")).localCheckpoint()
       for (_ <- 0 until iters) {
@@ -126,18 +122,6 @@ object GraphOps {
     }
   }
 
-  /** Triangle count + global clustering coefficient over an
-    * undirected-ized edge frame (the node-iterator algorithm with
-    * DEGREE ordering, Schank & Wagner 2005): canonical edges orient
-    * low-rank → high-rank where rank = (degree, node), wedges are
-    * built only at each edge's LOW-rank endpoint, and each wedge
-    * closes against the canonical edge set. Degree orientation is the
-    * scale guarantee: a hub of degree d contributes wedges only for
-    * its higher-rank neighbors, bounding the wedge fan by O(m^1.5)
-    * total instead of Σ d² — on a power-law graph (every real link
-    * graph) id-ordering would re-create the hub blowup this exists to
-    * avoid. Output is one row: (n_triangles, n_wedges, gcc_micro)
-    * with gcc = 3·triangles / wedges in micro fixed-point. */
   /** k-core decomposition by iterative peeling (Batagelj-Zaversnik's
     * semantics, the distributed formulation): repeatedly delete nodes
     * with degree < k until the graph stabilizes; what's left is the
@@ -162,8 +146,7 @@ object GraphOps {
     var prev = und.count()
     // self-size the peeling rounds' shuffles from the edge count (same
     // scheduling-floor rationale and sizing as the CC labeler)
-    val loopParts = math.max(4L, math.min(prev / 250000L + 1L, 4096L)).toInt
-    graft.queries.Q.withShufflePartitions(und.sparkSession, loopParts) {
+    Exec.withShufflePartitions(und.sparkSession, Exec.loopPartitions(prev)) {
     var done = prev == 0
     var round = 0
     while (!done && round < maxRounds) {
@@ -196,6 +179,18 @@ object GraphOps {
     } // withShufflePartitions
   }
 
+  /** Triangle count + global clustering coefficient over an
+    * undirected-ized edge frame (the node-iterator algorithm with
+    * DEGREE ordering, Schank & Wagner 2005): canonical edges orient
+    * low-rank → high-rank where rank = (degree, node), wedges are
+    * built only at each edge's LOW-rank endpoint, and each wedge
+    * closes against the canonical edge set. Degree orientation is the
+    * scale guarantee: a hub of degree d contributes wedges only for
+    * its higher-rank neighbors, bounding the wedge fan by O(m^1.5)
+    * total instead of Σ d² — on a power-law graph (every real link
+    * graph) id-ordering would re-create the hub blowup this exists to
+    * avoid. Output is one row: (n_triangles, n_wedges, gcc_micro)
+    * with gcc = 3·triangles / wedges in micro fixed-point. */
   def triangleStats(edges: DataFrame, srcCol: String = "src",
                     dstCol: String = "dst"): DataFrame = {
     val und = edges

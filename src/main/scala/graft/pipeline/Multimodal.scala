@@ -288,10 +288,10 @@ object Multimodal {
     // the scan stage carries the per-row codec work. Spread the
     // (8-byte) ids across the session's cores before the heavy map
     // (guide §2.5: unsplittable input → repartition right after the
-    // read). Q.spread carries the width guard (>= half the session
+    // read). Exec.spread carries the width guard (>= half the session
     // parallelism passes through untouched), so on a real multi-file
     // deployment this is a no-op, not an always-on exchange.
-    graft.queries.Q.spread(
+    Exec.spread(
         s.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
         "doc_id")
       .as[Long]
@@ -351,7 +351,7 @@ object Multimodal {
     import s.implicits._
     // single-file scan + per-row GIF encode: parallelize the heavy
     // map, not the 8-byte ids; width-guarded like realMediaTable
-    graft.queries.Q.spread(
+    Exec.spread(
         s.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
         "doc_id")
       .as[Long]

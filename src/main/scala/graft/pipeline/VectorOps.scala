@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Public, DataFrame-in / DataFrame-out similarity search over an
   * embedding column (`array<float>` or `array<double>`) — the API a
-  * user calls on their OWN vector tables. The PQ machinery here is THE
-  * implementation the oracle-checked `ann_pq_adc` / `ann_ivfpq_topk`
-  * gate entries run (graft.queries.Similarity delegates to
-  * [[pqMachinery]]), so the correctness gate covers this code path.
+  * user calls on their OWN vector tables. The PQ machinery, the k-means
+  * quantizer and the radius search here are THE implementations the
+  * oracle-checked ANN gate entries run, so the correctness gate covers
+  * these code paths.
   *
   * Scale contract (see SCALE.md): the corpus side never shuffles — the
   * query set broadcasts (brute force), or the probe is an equi-join on
@@ -52,10 +52,86 @@ object VectorOps {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
     require(tau > -1.0 && tau <= 1.0, s"radiusSearch: tau ($tau) must be in (-1, 1]")
-    graft.queries.Similarity.radiusSearchFrames(
+    radiusSearchFrames(
       asVec(corpus, idCol, vecCol).select(col("__id").as("vec_id"), col("__v").as("v")),
       asVec(queries, idCol, vecCol).select(col("__id").as("vec_id"), col("__v").as("v")),
       tau)
+  }
+
+  /** Radius-search core over (vec_id, v) frames with ORIGINAL
+    * (unnormalized) double vectors, pairs with equal ids excluded —
+    * bit-identical to brute force, proven by the triangle inequality
+    * rather than sampled recall:
+    *
+    * On UNIT vectors, cos(a,b) >= tau  <=>  ||â-b̂||² <= 2-2·tau, so a
+    * cosine radius is an L2 ball of radius r = sqrt(2-2·tau) in the
+    * normalized space. Corpus vectors are k-means-partitioned (any
+    * partition works — determinism of the clustering is irrelevant to
+    * exactness); each cell keeps its pivot distance bound crad =
+    * max_member ||v̂-ĉ||. For a qualifying pair, dist(q̂,ĉ) <=
+    * dist(q̂,v̂) + dist(v̂,ĉ) <= r + crad, so scanning only cells with
+    * dist(q̂,ĉ) <= r + crad + eps misses nothing (eps = 1e-5 absorbs
+    * the round-6 acceptance slack ~5e-7 and normalization FP noise).
+    * Final verify recomputes exact cosine on the ORIGINAL vectors with
+    * the same kernel/rounding as the brute-force oracle.
+    *
+    * Scale: the scanned fraction is the classic IVF ratio but with
+    * recall = 1 by construction; candidate fan-out is a cid-keyed
+    * equi-join (corpus never self-joins), queries/centroids/bounds all
+    * broadcast. */
+  private[graft] def radiusSearchFrames(e: DataFrame, q: DataFrame, tau: Double): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(e.sparkSession)
+    // graft_l2_normalize = the fused codegen'd kernel; the transform/
+    // aggregate HOF idiom it replaces re-evaluated the norm aggregate
+    // per ELEMENT, interpreted (64x64 lambda steps per row) — and this
+    // normalization runs on every corpus pass of the quantizer (r13).
+    // Bit-identical: same left-to-right sum, same per-element division.
+    val norm = "graft_l2_normalize(v)"
+    // vo = the ORIGINAL vector rides alongside its normalized twin all
+    // the way through assignment and the ringed barrier, so the exact
+    // verify below needs no corpus-by-id re-join: the old
+    // `.join(e, vec_id)` shuffled the corpus a second time (both sides
+    // keyed on vec_id) purely to re-attach bytes the pipeline had
+    // already read — guide §2.4 (remove shuffles outright) / §8 (move
+    // heavy payloads once).
+    val en = e.select(col("vec_id"), expr(norm).as("v"), col("v").as("vo"))
+    val (assigned0, cents) = kmeansAssigned(en)
+    // Ring-partitioned bounds (the dedup_radius_pairs self-join uses
+    // the same rings): the per-cell
+    // max radius is outlier-fragile (one isotropic member blows the
+    // bound to unit scale), so members bucket into fixed 0.25-wide
+    // distance-to-centroid rings and the bound is per (cell, ring). md
+    // and the query-centroid distance round to 6 before comparing
+    // (sound: the 1e-5 eps absorbs the ≤1e-6 round-off) so the
+    // survival decision replays identically in an external
+    // re-implementation. ONE barrier on the ringed frame serves its
+    // two consumers (sub-cell bounds + the member side); assigned0
+    // itself has a single consumer now, so it carries no barrier.
+    // vn once per vector (the verify fan is the entry's dominant cost at
+    // low tau where the triangle prune passes most sub-cells)
+    val ringed = Exec.barrier(assigned0.join(broadcast(cents), Seq("cid"))
+      .withColumn("md", expr("round(sqrt(graft_l2_sq(v, cv)), 6)"))
+      .withColumn("rid", least(floor(col("md") / lit(0.25)).cast("int"), lit(7)))
+      .select(col("vec_id"), col("cid"), col("rid"), col("md"), col("vo"),
+        expr("graft_l2norm(vo)").as("vn")))
+    val cells = ringed.groupBy("cid", "rid").agg(max(col("md")).as("crad"))
+    val r = math.sqrt(2.0 - 2.0 * tau)
+    val survive = q.select(col("vec_id").as("q_id"), expr(norm).as("qvn"))
+      .crossJoin(broadcast(cents.join(cells, Seq("cid"))))
+      .where(expr("round(sqrt(graft_l2_sq(qvn, cv)), 6)") <= lit(r) + col("crad") + lit(1e-5))
+      .select(col("q_id"), col("cid"), col("rid"))
+    ringed.select(col("vec_id"), col("cid"), col("rid"), col("vo").as("v"),
+        col("vn").as("nb_s"))
+      .join(broadcast(survive), Seq("cid", "rid"))
+      .join(broadcast(q.select(col("vec_id").as("q_id"), col("v").as("qv"),
+        expr("graft_l2norm(v)").as("na_s"))), Seq("q_id"))
+      .where(col("vec_id") =!= col("q_id"))
+      // bit-identical to round(graft_cosine_sim(qv, v), 6), with the
+      // norms hoisted out of the per-pair loop
+      .select(col("q_id"), col("vec_id"),
+        expr("round(graft_dot(qv, v) / (na_s * nb_s), 6)").as("cos"))
+      .where(col("cos") >= tau)
+      .orderBy("q_id", "vec_id")
   }
 
   /** Exact cosine top-k: for every query row, the `k` most similar
@@ -227,7 +303,7 @@ object VectorOps {
           s"transform(sequence(0, ${subspaces - 1}), m -> named_struct('m', m, 'sv', slice($v, m * $subDim + 1, $subDim)))")).as("z"): _*)
         .select((col(id) +: extra.map(col)) ++ Seq(col("z.m").as("m"), col("z.sv").as("sv")): _*)
     // consumed by seeds, Lloyd assign, encode — barrier it
-    val sub = subs(c, "__id", "__v", cExtra).transform(graft.queries.Q.barrier)
+    val sub = subs(c, "__id", "__v", cExtra).transform(Exec.barrier)
     val seedIds = c.orderBy("__id").limit(centroids).select("__id")
     val seedCb = sub.join(broadcast(seedIds), "__id")
       .select(col("m"), col("__id").as("cid"), col("sv").as("cv"))
@@ -247,7 +323,7 @@ object VectorOps {
       .groupBy("m", "cid", "dim").agg(rMean(avg(col("x"))).as("mu"))
       .groupBy("m", "cid")
       .agg(expr("transform(array_sort(collect_list(struct(dim, mu))), p -> p.mu)").as("cv"))
-      .transform(graft.queries.Q.barrier) // consumed by encode + LUT
+      .transform(Exec.barrier) // consumed by encode + LUT
     // the compressed corpus: `subspaces` small codes per vector, m-ordered
     val codes = assign(cb).groupBy("__id", cExtra: _*)
       .agg(expr("transform(array_sort(collect_list(struct(m, cid))), p -> p.cid)").as("codes"))
@@ -310,15 +386,103 @@ object VectorOps {
     val c = asVec(corpus, idCol, vecCol)
       .select(col("__id").as("vec_id"), col("__v").as("v"))
     val (assigned, centroids) =
-      graft.queries.Similarity.kmeansAssigned(c, cells)
+      kmeansAssigned(c, cells)
     val qs = asVec(queries, idCol, vecCol)
       .select(col("__id").as("vec_id"), col("__v").as("v"))
-    val probed = graft.queries.Similarity.assignTo(qs, centroids, nprobe)
+    val probed = assignTo(qs, centroids, nprobe)
       .select(col("vec_id").as("__qid"), col("cid"), col("v").as("__qv"))
     // corpus vectors sit in ONE cell and probe cells are distinct, so
     // a (query, corpus) pair appears at most once — no dedup needed
     rank(assigned.select(col("vec_id").as("__id"), col("cid"), col("v").as("__v"))
       .join(broadcast(probed), Seq("cid")), k, excludeSelfIds)
+  }
+
+  /** Deterministic 2-round Lloyd over (vec_id, v): seeds = the k lowest
+    * vec_ids, one centroid-update round, then the final assignment.
+    * Returns (assigned: vec_id, cid, v — the post-update assignment;
+    * centroids: cid, cv). MAP-ONLY assignment: the k centroids pack
+    * into ONE broadcast row (collect_list of k structs) and the argmin
+    * happens inside a single per-row expression — array_min over
+    * (distance, cid) structs is the lexicographic minimum, ties to the
+    * lowest cid. No shuffle, no window, no agg buffer copying the
+    * vector; the corpus is touched once per round. (A per-vec window
+    * shuffles |corpus| x k scored pairs; a min(struct(..., v))
+    * aggregation copies the 64-double array on every buffer update —
+    * both measured slower.) Distances round to 6 and means to 9
+    * decimals so the DuckDB oracle replays bit-for-bit despite
+    * different summation orders. Shared by ann_kmeans_ivf (cell
+    * stats) and dedup_semantic (SemDeDup cluster partitioning).
+    *
+    * `probes` > 1 multi-assigns each vector to its `probes` nearest
+    * cells in the FINAL assignment (Lloyd's update round always uses
+    * the argmin) — the standard boundary-miss recall knob: a vector
+    * pair straddling a cell boundary still meets in a shared
+    * second-choice cell. Pair space grows ~probes^2-bounded; measured
+    * at gate scale (see SCALE.md): recall 24/59 -> 49/59 for 3.7x
+    * pairs. */
+  private[graft] def kmeansAssigned(e: DataFrame, k: Int = 8,
+                                    probes: Int = 1): (DataFrame, DataFrame) = {
+    require(probes >= 1 && probes <= k,
+      s"kmeansAssigned: probes ($probes) must be in [1, k=$k]")
+    val seeds = e.orderBy("vec_id").limit(k)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    def update(assigned: DataFrame): DataFrame =
+      assigned
+        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy("cid", "dim").agg(round(avg(col("x")), 9).as("m"))
+        .groupBy("cid")
+        .agg(expr("transform(array_sort(collect_list(struct(dim, m))), p -> p.m)").as("cv"))
+    // barrier: c1 is consumed by the final assignment AND by callers
+    // joining centroid stats — without it the corpus-wide centroid
+    // aggregation (a full pass over the assigned corpus) re-derives
+    // per consumer
+    val c1 = update(assignTo(e, seeds)).transform(Exec.barrier)
+    (assignTo(e, c1, probes), c1)
+  }
+
+  /** Nearest-cell assignment of (vec_id, v) rows against a (cid, cv)
+    * centroid frame — the shared map-only kernel: centroids pack into
+    * ONE broadcast row; probes = 1 takes the argmin inside a single
+    * expression, probes > 1 slices the same (d, cid)-sorted list and
+    * explodes one row per (vector, cell). Distances round to 6 so the
+    * DuckDB oracle's row_number tie-break replays identically. */
+  private[graft] def assignTo(e: DataFrame, centroids: DataFrame,
+                              probes: Int = 1): DataFrame = {
+    // output = cid prepended to ALL of e's columns (order changed in
+    // round 12 from the old (vec_id, cid, v) — callers select by name);
+    // reserved intermediate names would clobber or ambiguate
+    require(!e.columns.exists(Set("cid", "cs", "best")),
+      s"assignTo input must not carry cid/cs/best, got ${e.columns.mkString(",")}")
+    graft.functions.GraftFunctions.registerAll(e.sparkSession)
+    // graft_l2_sq = the codegen'd kernel; accumulates left-to-right,
+    // bit-identical to the aggregate(zip_with(...)) HOF pair it
+    // replaced (the DuckDB oracles replay that exact order) at ~10x
+    // less per-centroid cost in this innermost loop
+    val dExpr = "round(graft_l2_sq(v, c.cv), 6) AS d, c.cid AS cid"
+    val packed = centroids.agg(expr("collect_list(struct(cid, cv))").as("cs"))
+    val scored = e.crossJoin(broadcast(packed))
+    val withBest =
+      if (probes == 1)
+        scored.withColumn("best", expr(s"array_min(transform(cs, c -> struct($dExpr)))"))
+      else
+        scored.withColumn("best", explode(expr(
+          s"slice(array_sort(transform(cs, c -> struct($dExpr))), 1, $probes)")))
+    // carry every input column through (not just vec_id + v): callers
+    // that thread payload columns alongside the vector (e.g. the radius
+    // family's original-scale vectors) keep them without re-joining the
+    // corpus by id after assignment
+    withBest.select(col("best.cid").as("cid") +: e.columns.map(col): _*)
+  }
+
+  /** Sign of hyperplane `j` in dimension `d`: the md5 parity of
+    * "p{j}_{d}", so the DuckDB oracle can recompute the identical
+    * planes (and therefore identical buckets — the dot products fold in
+    * the same dimension order, so even the sign of a near-zero
+    * projection matches bit-for-bit). */
+  private def planeSign(j: Int, d: Int): Double = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val b0 = md.digest(s"p${j}_$d".getBytes("UTF-8"))(0)
+    if (((b0 >> 4) & 1) == 1) 1.0 else -1.0
   }
 
   /** LSH-bucketed cosine top-k: random-hyperplane signatures (`bits`
@@ -348,7 +512,7 @@ object VectorOps {
       return c.select(col("__id").as("q_id"), col("__id").as("id"),
         lit(null).cast("double").as("cos"), lit(null).cast("int").as("rn")).limit(0)
     val dim = first(0).getInt(0)
-    val planesSql = Array.tabulate(bits, dim)(graft.queries.Similarity.planeSign)
+    val planesSql = Array.tabulate(bits, dim)(planeSign)
       .map(p => s"array(${p.map(x => s"${x}D").mkString(", ")})")
       .mkString("array(", ", ", ")")
     def withBucket(df: DataFrame) = df

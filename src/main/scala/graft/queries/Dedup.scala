@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.pipeline.{CorpusOps, Exec}
 
 /** Deduplication operators for a training-data pipeline, designed for
   * 100 TB:
@@ -28,207 +29,38 @@ import org.apache.spark.sql.functions._
 object Dedup {
   import Q.t
 
-  /** MinHash permutation constants (fixed seed; Spark-side only — the
-    * oracle never sees signatures, only the verified pair set). */
-  private val MinhashPerms: Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(42)
-    // a < 2^30 keeps a * h32 (h32 < 2^32) under 2^62 — no ANSI overflow.
-    Seq.fill(32)((rnd.nextInt(1 << 29).toLong * 2 + 1, rnd.nextInt(Int.MaxValue).toLong))
-  }
-  private val P32 = 4294967311L // prime > 2^32
-
-
-  /** doc_id + distinct 3-word shingles from any (doc_id, text) frame. */
-  private[graft] def shingleSets(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("w", split(col("text"), " "))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        array_distinct(expr(
-          "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("sh"))
-
-  /** Containment core (dedup_containment /
-    * [[graft.pipeline.CorpusOps.containmentPairs]]): pairs whose
-    * 3-word-shingle containment inter / min(|A|, |B|) — the larger of
-    * the two directed containments (Broder) — reaches `minPct`/100,
-    * decided by integer cross-multiplication. Bounded posting-join
-    * shape: candidates are pairs sharing a shingle; sizes broadcast
-    * back. Expects (doc_id, text); returns
-    * (id_a, id_b, inter, sz_a, sz_b), id_a < id_b. */
-  private[graft] def containmentPairsOf(docs: DataFrame, minPct: Int): DataFrame = {
-    val posting = docs
-      .withColumn("w", split(col("text"), " "))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("shingle"))
-      .distinct()
-      .transform(Q.barrier) // 3 consumers: both join sides + sizes
-    val sizes = posting.groupBy("doc_id").agg(count(lit(1)).cast("int").as("sz"))
-    posting.as("pa").join(posting.as("pb"),
-        col("pa.shingle") === col("pb.shingle") && col("pa.doc_id") < col("pb.doc_id"))
-      .groupBy(col("pa.doc_id").as("id_a"), col("pb.doc_id").as("id_b"))
-      .agg(count(lit(1)).cast("int").as("inter"))
-      .join(broadcast(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a"))), "id_a")
-      .join(broadcast(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b"))), "id_b")
-      .where(col("inter") * 100 >= least(col("sz_a"), col("sz_b")) * minPct)
-      .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"), col("sz_b"))
-  }
-
-  /** Edit-distance verification of near-dup candidates — the final
-    * stage of a fuzzy-dedup pipeline (sketches nominate, an exact
-    * string metric confirms). Candidates are the bounded posting-join
-    * pairs sharing a 3-word shingle; a pair survives iff
-    * `100 * levenshtein(a, b) <= maxPct * max(len_a, len_b)`,
-    * integer-exact.
-    *
-    * Scale: two lossless prunes keep the O(len_a * len_b) DP off almost
-    * every candidate. (1) Length gap: levenshtein >= |len_a - len_b|,
-    * so pairs whose gap alone exceeds the budget are dropped by a
-    * comparison on two ints (64% of candidates on the gate corpus).
-    * (2) The DP itself runs BANDED via Spark's 3-arg `levenshtein`
-    * (threshold = the pair's edit budget): it explores only the
-    * +-threshold diagonal band and bails to -1 on overflow, turning the
-    * worst case into O(threshold * len) per pair. Both prunes change
-    * cost only, never the kept set, so the oracle is the plain
-    * unbanded metric over the same candidates.
-    *
-    * Expects (doc_id, text); returns (id_a, id_b, dist, len_max),
-    * id_a < id_b. */
-  private[graft] def editVerifiedPairsOf(docs: DataFrame, maxPct: Int = 20): DataFrame = {
-    // barrier: the doc frame feeds the posting build plus two text-join
-    // sides; without it the candidate self-join re-derives each.
-    val d = docs.select(col("doc_id"), col("text")).transform(Q.barrier)
-    val posting = d
-      .withColumn("w", split(col("text"), " "))
-      .where(size(col("w")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("shingle"))
-      .distinct()
-    val cand = posting.as("pa").join(posting.as("pb"),
-        col("pa.shingle") === col("pb.shingle") && col("pa.doc_id") < col("pb.doc_id"))
-      .select(col("pa.doc_id").as("id_a"), col("pb.doc_id").as("id_b"))
-      .distinct()
-    cand
-      .join(d.select(col("doc_id").as("id_a"), col("text").as("ta"),
-        length(col("text")).as("len_a")), "id_a")
-      .join(d.select(col("doc_id").as("id_b"), col("text").as("tb"),
-        length(col("text")).as("len_b")), "id_b")
-      .withColumn("len_max", greatest(col("len_a"), col("len_b")).cast("int"))
-      .withColumn("budget", expr(s"cast(len_max * $maxPct div 100 as int)"))
-      .where(abs(col("len_a") - col("len_b")) <= col("budget"))
-      .withColumn("dist", expr("levenshtein(ta, tb, budget)"))
-      .where(col("dist") >= 0) // 3-arg levenshtein: -1 = band overflow
-      .select(col("id_a"), col("id_b"), col("dist"), col("len_max"))
-  }
-
-  /** doc_id + distinct 3-word shingles. The scan is spread first: the
-    * split + trigram transform + array_distinct runs IN the scan
-    * stage, and the testdata's single-file table would pin all of it
-    * to one task (Q.spread is a no-op on an already-wide corpus). */
-  private def shingled(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
-    shingleSets(Q.spread(t(s, dir, "documents"), "doc_id"))
-  }
-
   /** 32-bit SimHash per doc via the native kernel (codegen'd; the
     * nested-HOF formulation costs ~17x interpreted). */
   private def simhashed(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.registerAll(s)
-    Q.spread(t(s, dir, "documents"), "doc_id")
+    Exec.spread(t(s, dir, "documents"), "doc_id")
       .select(col("doc_id"),
         expr("graft_simhash32(array_distinct(split(text, ' ')))").as("simhash"))
   }
 
-  /** MinHash+LSH candidate generation + exact verification: the shared
-    * scale path behind dedup_minhash_lsh / dedup_filtered_corpus /
-    * dedup_components. Returns verified (id_a, id_b, inter, uni) with
-    * J >= 0.8 (integer-exact threshold). */
-  private[queries] def lshVerifiedPairs(s: SparkSession, dir: String): DataFrame =
-    lshVerifiedPairsOf(shingled(s, dir))
-
-  /** (doc_id, bb) banded MinHash bucket keys of a shingle-set frame —
-    * 32 permutation mins folded into 16 two-row bands; docs with
-    * J >= 0.8 collide in some band with near-certainty (see the class
-    * comment). This IS the LSH index: at scale it is computed once and
-    * persisted, then self-joined (full dedup) or probed by a new batch
-    * (incremental dedup). */
-  private def bandBucketsOf(sets: DataFrame): DataFrame = {
-    val hashed = sets.select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .withColumn("h32", expr("xxhash64(shingle) & 4294967295"))
-    val sigCols = MinhashPerms.zipWithIndex.map { case ((a, b), i) =>
-      min((col("h32") * a + b) % P32).as(s"m$i")
-    }
-    val sigs = hashed.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until 16).map { j =>
-      struct(lit(j).as("band"), xxhash64(col(s"m${2 * j}"), col(s"m${2 * j + 1}")).as("bh"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
+  /** The verified near-dup pairs of the documents table
+    * ([[CorpusOps.nearDupPairs]]) — the shared input of
+    * dedup_minhash_lsh / dedup_filtered_corpus / dedup_components and
+    * their kin. The scan is spread first: shingling and signature
+    * hashing run IN the scan stage, and the testdata's single-file
+    * table would pin all of it to one task (Exec.spread is a no-op on
+    * an already-wide corpus). */
+  private[queries] def lshVerifiedPairs(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(s)
+    CorpusOps.nearDupPairs(Exec.spread(t(s, dir, "documents"), "doc_id"))
   }
-
-  /** Core of the MinHash+LSH scale path over any shingle-set frame
-    * (doc_id, sh: array&lt;string&gt;) — see [[graft.pipeline.CorpusOps]]
-    * for the public entry point. */
-  private[graft] def lshVerifiedPairsOf(shingles: DataFrame): DataFrame = {
-    // localCheckpoint, not cache: both materialize once, but checkpoint
-    // blocks are released by the ContextCleaner as soon as the plan is
-    // unreferenced (cache() pins them for the session), and the truncated
-    // lineage stops the self-join below from re-deriving each side.
-    // Trade-off at cluster scale: no lineage means an executor loss costs
-    // a stage retry from the checkpoint job instead of a partition
-    // recompute — acceptable for a 2-job window; a multi-hour pipeline
-    // would use reliable checkpointing to the DFS instead.
-    val sets = shingles.transform(Q.barrier)
-    // Candidate pairs via an equi-self-join on the bucket key. Unlike a
-    // per-bucket collect_set + pair explosion (one task owns the whole
-    // bucket; needs a cap that silently DROPS hot buckets), the join
-    // produces the exact candidate set and a stop-shingle-skewed bucket
-    // is split across tasks by AQE's skew-join handling — pathological
-    // skew degrades speed, never results.
-    // Checkpointed so the 32xmin signature aggregate runs ONCE: Catalyst
-    // plans the two join sides independently (no ReusedExchange fires —
-    // one side is a broadcast, the other a hash exchange) and would
-    // otherwise recompute the whole shingle->hash->agg pipeline per side.
-    val bucketed = bandBucketsOf(sets).transform(Q.barrier)
-    val cand = bucketed.as("x").join(bucketed.as("y"),
-        col("x.bb") === col("y.bb") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")).distinct()
-    val a = sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    cand.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("sh_a"), col("sh_b"))).as("inter"),
-        (size(col("sh_a")) + size(col("sh_b"))
-          - size(array_intersect(col("sh_a"), col("sh_b")))).as("uni"))
-      .where(col("inter") * 5 >= col("uni") * 4) // J >= 0.8
-  }
-
-  /** Per-row MinHash signature (array of the 32 permutation mins) as one
-    * SQL expression over a shingle-array column `sh` — the map-only
-    * formulation of the signature aggregate for rows arriving on a
-    * stream. Identical constants and arithmetic to [[bandBucketsOf]]
-    * (xxhash64 & 2^32-1, a*h+b mod P over the same distinct shingles),
-    * so stream-computed and index-computed bucket keys collide
-    * identically. */
-  private[graft] val PerRowMinhashSql: String = MinhashPerms.map { case (a, b) =>
-    s"array_min(transform(sh, g -> ((xxhash64(g) & 4294967295) * $a + $b) % $P32))"
-  }.mkString("array(", ", ", ")")
-
-  /** Band keys over a 32-min signature column `ms` (same 16x2 banding
-    * and field types as [[bandBucketsOf]]). */
-  private[graft] val PerRowBandsSql: String =
-    "transform(sequence(0, 15), j -> named_struct('band', j, 'bh', xxhash64(ms[2*j], ms[2*j+1])))"
 
   /** The persisted corpus-side dedup index, materialized once: shingle
     * sets, banded LSH buckets, and content hashes — what an incremental
     * (batch or streaming) delta probes against. */
   private[graft] def corpusDedupIndex(corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // spread: signature hashing runs in the corpus scan stage
-    val c = Q.spread(corpus, "doc_id")
-    val sets = shingleSets(c).transform(Q.barrier)
-    val buckets = bandBucketsOf(sets).transform(Q.barrier)
+    val c = Exec.spread(corpus, "doc_id")
+    val sets = CorpusOps.shingleSets(c).transform(Exec.barrier)
+    val buckets = CorpusOps.bandBucketsOf(sets).transform(Exec.barrier)
     val hashes = corpus
       .select(col("doc_id"), md5(col("text").cast("binary")).as("mh"))
-      .transform(Q.barrier)
+      .transform(Exec.barrier)
     (sets, buckets, hashes)
   }
 
@@ -247,286 +79,12 @@ object Dedup {
         FROM (SELECT * FROM nearp UNION ALL SELECT * FROM exactp)
         GROUP BY batch_id ORDER BY batch_id"""
 
-  /** Winnowing core (dedup_winnowing / CorpusOps.winnowingPairs): pairs
-    * of docs sharing >= `minShared` winnowed fingerprints over word
-    * `gramWidth`-grams with window `window` — any common run of
-    * `gramWidth + window - 1` words guarantees ONE shared fingerprint,
-    * so the deterministic local-overlap guarantee holds only at the
-    * default `minShared = 1` (a minimal lifted run can collapse to a
-    * single distinct fingerprint; raise the threshold to trade the
-    * guarantee for noise rejection on short common phrases).
-    * Input: (doc_id, text); output: (id_a, id_b, n_shared). */
-  private[graft] def winnowingPairs(docs: DataFrame, gramWidth: Int = 4,
-                                    window: Int = 4, minShared: Int = 1): DataFrame = {
-    require(gramWidth >= 1 && window >= 1 && minShared >= 1,
-      s"winnowingPairs: gramWidth ($gramWidth), window ($window) and " +
-        s"minShared ($minShared) must all be >= 1")
-    val gramCols = (0 until gramWidth).map(j => s"w[i+$j]").mkString(", ")
-    // spread: gram hashing + window mins run in the scan stage
-    val posting = Q.spread(docs, "doc_id")
-      .withColumn("w", split(col("text"), " "))
-      .where(size(col("w")) >= gramWidth + window - 1) // >= one full window
-      .withColumn("hs", expr(
-        s"""transform(sequence(0, size(w) - $gramWidth), i ->
-              cast(conv(substr(md5(concat_ws(' ', $gramCols)), 1, 15), 16, 10) as bigint))"""))
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(0, size(hs) - $window), j -> array_min(slice(hs, j + 1, $window))))")).as("fp"))
-      .transform(Q.barrier) // both sides of the self-join
-    posting.as("a").join(posting.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).cast("int").as("n_shared"))
-      .where(col("n_shared") >= minShared)
-  }
-
-  /** Incremental-dedup core: which `batch` docs (doc_id, text) duplicate
-    * a `corpus` doc — exact (content-hash equality, covers docs too
-    * short to shingle) or near (band collision + exact Jaccard >= 0.8).
-    * Returns (batch_id, dup_of = lowest matching corpus id). The batch
-    * side (buckets, shingle sets, hashes) is broadcast onto the corpus
-    * stream: per-delta cost is a map over the corpus plus index work on
-    * the batch, never a corpus reshuffle. At scale the corpus buckets
-    * are the persisted LSH index, computed once and reused every batch
-    * (rebuilt per call here — the gate is stateless). Public entry:
-    * [[graft.pipeline.CorpusOps.dedupAgainstCorpus]]. */
-  private[graft] def incrementalDupMatches(batch: DataFrame, corpus: DataFrame): DataFrame = {
-    val b = batch.select(col("doc_id"), col("text"))
-    val c = corpus.select(col("doc_id"), col("text"))
-    // each side's shingle sets feed its buckets AND the verify join
-    val setsB = shingleSets(b).transform(Q.barrier)
-    val setsC = shingleSets(c).transform(Q.barrier)
-    val cand = bandBucketsOf(setsC).select(col("doc_id").as("corpus_id"), col("bb"))
-      .join(broadcast(bandBucketsOf(setsB)
-        .select(col("doc_id").as("batch_id"), col("bb"))), Seq("bb"))
-      .select("batch_id", "corpus_id").distinct()
-    // verify with the CORPUS side streaming. The candidate relation is
-    // collision-bounded, NOT batch-bounded (a stop-shingle bucket can
-    // pair one batch doc with millions of corpus docs), so it is NOT
-    // broadcast-hinted: AQE picks broadcast from runtime stats in the
-    // normal case (the plan gate asserts no sort-merge at gate scale)
-    // and degrades to a shuffle instead of an executor/driver OOM if a
-    // pathological corpus explodes the candidate count. Only the truly
-    // batch-bounded shingle lookup is forced broadcast.
-    val near = setsC.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
-      .join(cand.join(
-        broadcast(setsB.select(col("doc_id").as("batch_id"), col("sh").as("sh_b"))),
-        "batch_id"), "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        size(array_intersect(col("sh_b"), col("sh_c"))).as("inter"),
-        (size(col("sh_b")) + size(col("sh_c"))
-          - size(array_intersect(col("sh_b"), col("sh_c")))).as("uni"))
-      .where(col("inter") * 5 >= col("uni") * 4) // J >= 0.8
-      .select("batch_id", "corpus_id")
-    val exact = c.select(col("doc_id").as("corpus_id"), md5(col("text").cast("binary")).as("mh"))
-      .join(broadcast(b.select(col("doc_id").as("batch_id"),
-        md5(col("text").cast("binary")).as("mh"))), Seq("mh"))
-      .select("batch_id", "corpus_id")
-    near.union(exact)
-      .groupBy("batch_id").agg(min(col("corpus_id")).as("dup_of"))
-  }
-
-  /** Span-removal core (dedup_span_removal / CorpusOps.removeDuplicateSpans):
-    * every `segWords`-word segment keeps exactly its FIRST corpus-wide
-    * occurrence (min (doc_id, position) via a row_number window keyed
-    * by segment content); later occurrences are cut and each document
-    * is rebuilt from its surviving segments in order. Two keyed
-    * shuffles (segment window + per-doc reassembly), no pair space;
-    * the reassembly buffer is bounded by one document's length.
-    * Input: (doc_id, text); output: (doc_id, n_segs, n_kept,
-    * text_clean) — docs reduced to nothing keep a row with
-    * n_kept = 0 and empty text so the caller can tell "emptied" from
-    * "missing". */
-  private[graft] def spanRemoval(docs: DataFrame, segWords: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(segWords >= 1, s"spanRemoval: segWords ($segWords) must be >= 1")
-    val segs = docs
-      .where(length(col("text")) > 0)
-      .withColumn("w", split(col("text"), " "))
-      .select(col("doc_id"), col("w"),
-        explode(expr(s"sequence(0, size(w) - 1, $segWords)")).as("i"))
-      .selectExpr("doc_id", "i", s"concat_ws(' ', slice(w, i + 1, $segWords)) AS seg")
-      .transform(Q.barrier) // totals + window both consume it
-    val kept = segs
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("seg")).orderBy(col("doc_id"), col("i"))))
-      .where(col("rn") === 1)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        concat_ws(" ", expr(
-          "transform(array_sort(collect_list(struct(i, seg))), p -> p.seg)"))
-          .as("text_clean"))
-    segs.groupBy("doc_id").agg(count(lit(1)).as("n_segs"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_segs"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_clean"), lit("")).as("text_clean"))
-  }
-
-  /** SemDeDup core (dedup_semantic / CorpusOps.semanticDedup):
-    * k-means-partitioned within-cluster cosine dedup (Abbas et al.,
-    * arXiv:2303.09540). Clustering reuses the deterministic 2-round
-    * Lloyd shared with ann_kmeans_ivf ([[Similarity.kmeansAssigned]]).
-    * The pair join keys on cluster id — pair count sum(|cell|^2) ~=
-    * n^2/k for balanced cells; at scale pick k ~ n / target-cell-size
-    * so per-cell work stays constant and no all-pairs path exists.
-    * Input: (vec_id, v double array); output: (dropped_id, cid,
-    * n_dups, max_cos) — one row per vector that has a LOWER-id
-    * neighbor in a shared cell with cosine >= `minCosine`
-    * (greedy-by-id keep-one-exemplar policy).
-    *
-    * `probes` > 1 multi-assigns each vector to its `probes` nearest
-    * cells (the boundary-miss recall knob — see
-    * [[Similarity.kmeansAssigned]]); a pair meeting in several shared
-    * cells is collapsed to one (min cell id) before counting, so
-    * n_dups counts NEIGHBORS, not cell coincidences, and the
-    * probes = 1 output is unchanged. */
-  private[graft] def semanticDropped(e: DataFrame, k: Int = 8,
-                                     minCosine: Double = 0.4,
-                                     probes: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
-    // barrier: both pair-join sides consume the assignment — without it
-    // the full Lloyd pipeline (two broadcast-assign passes + centroid
-    // aggregation) re-derives per side
-    val assigned = Similarity.kmeansAssigned(e, k, probes)._1.transform(Q.barrier)
-    val a = assigned.select(col("cid"), col("vec_id").as("id_a"), col("v").as("va"))
-    val b = assigned.select(col("cid"), col("vec_id").as("id_b"), col("v").as("vb"))
-    a.join(b, Seq("cid")).where(col("id_a") < col("id_b"))
-      .withColumn("cos", expr("round(graft_cosine_sim(va, vb), 6)"))
-      .where(col("cos") >= minCosine)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(min(col("cid")).as("cid"), max(col("cos")).as("cos"))
-      .groupBy(col("id_b"))
-      .agg(min(col("cid")).as("cid"), count(lit(1)).as("n_dups"),
-        max(col("cos")).as("max_cos"))
-      .select(col("id_b").as("dropped_id"), col("cid"), col("n_dups"), col("max_cos"))
-  }
-
-
-  /** Distributed connected components by min-label propagation with
-    * pointer doubling: each round relabels via graph edges AND via the
-    * current label chain (node -> label(label(node))), so convergence
-    * takes O(log diameter) rounds instead of O(diameter) — a
-    * diameter-4096 path converges in ~12 rounds. Labels only ever
-    * decrease, so the label sum strictly decreases until the fixpoint and
-    * a single 1-row aggregate is the convergence check. Runs to TRUE
-    * convergence; if the (absurd) round bound trips, it throws rather
-    * than return partially-propagated labels.
-    *
-    * Input: undirected pair list (id_a, id_b); output: (node, label)
-    * where label = min node id reachable.
-    *
-    * The loop sizes its OWN shuffle partitioning from the measured edge
-    * count instead of inheriting `spark.sql.shuffle.partitions`: each
-    * doubling round pays (scheduling floor × partition count) across ~3
-    * shuffles, so a global knob tuned for the corpus-sized operators
-    * inverts here — the round-10 sf10 A/B showed 128 partitions halving
-    * dedup_minhash_lsh (94.9 → 48.6 s) while nearly tripling this loop
-    * (57.7 → 155.1 s). The pair frame is tiny next to the corpus
-    * (~16 B of longs per edge), so ~250k edges per partition keeps every
-    * partition comfortably in executor memory while bounding the
-    * per-round task count; the cap lets a genuinely huge edge set (a
-    * 100 TB corpus's pair list) still fan out. */
-  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
-    val edges = pairs.toDF("ea", "eb")
-    val sym = edges.union(edges.select(col("eb"), col("ea"))).toDF("src", "dst").cache()
-    val nEdges = sym.count() // forces the cache; sizes the loop's shuffles
-    val loopParts = math.max(4L, math.min(nEdges / 250000L + 1L, 4096L)).toInt
-    Q.withShufflePartitions(sym.sparkSession, loopParts) {
-    // Seed with round 1 computed as ONE keyed agg: starting from
-    // labels(x) = x, the first propagation round's output is exactly
-    // min(node, min neighbor) — so fold it into the seed (one shuffle)
-    // instead of paying a full join round to derive it. Same label
-    // sequence from here on, one fewer round.
-    var labels = sym.groupBy(col("src").as("node"))
-      .agg(least(col("src"), min(col("dst"))).as("label"))
-      .transform(Q.barrier)
-    // prevSum = the seed's own sum (a 1-row agg over checkpointed
-    // blocks): labels only decrease, so an unchanged sum == fixpoint —
-    // seeding the comparison lets an already-converged seed (cliques,
-    // star-shaped dup clusters) exit after ONE join round, not two.
-    var prevSum = labels.selectExpr("coalesce(sum(label), 0) AS s")
-      .collect()(0).getLong(0)
-    var converged = false
-    var rounds = 0
-    val MaxRounds = 64 // log2-scale: diameter would need to exceed 2^64
-    while (!converged) {
-      if (rounds >= MaxRounds)
-        throw new IllegalStateException(
-          s"connected components failed to converge after $MaxRounds doubling rounds")
-      // ONE join per round instead of three frames: the chain hop
-      // node -> label(label(node)) is the same join shape as the edge
-      // hop once each label row is read as an edge label(n) -> n, so
-      // both propagate through a single (src)-keyed equi-join against
-      // the label frame. The self term (labels itself) is redundant:
-      // every node n receives label(label(n)) via its chain edge, and
-      // label(label(n)) <= label(n) because label(x) <= x for all x —
-      // so dropping the self-union changes nothing. Round cost falls
-      // from ~5 exchanges (3 label sides + edges + union re-agg) to 2
-      // (labels by node, edges∪chain by src; the min-agg reuses the
-      // join's partitioning).
-      val edgesAll = sym.union(labels.select(col("label").as("src"), col("node").as("dst")))
-      // localCheckpoint doubles as per-round lineage truncation: without
-      // it each round's plan nests the previous round's, and the driver
-      // pays quadratic planning time by round ~10. Superseded rounds'
-      // blocks are freed by the ContextCleaner once unreferenced.
-      val propagated = edgesAll.join(labels, col("src") === col("node"))
-        .groupBy(col("dst").as("node")).agg(min(col("label")).as("label"))
-        .transform(Q.barrier)
-      val sum0 = propagated.selectExpr("coalesce(sum(label), 0) AS s")
-        .collect()(0).getLong(0)
-      labels.unpersist()
-      labels = propagated
-      converged = sum0 == prevSum
-      prevSum = sum0
-      rounds += 1
-    }
-    sym.unpersist()
-    labels
-    } // withShufflePartitions
-  }
-
-  /** Cluster-safe train/val assignment — the mechanism behind the
-    * pipe_leakage_safe_split entry (see its comment for the leakage
-    * rationale). Components over `pairs` label every doc; the label's
-    * deterministic md5 bucket (of `buckets`, last `valBuckets` = val)
-    * decides the split for the WHOLE cluster, so no near-dup pair
-    * straddles it. The component frame is pair-bounded — tiny next to
-    * the corpus — and broadcast onto `docs`; singletons fall through the
-    * left join and split on their own id. Public entry:
-    * [[graft.pipeline.CorpusOps.leakageSafeSplit]]. */
-  private[graft] def leakageSafeSplitOf(docs: DataFrame, pairs: DataFrame,
-      idCol: String, buckets: Int, valBuckets: Int): DataFrame = {
-    val comp = connectedComponents(pairs)
-    docs.join(broadcast(comp), docs(idCol) === comp("node"), "left")
-      .withColumn("component", coalesce(col("label"), col(idCol).cast("long")))
-      .drop("node", "label")
-      .withColumn("split",
-        when(expr(s"cast(conv(substr(md5(cast(component as string)), 1, 8), 16, 10) as bigint) % $buckets")
-            < buckets - valBuckets,
-          lit("train")).otherwise(lit("val")))
-  }
-
   private val ShingleCteSql =
     """sh AS (
          SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
                                        for i in range(1, len(w) - 1)]) AS sh
          FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
          WHERE len(w) >= 3)"""
-
-  /** Cross-key duplication matrix core (see the dedup_source_matrix
-    * entry comment): near-dup pairs lifted to unordered (key, key)
-    * cells. Shared by the gate entry and
-    * [[graft.pipeline.CorpusOps.dupSourceMatrix]]. */
-  private[graft] def dupSourceMatrixCore(pairs: DataFrame, docs: DataFrame,
-                                         idCol: String, keyCol: String): DataFrame = {
-    val src = docs.select(col(idCol), col(keyCol))
-    pairs
-      .join(src.select(col(idCol).as("id_a"), col(keyCol).as("__sa")), Seq("id_a"))
-      .join(src.select(col(idCol).as("id_b"), col(keyCol).as("__sb")), Seq("id_b"))
-      .selectExpr("least(__sa, __sb) AS src_a", "greatest(__sa, __sb) AS src_b")
-      .groupBy("src_a", "src_b").agg(count(lit(1)).as("n_pairs"))
-      .orderBy("src_a", "src_b")
-  }
 
   val qs: Map[String, Q] = Map(
 
@@ -560,7 +118,7 @@ object Dedup {
           .select(col("doc_id"), explode(expr(
             "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("shingle"))
           .distinct()
-          .transform(Q.barrier) // 3 consumers: both join sides + sizes
+          .transform(Exec.barrier) // 3 consumers: both join sides + sizes
         val sizes = posting.groupBy("doc_id").agg(count(lit(1)).cast("int").as("sz"))
         val inter = posting.as("pa").join(posting.as("pb"),
             col("pa.shingle") === col("pb.shingle") && col("pa.doc_id") < col("pb.doc_id"))
@@ -584,8 +142,6 @@ object Dedup {
         ORDER BY id_a, id_b""")),
 
     // ---- n-gram CONTAINMENT: the near-superset detector ----
-    // Mechanism: containmentPairsOf (below the qs map) / public entry
-    // [[graft.pipeline.CorpusOps.containmentPairs]].
     // Jaccard misses asymmetric duplication: a doc fully lifted into a
     // 10x longer one has J ~ 0.1 but containment ~ 1.0 (Broder's
     // resemblance-vs-containment distinction). Same bounded posting-join
@@ -596,7 +152,7 @@ object Dedup {
     // the jaccard entry's bound: frequent-shingle postings are the skew
     // risk and would be capped upstream (see SCALE.md).
     "dedup_containment" -> Q(
-      (s, dir) => containmentPairsOf(
+      (s, dir) => CorpusOps.containmentPairs(
           t(s, dir, "documents").where(col("doc_id") < 300), minPct = 90)
         .orderBy("id_a", "id_b"),
       Some(s"""WITH $ShingleCteSql
@@ -609,14 +165,12 @@ object Dedup {
         ORDER BY id_a, id_b""")),
 
     // ---- edit-distance verification of candidate pairs ----
-    // Mechanism: editVerifiedPairsOf (above the qs map) / public entry
-    // [[graft.pipeline.CorpusOps.editDistancePairs]]. Shingle sketches
-    // nominate, the exact string metric confirms — dist <= 20% of the
-    // longer doc. Both Spark-side prunes (length gap, banded DP) are
-    // lossless, so the oracle is the plain metric over the same
-    // candidate set.
+    // Shingle sketches nominate, the exact string metric confirms —
+    // dist <= 20% of the longer doc. Both Spark-side prunes (length
+    // gap, banded DP) are lossless, so the oracle is the plain metric
+    // over the same candidate set.
     "dedup_edit_verify" -> Q(
-      (s, dir) => editVerifiedPairsOf(
+      (s, dir) => CorpusOps.editDistancePairs(
           t(s, dir, "documents").where(col("doc_id") < 300))
         .orderBy("id_a", "id_b"),
       Some("""WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
@@ -645,9 +199,8 @@ object Dedup {
     // makes the LSH path exact; same equivalence the minhash entry
     // rests on).
     "dedup_source_matrix" -> Q(
-      (s, dir) => dupSourceMatrixCore(
-        lshVerifiedPairs(s, dir).select("id_a", "id_b"),
-        t(s, dir, "documents"), "doc_id", "source"),
+      (s, dir) => CorpusOps.dupSourceMatrix(t(s, dir, "documents"),
+        lshVerifiedPairs(s, dir).select("id_a", "id_b"), "doc_id", "source"),
       Some(s"""WITH $ShingleCteSql,
         pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -727,7 +280,7 @@ object Dedup {
     "dedup_components" -> Q(
       (s, dir) => {
         val pairs = lshVerifiedPairs(s, dir).select("id_a", "id_b")
-        connectedComponents(pairs)
+        CorpusOps.connectedComponents(pairs)
           .select(col("node").as("doc_id"), col("label").as("component"))
           .orderBy("doc_id")
       },
@@ -753,7 +306,7 @@ object Dedup {
     "dedup_cluster_stats" -> Q(
       (s, dir) => {
         val pairs = lshVerifiedPairs(s, dir).select("id_a", "id_b")
-        connectedComponents(pairs)
+        CorpusOps.connectedComponents(pairs)
           .groupBy(col("label")).agg(count(lit(1)).cast("int").as("cluster_size"))
           .groupBy("cluster_size")
           .agg(count(lit(1)).as("n_clusters"),
@@ -842,13 +395,13 @@ object Dedup {
         ORDER BY id_a, id_b""")),
 
     // ---- SemDeDup: k-means partition, then within-cluster cosine ----
-    // (core in semanticDropped above the registry, shared with
+    // (core: CorpusOps.semanticDropped, shared with
     // CorpusOps.semanticDedup)
     // Whole-corpus pairwise cosine is O(n^2) and dies at scale;
     // SemDeDup (Abbas et al., arXiv:2303.09540) bounds the pair space
     // by clustering embeddings first and comparing only within a
     // cluster. Reuses the deterministic 2-round Lloyd shared with
-    // ann_kmeans_ivf (Similarity.kmeansAssigned — map-only assignment
+    // ann_kmeans_ivf (VectorOps.kmeansAssigned — map-only assignment
     // against one broadcast centroid row). The pair join keys on cid: a
     // hash shuffle on cluster id, pair count sum(|cell|^2) ~= n^2/k for
     // balanced cells; at 100 TB k scales as n / target-cell-size so
@@ -860,7 +413,7 @@ object Dedup {
       (s, dir) => {
         val e = t(s, dir, "embeddings")
           .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
-        semanticDropped(e).orderBy("dropped_id")
+        CorpusOps.semanticDropped(e).orderBy("dropped_id")
       },
       Some("""WITH e AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v FROM embeddings),
         seeds AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
@@ -898,7 +451,7 @@ object Dedup {
       (s, dir) => {
         val e = t(s, dir, "embeddings")
           .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
-        semanticDropped(e, probes = 2).orderBy("dropped_id")
+        CorpusOps.semanticDropped(e, probes = 2).orderBy("dropped_id")
       },
       Some("""WITH e AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v FROM embeddings),
         seeds AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
@@ -984,7 +537,7 @@ object Dedup {
     // + a per-doc groupBy to reassemble — two keyed shuffles, no pair
     // space; the reassembly buffer is bounded by one document's length.
     "dedup_span_removal" -> Q(
-      (s, dir) => spanRemoval(t(s, dir, "documents")).orderBy("doc_id"),
+      (s, dir) => CorpusOps.removeDuplicateSpans(t(s, dir, "documents")).orderBy("doc_id"),
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
           FROM documents WHERE length(text) > 0),
         c AS (SELECT doc_id, w, unnest(range(0, len(w), 10)) AS i FROM d),
@@ -1020,7 +573,7 @@ object Dedup {
       // minShared = 2 here (noise rejection over the synthetic corpus's
       // common phrases); the guarantee-preserving default is 1 — see
       // winnowingPairs
-      (s, dir) => winnowingPairs(t(s, dir, "documents"), minShared = 2)
+      (s, dir) => CorpusOps.winnowingPairs(t(s, dir, "documents"), minShared = 2)
         .orderBy("id_a", "id_b"),
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         g AS (SELECT doc_id,
@@ -1051,7 +604,7 @@ object Dedup {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val isBatch = col("doc_id") % 10 === 7 // deterministic 10% "delta"
-        incrementalDupMatches(docs.where(isBatch), docs.where(!isBatch))
+        CorpusOps.incrementalDupMatches(docs.where(isBatch), docs.where(!isBatch))
           .orderBy("batch_id")
       },
       Some(IncrementalOracleSql)),
@@ -1070,7 +623,7 @@ object Dedup {
     // and BROADCAST onto the doc table. Singletons fall through the
     // left join and split on their own id, keeping one code path.
     "pipe_leakage_safe_split" -> Q(
-      (s, dir) => leakageSafeSplitOf(
+      (s, dir) => CorpusOps.leakageSafeSplit(
         t(s, dir, "documents").select(col("doc_id")),
         lshVerifiedPairs(s, dir).select("id_a", "id_b"),
         idCol = "doc_id", buckets = 10, valBuckets = 2)
@@ -1165,7 +718,7 @@ object Dedup {
       (s, dir) => {
         graft.functions.GraftFunctions.registerAll(s)
         val docs = t(s, dir, "documents").where(col("doc_id") < 300)
-        val mh = lshVerifiedPairsOf(shingleSets(docs))
+        val mh = CorpusOps.nearDupPairs(docs)
           .select(col("id_a"), col("id_b"), lit(1L).as("in_mh"))
         val sims = docs.select(col("doc_id"),
           expr("graft_simhash32(array_distinct(split(text, ' ')))").as("simhash"))

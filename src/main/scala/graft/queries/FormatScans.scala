@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.{GraftIO, TwoBit}
+import graft.pipeline.Exec
 
 /** Oracle-matrix entries for the file-format sources (SURVEY.md §2.A).
   *
@@ -4781,7 +4782,7 @@ object FormatScans {
         val e = GraftIO.read_gfa(s, dir.toString)
           .where(col("record_type") === "L")
           .select(col("from_name").as("src"), col("to_name").as("dst"))
-        val eB = Q.barrier(e)
+        val eB = Exec.barrier(e)
         val outdeg = eB.groupBy(col("src").as("od_n"))
           .agg(count(lit(1)).as("od"))
         val indeg = eB.groupBy(col("dst").as("id_n"))
@@ -6228,7 +6229,7 @@ object FormatScans {
     // headroom inside int64.
     "fmt_sam_evenness" -> Q(
       (s, _) => {
-        val h = samDepthHist(s).transform(Q.barrier)
+        val h = samDepthHist(s).transform(Exec.barrier)
         val tot = h.groupBy(col("reference").as("ref2"))
           .agg(sum(col("n_positions")).as("n_pos"),
             sum(expr("depth * n_positions")).as("depth_mass"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.{CorpusOps, Exec}
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between raw crawl and tokenizer — beyond the per-document scoring in
@@ -31,219 +32,11 @@ import org.apache.spark.sql.expressions.Window
 object PipelineOps {
   import Q.t
 
-  /** n-gram expansion over a pre-split word array `w`. */
-  private[graft] def gramExpr(n: Int): String = {
-    val terms = (0 until n).map(j => if (j == 0) "w[i]" else s"w[i+$j]").mkString(", ")
-    s"transform(sequence(0, size(w) - $n), i -> concat_ws(' ', $terms))"
-  }
-
   /** 5-gram expansion — ONE definition for every entry that shingles
     * (decontamination, curation): a gram width/tokenization change
     * edits one place, keeping the Spark side and the (necessarily
     * stringly) DuckDB oracles reviewable together. */
-  private val Gram5 = gramExpr(5)
-
-  /** Bloom-prefiltered exact decontamination core (see the
-    * pipe_decontam_bloom entry comment for the plan rationale): returns
-    * the DISTINCT `keep` columns of train docs sharing a `gramWidth`-gram
-    * with the eval set. Exact answer — Bloom false positives die in the
-    * verify join, false negatives don't exist. Public entry:
-    * [[graft.pipeline.CorpusOps.bloomDecontaminate]]. */
-  private[graft] def bloomContaminated(train: DataFrame, evalDocs: DataFrame,
-      gramWidth: Int, keep: Seq[String],
-      expectedEvalGrams: Long, fpp: Double): DataFrame = {
-    def withGrams(df: DataFrame) =
-      df.withColumn("w", split(col("text"), " "))
-        .where(size(col("w")) >= gramWidth)
-    val evalGrams = Q.barrier(withGrams(evalDocs)
-      .select(explode(expr(gramExpr(gramWidth))).as("g")).distinct())
-    val bf = evalGrams.stat.bloomFilter("g", expectedEvalGrams, fpp)
-    val bfB = evalGrams.sparkSession.sparkContext.broadcast(bf)
-    val mightContain = udf((g: String) => g != null && bfB.value.mightContain(g))
-    withGrams(train)
-      .select(keep.map(col) :+ explode(expr(gramExpr(gramWidth))).as("g"): _*)
-      .where(mightContain(col("g")))
-      .join(evalGrams, Seq("g"), "left_semi")
-      .select(keep.head, keep.tail: _*).distinct()
-  }
-
-  /** Token-budget selection core: keep the best-scoring rows until a
-    * global token budget is exhausted — the "best data under budget"
-    * cut that follows scoring in a curation pipeline. Selection order is
-    * (`scoreCol` DESC, `idCol` ASC); a row is kept iff the cumulative
-    * token mass BEFORE it is under the budget (so the budget-crossing
-    * row is the last kept).
-    *
-    * The global running sum is a two-level distributed prefix sum, NOT
-    * a single-partition global window (the classic scale trap: Spark
-    * executes an unpartitioned ordered window on ONE task):
-    *   1. rows group into (score, id div `subRange`) bands — band count
-    *      is bounded by score cardinality x corpus/subRange, tiny next
-    *      to the corpus;
-    *   2. per-band token totals get prefix-summed on the small band
-    *      frame (the only unpartitioned window, over bands not rows)
-    *      and rejoin via broadcast;
-    *   3. each row's global prefix = its band's offset + a within-band
-    *      running sum, windowed per band — thousands of bounded
-    *      partitions instead of one corpus-sized one.
-    * Because `id div subRange` is monotone in id, per-band order (score
-    * DESC, sub ASC, id ASC) concatenates to exactly the global order.
-    *
-    * Budget: `budgetTokens` absolute, or `budgetPermille` as an
-    * integer-exact fraction of the total token mass ((total * p) div
-    * 1000 — no float boundary for engines to disagree on). `scoreCol`
-    * must be non-null (null ordering differs across engines).
-    * Public entry: [[graft.pipeline.CorpusOps.selectUnderTokenBudget]].
-    */
-  private[graft] def tokenBudgetCore(d: DataFrame, idCol: String,
-      scoreCol: String, tokensCol: String, budgetTokens: Option[Long],
-      budgetPermille: Option[Int], subRange: Long = 1L << 20): DataFrame = {
-    require(budgetTokens.isDefined != budgetPermille.isDefined,
-      "tokenBudgetCore: exactly one of budgetTokens / budgetPermille")
-    val banded = d
-      .withColumn("__score", col(scoreCol))
-      .withColumn("__sub", expr(s"`$idCol` div $subRange"))
-    val bands = banded.groupBy("__score", "__sub")
-      .agg(sum(col(tokensCol).cast("long")).as("__bt"))
-    val wPrefix = Window.orderBy(col("__score").desc, col("__sub").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = bands
-      .withColumn("__offset", sum(col("__bt")).over(wPrefix) - col("__bt"))
-      .withColumn("__total", sum(col("__bt")).over(Window.partitionBy()))
-      .withColumn("__budget", budgetTokens.map(lit(_).cast("long"))
-        .getOrElse(expr(s"(__total * ${budgetPermille.get}) div 1000")))
-      .select(col("__score"), col("__sub"), col("__offset"), col("__budget"))
-    val wIn = Window.partitionBy("__score", "__sub").orderBy(col(idCol).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    banded.join(broadcast(offsets), Seq("__score", "__sub"))
-      .withColumn("__cum_before",
-        col("__offset") + sum(col(tokensCol).cast("long")).over(wIn)
-          - col(tokensCol).cast("long"))
-      .where(col("__cum_before") < col("__budget"))
-      .drop("__score", "__sub", "__offset", "__budget", "__cum_before")
-  }
-
-  /** Per-key quota core (pipe_source_cap /
-    * [[graft.pipeline.CorpusOps.capPerKey]]): keep at most `k` rows per
-    * `keyCol`, best-first by (`orderCol` DESC, `idCol` ASC), as a
-    * two-level salted top-K — level 1 ranks within (key, id%salts) so a
-    * monster key parallelizes `salts`-way and only k rows per salt cross
-    * the second shuffle; top-K of the per-salt top-Ks is exactly the
-    * global per-key top-K (see the pipe_source_cap entry comment). */
-  private[graft] def capPerKeyCore(df: DataFrame, keyCol: String,
-      orderCol: String, idCol: String, k: Int, salts: Int = 8): DataFrame = {
-    val id = s"`${idCol.replace("`", "``")}`"
-    val w1 = Window.partitionBy(col(keyCol), expr(s"$id % $salts"))
-      .orderBy(col(orderCol).desc, col(idCol).asc)
-    val w2 = Window.partitionBy(keyCol)
-      .orderBy(col(orderCol).desc, col(idCol).asc)
-    df.withColumn("__rn1", row_number().over(w1)).where(col("__rn1") <= k)
-      .withColumn("__rn", row_number().over(w2)).where(col("__rn") <= k)
-      .drop("__rn1", "__rn")
-  }
-
-  /** DSIR importance-weighting core (pipe_dsir_weights /
-    * [[graft.pipeline.CorpusOps.dsirWeights]]) — per-doc mean
-    * target-vs-raw unigram log-likelihood ratio; see the entry comment
-    * for the scale/determinism rationale. `isTarget` marks the rows
-    * whose token distribution defines the target. */
-  private[graft] def dsirWeightsCore(docs: DataFrame, isTarget: Column,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val txt = s"`${textCol.replace("`", "``")}`"
-    val toks = Q.barrier(docs
-      .select(col(idCol).as("__id"), isTarget.as("__t"),
-        explode(expr(s"filter(split($txt, ' '), x -> x != '')")).as("tok")))
-    val raw = toks.groupBy("tok").agg(count(lit(1)).as("cr"))
-    val tgt = toks.where(col("__t")).groupBy("tok").agg(count(lit(1)).as("ct"))
-    val stats = toks.agg(count(lit(1)).as("nr"),
-      sum(when(col("__t"), 1L).otherwise(0L)).as("nt"),
-      countDistinct(col("tok")).as("v"))
-    toks.join(raw, Seq("tok"))
-      .join(tgt, Seq("tok"), "left")
-      .crossJoin(broadcast(stats))
-      .withColumn("micro", expr(
-        "cast(round(1e6 * (ln((coalesce(ct, 0) + 1.0) / (nt + v)) - ln((cr + 1.0) / (nr + v))), 0) as bigint)"))
-      .groupBy("__id")
-      .agg(count(lit(1)).as("n_tokens"), sum(col("micro")).as("micro"))
-      .select(col("__id").as(idCol), col("n_tokens"),
-        expr("round(cast(micro as double) / n_tokens / 1e6, 6)").as("score"))
-      .withColumn("keep", col("score") > 0)
-      .orderBy(idCol)
-  }
-
-  /** Threshold-sweep calibration (pipe_threshold_sweep /
-    * [[graft.pipeline.CorpusOps.thresholdSweep]]): for every candidate
-    * cut t (bucket floors of the score column), the confusion counts
-    * of the filter "keep if score >= t" against a boolean reference
-    * label — the table a pipeline reads to CHOOSE its quality-filter
-    * threshold instead of guessing one.
-    *
-    * Scale: per-bucket (n_pos, n_neg) is one keyed agg with map-side
-    * partials; the running sums that turn bucket counts into
-    * cumulative tp/fp run over the BUCKET frame, whose size is
-    * range/`bucket` — the caller's knob, independent of corpus size
-    * (the perplexity-buckets discipline: never a corpus-wide ordered
-    * window). fn/tn derive from broadcast totals. Integer-exact
-    * throughout; precision/recall are downstream divisions the caller
-    * does at display time.
-    *
-    * Bucket-floor semantics make the sweep exact at its thresholds:
-    * t is always a bucket floor, so score >= t iff floor(score) >= t. */
-  private[graft] def thresholdSweepOf(scored: DataFrame, scoreCol: String,
-      labelCol: String, bucket: Long = 1L): DataFrame = {
-    require(bucket >= 1, s"thresholdSweep: bucket ($bucket) must be >= 1")
-    val b = scored.select(
-      expr(s"cast(floor(`$scoreCol` / $bucket.0) as bigint) * $bucket").as("threshold"),
-      col(labelCol).cast("boolean").as("lbl"))
-    val agg = b.groupBy("threshold").agg(
-      sum(when(col("lbl"), 1L).otherwise(0L)).as("n_pos"),
-      sum(when(col("lbl"), 0L).otherwise(1L)).as("n_neg"))
-      .transform(Q.barrier) // window + totals read it once
-    val w = Window.orderBy(col("threshold").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val totals = agg.agg(sum("n_pos").as("tot_pos"), sum("n_neg").as("tot_neg"))
-    agg
-      .withColumn("tp", sum(col("n_pos")).over(w))
-      .withColumn("fp", sum(col("n_neg")).over(w))
-      .crossJoin(broadcast(totals))
-      .select(col("threshold"), col("tp"), col("fp"),
-        (col("tot_pos") - col("tp")).as("fn"),
-        (col("tot_neg") - col("fp")).as("tn"))
-  }
-
-  /** Corpus novelty core (see the pipe_ngram_novelty entry comment):
-    * per doc, the fraction of its distinct word n-grams whose first
-    * owner (min id over the corpus) is the doc itself. Shared by the
-    * gate entry and [[graft.pipeline.CorpusOps.noveltyCurve]]. */
-  private[graft] def ngramNoveltyCore(docs: DataFrame, idCol: String,
-                                      textCol: String, n: Int): DataFrame = {
-    require(n >= 1, s"ngramNovelty: n ($n) must be >= 1")
-    val gram = (0 until n).map(k => s"element_at(__w, i + $k)").mkString(", ")
-    // Raw grams as rows — array_distinct under the Generate is
-    // CodegenFallback and measured ~12x slower (pipe_decontaminate
-    // note); dedup happens inside the aggregations below instead.
-    // Barriered: the owner and per-doc aggregations both read it.
-    val grams = docs
-      .selectExpr(s"`$idCol` AS __nid", s"split(`$textCol`, ' ') AS __w")
-      .where(expr(s"size(__w) >= $n"))
-      .selectExpr("__nid",
-        s"""explode(transform(sequence(1, size(__w) - ${n - 1}),
-             i -> concat_ws(' ', $gram))) AS g""")
-      .transform(Q.barrier)
-    // Each distinct gram credits exactly one novel owner — its min id —
-    // so novelty falls out of two doc-keyed aggregates joined at DOC
-    // granularity; the corpus-sized gram<->first-owner join the naive
-    // plan shuffles (grams JOIN first ON g) never happens.
-    val novel = grams.groupBy("g").agg(min(col("__nid")).as("fo"))
-      .groupBy("fo").agg(count(lit(1)).as("n_novel"))
-    grams.groupBy("__nid").agg(countDistinct(col("g")).as("n_grams"))
-      .join(novel, col("__nid") === col("fo"), "left")
-      .select(col("__nid"), col("n_grams"),
-        coalesce(col("n_novel"), lit(0L)).as("n_novel"))
-      .selectExpr(s"__nid AS `$idCol`", "n_grams", "n_novel",
-        "round(n_novel / n_grams, 6) AS novelty")
-      .orderBy(idCol)
-  }
+  private val Gram5 = CorpusOps.gramExpr(5)
 
   val qs: Map[String, Q] = Map(
 
@@ -256,14 +49,14 @@ object PipelineOps {
         // join shuffles anyway. Checkpointed: the eval and train branches
         // both read it.
         // spread: the 5-gram explode runs in the scan stage
-        val grams = Q.spread(t(s, dir, "documents"), "doc_id")
+        val grams = Exec.spread(t(s, dir, "documents"), "doc_id")
           .withColumn("w", split(col("text"), " "))
           .where(size(col("w")) >= 5)
           .select(col("doc_id"), col("source"), explode(expr(
             Gram5))
             .as("g"))
           .distinct()
-          .transform(Q.barrier)
+          .transform(Exec.barrier)
         // eval split: every 97th doc stands in for the benchmark set
         val evalGrams = grams.where(col("doc_id") % 97 === 0).select("g").distinct()
         grams.where(col("doc_id") % 97 =!= 0)
@@ -304,7 +97,7 @@ object PipelineOps {
     "pipe_source_cap" -> Q(
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val kept = capPerKeyCore(docs, "source", "n_chars", "doc_id", k = 25)
+        val kept = CorpusOps.capPerKey(docs, "source", "n_chars", k = 25)
         docs.groupBy("source").agg(count(lit(1)).as("n_total"))
           .join(kept.groupBy("source").agg(count(lit(1)).as("n_kept"),
             sum(col("n_chars")).as("kept_chars"),
@@ -342,7 +135,7 @@ object PipelineOps {
     // shuffle-order independent — then one division per doc in
     // identical operand order on both engines.
     "pipe_dsir_weights" -> Q(
-      (s, dir) => dsirWeightsCore(t(s, dir, "documents"), col("lang") === "en"),
+      (s, dir) => CorpusOps.dsirWeights(t(s, dir, "documents"), col("lang") === "en"),
       Some("""WITH tk AS (SELECT doc_id, lang,
             unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
           FROM documents),
@@ -372,12 +165,12 @@ object PipelineOps {
     "pipe_contamination_report" -> Q(
       (s, dir) => {
         // spread: the 5-gram explode runs in the scan stage
-        val grams = Q.spread(t(s, dir, "documents"), "doc_id")
+        val grams = Exec.spread(t(s, dir, "documents"), "doc_id")
           .withColumn("w", split(col("text"), " "))
           .where(size(col("w")) >= 5)
           .select(col("doc_id"), explode(expr(Gram5)).as("g"))
           .distinct()
-          .transform(Q.barrier)
+          .transform(Exec.barrier)
         val evalG = grams.where(col("doc_id") % 97 === 0)
         val trainG = grams.where(col("doc_id") % 97 =!= 0)
         val hits = evalG.as("e").join(trainG.as("t"), col("e.g") === col("t.g"))
@@ -418,7 +211,7 @@ object PipelineOps {
     // grams, nothing quadratic; per-doc output, summarizable
     // downstream however the caller likes.
     "pipe_ngram_novelty" -> Q(
-      (s, dir) => ngramNoveltyCore(t(s, dir, "documents"), "doc_id", "text", 3),
+      (s, dir) => CorpusOps.noveltyCurve(t(s, dir, "documents"), "doc_id", "text", 3),
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         g0 AS (SELECT doc_id, list_distinct([w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]
                                              for i in range(1, len(w) - 1)]) AS gs
@@ -566,7 +359,7 @@ object PipelineOps {
         val w = Window.partitionBy(md5(col("text").cast("binary"))).orderBy(col("doc_id"))
         val deduped = base.withColumn("rn", row_number().over(w))
           .where(col("rn") === 1)
-          .transform(Q.barrier) // grams + final agg both read it
+          .transform(Exec.barrier) // grams + final agg both read it
         // no n-gram length guard needed: the quality gate above already
         // enforces n_tokens >= 10 (the unfiltered evalGrams branch below
         // is where the >= 5 guard is load-bearing)
@@ -806,14 +599,14 @@ object PipelineOps {
     // pipeline (quality here = n_chars, the deterministic stand-in for a
     // model score). The global quality-ordered running sum is a
     // two-level distributed prefix sum (band totals + within-band
-    // windows; see tokenBudgetCore), NOT a single-partition global
+    // windows; see CorpusOps.tokenBudgetCore), NOT a single-partition global
     // window — the plan that survives 100 TB. Budget is integer-exact:
     // (total_tokens * 500) div 1000.
     "pipe_token_budget" -> Q(
       (s, dir) => {
         val d = t(s, dir, "documents")
           .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
-        tokenBudgetCore(d, "doc_id", "n_chars", "n_tokens",
+        CorpusOps.tokenBudgetCore(d, "doc_id", "n_chars", "n_tokens",
             budgetTokens = None, budgetPermille = Some(500))
           .groupBy("source")
           .agg(count(lit(1)).as("n_kept"),
@@ -880,7 +673,7 @@ object PipelineOps {
     "pipe_decontam_bloom" -> Q(
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        bloomContaminated(
+        CorpusOps.bloomContaminated(
             train = docs.where(col("doc_id") % 97 =!= 0),
             evalDocs = docs.where(col("doc_id") % 97 === 0),
             gramWidth = 5, keep = Seq("doc_id", "source"),
@@ -950,7 +743,7 @@ object PipelineOps {
     // sizes are bounded by near-dup neighborhoods, not the corpus.
     "pipe_canonical_selection" -> Q(
       (s, dir) => {
-        val comps = Dedup.connectedComponents(
+        val comps = CorpusOps.connectedComponents(
             Dedup.lshVerifiedPairs(s, dir).select("id_a", "id_b"))
           .select(col("node").as("doc_id"), col("label").as("component"))
         val ranked = t(s, dir, "documents")
@@ -1001,17 +794,17 @@ object PipelineOps {
     // hash-derived from the corpus grams (the oracle-checkable stand-in
     // for trained weights, like the multimodal FakeDecoder); integer
     // weights make the score shuffle-order-exact. Mechanism:
-    // [[graft.pipeline.CorpusOps.qualityScore]].
+    // [[CorpusOps.qualityScore]].
     "pipe_model_quality_score" -> Q(
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val weights = docs
           .withColumn("w", split(col("text"), " "))
           .where(size(col("w")) >= 2)
-          .select(explode(expr(gramExpr(2))).as("gram")).distinct()
+          .select(explode(expr(CorpusOps.gramExpr(2))).as("gram")).distinct()
           .withColumn("weight",
             expr("cast(conv(substr(md5(gram), 1, 8), 16, 10) as bigint) % 1001 - 500"))
-        graft.pipeline.CorpusOps.qualityScore(docs, weights).orderBy("doc_id")
+        CorpusOps.qualityScore(docs, weights).orderBy("doc_id")
       },
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         g AS (SELECT doc_id, unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS gram
@@ -1223,23 +1016,22 @@ object PipelineOps {
         GROUP BY pair ORDER BY n DESC, pair ASC LIMIT 20""")),
 
     // ---- threshold-sweep calibration of a quality filter ----
-    // Mechanism: thresholdSweepOf (above the qs map). Scores come from
-    // the same fastText-shaped linear scorer pipe_model_quality_score
-    // gates; the reference label is the corpus's own lang tag (the
+    // Scores come from the same fastText-shaped linear scorer
+    // pipe_model_quality_score gates; the reference label is the corpus's own lang tag (the
     // stand-in for "human-labeled good"). Bucket 100 keeps the sweep
     // frame bounded regardless of score cardinality.
     "pipe_threshold_sweep" -> Q(
       (s, dir) => {
-        val docs = Q.spread(t(s, dir, "documents"), "doc_id")
+        val docs = Exec.spread(t(s, dir, "documents"), "doc_id")
         val weights = docs
           .withColumn("w", split(col("text"), " "))
           .where(size(col("w")) >= 2)
-          .select(explode(expr(gramExpr(2))).as("gram")).distinct()
+          .select(explode(expr(CorpusOps.gramExpr(2))).as("gram")).distinct()
           .withColumn("weight",
             expr("cast(conv(substr(md5(gram), 1, 8), 16, 10) as bigint) % 1001 - 500"))
-        val scored = graft.pipeline.CorpusOps.qualityScore(docs, weights)
+        val scored = CorpusOps.qualityScore(docs, weights)
           .join(docs.select(col("doc_id"), (col("lang") === "en").as("label")), "doc_id")
-        thresholdSweepOf(scored, "score_raw", "label", bucket = 100L)
+        CorpusOps.thresholdSweep(scored, "score_raw", "label", bucket = 100L)
           .orderBy(col("threshold").desc)
       },
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.pipeline.{CorpusOps, Exec}
 
 /** Relational operator coverage (SURVEY.md §2.D): the full query surface
   * the reference inherits from its host engine, expressed with the
@@ -55,129 +56,12 @@ object Relational {
   private def eventsTs(s: SparkSession, dir: String): DataFrame =
     Q.events(s, dir)
 
-  /** Click events as (chrom, s, e, weight) intervals — shared input of
-    * the two interval-merge entries. */
+  /** Click events as (chrom, s, e) intervals — shared input of the
+    * interval merge, window and flank entries. */
   private def clickIntervals(s: SparkSession, dir: String): DataFrame =
     eventsTs(s, dir).where(col("event_type") === "click")
       .selectExpr("user_id % 16 AS chrom", "unix_micros(ts) div 1000000 AS s")
       .withColumn("e", col("s") + 1800)
-      .withColumn("weight", lit(1L))
-
-  /** Closest-feature sweep (bedtools closest, distance only): for each
-    * A interval, the distance to its nearest same-chrom B interval — 0
-    * when overlapping or touching, null when the chrom has no B.
-    * Join-free: one union sorted per chrom, two window passes. The
-    * nearest B on the left is the running max of B ends over rows with
-    * b_s <= a_s (overlap iff that max reaches a_s); on the right, the
-    * running min of B starts over following rows (overlap iff it falls
-    * inside A). B rows sort before A rows at equal position, so a B
-    * starting exactly at a_s lands in the left frame and reads as
-    * overlap; least() skips a null side. Inputs: (chrom, s, e) frames;
-    * output: one (chrom, s, e, dist) row per A row. Parallelism is
-    * chrom-bounded like the plain merge sweep. Shared by
-    * rel_interval_closest and CorpusOps.closestFeatures;
-    * property-checked against brute force in IntervalOpsSpec. */
-  private[graft] def closestSweep(a: DataFrame, b: DataFrame): DataFrame = {
-    val nl = lit(null).cast("long")
-    val u = a.select(col("chrom"), col("s").as("pos"), lit(1).as("side"),
-        col("e").as("a_e"), nl.as("b_s"), nl.as("b_e"))
-      .unionByName(b.select(col("chrom"), col("s").as("pos"), lit(0).as("side"),
-        nl.as("a_e"), col("s").as("b_s"), col("e").as("b_e")))
-    val byPos = Window.partitionBy("chrom").orderBy(col("pos"), col("side"))
-    // The suffix min runs over the REVERSED sort as a growing
-    // (unboundedPreceding) frame: a currentRow->unboundedFollowing
-    // frame is a shrinking frame, which WindowExec re-aggregates from
-    // scratch for every row — O(rows^2) per chromosome, a scale
-    // killer on deep chroms. Reversed, both passes use the O(n)
-    // running-frame processor; same partitioning, so the second sort
-    // is in-partition with no extra shuffle. Tie safety: at equal pos
-    // the DESC order puts the A row before its same-pos B rows, so
-    // (like the ASC left pass) a B starting exactly at a_s stays OUT
-    // of the right frame and is counted once, on the left.
-    val byPosDesc = Window.partitionBy("chrom")
-      .orderBy(col("pos").desc, col("side").desc)
-    u.withColumn("prev_b_e", max(col("b_e")).over(
-        byPos.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("next_b_s", min(col("b_s")).over(
-        byPosDesc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .where(col("side") === 1)
-      .select(col("chrom"), col("pos").as("s"), col("a_e").as("e"),
-        least(
-          when(col("prev_b_e").isNotNull,
-            greatest(lit(0L), col("pos") - col("prev_b_e"))),
-          when(col("next_b_s").isNotNull,
-            greatest(lit(0L), col("next_b_s") - col("a_e")))).as("dist"))
-  }
-
-  /** One contiguous-merge sweep: collapse overlapping-or-touching
-    * (chrom, s, e, weight) intervals into (chrom, region_start,
-    * region_end, n_intervals = sum weight). With `bucketWidth` the
-    * sweep partitions by (chrom, s div width) — parallel within a
-    * chromosome, at the price of unstitched regions across bucket
-    * boundaries, which a second weight-carrying sweep with
-    * bucketWidth=None repairs (contiguous merge is associative).
-    * Exposed package-wide so IntervalOpsSpec can property-check both
-    * configurations against a brute-force merge. */
-  private[graft] def mergeSweep(iv: DataFrame, bucketWidth: Option[Long]): DataFrame = {
-    val bucketed = bucketWidth match {
-      case Some(bw) => iv.withColumn("bucket", expr(s"s div $bw"))
-      case None => iv.withColumn("bucket", lit(0L))
-    }
-    val w = Window.partitionBy("chrom", "bucket").orderBy(col("s"), col("e"))
-    val prevMax = max(col("e")).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    bucketed
-      .withColumn("opens", when(prevMax.isNull || col("s") > prevMax, 1L).otherwise(0L))
-      .withColumn("grp", sum(col("opens")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("chrom", "bucket", "grp")
-      .agg(min(col("s")).as("region_start"), max(col("e")).as("region_end"),
-        sum(col("weight")).as("n_intervals"))
-      .select("chrom", "region_start", "region_end", "n_intervals")
-  }
-
-  /** Two-channel coverage sweep shared by rel_interval_jaccard and
-    * rel_interval_subtract: each side contributes ±1 deltas on its own
-    * counter, deltas collapse by (chrom, pos) so the running sums are
-    * shuffle-order independent, and each output row describes the
-    * segment [pos, np) with A-depth `ca` and B-depth `cb` (np null on
-    * the last boundary of a chrom). Raw unmerged intervals feed it
-    * directly — depth>0 is identical to merged coverage. One keyed
-    * groupBy + one (chrom)-keyed window sort, no join anywhere. */
-  private[graft] def coverageSegments(a: DataFrame, b: DataFrame): DataFrame = {
-    def deltas(iv: DataFrame, da: Int, db: Int) =
-      iv.select(col("chrom"), col("s").as("pos"),
-          lit(da.toLong).as("da"), lit(db.toLong).as("db"))
-        .unionAll(iv.select(col("chrom"), col("e").as("pos"),
-          lit(-da.toLong).as("da"), lit(-db.toLong).as("db")))
-    val g = deltas(a, 1, 0).unionAll(deltas(b, 0, 1))
-      .groupBy("chrom", "pos")
-      .agg(sum(col("da")).as("da"), sum(col("db")).as("db"))
-    val w = Window.partitionBy("chrom").orderBy("pos")
-    g.withColumn("ca", sum(col("da")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("cb", sum(col("db")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("np", lead(col("pos"), 1).over(w))
-      .select("chrom", "pos", "ca", "cb", "np")
-  }
-
-  /** A \ B summary over [[coverageSegments]] — see the
-    * rel_interval_subtract entry comment; exposed for IntervalOpsSpec's
-    * brute-force property check. Inputs: (chrom, s, e) frames; output:
-    * per-chrom (a_bp, sub_bp, n_fragments) sorted by chrom. */
-  private[graft] def subtractSweep(a: DataFrame, b: DataFrame): DataFrame = {
-    val w = Window.partitionBy("chrom").orderBy("pos")
-    coverageSegments(a, b)
-      .withColumn("f", col("np").isNotNull && col("ca") > 0 && col("cb") === 0)
-      .withColumn("starts",
-        col("f") && !coalesce(lag(col("f"), 1).over(w), lit(false)))
-      .groupBy("chrom")
-      .agg(
-        sum(when(col("np").isNotNull && col("ca") > 0, col("np") - col("pos"))
-          .otherwise(0L)).as("a_bp"),
-        sum(when(col("f"), col("np") - col("pos")).otherwise(0L)).as("sub_bp"),
-        sum(when(col("starts"), 1L).otherwise(0L)).as("n_fragments"))
-      .orderBy("chrom")
-  }
 
   private[graft] def summarizeRegions(regions: DataFrame): DataFrame =
     regions.groupBy("chrom")
@@ -799,7 +683,7 @@ object Relational {
         // barrier: FOUR consumers (order count, part frequencies, both
         // self-join sides) — without it each re-runs the corpus scan +
         // the basket-distinct shuffle
-        val items = Q.barrier(t(s, dir, "lineitem")
+        val items = Exec.barrier(t(s, dir, "lineitem")
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
           .distinct())
         val nOrders = items.select(countDistinct(col("ok")).as("n_orders"))
@@ -1243,7 +1127,7 @@ object Relational {
     // For each A interval, the distance to its nearest B interval on
     // the same chrom (0 when overlapping/touching). The oracle is the
     // O(n*m) brute-force min over all same-chrom pairs; the Spark plan
-    // is closestSweep above — union + two window passes, NO join
+    // is CorpusOps.closestFeatures — union + two window passes, NO join
     // (plan-gated); property-checked against brute force on random
     // inputs in IntervalOpsSpec. The merge-scalable bucketing trick
     // applies unchanged when one chrom dominates.
@@ -1255,7 +1139,7 @@ object Relational {
           .selectExpr("user_id % 16 AS chrom",
             "unix_micros(ts) div 1000000 AS s")
           .withColumn("e", col("s") + len)
-        closestSweep(side("click", 3600), side("view", 2700))
+        CorpusOps.closestFeatures(side("click", 3600), side("view", 2700))
           .groupBy("chrom")
           .agg(count(lit(1)).as("n_a"), sum(col("dist")).as("sum_dist"),
             max(col("dist")).as("max_dist"),
@@ -1292,9 +1176,7 @@ object Relational {
     "rel_interval_merge_scalable" -> Q(
       (s, dir) => {
         val iv = clickIntervals(s, dir)
-        summarizeRegions(mergeSweep(mergeSweep(iv, bucketWidth = Some(16384L))
-          .selectExpr("chrom", "region_start AS s", "region_end AS e",
-            "n_intervals AS weight"), bucketWidth = None))
+        summarizeRegions(CorpusOps.mergeIntervals(iv, bucketWidth = Some(16384L)))
       },
       Some(MergeOracleSql)),
 
@@ -1311,7 +1193,7 @@ object Relational {
     // overlap-join above (bin-keyed) is the fine-grained-parallel
     // alternative when the downstream op allows it (noted in SCALE.md).
     "rel_interval_merge" -> Q(
-      (s, dir) => summarizeRegions(mergeSweep(clickIntervals(s, dir), bucketWidth = None)),
+      (s, dir) => summarizeRegions(CorpusOps.mergeIntervals(clickIntervals(s, dir))),
       Some(MergeOracleSql)),
 
     // ---- interval complement (bedtools complement, internal gaps) ----
@@ -1321,7 +1203,7 @@ object Relational {
     "rel_interval_complement" -> Q(
       (s, dir) => {
         val w = Window.partitionBy("chrom").orderBy("region_start")
-        mergeSweep(clickIntervals(s, dir), bucketWidth = None)
+        CorpusOps.mergeIntervals(clickIntervals(s, dir))
           .withColumn("next_s", lead(col("region_start"), 1).over(w))
           .where(col("next_s") > col("region_end"))
           .groupBy("chrom")
@@ -1371,7 +1253,7 @@ object Relational {
           .selectExpr("user_id % 16 AS chrom",
             "unix_micros(ts) div 1000000 AS s")
           .withColumn("e", col("s") + len)
-        val r = coverageSegments(side("click", 1800), side("view", 900))
+        val r = CorpusOps.coverageSegments(side("click", 1800), side("view", 900))
           .where(col("np").isNotNull)
           .withColumn("seg", col("np") - col("pos"))
         r.groupBy("chrom")
@@ -1427,7 +1309,7 @@ object Relational {
           .selectExpr("user_id % 16 AS chrom",
             "unix_micros(ts) div 1000000 AS s")
           .withColumn("e", col("s") + len)
-        subtractSweep(side("click", 1500), side("purchase", 1000))
+        CorpusOps.subtractIntervals(side("click", 1500), side("purchase", 1000))
       },
       Some("""WITH a AS (SELECT user_id % 16 AS chrom,
             epoch_us(ts) // 1000000 AS s, epoch_us(ts) // 1000000 + 1500 AS e
@@ -1460,11 +1342,11 @@ object Relational {
     // ---- event funnel (click -> view conversion), join-free ----
     // For each click, did the SAME user produce a view within the next
     // 600 s? The naive plan is a per-click correlated EXISTS (the
-    // oracle) — a time-range theta-join. This plan is the closestSweep
+    // oracle) — a time-range theta-join. This plan is the closestFeatures
     // idiom on the event stream: union both event types, sort per user
     // by time DESCENDING with views ordered before clicks at equal
     // timestamps, and take a running min of view times — a GROWING
-    // window frame (O(n) processor, see the closestSweep note on why a
+    // window frame (O(n) processor, see the closestFeatures note on why a
     // shrinking frame is quadratic). next_view_s is then the earliest
     // view at-or-after each click, and conversion is one comparison.
     // Shuffle: ONE user-keyed window sort over the event stream — no
@@ -3631,7 +3513,7 @@ object Relational {
           .groupBy(expr("unix_micros(ts) div 604800000000").as("week"),
             col("user_id"))
           .agg(count(lit(1)).as("n_ev"))
-        val wkB = Q.barrier(wkUser)
+        val wkB = Exec.barrier(wkUser)
         val first = wkB.groupBy(col("user_id").as("u2"))
           .agg(min(col("week")).as("first_week"))
         wkB.join(first, col("user_id") === col("u2"))
@@ -3820,7 +3702,7 @@ object Relational {
           .groupBy(expr("(unix_micros(ts) div 86400000000) % 7").as("dow"),
             expr("(unix_micros(ts) div 3600000000) % 24").as("hr"))
           .agg(count(lit(1)).as("n"))
-        val cellsB = Q.barrier(cells)
+        val cellsB = Exec.barrier(cells)
         val dowTot = cellsB.groupBy(col("dow").as("dow2"))
           .agg(sum(col("n")).as("dow_n"))
         cellsB.join(broadcast(dowTot), col("dow") === col("dow2"))

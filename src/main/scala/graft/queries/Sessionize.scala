@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.pipeline.Exec
 
 /** Gap-based sessionization of the events stream via the typed
   * KeyValueGroupedDataset API — arbitrary per-group logic (the batch
@@ -201,7 +202,7 @@ object Sessionize {
         // information-theoretic floor the batch oracle's running-sum
         // numbering implies. Shared with StatefulStreamingSpec's
         // restart-recovery case.
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val sessions = stream.groupByKey(_.user_id)
             .flatMapGroupsWithState[OpenSession, Session](
               OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(stateFn(gapUs))

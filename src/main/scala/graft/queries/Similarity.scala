@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.pipeline.{Exec, VectorOps}
 
 /** Similarity search over the embedding column.
   *
@@ -30,18 +31,11 @@ object Similarity {
 
   private val CosSql = "round(graft_cosine_sim(qv, v), 6)"
 
-  /** Deterministic ±1 hyperplanes, 16 planes x 64 dims. Signs derive
-    * from md5 parity of "p{j}_{d}" so the DuckDB oracle can recompute
-    * the identical planes (and therefore identical buckets — the dot
-    * products fold in the same dimension order, so even the sign of a
-    * near-zero projection matches bit-for-bit). */
-  private[graft] def planeSign(j: Int, d: Int): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val b0 = md.digest(s"p${j}_$d".getBytes("UTF-8"))(0)
-    if (((b0 >> 4) & 1) == 1) 1.0 else -1.0
-  }
-
-  /** DuckDB expression for the same bucket of a vector column `v`. */
+  /** DuckDB expression for the random-hyperplane bucket of a vector
+    * column `v`: 16 planes x 64 dims, each sign the md5 parity of
+    * "p{j}_{d}" (the planes VectorOps.lshTopK derives), folded in the
+    * same dimension order so even a near-zero projection's sign
+    * matches bit-for-bit. */
   private def bucketSql(v: String): String = {
     val bits = (0 until 16).map { j =>
       s"""(CASE WHEN list_sum([CASE WHEN CAST(('0x' || substr(md5('p${j}_' || CAST(d - 1 AS VARCHAR)), 1, 1)) AS INTEGER) % 2 = 1
@@ -51,87 +45,10 @@ object Similarity {
     bits.mkString("(", " + ", ")")
   }
 
-  /** Deterministic 2-round Lloyd over (vec_id, v): seeds = the k lowest
-    * vec_ids, one centroid-update round, then the final assignment.
-    * Returns (assigned: vec_id, cid, v — the post-update assignment;
-    * centroids: cid, cv). MAP-ONLY assignment: the k centroids pack
-    * into ONE broadcast row (collect_list of k structs) and the argmin
-    * happens inside a single per-row expression — array_min over
-    * (distance, cid) structs is the lexicographic minimum, ties to the
-    * lowest cid. No shuffle, no window, no agg buffer copying the
-    * vector; the corpus is touched once per round. (A per-vec window
-    * shuffles |corpus| x k scored pairs; a min(struct(..., v))
-    * aggregation copies the 64-double array on every buffer update —
-    * both measured slower.) Distances round to 6 and means to 9
-    * decimals so the DuckDB oracle replays bit-for-bit despite
-    * different summation orders. Shared by ann_kmeans_ivf (cell
-    * stats) and dedup_semantic (SemDeDup cluster partitioning).
-    *
-    * `probes` > 1 multi-assigns each vector to its `probes` nearest
-    * cells in the FINAL assignment (Lloyd's update round always uses
-    * the argmin) — the standard boundary-miss recall knob: a vector
-    * pair straddling a cell boundary still meets in a shared
-    * second-choice cell. Pair space grows ~probes^2-bounded; measured
-    * at gate scale (see SCALE.md): recall 24/59 -> 49/59 for 3.7x
-    * pairs. */
-  private[graft] def kmeansAssigned(e: DataFrame, k: Int = 8,
-                                    probes: Int = 1): (DataFrame, DataFrame) = {
-    require(probes >= 1 && probes <= k,
-      s"kmeansAssigned: probes ($probes) must be in [1, k=$k]")
-    val seeds = e.orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    def update(assigned: DataFrame): DataFrame =
-      assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cid", "dim").agg(round(avg(col("x")), 9).as("m"))
-        .groupBy("cid")
-        .agg(expr("transform(array_sort(collect_list(struct(dim, m))), p -> p.m)").as("cv"))
-    // barrier: c1 is consumed by the final assignment AND by callers
-    // joining centroid stats — without it the corpus-wide centroid
-    // aggregation (a full pass over the assigned corpus) re-derives
-    // per consumer
-    val c1 = update(assignTo(e, seeds)).transform(Q.barrier)
-    (assignTo(e, c1, probes), c1)
-  }
-
-  /** Nearest-cell assignment of (vec_id, v) rows against a (cid, cv)
-    * centroid frame — the shared map-only kernel: centroids pack into
-    * ONE broadcast row; probes = 1 takes the argmin inside a single
-    * expression, probes > 1 slices the same (d, cid)-sorted list and
-    * explodes one row per (vector, cell). Distances round to 6 so the
-    * DuckDB oracle's row_number tie-break replays identically. */
-  private[graft] def assignTo(e: DataFrame, centroids: DataFrame,
-                              probes: Int = 1): DataFrame = {
-    // output = cid prepended to ALL of e's columns (order changed in
-    // round 12 from the old (vec_id, cid, v) — callers select by name);
-    // reserved intermediate names would clobber or ambiguate
-    require(!e.columns.exists(Set("cid", "cs", "best")),
-      s"assignTo input must not carry cid/cs/best, got ${e.columns.mkString(",")}")
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
-    // graft_l2_sq = the codegen'd kernel; accumulates left-to-right,
-    // bit-identical to the aggregate(zip_with(...)) HOF pair it
-    // replaced (the DuckDB oracles replay that exact order) at ~10x
-    // less per-centroid cost in this innermost loop
-    val dExpr = "round(graft_l2_sq(v, c.cv), 6) AS d, c.cid AS cid"
-    val packed = centroids.agg(expr("collect_list(struct(cid, cv))").as("cs"))
-    val scored = e.crossJoin(broadcast(packed))
-    val withBest =
-      if (probes == 1)
-        scored.withColumn("best", expr(s"array_min(transform(cs, c -> struct($dExpr)))"))
-      else
-        scored.withColumn("best", explode(expr(
-          s"slice(array_sort(transform(cs, c -> struct($dExpr))), 1, $probes)")))
-    // carry every input column through (not just vec_id + v): callers
-    // that thread payload columns alongside the vector (e.g. the radius
-    // family's original-scale vectors) keep them without re-joining the
-    // corpus by id after assignment
-    withBest.select(col("best.cid").as("cid") +: e.columns.map(col): _*)
-  }
-
   /** ann_knn_graph machinery: exact in-cell kNN edges (k=3 per vector,
     * ties by neighbor id) over TRAINED coarse-quantizer cells sized to
     * the corpus — k = max(8, ceil(n/64)) k-means cells from
-    * [[kmeansAssigned]], so cells hold ~64 vectors at ANY corpus size
+    * [[VectorOps.kmeansAssigned]], so cells hold ~64 vectors at ANY corpus size
     * and the in-cell pair space sum(|cell|^2) ~ 64n stays linear (a
     * FIXED cell count makes it quadratic: the round-11 ScaleProbe
     * measured alpha -> 1.07/decade on the 10-label key). The corpus
@@ -143,14 +60,14 @@ object Similarity {
     * fixed-k quantizer would cost; past ~10^7 vectors a deployment
     * caps it with a sample-trained hierarchical quantizer. */
   private[graft] def knnGraphEdges(s: SparkSession, dir: String): DataFrame = {
-    val e = vecs(s, dir).transform(Q.barrier)
+    val e = vecs(s, dir).transform(Exec.barrier)
     val k = math.max(8L, (e.count() + 63) / 64).toInt
-    val (assigned, _) = kmeansAssigned(e.select("vec_id", "v"), k)
+    val (assigned, _) = VectorOps.kmeansAssigned(e.select("vec_id", "v"), k)
     // the quantizer drops non-key columns; rejoin the label for the
     // census, and barrier so the left/right sides of the kNN
     // self-join read ONE materialized assignment
     val a = assigned.join(e.select("vec_id", "label"), "vec_id")
-      .transform(Q.barrier)
+      .transform(Exec.barrier)
     val l = a.select(col("cid"), col("label"), col("vec_id").as("src"),
       col("v").as("qv"))
     val r = a.select(col("cid").as("cid2"), col("vec_id").as("dst"), col("v"))
@@ -166,7 +83,7 @@ object Similarity {
   }
 
   /** PQ-ADC machinery for ann_pq_adc / ann_ivfpq_topk — delegates to
-    * the PUBLIC implementation ([[graft.pipeline.VectorOps.pqMachinery]],
+    * the PUBLIC implementation ([[VectorOps.pqMachinery]],
     * the facade's pqTopK path), so the oracle gate proves the code a
     * user actually calls. Gate parameterization: K=4 centroids per
     * 8-dim subspace, seeds = the 4 lowest vec_ids, distances rounded to
@@ -177,7 +94,7 @@ object Similarity {
     *    tables for the 5 query vectors, one broadcastable row each. */
   private def pqCodesAndLut(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val e = vecs(s, dir)
-    val (codes, lut) = graft.pipeline.VectorOps.pqMachinery(
+    val (codes, lut) = VectorOps.pqMachinery(
       e.select(col("vec_id").as("__id"), col("v").as("__v"), col("label")),
       e.where(col("vec_id") < 5)
         .select(col("vec_id").as("__qid"), col("v").as("__qv"), col("label").as("q_label")),
@@ -190,96 +107,17 @@ object Similarity {
   /** ADC distance: LUT-sum over the code array, folded per-row in fixed
     * subspace order (deterministic summation, final round to 6). */
   private val AdcExpr =
-    graft.pipeline.VectorOps.adcExpr(subspaces = 8, distRound = Some(6))
+    VectorOps.adcExpr(subspaces = 8, distRound = Some(6))
 
-  /** Exact cosine-threshold (radius) search with LOSSLESS cell pruning
-    * — the ann_radius_prune core, exposed for the spec's losslessness
-    * property check. Returns every (q_id, vec_id, cos) pair with
-    * round(cos, 6) >= tau, queries = vec_id < qBelow, self-pairs
-    * excluded — bit-identical to brute force, proven by the triangle
-    * inequality rather than sampled recall:
-    *
-    * On UNIT vectors, cos(a,b) >= tau  <=>  ||â-b̂||² <= 2-2·tau, so a
-    * cosine radius is an L2 ball of radius r = sqrt(2-2·tau) in the
-    * normalized space. Corpus vectors are k-means-partitioned (any
-    * partition works — determinism of the clustering is irrelevant to
-    * exactness); each cell keeps its pivot distance bound crad =
-    * max_member ||v̂-ĉ||. For a qualifying pair, dist(q̂,ĉ) <=
-    * dist(q̂,v̂) + dist(v̂,ĉ) <= r + crad, so scanning only cells with
-    * dist(q̂,ĉ) <= r + crad + eps misses nothing (eps = 1e-5 absorbs
-    * the round-6 acceptance slack ~5e-7 and normalization FP noise).
-    * Final verify recomputes exact cosine on the ORIGINAL vectors with
-    * the same kernel/rounding as the brute-force oracle.
-    *
-    * Scale: the scanned fraction is the classic IVF ratio but with
-    * recall = 1 by construction; candidate fan-out is a cid-keyed
-    * equi-join (corpus never self-joins), queries/centroids/bounds all
-    * broadcast. */
+  /** The ann_radius_prune search (queries = vec_id < qBelow) over
+    * [[VectorOps.radiusSearchFrames]], exposed for RadiusSearchSpec's
+    * losslessness property check. */
   private[graft] def radiusSearch(e: DataFrame, qBelow: Long, tau: Double): DataFrame =
-    radiusSearchFrames(e, e.where(col("vec_id") < qBelow), tau)
-
-  /** Frame-general core: corpus and queries both (vec_id, v) with
-    * ORIGINAL (unnormalized) double vectors; pairs with equal ids are
-    * excluded. Shared by the gate entry (queries = the id prefix) and
-    * [[graft.pipeline.VectorOps.radiusSearch]]. */
-  private[graft] def radiusSearchFrames(e: DataFrame, q: DataFrame, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
-    // graft_l2_normalize = the fused codegen'd kernel; the transform/
-    // aggregate HOF idiom it replaces re-evaluated the norm aggregate
-    // per ELEMENT, interpreted (64x64 lambda steps per row) — and this
-    // normalization runs on every corpus pass of the quantizer (r13).
-    // Bit-identical: same left-to-right sum, same per-element division.
-    val norm = "graft_l2_normalize(v)"
-    // vo = the ORIGINAL vector rides alongside its normalized twin all
-    // the way through assignment and the ringed barrier, so the exact
-    // verify below needs no corpus-by-id re-join: the old
-    // `.join(e, vec_id)` shuffled the corpus a second time (both sides
-    // keyed on vec_id) purely to re-attach bytes the pipeline had
-    // already read — guide §2.4 (remove shuffles outright) / §8 (move
-    // heavy payloads once).
-    val en = e.select(col("vec_id"), expr(norm).as("v"), col("v").as("vo"))
-    val (assigned0, cents) = kmeansAssigned(en)
-    // Ring-partitioned bounds, same as selfPruneFrames: the per-cell
-    // max radius is outlier-fragile (one isotropic member blows the
-    // bound to unit scale), so members bucket into fixed 0.25-wide
-    // distance-to-centroid rings and the bound is per (cell, ring). md
-    // and the query-centroid distance round to 6 before comparing
-    // (sound: the 1e-5 eps absorbs the ≤1e-6 round-off) so the
-    // survival decision replays identically in an external
-    // re-implementation. ONE barrier on the ringed frame serves its
-    // two consumers (sub-cell bounds + the member side); assigned0
-    // itself has a single consumer now, so it carries no barrier.
-    // vn once per vector — same prenorm-verify rationale as
-    // selfPruneFrames (the verify fan is the entry's dominant cost at
-    // low tau where the triangle prune passes most sub-cells)
-    val ringed = Q.barrier(assigned0.join(broadcast(cents), Seq("cid"))
-      .withColumn("md", expr("round(sqrt(graft_l2_sq(v, cv)), 6)"))
-      .withColumn("rid", least(floor(col("md") / lit(0.25)).cast("int"), lit(7)))
-      .select(col("vec_id"), col("cid"), col("rid"), col("md"), col("vo"),
-        expr("graft_l2norm(vo)").as("vn")))
-    val cells = ringed.groupBy("cid", "rid").agg(max(col("md")).as("crad"))
-    val r = math.sqrt(2.0 - 2.0 * tau)
-    val survive = q.select(col("vec_id").as("q_id"), expr(norm).as("qvn"))
-      .crossJoin(broadcast(cents.join(cells, Seq("cid"))))
-      .where(expr("round(sqrt(graft_l2_sq(qvn, cv)), 6)") <= lit(r) + col("crad") + lit(1e-5))
-      .select(col("q_id"), col("cid"), col("rid"))
-    ringed.select(col("vec_id"), col("cid"), col("rid"), col("vo").as("v"),
-        col("vn").as("nb_s"))
-      .join(broadcast(survive), Seq("cid", "rid"))
-      .join(broadcast(q.select(col("vec_id").as("q_id"), col("v").as("qv"),
-        expr("graft_l2norm(v)").as("na_s"))), Seq("q_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      // bit-identical to round(graft_cosine_sim(qv, v), 6) — see
-      // radiusSelfPairs; norms hoisted out of the per-pair loop
-      .select(col("q_id"), col("vec_id"),
-        expr("round(graft_dot(qv, v) / (na_s * nb_s), 6)").as("cos"))
-      .where(col("cos") >= tau)
-      .orderBy("q_id", "vec_id")
-  }
+    VectorOps.radiusSearchFrames(e, e.where(col("vec_id") < qBelow), tau)
 
   /** EXACT cosine similarity SELF-join (every unordered pair with
     * round(cos, 6) >= tau) with CELL-PAIR pruning — the whole-corpus
-    * sibling of [[radiusSearchFrames]] (whose query-broadcast design
+    * sibling of [[VectorOps.radiusSearchFrames]] (whose query-broadcast design
     * assumes a small query set; with queries == corpus the survive
     * frame would be corpus-sized). Here pruning happens between CELLS:
     * pair (c1, c2) survives iff dist(cv1, cv2) <= r + crad1 + crad2 +
@@ -312,7 +150,7 @@ object Similarity {
     // expression, so the declared result is computed by the same
     // arithmetic as before. Parallelism = sub-cell pairs (k·rings)² —
     // thousands of independent block tasks at any corpus size.
-    val blocks = Q.barrier(assigned
+    val blocks = Exec.barrier(assigned
       .groupBy("cid", "rid")
       .agg(expr("collect_list(struct(vec_id, vo, vn))").as("ms")))
     val a = blocks.select(col("cid").as("c1"), col("rid").as("ring1"),
@@ -373,7 +211,7 @@ object Similarity {
     // preserves payload columns) so the exact-verify stage never
     // re-joins the corpus by id — see radiusSelfPairs
     val en = e.select(col("vec_id"), expr(norm).as("v"), col("v").as("vo"))
-    val (assigned0, cents) = kmeansAssigned(en, k)
+    val (assigned0, cents) = VectorOps.kmeansAssigned(en, k)
     // Ring partitioning: a cell's bound is a MAX over members, so ONE
     // isotropic outlier per cell blows every crad to ~unit scale and
     // survival collapses to all-pairs (measured in RadiusSearchSpec:
@@ -392,7 +230,7 @@ object Similarity {
     // reads candidate_fraction 1.0 at the 10x tier), so the verify
     // stage IS ~n²/2 cosines — re-deriving both norms inside every
     // pair was 3x the FLOPs of the dot that actually decides (r13).
-    val assigned = Q.barrier(
+    val assigned = Exec.barrier(
       assigned0.join(broadcast(cents), Seq("cid"))
         .withColumn("md", expr("round(sqrt(graft_l2_sq(v, cv)), 6)"))
         .withColumn("rid", least(floor(col("md") / lit(0.25)).cast("int"), lit(7)))
@@ -431,7 +269,7 @@ object Similarity {
     * actually materializes before the id_a < id_b cut. */
   private[graft] def radiusPruneStats(e: DataFrame, tau: Double, k: Int = 8): DataFrame = {
     val (assigned, cellPairs) = selfPruneFrames(e, tau, k)
-    val sizes = Q.barrier(assigned.groupBy("cid", "rid").agg(count(lit(1)).as("sz")))
+    val sizes = Exec.barrier(assigned.groupBy("cid", "rid").agg(count(lit(1)).as("sz")))
     val surv = cellPairs
       .join(broadcast(sizes.select(col("cid").as("c1"), col("rid").as("ring1"),
         col("sz").as("sz1"))), Seq("c1", "ring1"))
@@ -721,11 +559,11 @@ object Similarity {
     // not a hash gate.
     "ann_mrl_rerank" -> Q(
       (s, dir) => {
-        val e = vecs(s, dir).transform(Q.barrier) // stage-1 scan + stage-2 join
+        val e = vecs(s, dir).transform(Exec.barrier) // stage-1 scan + stage-2 join
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), col("v").as("qv"),
             slice(col("v"), 1, 16).as("qp"))
-          .transform(Q.barrier)
+          .transform(Exec.barrier)
         val w1 = Window.partitionBy(col("q_id"))
           .orderBy(col("pcos").desc, col("vec_id").asc)
         val cand = e.select(col("vec_id"), slice(col("v"), 1, 16).as("vp"))
@@ -780,7 +618,7 @@ object Similarity {
       // through, instead of the nested-loop scan a bit_count(x^y)<=1
       // predicate forces; the shape that stays linear when the query
       // set grows at 100 TB.
-      (s, dir) => graft.pipeline.VectorOps.lshTopK(
+      (s, dir) => VectorOps.lshTopK(
           t(s, dir, "embeddings"),
           t(s, dir, "embeddings").where(col("vec_id") < 5),
           k = 5)
@@ -839,7 +677,7 @@ object Similarity {
     // different summation orders.
     "ann_kmeans_ivf" -> Q(
       (s, dir) => {
-        val (a2, c1) = kmeansAssigned(vecs(s, dir).select("vec_id", "v"))
+        val (a2, c1) = VectorOps.kmeansAssigned(vecs(s, dir).select("vec_id", "v"))
         a2.groupBy("cid").agg(count(lit(1)).as("n_vectors"))
           .join(c1, "cid")
           .select(col("cid"), col("n_vectors"),
@@ -1019,7 +857,7 @@ object Similarity {
     "ann_int8_quant" -> Q(
       (s, dir) => {
         val e = vecs(s, dir).select("vec_id", "v")
-        graft.pipeline.VectorOps.sq8Quantized(e)
+        VectorOps.sq8Quantized(e)
           .where(col("s") > 0) // oracle drops zero vectors the same way
           .select(col("vec_id"), round(col("s"), 6).as("scale6"),
             expr("aggregate(codes, 0L, (a, x) -> a + x)").as("code_sum"),
@@ -1049,7 +887,7 @@ object Similarity {
     "ann_kmeans_probe_topk" -> Q(
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        graft.pipeline.VectorOps.kmeansIvfTopK(
+        VectorOps.kmeansIvfTopK(
             e, e.where(col("vec_id") < 5), k = 5, cells = 8, nprobe = 2)
           .orderBy("q_id", "rn")
       },
@@ -1134,8 +972,8 @@ object Similarity {
           .select(col("q_id"), col("vec_id"), expr(CosSql).as("cos"))
           .withColumn("rn", row_number().over(w)).where(col("rn") <= 5)
           .select("q_id", "vec_id")
-          .transform(Q.barrier)
-        val lsh = graft.pipeline.VectorOps.lshTopK(
+          .transform(Exec.barrier)
+        val lsh = VectorOps.lshTopK(
             t(s, dir, "embeddings"),
             t(s, dir, "embeddings").where(col("vec_id") < 5), k = 5)
           .select(col("q_id"), col("id").as("vec_id"))
@@ -1367,7 +1205,7 @@ object Similarity {
         // re-aggregation and the join side — without materializing it
         // once, each consumer re-scans and re-explodes the corpus
         // (plan-gated to exactly one parquet scan)
-        val sums = Q.barrier(vecs(s, dir)
+        val sums = Exec.barrier(vecs(s, dir)
           .withColumn("i", expr("sequence(0, size(v) - 1)"))
           .select(col("label"),
             explode(arrays_zip(col("i"), col("v"))).as("z"))
@@ -1444,7 +1282,7 @@ object Similarity {
         // barrier: the centroid pipeline re-reads the corpus; with it
         // materialized the embeddings parquet appears exactly ONCE in
         // the final plan (the scoring pass) — plan-gated
-        val packed = Q.barrier(cent)
+        val packed = Exec.barrier(cent)
           .agg(expr("collect_list(struct(clabel, slv, bb))").as("cs"))
         // graft_label_margin_scores = the codegen'd kernel: all k
         // (dot, va, staged-div) scores in one exact-integer loop per
@@ -1514,7 +1352,7 @@ object Similarity {
     // the in-cell search exactly.
     "ann_knn_graph" -> Q(
       (s, dir) => {
-        val knnB = Q.barrier(knnGraphEdges(s, dir))
+        val knnB = Exec.barrier(knnGraphEdges(s, dir))
         val rev = knnB.select(col("src").as("r_src"), col("dst").as("r_dst"))
         val recip = knnB.join(rev,
             col("src") === col("r_dst") && col("dst") === col("r_src"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.pipeline.{CorpusOps, Exec}
 
 /** Structured Streaming surface (beyond the batch-only reference): the
   * same hourly event aggregation as rel_events_hourly, executed as a
@@ -64,7 +65,7 @@ object StreamingQ {
           stageEvents(s, dir, Stage.tempDir("graft-stream-norm"), d,
             "events.parquet", 0)
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(stagedEventsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)
@@ -103,7 +104,7 @@ object StreamingQ {
           stageEvents(s, dir, Stage.tempDir("graft-stream-norm"), d,
             "events.parquet", 0)
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(stagedEventsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)
@@ -174,7 +175,7 @@ object StreamingQ {
               scratch, d, s"sentinel$i.parquet", i + 1)
           }
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(stagedEventsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)
@@ -215,7 +216,7 @@ object StreamingQ {
               scratch, d, s"sentinel$i.parquet", i)
           }
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(stagedEventsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)
@@ -250,7 +251,7 @@ object StreamingQ {
     // watermark, no state store; stream-static inner joins are
     // stateless), and the per-row band keys collide with the index's
     // batch-computed keys because the arithmetic is shared
-    // (Dedup.PerRowMinhashSql). The delta is staged as two mtime-ordered
+    // (CorpusOps.PerRowMinhashSql). The delta is staged as two mtime-ordered
     // files so matches provably emit across separate micro-batches; the
     // oracle is the same exhaustive cross-set scan as dedup_incremental
     // — streaming must find exactly the batch answer.
@@ -271,9 +272,9 @@ object StreamingQ {
         val stream = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(staged.toString)
-        val near = Dedup.shingleSets(stream)
-          .withColumn("ms", expr(Dedup.PerRowMinhashSql))
-          .withColumn("bb", explode(expr(Dedup.PerRowBandsSql)))
+        val near = CorpusOps.shingleSets(stream)
+          .withColumn("ms", expr(CorpusOps.PerRowMinhashSql))
+          .withColumn("bb", explode(expr(CorpusOps.PerRowBandsSql)))
           .select(col("doc_id").as("batch_id"), col("sh"), col("bb"))
           .join(bucketsC.select(col("doc_id").as("corpus_id"), col("bb")), Seq("bb"))
           .join(setsC.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),
@@ -339,7 +340,7 @@ object StreamingQ {
               scratch, d, s"sentinel$i.parquet", i + 1)
           }
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val known = Q.events(s, dir).where(col("event_type") === "signup")
             .select(col("user_id")).distinct()
             .withColumn("known", lit(true))
@@ -382,7 +383,7 @@ object StreamingQ {
           .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
             col("ts").as(s"${p}_ts"))
           .withWatermark(s"${p}_ts", "2 hours")
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val joined = side("click", "c").join(side("view", "v"),
             col("c_user") === col("v_user") &&
               col("v_ts") >= col("c_ts") - expr("INTERVAL 10 MINUTES") &&
@@ -442,7 +443,7 @@ object StreamingQ {
           .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
             col("ts").as(s"${p}_ts"))
           .withWatermark(s"${p}_ts", "2 hours")
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val joined = side("click", "c").join(side("view", "v"),
             col("c_user") === col("v_user") &&
               col("v_ts") >= col("c_ts") - expr("INTERVAL 10 MINUTES") &&
@@ -517,7 +518,7 @@ object StreamingQ {
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
           StructField("n_chars", LongType)))
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(docsSchema)
             .option("maxFilesPerTrigger", "1").parquet(staged.toString)
             .selectExpr("source", "doc_id",
@@ -557,7 +558,7 @@ object StreamingQ {
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("lang", StringType), StructField("source", StringType),
           StructField("n_chars", LongType)))
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(docsSchema)
             .option("maxFilesPerTrigger", "1").parquet(staged.toString)
             .select(explode(split(col("text"), " ")).as("tok"))
@@ -589,7 +590,7 @@ object StreamingQ {
         val dir = FormatScans.pileupFixture(s)
         val tbl = "graft_stream_sam_pileup"
         s.streams.active.filter(_.name == tbl).foreach(_.stop())
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val depth = graft.functions.Pileup.baseAlignments(
               s.readStream.format("sam").load(s"$dir/reads"))
             .groupBy("pos").agg(count(lit(1)).as("depth"))
@@ -674,7 +675,7 @@ object StreamingQ {
           stageEvents(s, dir, Stage.tempDir("graft-stream-norm"), d,
             "events.parquet", 0)
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(stagedEventsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)
@@ -733,7 +734,7 @@ object StreamingQ {
               s"timestamp_seconds($base + id * 30) AS ts", "id AS k"),
             scratch, d, "f1.parquet", 0)
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val q = s.readStream.schema(lateSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)
@@ -1089,7 +1090,7 @@ object StreamingQ {
           Stage.parquetFile(ev.where(expr(s"unix_micros(ts) >= ${mid}L")),
             scratch, d, "events_b.parquet", 1)
         }
-        Q.withShufflePartitions(s, Q.statePartitions) {
+        Exec.withShufflePartitions(s, Q.statePartitions) {
           val stream = s.readStream.schema(stagedEventsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(staged.toString)

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.{CorpusOps, Exec}
 
 /** Text-analysis operators for a training-data pipeline: language ID
   * (stopword heuristic), quality scoring, token counting, and document
@@ -22,229 +22,6 @@ object TextOps {
     "es" -> Seq("el", "los", "y", "es", "un", "una"))
 
   private def sqlList(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
-
-  /** Count-Min-Sketch heavy hitters over any string column — the
-    * mechanism behind the text_heavy_hitters_cms entry (see its comment
-    * for the scale rationale). `depth` md5-hex hash rows (<= 4: the 32
-    * hex chars of one md5 give four disjoint 8-char windows) of `width`
-    * buckets each; returns (`valueCol`, est, cnt) for values whose
-    * sketch estimate AND exact count reach `threshold`. CMS never
-    * under-counts, so the screen has no false negatives; exact counting
-    * touches only screened candidates. Public entry:
-    * [[graft.pipeline.CorpusOps.heavyHitters]]. */
-  private[graft] def cmsHeavyHitters(values: DataFrame, valueCol: String,
-      threshold: Long, depth: Int = 3, width: Int = 2048): DataFrame = {
-    require(depth >= 1 && depth <= 4, s"depth must be in [1, 4], got $depth")
-    require(width >= 2, s"width must be >= 2, got $width")
-    val v = values.select(col(valueCol).cast("string").as("g"))
-      .where(col("g").isNotNull)
-    def bucket(i: Int) =
-      expr(s"cast(conv(substr(md5(g), ${8 * i + 1}, 8), 16, 10) as bigint) % $width")
-    // three consumers below (sketch, candidate distinct, exact verify)
-    val bucketed = Q.barrier(
-      v.select(col("g") +: (0 until depth).map(i => bucket(i).as(s"b$i")): _*))
-    val sketch = bucketed
-      .select(posexplode(array((0 until depth).map(i => col(s"b$i")): _*))
-        .as(Seq("i", "b")))
-      .groupBy("i", "b").agg(count(lit(1)).as("c"))
-    def row(i: Int) = broadcast(
-      sketch.where(col("i") === i).select(col("b").as(s"b$i"), col("c").as(s"c$i")))
-    val est = (0 until depth).map(i => col(s"c$i")) match {
-      case Seq(one) => one
-      case cs => least(cs: _*)
-    }
-    val screened = (0 until depth).foldLeft(bucketed.distinct()) {
-      (df, i) => df.join(row(i), s"b$i")
-    }.select(col("g"), est.as("est"))
-      .where(col("est") >= threshold)
-    bucketed.select("g")
-      .join(broadcast(screened), "g")
-      .groupBy("g", "est").agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") >= threshold)
-      .withColumnRenamed("g", valueCol)
-  }
-
-  /** BM25 core (text_bm25_topk / [[graft.pipeline.CorpusOps.bm25TopK]]):
-    * Okapi BM25 over whitespace tokens, default k1=1.2 b=0.75, top-k by
-    * (score desc, id asc). Scale: the corpus is exploded once and
-    * filtered to the query's terms BEFORE any shuffle, so the
-    * (doc, term) aggregate is bounded by |matching docs| x |query|, not
-    * the corpus; df comes from that same tiny frame and joins
-    * broadcast; top-k is TakeOrdered, never a global sort. Determinism
-    * across engines: each term's contribution is rounded to integer
-    * MICRO-points and summed as BIGINT (a double sum would depend on
-    * shuffle order); the only cross-engine float ops are two divisions
-    * and one ln with identical operand order on both sides. Corpus
-    * stats (N, total tokens) are one 1-row aggregate — the same driver-
-    * scalar class as the CC convergence reads, fine at 100 TB. */
-  private[graft] def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val base = docs
-      .select(col(idCol).as("bm_id"), split(col(textCol), " ").as("w"))
-      .withColumn("dl", size(col("w")))
-    val st = base.agg(count(lit(1)).as("n"),
-      sum(col("dl").cast("long")).as("tot")).head
-    // empty corpus (or all-null text: sum(dl) is null): nothing to score
-    if (st.getLong(0) == 0L || st.isNullAt(1))
-      return docs.select(col(idCol)).limit(0)
-        .withColumn("n_terms", lit(null).cast("long"))
-        .withColumn("score", lit(null).cast("double"))
-    val (n, tot) = (st.getLong(0), st.getLong(1))
-    val inList = terms.map(q => s"'$q'").mkString(", ")
-    val tf = base
-      // pre-filter BEFORE the explode: a doc with no query term never
-      // enters the Generate at all (vs exploding every token of every
-      // doc and filtering after — ~|corpus tokens| rows saved)
-      .where(expr(s"arrays_overlap(w, array($inList))"))
-      .select(col("bm_id"), col("dl"), explode(col("w")).as("term"))
-      .where(expr(s"term IN ($inList)"))
-      .groupBy("bm_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfreq), "term")
-      .withColumn("c", expr(
-        s"cast(round(1e6 * ln(($n - df + 0.5) / (df + 0.5) + 1.0) * tf * ${k1 + 1} / " +
-        s"(tf + $k1 * (${1 - b} + $b * (cast(dl as bigint) * $n) / cast($tot as double))), 0) as bigint)"))
-      .groupBy("bm_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("c")).as("micro"))
-      .select(col("bm_id").as(idCol), col("n_terms"),
-        (col("micro").cast("double") / expr("1e6")).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** Bigram-LM scoring core (text_bigram_lm_nll /
-    * [[graft.pipeline.CorpusOps.bigramLmNll]]): train an add-one-
-    * smoothed bigram language model on the corpus itself, then score
-    * every document by its mean negative log-likelihood
-    * mean_i[ -ln P(w_i | w_{i-1}) ] with
-    * P(cur | prev) = (c(prev, cur) + 1) / (c(prev as context) + V) —
-    * the literal CCNet-style perplexity filter (low NLL = the corpus LM
-    * finds the doc predictable; the filter keeps a band, dropping both
-    * boilerplate and noise tails).
-    *
-    * Scale: the LM "tables" are the (prev, cur) and (prev) aggregates —
-    * bounded by bigram-TYPE cardinality, not corpus size — joined back
-    * onto the bigram stream as keyed equi-joins with NO forced
-    * broadcast hint: a hinted BroadcastExchange is mandatory and FAILS
-    * the job past the 8 GB / driver-memory limit, whereas bigram-type
-    * cardinality grows with corpus size, so the strategy is left to
-    * AQE — it broadcasts while the LM is small and degrades to an
-    * ordinary shuffle join on prev-hash (the fact-to-dimension shape)
-    * when it is not. V is a 1-row driver scalar, the same class as
-    * BM25's corpus stats. The bigram stream feeds three consumers (two
-    * counts + the score join), so it is barriered once instead of
-    * re-exploding the corpus three times.
-    *
-    * Determinism across engines: each bigram's -ln P is rounded to
-    * integer MICRO-nats and summed as BIGINT (shuffle-order
-    * independent, exactly the text_bm25_topk discipline); the per-doc
-    * mean then divides once, in identical operand order on both sides.
-    */
-  private[graft] def bigramLmNll(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    bigramLmNllUnsorted(docs, idCol, textCol).orderBy(idCol)
-
-  /** [[bigramLmNll]] without the presentation sort — the internal form
-    * for consumers that re-aggregate the scores (perplexityBuckets):
-    * a global Sort ahead of a groupBy is pure cost, and the barrier the
-    * buckets entry puts on this frame would otherwise materialize it. */
-  private[graft] def bigramLmNllUnsorted(docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // V over ALL non-empty tokens (including docs too short to produce
-    // a bigram), so the smoothing denominator reflects the full
-    // vocabulary. Zero-length tokens (empty text, consecutive/leading/
-    // trailing spaces in the single-space split) are dropped BEFORE
-    // both the vocabulary and the bigram transform — 'a  b' bigrams as
-    // (a,b), not (a,'')+('',b) — mirrored in the DuckDB oracle.
-    val v = docs.select(explode(split(col(textCol), " ")).as("tok"))
-      .where(col("tok") =!= "")
-      .agg(countDistinct(col("tok"))).head.getLong(0)
-    val base = docs
-      .select(col(idCol).as("bl_id"),
-        expr(s"filter(split($textCol, ' '), x -> x != '')").as("w"))
-      .where(size(col("w")) >= 2)
-    // NO spread before the explode: measured both rounds (r12 slice
-    // A/B 1.85→2.50, r13 back-to-back 1.90→2.80) — the post-shuffle
-    // stages fan to 32 tasks over KB-sized frames and the scheduling
-    // floor outweighs the single-core explode it relieves. The ln/join
-    // work per bigram is too cheap relative to one row shuffle (the
-    // r12 revert rule), unlike the md5-per-gram CMS core.
-    val bg = Q.barrier(base.select(col("bl_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> named_struct('prev', w[i-1], 'cur', w[i]))")).as("p"))
-      .select(col("bl_id"), col("p.prev").as("prev"), col("p.cur").as("cur")))
-    val c2 = bg.groupBy("prev", "cur").agg(count(lit(1)).as("c2"))
-    val c1 = bg.groupBy("prev").agg(count(lit(1)).as("c1"))
-    bg.join(c2, Seq("prev", "cur"))
-      .join(c1, Seq("prev"))
-      .withColumn("micro",
-        expr(s"cast(round(-1e6 * ln((c2 + 1.0) / (c1 + $v)), 0) as bigint)"))
-      .groupBy("bl_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("micro")).as("micro"))
-      .select(col("bl_id").as(idCol), col("n_bigrams"),
-        expr("round(cast(micro as double) / n_bigrams / 1e6, 6)").as("nll"))
-  }
-
-  /** CCNet tercile bucketing over [[bigramLmNll]] scores
-    * (text_perplexity_buckets / [[graft.pipeline.CorpusOps
-    * .perplexityBuckets]]) — see the entry comment for why the
-    * boundaries come from running counts over the DISTINCT-VALUE frame
-    * instead of a corpus-wide ntile window. */
-  private[graft] def perplexityBuckets(docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // barrier: the NLL frame feeds BOTH the tercile-bound scan (via the
-    // broadcast subquery) and the bucketing probe side — unbarriered,
-    // the whole bigram pipeline (corpus scan, explode, LM joins, per-doc
-    // agg) re-executes once per consumer (guide §5: materialize the
-    // branch invariant once). The frame is one row per doc — tiny.
-    val nll = Q.barrier(bigramLmNllUnsorted(docs, idCol, textCol))
-    val cnts = nll.groupBy("nll").agg(count(lit(1)).as("cnt"))
-    val run = cnts
-      .withColumn("cum", sum(col("cnt")).over(Window.orderBy("nll")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n", sum(col("cnt")).over(Window.partitionBy()))
-    val bounds = run.agg(
-      min(when(col("cum") * 3 >= col("n"), col("nll"))).as("b1"),
-      min(when(col("cum") * 3 >= col("n") * 2, col("nll"))).as("b2"))
-    nll.crossJoin(broadcast(bounds))
-      .withColumn("bucket", when(col("nll") <= col("b1"), "head")
-        .when(col("nll") <= col("b2"), "middle").otherwise("tail"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"),
-        min(col("nll")).as("min_nll"), max(col("nll")).as("max_nll"))
-      .orderBy("bucket")
-  }
-
-  /** Zipf/Heaps corpus profile (text_zipf_profile /
-    * [[graft.pipeline.CorpusOps.zipfProfile]]): least-squares fit of
-    * ln(freq) ~ a + slope * ln(rank) over the `topK` most frequent
-    * tokens, plus corpus totals (vocab, total_tokens). See the entry
-    * comment for the scale/determinism rationale. */
-  private[graft] def zipfProfile(docs: DataFrame, textCol: String = "text",
-      topK: Int = 1000): DataFrame = {
-    val tok = docs
-      .select(explode(split(col(textCol), " ")).as("tok"))
-      .where(col("tok") =!= "")
-      .transform(Q.barrier) // feeds freq + corpus totals
-    val freq = tok.groupBy("tok").agg(count(lit(1)).as("c"))
-    // TakeOrdered top-K, then one window bounded by the constant K
-    val top = freq.orderBy(col("c").desc, col("tok").asc).limit(topK)
-    val ranked = top.withColumn("rnk",
-      row_number().over(Window.orderBy(col("c").desc, col("tok").asc)))
-    val pts = ranked.selectExpr(
-      "cast(round(1e6 * ln(rnk)) as bigint) AS x",
-      "cast(round(1e6 * ln(c)) as bigint) AS y")
-    val sums = pts.agg(
-      count(lit(1)).cast("int").as("n_terms"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(expr("x * y")).as("sxy"), sum(expr("x * x")).as("sxx"))
-    val totals = tok.agg(count(lit(1)).as("total_tokens"),
-      countDistinct(col("tok")).as("vocab"))
-    sums.crossJoin(totals).selectExpr(
-      "n_terms", "vocab", "total_tokens", "sx", "sy", "sxy", "sxx",
-      "round((cast(n_terms as double) * sxy - cast(sx as double) * sy) / " +
-        "(cast(n_terms as double) * sxx - cast(sx as double) * sx), 6) AS zipf_slope")
-  }
 
   val qs: Map[String, Q] = Map(
 
@@ -696,8 +473,8 @@ object TextOps {
         val grams = t(s, dir, "documents")
           .withColumn("w", split(col("text"), " "))
           .where(size(col("w")) >= 2)
-          .select(explode(expr(PipelineOps.gramExpr(2))).as("g"))
-        cmsHeavyHitters(grams, "g", threshold = 40).orderBy("g")
+          .select(explode(expr(CorpusOps.gramExpr(2))).as("g"))
+        CorpusOps.heavyHitters(grams, "g", threshold = 40).orderBy("g")
       },
       Some("""WITH d AS (SELECT string_split(text, ' ') AS w FROM documents),
         g AS (SELECT unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS g
@@ -732,7 +509,7 @@ object TextOps {
     // order), and the only cross-engine float ops are two divisions and
     // one ln with identical operand order on both sides.
     "text_bm25_topk" -> Q(
-      (s, dir) => bm25TopK(t(s, dir, "documents"), Seq("dup", "spark", "join"), 10),
+      (s, dir) => CorpusOps.bm25TopK(t(s, dir, "documents"), Seq("dup", "spark", "join"), 10),
       Some("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         dd AS (SELECT doc_id, len(w) AS dl, w FROM d),
         stats AS (SELECT count(*) AS n, sum(len(w)) AS tot FROM d),
@@ -754,9 +531,9 @@ object TextOps {
     // Completes what text_unigram_rarity proxies: a corpus-trained
     // add-one bigram LM scoring every doc's mean -ln P(w_i | w_{i-1}).
     // Cross-engine float determinism via integer micro-nat rounding —
-    // see bigramLmNll's scaladoc for the mechanism and 100 TB shape.
+    // see CorpusOps.bigramLmNll's scaladoc for the mechanism and 100 TB shape.
     "text_bigram_lm_nll" -> Q(
-      (s, dir) => bigramLmNll(t(s, dir, "documents")),
+      (s, dir) => CorpusOps.bigramLmNll(t(s, dir, "documents")),
       Some("""WITH base AS (
           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w FROM documents
           WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 2),
@@ -792,7 +569,7 @@ object TextOps {
     // what approx_percentile's sketch replaces; everything else here
     // is aggregates and a broadcast.
     "text_perplexity_buckets" -> Q(
-      (s, dir) => perplexityBuckets(t(s, dir, "documents")),
+      (s, dir) => CorpusOps.perplexityBuckets(t(s, dir, "documents")),
       Some("""WITH base AS (
           SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w FROM documents
           WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 2),
@@ -834,7 +611,7 @@ object TextOps {
     // slope is one double expression over those five exact scalars,
     // written with identical operand order in both engines.
     "text_zipf_profile" -> Q(
-      (s, dir) => zipfProfile(t(s, dir, "documents")),
+      (s, dir) => CorpusOps.zipfProfile(t(s, dir, "documents")),
       Some("""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         f AS (SELECT tok, count(*) AS c FROM tok WHERE tok <> '' GROUP BY tok),
         top AS (SELECT tok, c FROM f ORDER BY c DESC, tok LIMIT 1000),
@@ -914,10 +691,10 @@ object TextOps {
       (s, dir) => {
         val base = t(s, dir, "documents")
           .select(expr("filter(split(text, ' '), x -> x != '')").as("w"))
-        val toks = Q.barrier(base.select(explode(col("w")).as("tok")))
+        val toks = Exec.barrier(base.select(explode(col("w")).as("tok")))
         val uni = toks.groupBy("tok").agg(count(lit(1)).as("c"))
         val uTotal = toks.agg(count(lit(1)).as("u_total"))
-        val bg = Q.barrier(base.where(size(col("w")) >= 2)
+        val bg = Exec.barrier(base.where(size(col("w")) >= 2)
           .select(explode(expr(
             """transform(sequence(1, size(w) - 1),
                i -> named_struct('x', w[i-1], 'y', w[i]))""")).as("p"))
@@ -1425,7 +1202,7 @@ object TextOps {
         val prof = f.join(tot, "source")
           .selectExpr("source", "bg",
             "CAST(1000000 * CAST(f AS DECIMAL(38,0)) div s1 AS BIGINT) AS p")
-          .transform(Q.barrier)
+          .transform(Exec.barrier)
         val ss = prof.groupBy("source")
           .agg(sum(expr("CAST(p AS DECIMAL(38,0)) * p")).as("ss"))
         val a = prof.select(col("source").as("sa"), col("bg"), col("p").as("pa"))

@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -171,12 +172,21 @@ object GraftIO {
     * task batch per region partition, each reading only its region's
     * byte span — so a million loci against a 3 GB reference is a
     * distributed point-read workload, not a million file scans. */
-  def fasta_query(s: SparkSession, path: String, regions: Seq[String]): DataFrame = {
-    require(regions.nonEmpty, "fasta_query: no regions given")
+  def fasta_query(s: SparkSession, path: String, regions: Seq[String]): DataFrame =
+    fetchRegions[Faidx.Entry](s, "fasta_query", regions)(
+      conf => Faidx.load(path, conf).getOrElse(Faidx.build(path, conf)).map(e => e.name -> e),
+      _.length, (conf, e, lo, hi) => Faidx.fetch(path, conf, e, lo, hi))
+
+  /** The region-fetch body [[fasta_query]] and [[twobit_query]] share:
+    * the named entries broadcast, the regions spread over at most 32
+    * tasks, and each region clamped to [1, entry length] before its
+    * fetch. */
+  private def fetchRegions[E](s: SparkSession, op: String,
+      regions: Seq[String])(index: Configuration => Seq[(String, E)], length: E => Long,
+      fetch: (Configuration, E, Long, Long) => String): DataFrame = {
+    require(regions.nonEmpty, s"$op: no regions given")
     val bconf = GraftConf.broadcast(s)
-    val entries = Faidx.load(path, bconf.value.value)
-      .getOrElse(Faidx.build(path, bconf.value.value))
-    val byName = s.sparkContext.broadcast(entries.map(e => e.name -> e).toMap)
+    val byName = s.sparkContext.broadcast(index(bconf.value.value).toMap)
     import s.implicits._
     s.createDataset(regions)
       .repartition(math.min(regions.size, 32))
@@ -184,12 +194,13 @@ object GraftIO {
         val (name, lo, hi) = VcfFormat.parseRegion(r)
         byName.value.get(name).map { e =>
           val lo2 = math.max(lo, 1L)
-          val hi2 = math.min(hi, e.length)
-          (name, lo2, hi2, Faidx.fetch(path, bconf.value.value, e, lo2, hi2))
+          val hi2 = math.min(hi, length(e))
+          (name, lo2, hi2, fetch(bconf.value.value, e, lo2, hi2))
         }
       }
       .toDF("name", "start", "end", "sequence")
   }
+
   /** UCSC .2bit packed-genome scan: one row per sequence, parallelized
     * BY SEQUENCE — the driver loads only the block-table index
     * ([[TwoBit.index]]), and each task point-reads its own sequence's
@@ -213,24 +224,10 @@ object GraftIO {
     * row), same distributed point-read shape (the index broadcasts,
     * each task seeks only its regions' byte spans). */
   def twobit_query(s: SparkSession, path: String, regions: Seq[String],
-                   mask: Boolean = true): DataFrame = {
-    require(regions.nonEmpty, "twobit_query: no regions given")
-    val bconf = GraftConf.broadcast(s)
-    val byName = s.sparkContext.broadcast(
-      TwoBit.index(path, bconf.value.value).map(e => e.name -> e).toMap)
-    import s.implicits._
-    s.createDataset(regions)
-      .repartition(math.min(regions.size, 32))
-      .flatMap { r =>
-        val (name, lo, hi) = VcfFormat.parseRegion(r)
-        byName.value.get(name).map { e =>
-          val lo2 = math.max(lo, 1L)
-          val hi2 = math.min(hi, e.dnaSize)
-          (name, lo2, hi2, TwoBit.fetch(path, bconf.value.value, e, lo2, hi2, mask))
-        }
-      }
-      .toDF("name", "start", "end", "sequence")
-  }
+                   mask: Boolean = true): DataFrame =
+    fetchRegions[TwoBit.Entry](s, "twobit_query", regions)(
+      conf => TwoBit.index(path, conf).map(e => e.name -> e),
+      _.dnaSize, (conf, e, lo, hi) => TwoBit.fetch(path, conf, e, lo, hi, mask))
 
   /** Bare-path auto-dispatch (replacement scan analog). */
   def read_auto(s: SparkSession, path: String, options: Map[String, String] = Map.empty): DataFrame = rd(s, "exon", path, options)

@@ -16,7 +16,7 @@ object FastaFormatter extends RecordFormatter {
   override def fileExtension = ".fasta"
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
-    val b = new TextBytes().add('>').add(row.getUTF8String(0))
+    val b = text.add('>').add(row.getUTF8String(0))
     if (!row.isNullAt(1)) b.add(' ').add(row.getUTF8String(1))
     b.add('\n').add(row.getUTF8String(2)).add('\n').bytes
   }
@@ -26,7 +26,7 @@ object FastqFormatter extends RecordFormatter {
   override def fileExtension = ".fastq"
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
-    val b = new TextBytes().add('@').add(row.getUTF8String(0))
+    val b = text.add('@').add(row.getUTF8String(0))
     if (!row.isNullAt(1)) b.add(' ').add(row.getUTF8String(1))
     b.add('\n').add(row.getUTF8String(2)).add("\n+\n").add(row.getUTF8String(3)).add('\n').bytes
   }
@@ -49,7 +49,7 @@ object SamFormatter extends RecordFormatter {
 
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
-    val b = new TextBytes().str(row, 0, "*").add('\t').add(row.getInt(1)).add('\t')
+    val b = text.str(row, 0, "*").add('\t').add(row.getInt(1)).add('\t')
       .str(row, 2, "*").add('\t').add(if (row.isNullAt(3)) 0L else row.getLong(3)).add('\t')
     b.str(row, 5, "255").add('\t').str(row, 6, "*").add('\t').str(row, 7, "*").add("\t0\t0\t")
       .str(row, 8, "*").add('\t').str(row, 9, "*").add('\n').bytes
@@ -72,7 +72,7 @@ object GtfFormatter extends GenomicRecordFormatter {
 
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
-    val b = GffFormatter.columns(row)
+    val b = GffFormatter.columns(text, row)
     var any = false
     if (!row.isNullAt(8)) {
       val m = row.getMap(8)
@@ -110,7 +110,7 @@ object BedFormatter extends GenomicRecordFormatter {
                            options: Map[String, String]): Array[Byte] = {
     var last = 11
     while (last > 2 && row.isNullAt(last)) last -= 1
-    val b = new TextBytes().add(row.getUTF8String(0)).add('\t')
+    val b = text.add(row.getUTF8String(0)).add('\t')
       .add(row.getLong(1) - 1).add('\t').add(row.getLong(2))
     (3 to last).foreach { i =>
       b.add('\t')
@@ -210,7 +210,7 @@ object VcfFormatter extends VcfLikeFormatter {
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
     def idx(n: String) = schema.fieldIndex(n)
-    val b = new TextBytes().add(row.getUTF8String(idx("chrom"))).add('\t')
+    val b = text.add(row.getUTF8String(idx("chrom"))).add('\t')
       .add(row.getLong(idx("pos"))).add('\t').str(row, idx("id")).add('\t')
       .add(row.getUTF8String(idx("ref"))).add('\t')
     val alt = row.getArray(idx("alt"))
@@ -278,8 +278,8 @@ object GffFormatter extends GenomicRecordFormatter {
   override def tabixConfig: (Int, Int, Int, Int, Char) = (0, 1, 4, 5, '#')
 
   /** The eight columns GFF and GTF share, each followed by a tab. */
-  private[sources] def columns(row: InternalRow): TextBytes = {
-    val b = new TextBytes().str(row, 0).add('\t').str(row, 1).add('\t').str(row, 2).add('\t')
+  private[sources] def columns(b: TextBytes, row: InternalRow): TextBytes = {
+    b.str(row, 0).add('\t').str(row, 1).add('\t').str(row, 2).add('\t')
       .add(row.getLong(3)).add('\t').add(row.getLong(4)).add('\t')
     if (row.isNullAt(5)) b.add('.') else b.add(row.getFloat(5))
     b.add('\t').str(row, 6).add('\t').str(row, 7).add('\t')
@@ -296,7 +296,7 @@ object GffFormatter extends GenomicRecordFormatter {
 
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
-    val b = columns(row)
+    val b = columns(text, row)
     if (row.isNullAt(8)) b.add('.')
     else {
       val m = row.getMap(8)
@@ -550,7 +550,7 @@ object BedpeFormatter extends RecordFormatter {
   override def fileExtension = ".bedpe"
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
-    val b = new TextBytes()
+    val b = text
     Seq(0, 3).foreach { ci =>
       if (row.isNullAt(ci)) b.add(".\t-1\t-1")
       else b.add(row.getUTF8String(ci)).add('\t').add(row.getLong(ci + 1) - 1).add('\t').add(row.getLong(ci + 2))
@@ -570,7 +570,7 @@ object BedGraphFormatter extends RecordFormatter {
   override def fileExtension = ".bedgraph"
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] =
-    new TextBytes().add(row.getUTF8String(0)).add('\t').add(row.getLong(1) - 1).add('\t')
+    text.add(row.getUTF8String(0)).add('\t').add(row.getLong(1) - 1).add('\t')
       .add(row.getLong(2)).add('\t').add(row.getDouble(3)).add('\n').bytes
 }
 
@@ -582,7 +582,7 @@ object Blast6Formatter extends RecordFormatter {
   override def fileExtension = ".blast6"
   override def formatBytes(row: InternalRow, schema: StructType,
                            options: Map[String, String]): Array[Byte] = {
-    val b = new TextBytes().add(row.getUTF8String(0)).add('\t').add(row.getUTF8String(1))
+    val b = text.add(row.getUTF8String(0)).add('\t').add(row.getUTF8String(1))
       .add('\t').add(row.getDouble(2))
     (3 to 9).foreach(i => b.add('\t').add(row.getLong(i)))
     b.add('\t').add(row.getDouble(10)).add('\t').add(row.getDouble(11)).add('\n').bytes

@@ -22,6 +22,9 @@ import org.apache.spark.util.SerializableConfiguration
 trait RecordFormatter extends Serializable {
   def fileExtension: String
 
+  /** A record buffer whose null-field error names this format. */
+  protected def text: TextBytes = new TextBytes(fileExtension)
+
   /** Render one full-schema row, INCLUDING the record terminator. */
   def formatBytes(row: InternalRow, schema: StructType,
                   options: Map[String, String]): Array[Byte]
@@ -54,24 +57,25 @@ trait RecordFormatter extends Serializable {
 }
 
 /** Growable byte buffer a text formatter renders one record into:
-  * strings copy as their UTF-8 bytes (a null string as `null`, the
-  * text java.lang.StringBuilder gave it), numbers as their Java text
-  * forms, chars as one byte (ASCII only). */
-final class TextBytes {
+  * strings copy as their UTF-8 bytes, numbers as their Java text forms,
+  * chars as one byte (ASCII only). A null string the format has no
+  * placeholder for fails, naming the format of `ext`: written as the
+  * text `null` it would read back as a real value. */
+final class TextBytes(ext: String) {
   private var buf = new Array[Byte](256)
   private var n = 0
 
   private def room(k: Int): Unit =
     if (n + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, n + k))
 
-  def add(u: UTF8String): TextBytes =
-    if (u == null) add("null")
-    else {
-      room(u.numBytes)
-      u.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + n)
-      n += u.numBytes
-      this
-    }
+  def add(u: UTF8String): TextBytes = {
+    if (u == null) throw new IllegalArgumentException(
+      s"${ext.stripPrefix(".")}: a null string field has no placeholder in this format")
+    room(u.numBytes)
+    u.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + n)
+    n += u.numBytes
+    this
+  }
   def add(s: String): TextBytes = add(UTF8String.fromString(s))
   def add(c: Char): TextBytes = { room(1); buf(n) = c.toByte; n += 1; this }
   def add(v: Long): TextBytes = add(java.lang.Long.toString(v))

@@ -53,6 +53,23 @@ class GateLintSpec extends AnyFunSuite {
     assert(users == Seq("graft/sources/core/GraftDataSource.scala"), users)
   }
 
+  test("library code never reaches into the gate registry") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val registrySide = Set("graft/SparkEntry.scala", "graft/Bench.scala", "graft/Verify.scala")
+    val qualifier = raw"graft\.queries|\bqueries\.[A-Za-z]".r
+    val hits = java.nio.file.Files.walk(root.resolve("graft")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> p)
+      .filterNot { case (rel, _) => rel.startsWith("graft/queries/") || registrySide(rel) }
+      .flatMap { case (rel, p) =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if qualifier.findFirstIn(l).isDefined => s"$rel:${i + 1}: ${l.trim}"
+        }
+      }.toSeq.sorted
+    assert(hits.isEmpty, s"\nlibrary -> registry references:\n  ${hits.mkString("\n  ")}")
+  }
+
   test("coreSet names only live registry entries") {
     val dead = SparkEntry.coreSet -- SparkEntry.registry.keySet
     assert(dead.isEmpty, s"coreSet references unknown entries: $dead")

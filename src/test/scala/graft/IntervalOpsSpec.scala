@@ -51,7 +51,7 @@ class IntervalOpsSpec extends AnyFunSuite {
         val d = if (cands.isEmpty) None else Some(cands.map(dist(iv, _)).min)
         dup.map(_ => (iv._1, iv._2, iv._3, d))
       }.toSeq.sorted
-      val got = graft.queries.Relational.closestSweep(
+      val got = graft.pipeline.CorpusOps.closestFeatures(
           a.toDF("chrom", "s", "e"), b.toDF("chrom", "s", "e"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSeq.sorted
@@ -97,7 +97,7 @@ class IntervalOpsSpec extends AnyFunSuite {
         chrom -> (ma.map(r => r._2 - r._1).sum,
           frags.map(f => f._2 - f._1).sum, frags.size.toLong)
       }
-      val got = graft.queries.Relational.subtractSweep(
+      val got = graft.pipeline.CorpusOps.subtractIntervals(
           a.toDF("chrom", "s", "e"), b.map(t => (t._1, t._2, t._3)).toDF("chrom", "s", "e"))
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
       assert(got == expect, s"trial $trial: subtract sweep diverged from brute force")
@@ -118,14 +118,10 @@ class IntervalOpsSpec extends AnyFunSuite {
       }
       val df = data.toDF("chrom", "s", "e", "weight")
       val expect = brute(data)
-      val plain = regions(graft.queries.Relational.mergeSweep(df, bucketWidth = None))
+      val plain = regions(graft.pipeline.CorpusOps.mergeIntervals(df))
       assert(plain == expect, s"trial $trial: plain sweep diverged from brute force")
       // bucket width 256 guarantees many boundary straddlers at pos<=2300
-      val stitched = regions(graft.queries.Relational.mergeSweep(
-        graft.queries.Relational.mergeSweep(df, bucketWidth = Some(256L))
-          .selectExpr("chrom", "region_start AS s", "region_end AS e",
-            "n_intervals AS weight"),
-        bucketWidth = None))
+      val stitched = regions(graft.pipeline.CorpusOps.mergeIntervals(df, bucketWidth = Some(256L)))
       assert(stitched == expect, s"trial $trial: bucketed+stitched sweep diverged")
     }
   }

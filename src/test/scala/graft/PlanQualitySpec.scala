@@ -799,11 +799,10 @@ class PlanQualitySpec extends AnyFunSuite {
     // The loop must therefore self-size from the measured edge count —
     // with the global knob pinned absurdly high, the materialized label
     // frame must come out at the self-sized count, not the global one.
-    import graft.queries.Q
     val pairs = spark.range(0, 2000)
       .selectExpr("id AS id_a", "id + 1 AS id_b") // one long chain
-    val labels = Q.withShufflePartitions(spark, 509) {
-      graft.queries.Dedup.connectedComponents(pairs)
+    val labels = graft.pipeline.Exec.withShufflePartitions(spark, 509) {
+      graft.pipeline.CorpusOps.connectedComponents(pairs)
     }
     assert(labels.rdd.getNumPartitions <= 8,
       s"CC loop inherited the global shuffle knob: " +
@@ -883,38 +882,38 @@ class PlanQualitySpec extends AnyFunSuite {
       s"interpreted HOF back in the scoring projection:\n$finalPlan")
   }
 
-  test("Q.spread: no-op on a pre-widened frame, repartition only on narrow scans") {
+  test("Exec.spread: no-op on a pre-widened frame, repartition only on narrow scans") {
     import org.apache.spark.sql.functions.col
     val target = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // pre-widened (>= half the session parallelism): must pass through
     // UNTOUCHED — the guard is what makes every spread call site a
     // no-op on a real multi-file deployment (verdict item 5)
     val wide = spark.range(1000).toDF("doc_id").repartition(target)
-    assert(graft.queries.Q.spread(wide, "doc_id") eq wide,
+    assert(graft.pipeline.Exec.spread(wide, "doc_id") eq wide,
       "spread added an exchange to an already-wide frame")
     // a single staged parquet file scans as one partition: spread must
     // repartition it to the session parallelism
     val dir = java.nio.file.Files.createTempDirectory("spread-narrow").toString
     spark.range(1000).toDF("doc_id").coalesce(1).write.mode("overwrite").parquet(dir)
     val narrow = spark.read.parquet(dir)
-    val sprd = graft.queries.Q.spread(narrow, "doc_id")
+    val sprd = graft.pipeline.Exec.spread(narrow, "doc_id")
     assert(sprd ne narrow, "spread ignored a narrow single-file scan")
     assert(sprd.rdd.getNumPartitions == target,
       s"expected $target partitions, got ${sprd.rdd.getNumPartitions}")
   }
 
-  test("Q.spread: many small files that scan as one partition still get spread") {
+  test("Exec.spread: many small files that scan as one partition still get spread") {
     // Spark packs small files into few partitions (maxPartitionBytes +
     // openCostInBytes), so a file count >= half the target proves nothing
     val dir = java.nio.file.Files.createTempDirectory("spread-small").toString
     spark.range(64).toDF("doc_id").repartition(8).write.mode("overwrite").parquet(dir)
     val k = "spark.sql.files.minPartitionNum"
     spark.conf.set(k, "1")
-    try graft.queries.Q.withShufflePartitions(spark, 16) {
+    try graft.pipeline.Exec.withShufflePartitions(spark, 16) {
       val narrow = spark.read.parquet(dir)
       assert(narrow.inputFiles.length * 2 >= 16, "fixture needs >= target/2 files")
       assert(narrow.rdd.getNumPartitions <= 2, "fixture should scan as 1-2 partitions")
-      val sprd = graft.queries.Q.spread(narrow, "doc_id")
+      val sprd = graft.pipeline.Exec.spread(narrow, "doc_id")
       assert(sprd.rdd.getNumPartitions == 16,
         s"expected 16 partitions, got ${sprd.rdd.getNumPartitions}")
     } finally spark.conf.unset(k)

@@ -119,6 +119,23 @@ class WriterRoundTripSpec extends AnyFunSuite {
     }
   }
 
+  test("a null string field with no placeholder fails the write, naming the format") {
+    val schema = StructType(Seq(
+      StructField("id", StringType), StructField("description", StringType),
+      StructField("sequence", StringType)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(null, null, "AC")), 1), schema)
+    val dir = tmp()
+    val e = intercept[Exception](df.write.mode("overwrite").format("fasta").save(dir))
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case c: IllegalArgumentException => c }
+    assert(cause.exists(_.getMessage.contains("fasta")), e)
+    // nothing committed: no part file holds the text `null`
+    val parts = Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.isEmpty, parts)
+  }
+
   test("bgzf writer: spec-conformant blocks, EOF marker, round-trips; >64KiB spans blocks") {
     val schema = StructType(Seq(
       StructField("id", StringType), StructField("description", StringType),
