@@ -113,9 +113,10 @@ object BamFormat extends GraftFormat {
     if (split.bgzfSplit)
       return readBgzfSplit(split, in.asInstanceOf[graft.sources.core.BgzfBlockStream], options)
     // `in` is the BGZF-decompressed stream (gzip codec on .bam paths is
-    // forced by the data source for the 'bam' format name). For an
-    // index chunk the stream starts at a record boundary, so the
-    // reference dictionary is re-read from the file head separately.
+    // forced by the data source for the 'bam' format name). For index
+    // chunks the stream starts at a record boundary, so the reference
+    // dictionary is re-read from the file head separately, once per
+    // partition however many chunks it reads.
     val d = new DataInputStream(new java.io.BufferedInputStream(in, 1 << 16))
     val refs =
       if (split.bgzfChunk) refsFromHead(split)

@@ -36,7 +36,9 @@ object BinnedIndex {
       else queryByRid(rid, beg0, end0)
     }
 
-    /** Merged chunk ranges overlapping [beg0, end0) on reference rid. */
+    /** Merged chunk ranges overlapping [beg0, end0) on reference rid,
+      * trimmed on the left by the linear index (CSI: the leaf's loffset)
+      * and on the right at htslib's `max_off`. */
     def queryByRid(rid: Int, beg0: Long, end0: Long): Seq[Chunk] = {
       if (rid < 0 || rid >= refs.length) return Seq.empty
       val ref = refs(rid)
@@ -49,8 +51,10 @@ object BinnedIndex {
           val leaf = leafBase + (beg0 >> minShift).toInt
           ref.loffsets.getOrElse(leaf, 0L)
         }
+      val maxVoff = firstVoffRightOf(ref, end0)
       val chunks = reg2bins(beg0, end0).flatMap(ref.bins.get).flatten
-        .filter(_.end > minVoff)
+        .filter(c => c.end > minVoff && c.beg < maxVoff)
+        .map(c => if (c.end > maxVoff) Chunk(c.beg, maxVoff) else c)
         .sortBy(_.beg)
       val merged = scala.collection.mutable.ArrayBuffer.empty[Chunk]
       chunks.foreach { c =>
@@ -62,6 +66,26 @@ object BinnedIndex {
     }
 
     private def leafBase: Int = ((1 << (depth * 3)) - 1) / 7
+
+    /** htslib's `max_off` (`hts_itr_query`): the first chunk start of
+      * the first existing bin right of [_, end0) — walking right from
+      * the leaf after end0's, and up to the parent at each first child,
+      * whose range starts where that child's does. Its records begin at
+      * or past end0 and the file is position-sorted, so no record from
+      * that voff on overlaps the query. Long.MaxValue when no such bin
+      * exists. */
+    private def firstVoffRightOf(ref: RefIndex, end0: Long): Long = {
+      @annotation.tailrec def walk(bin: Int): Long =
+        if (bin % 8 == 1) walk((bin - 1) >> 3)
+        else if (bin == 0) Long.MaxValue
+        else ref.bins.get(bin) match {
+          case Some(cs) if cs.nonEmpty => cs.iterator.map(_.beg).min
+          case _ => walk(bin + 1)
+        }
+      val nBins = ((1 << (3 * depth + 3)) - 1) / 7
+      val next = leafBase + ((end0 - 1) >> minShift).toInt + 1
+      if (end0 >= maxPos) Long.MaxValue else walk(if (next >= nBins) 0 else next)
+    }
 
     /** Generalized reg2bins for (minShift, depth); the classic scheme is
       * minShift=14, depth=5 (bins 0..37449). */

@@ -219,6 +219,51 @@ object Bgzf {
     raw.seek(startVoff >>> 16)
     new BgzfBlockStream(raw.stream, startVoff, () => raw.in.close(), endVoff)
   }
+
+  /** Executor-side open of a partition's index chunks: one stream over
+    * the one open file that seeks to and inflates each chunk in turn.
+    * Chunks are sorted and their bounds are record boundaries, so the
+    * concatenation is a valid record stream in file order. */
+  def openChunks(raw: FSDataStream, chunks: Seq[(Long, Long)]): BgzfChunkStream =
+    new BgzfChunkStream(raw, chunks)
+}
+
+/** A decompressed BGZF stream that names the virtual offset of the last
+  * byte it returned (-1 before the first read); bulk reads never cross a
+  * block boundary. */
+trait VoffStream {
+  def lastByteVoff: Long
+}
+
+/** [[Bgzf.openChunks]]: the chunks' bounded streams one after another
+  * over one open file, each opened when the one before it ends. */
+final class BgzfChunkStream(raw: FSDataStream, chunks: Seq[(Long, Long)])
+    extends InputStream with VoffStream {
+  private val rest = chunks.iterator
+  private var cur: BgzfBlockStream = _
+
+  def lastByteVoff: Long = if (cur == null) -1L else cur.lastByteVoff
+
+  private def nextChunk(): Boolean = rest.hasNext && {
+    val (s, e) = rest.next()
+    cur = Bgzf.openChunk(raw, s, e) // closed with the file, below
+    true
+  }
+
+  override def read(): Int = {
+    var b = if (cur == null) -1 else cur.read()
+    while (b < 0 && nextChunk()) b = cur.read()
+    b
+  }
+
+  override def read(b: Array[Byte], off: Int, len: Int): Int = {
+    if (len == 0) return 0
+    var n = if (cur == null) -1 else cur.read(b, off, len)
+    while (n < 0 && nextChunk()) n = cur.read(b, off, len)
+    n
+  }
+
+  override def close(): Unit = raw.in.close()
 }
 
 /** Decompressed stream over consecutive BGZF blocks from `startVoff` to
@@ -234,7 +279,7 @@ object Bgzf {
   * task from decompressing any block its chunk does not cover. */
 final class BgzfBlockStream(in: InputStream, startVoff: Long,
                             closeUnderlying: () => Unit,
-                            endVoff: Long = Long.MaxValue) extends InputStream {
+                            endVoff: Long = Long.MaxValue) extends InputStream with VoffStream {
   private var blockCoff: Long = startVoff >>> 16
   private var nextCoff: Long = blockCoff
   private var block: Array[Byte] = _

@@ -155,8 +155,9 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
   private lazy val conf = SparkSession.active.sessionState.newHadoopConf()
   private lazy val files = GraftFiles.pathSpecs(options).flatMap(GraftFiles.resolve(_, conf))
 
-  /** One broadcast conf per scan, shared by every reader factory it
-    * creates (see [[GraftConf]]). */
+  /** The session's broadcast conf, shared by every reader factory this
+    * scan creates and reused across scans while the conf is unchanged
+    * (see [[GraftConf]]). */
   private lazy val bconf = GraftConf.broadcast(SparkSession.active)
 
   /** Size + sampled-cardinality estimates (the analog of the
@@ -195,9 +196,8 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
       s"filters=[${filters.mkString(",")}])"
 
   override def planInputPartitions(): Array[InputPartition] =
-    files.flatMap(st =>
-      GraftPlanning.partitionsFor(format, st, GraftPlanning.maxSplitOf(options),
-        options, conf, filters.toSeq)).toArray
+    GraftPlanning.partitionsFor(format, files, GraftPlanning.maxSplitOf(options),
+      options, conf, filters.toSeq).toArray
 
   /** Micro-batch streaming over an arriving-files directory: the same
     * formats, split planning, projection/filter plumbing, and reader as
@@ -213,8 +213,8 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
 
 /** Input-partition planning shared by the batch scan and the
   * micro-batch stream: one partition per file, per ~maxSplit byte range
-  * (splittable formats), per BGZF block range, or per index-pruned
-  * chunk. */
+  * (splittable formats), per BGZF block range, or per group of a file's
+  * index-pruned chunks (see [[packChunks]]). */
 private[core] object GraftPlanning {
 
   /** Per-read override of the split size: a read option travels WITH
@@ -229,42 +229,88 @@ private[core] object GraftPlanning {
     maxSplit
   }
 
-  def partitionsFor(format: GraftFormat, st: org.apache.hadoop.fs.FileStatus,
+  def partitionsFor(format: GraftFormat, files: Seq[org.apache.hadoop.fs.FileStatus],
                     maxSplit: Long, options: Map[String, String],
                     conf: Configuration,
                     filters: Seq[Filter] = Nil): Seq[GraftInputPartition] = {
+    val indexed = files.map(st =>
+      st -> indexedChunks(format, st.getPath.toString, options, conf, filters))
+    // index-driven pruning: executors read only the blocks the index
+    // says can match, a file's chunks packed into about one partition
+    // per core of the scan's total chunk bytes
+    lazy val target = {
+      val total = indexed.flatMap(_._2).flatten.map(chunkBytes).sum
+      val spark = SparkSession.active
+      val cores = spark.sessionState.conf.filesMinPartitionNum
+        .getOrElse(spark.sparkContext.defaultParallelism)
+      (total + cores - 1) / cores
+    }
+    indexed.flatMap {
+      case (st, Some(chunks)) =>
+        packChunks(chunks, target, maxSplit).map(g =>
+          GraftInputPartition(st.getPath.toString, g.head._1, g.last._2, st.getLen,
+            bgzfChunk = true, chunks = g))
+      case (st, None) => fileSplits(format, st, maxSplit, options, conf)
+    }
+  }
+
+  /** Compressed bytes an index chunk spans (at least 1: a chunk inside
+    * one block still reads it). */
+  private def chunkBytes(c: (Long, Long)): Long = math.max((c._2 >>> 16) - (c._1 >>> 16), 1L)
+
+  /** A file's sorted, merged chunks in contiguous groups, in offset
+    * order: a group closes once it holds `target` bytes, and before a
+    * chunk would take it past `maxSplit` (a single chunk larger than
+    * `maxSplit` stays whole). A group is one task that opens the file
+    * once and reads its chunks in turn — htslib reads a query's chunks
+    * through one open file the same way (`hts_itr_next`) — instead of a
+    * task, a file open and a header read per chunk. Closing at `target`
+    * keeps a file within ceil(its bytes / target) groups. */
+  private def packChunks(chunks: Seq[(Long, Long)], target: Long,
+                       maxSplit: Long): Seq[Seq[(Long, Long)]] = {
+    val groups = Seq.newBuilder[Seq[(Long, Long)]]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var bytes = 0L
+    def close(): Unit = if (cur.nonEmpty) { groups += cur.toList; cur.clear(); bytes = 0 }
+    chunks.foreach { c =>
+      val n = chunkBytes(c)
+      if (bytes + n > maxSplit) close()
+      cur += c
+      bytes += n
+      if (bytes >= target) close()
+    }
+    close()
+    groups.result()
+  }
+
+  private def fileSplits(format: GraftFormat, st: org.apache.hadoop.fs.FileStatus,
+                         maxSplit: Long, options: Map[String, String],
+                         conf: Configuration): Seq[GraftInputPartition] = {
     val path = st.getPath.toString
     val len = st.getLen
     val codec = format.forcedCodec.getOrElse(Compression.of(path, options)._1)
-    indexedChunks(format, path, options, conf, filters) match {
-      case Some(chunks) =>
-        // index-driven pruning: one partition per merged BGZF chunk;
-        // executors read only the blocks the index says can match
-        chunks.map(c => GraftInputPartition(path, c._1, c._2, len, bgzfChunk = true))
-      case None =>
-        if (format.splittable && codec == "none" && len > maxSplit) {
-          // One partition per ~maxSplit bytes; parser syncs to record start.
-          val n = splitCount(path, len, maxSplit)
-          (0 until n).map { i =>
-            val s = i.toLong * maxSplit
-            GraftInputPartition(path, s, math.min(s + maxSplit, len), len)
-          }
-        } else if (format.bgzfSplittable && (codec == "gzip" || codec == "bgzf") &&
-            len > maxSplit && Bgzf.isBgzf(path, len, st.getModificationTime, conf)) {
-          // BGZF is block-addressable: one partition per ~maxSplit
-          // COMPRESSED bytes; executors sync to the next block header
-          // and apply the anchor-voff ownership protocol. This is what
-          // keeps a single 100 GB .bam/.vcf.gz from serializing a
-          // cluster into one task.
-          val n = splitCount(path, len, maxSplit)
-          (0 until n).map { i =>
-            val s = i.toLong * maxSplit
-            GraftInputPartition(path, s, math.min(s + maxSplit, len), len,
-              bgzfSplit = true)
-          }
-        } else {
-          Seq(GraftInputPartition(path, 0, Long.MaxValue, len))
-        }
+    if (format.splittable && codec == "none" && len > maxSplit) {
+      // One partition per ~maxSplit bytes; parser syncs to record start.
+      val n = splitCount(path, len, maxSplit)
+      (0 until n).map { i =>
+        val s = i.toLong * maxSplit
+        GraftInputPartition(path, s, math.min(s + maxSplit, len), len)
+      }
+    } else if (format.bgzfSplittable && (codec == "gzip" || codec == "bgzf") &&
+        len > maxSplit && Bgzf.isBgzf(path, len, st.getModificationTime, conf)) {
+      // BGZF is block-addressable: one partition per ~maxSplit
+      // COMPRESSED bytes; executors sync to the next block header
+      // and apply the anchor-voff ownership protocol. This is what
+      // keeps a single 100 GB .bam/.vcf.gz from serializing a
+      // cluster into one task.
+      val n = splitCount(path, len, maxSplit)
+      (0 until n).map { i =>
+        val s = i.toLong * maxSplit
+        GraftInputPartition(path, s, math.min(s + maxSplit, len), len,
+          bgzfSplit = true)
+      }
+    } else {
+      Seq(GraftInputPartition(path, 0, Long.MaxValue, len))
     }
   }
 
@@ -309,10 +355,17 @@ private[core] object GraftPlanning {
   }
 }
 
+/** One task's input. An index-chunk partition (`bgzfChunk`) reads the
+  * BGZF virtual-offset ranges in `chunks`, sorted and disjoint, and
+  * `start`/`end` are the first chunk's start and the last chunk's end;
+  * with `chunks` empty it reads the one chunk [start, end). */
 final case class GraftInputPartition(path: String, start: Long, end: Long,
                                      fileLen: Long, bgzfChunk: Boolean = false,
-                                     bgzfSplit: Boolean = false)
-    extends InputPartition
+                                     bgzfSplit: Boolean = false,
+                                     chunks: Seq[(Long, Long)] = Nil)
+    extends InputPartition {
+  def chunkRanges: Seq[(Long, Long)] = if (chunks.isEmpty) Seq((start, end)) else chunks
+}
 
 final case class GraftReaderFactory(format: GraftFormat, full: StructType,
                                     required: StructType, options: Map[String, String],
@@ -364,7 +417,7 @@ final case class GraftReaderFactory(format: GraftFormat, full: StructType,
       }
     }
     val stream =
-      if (p.bgzfChunk) Bgzf.openChunk(raw, p.start, p.end) // index chunk, bounded at its end voff
+      if (p.bgzfChunk) Bgzf.openChunks(raw, p.chunkRanges) // index chunks, each bounded at its end voff
       else if (ranged) raw.stream
       else Compression.wrap(raw.stream, codec)
     val split = GraftSplit(p.path, if (ranged) p.start else 0,

@@ -113,10 +113,11 @@ final case class Coordinates(contig: String, start: String, end: String,
     Regions.fromFilters(filters, contig, start, if (zeroBasedStart) 1L else 0L)
 }
 
-/** One unit of parallel work: a file, a byte range of one, or an
-  * index-resolved BGZF chunk (stream already decompressed and positioned
-  * at a record boundary; binary formats that need their file header
-  * must re-read it separately — see BamFormat). `conf` is the executor's
+/** One unit of parallel work: a file, a byte range of one, or a group
+  * of index-resolved BGZF chunks (`bgzfChunk`: one decompressed stream
+  * over the chunks in file order, starting at a record boundary; binary
+  * formats that need their file header re-read it separately, once per
+  * partition — see BamFormat). `conf` is the executor's
   * view of the session Hadoop configuration (broadcast with the scan
   * factory), so header re-reads hit the same filesystem/credentials as
   * the main stream — a bare `new Configuration()` would drop

@@ -164,17 +164,17 @@ final case class GraftMicroBatchStream(format: GraftFormat, full: StructType,
         s"grown/rewritten: ${grown.mkString(", ")}")
     val conf = bconf.value.value
     val maxSplit = GraftPlanning.maxSplitOf(options)
-    (to.keySet -- from.keySet).toSeq.sorted.flatMap { path =>
+    val arrived = (to.keySet -- from.keySet).toSeq.sorted.flatMap { path =>
       val statuses = GraftFiles.resolve(path, conf)
       require(statuses.nonEmpty,
         s"streaming input file vanished before its batch was planned: $path")
-      statuses.flatMap(st =>
-        // same index pruning as the batch path, including regions
-        // inferred from pushed filters (their only use in the stream) —
-        // each arriving file reads only its matching chunks
-        GraftPlanning.partitionsFor(format, st, maxSplit, options, conf,
-          filters.toSeq))
-    }.toArray
+      statuses
+    }
+    // same index pruning as the batch path, including regions inferred
+    // from pushed filters (their only use in the stream) — each arriving
+    // file reads only its matching chunks
+    GraftPlanning.partitionsFor(format, arrived, maxSplit, options, conf,
+      filters.toSeq).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

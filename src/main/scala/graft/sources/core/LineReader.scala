@@ -17,8 +17,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * from serializing a cluster.
   *
   * Positions. Over a plain stream (positioned at `splitStart`) a line's
-  * position is the raw byte offset of its first byte. Over a
-  * [[BgzfBlockStream]] it is the line's anchor: the voff of the byte
+  * position is the raw byte offset of its first byte. Over a BGZF
+  * [[VoffStream]] it is the line's anchor: the voff of the byte
   * immediately BEFORE its first byte (its predecessor's terminating
   * newline; 0 for the stream's first line), and `splitStart`/`splitEnd`
   * are voffs — (S<<16) and (E<<16)-1 for a compressed byte range [S, E),
@@ -42,7 +42,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * [[string]] view decodes it with U+FFFD replacement.
   */
 final class LineReader(in: InputStream, splitStart: Long, splitEnd: Long) {
-  private val bgzf: BgzfBlockStream = in match { case bs: BgzfBlockStream => bs; case _ => null }
+  private val bgzf: VoffStream = in match { case bs: VoffStream => bs; case _ => null }
   var buf = new Array[Byte](1 << 16)
   var off, len = 0
   /** Position of the current line (byte offset or anchor voff). */

@@ -53,6 +53,17 @@ class GateLintSpec extends AnyFunSuite {
     assert(users == Seq("graft/sources/core/GraftDataSource.scala"), users)
   }
 
+  test("the Hadoop conf is shipped from one place: GraftConf") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val users = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readAllLines(p).asScala.exists(
+        _.contains("new SerializableConfiguration")))
+      .map(root.relativize(_).toString).toSeq.sorted
+    assert(users == Seq("graft/sources/core/GraftConf.scala"), users)
+  }
+
   test("library code never reaches into the gate registry") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")

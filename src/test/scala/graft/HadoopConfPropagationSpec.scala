@@ -14,9 +14,10 @@ import graft.sources.{FastaFormat, GraftIO}
   * object stores per-URI at rust/src/arrow_reader.rs:108) must reach
   * the PartitionReader that opens the file on an executor. Round-1
   * defect: readers built `new Configuration()`, dropping all of it —
-  * fixed by shipping a SerializableConfiguration (now broadcast once
-  * per scan/write, see GraftConf); this spec pins the fix against
-  * regression.
+  * fixed by shipping a SerializableConfiguration (now one broadcast per
+  * session conf content, reused across scans and writes until any key
+  * or value changes, see GraftConf); this spec pins the fix, and the
+  * cache's reuse and invalidation, against regression.
   */
 class HadoopConfPropagationSpec extends AnyFunSuite {
 
@@ -29,6 +30,15 @@ class HadoopConfPropagationSpec extends AnyFunSuite {
     out.close()
     new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray))
       .readObject().asInstanceOf[T]
+  }
+
+  private def fastaFactory(): GraftReaderFactory = {
+    val path = "src/test/resources/fixtures/fasta/test.fasta"
+    val schema = GraftIO.read_fasta(spark, path).schema
+    GraftTable(FastaFormat, schema, Map("path" -> path)).newScanBuilder(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Collections.emptyMap())).build().toBatch.createReaderFactory()
+      .asInstanceOf[GraftReaderFactory]
   }
 
   test("cluster hadoop conf key is visible in the deserialized reader factory") {
@@ -85,5 +95,42 @@ class HadoopConfPropagationSpec extends AnyFunSuite {
       val shipped = roundTrip(batch)
       assert(shipped.bconf.value.value.get("graft.test.marker") == "w-7")
     } finally spark.sparkContext.hadoopConfiguration.unset("graft.test.marker")
+  }
+
+  test("a hadoopConfiguration edit between two scans reaches the second scan's factory") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("graft.test.marker", "first")
+    try {
+      val first = roundTrip(fastaFactory())
+      assert(first.bconf.value.value.get("graft.test.marker") == "first")
+      hc.set("graft.test.marker", "second")
+      val second = roundTrip(fastaFactory())
+      assert(second.bconf.value.value.get("graft.test.marker") == "second")
+      assert(second.bconf.id != first.bconf.id)
+    } finally hc.unset("graft.test.marker")
+  }
+
+  test("two scans over an unchanged conf share one broadcast") {
+    val a = fastaFactory().bconf
+    val b = fastaFactory().bconf
+    assert(a.id == b.id)
+    // a session SQL conf is part of the shipped conf too
+    spark.conf.set("spark.sql.graft.test.marker", "x")
+    try assert(fastaFactory().bconf.id != b.id)
+    finally spark.conf.unset("spark.sql.graft.test.marker")
+  }
+
+  test("the conf cache never serves another or a stopped owner") {
+    final class Owner(var live: Boolean = true)
+    val cache = new LastBy[Owner, String, Int](_.live)
+    var builds = 0
+    def get(o: Owner, key: String): Int = cache(o, key) { builds += 1; builds }
+    val (a, b) = (new Owner, new Owner)
+    assert(get(a, "k") == 1 && get(a, "k") == 1) // same live owner, same key
+    assert(get(b, "k") == 2)                     // another owner
+    assert(get(a, "k") == 3)                     // a's entry was replaced by b's
+    a.live = false
+    assert(get(a, "k") == 4 && get(a, "k") == 5) // stopped: always rebuilt
+    assert(get(b, "j") == 6 && get(b, "j") == 6) // new key rebuilds once
   }
 }

@@ -12,9 +12,11 @@ import graft.sources.core.Regions
   * load-bearing-ness:
   *   1. union semantics: multi-region == union of single-region reads,
   *      each matching record exactly once even under overlapping regions;
-  *   2. scale shape: a 1k-region panel over a written bgzf+tabix tree
-  *      plans a COALESCED chunk-partition set (far fewer partitions than
-  *      regions), property-checked row-for-row against scan+filter;
+  *   2. scale shape: a file's index chunks are packed into at most one
+  *      partition per core (a 1k-region panel over a written bgzf+tabix
+  *      tree, 20-region panels over the BAM/VCF/BCF fixtures), each chunk
+  *      read exactly once and rows in file order, checked row-for-row
+  *      against scan+filter;
   *   3. the Matcher/merge primitives that make the row test O(log R).
   */
 class MultiRegionQuerySpec extends AnyFunSuite {
@@ -109,6 +111,92 @@ class MultiRegionQuerySpec extends AnyFunSuite {
         spark.read.format(fmt).option(opt, "chr9:1-2").load(path).count()
       }
       assert(e.getMessage.contains(s"'$opt'") && e.getMessage.contains(s"'$fmt'"), e.getMessage)
+    }
+  }
+
+  // ---- chunk packing ----
+
+  private def scanPartitions(df: DataFrame): Seq[graft.sources.core.GraftInputPartition] = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      .head.scan.toBatch.planInputPartitions().toSeq
+      .map(_.asInstanceOf[graft.sources.core.GraftInputPartition])
+  }
+
+  /** The packed plan of `regions` over one indexed file: at most one
+    * partition per core, each chunk of the unpacked (one partition per
+    * chunk) plan in exactly one partition and in offset order, and the
+    * collected rows equal to the full scan filtered by the regions, in
+    * file order. */
+  private def checkPacked(fmt: String, path: String, regions: Seq[String]): Unit = {
+    val format = graft.sources.Formats.byName(fmt)
+    val c = format.coordinates.get
+    val cols = Seq(c.contig, c.start, c.end)
+    val df = spark.read.format(fmt).option("regions", regions.mkString(";")).load(path)
+    val parts = scanPartitions(df)
+    val unpacked = format.regionChunks(path, regions, spark.sessionState.newHadoopConf()).get
+    assert(parts.nonEmpty && parts.forall(_.bgzfChunk), s"$fmt: ${parts.take(3)}")
+    assert(parts.size <= spark.sparkContext.defaultParallelism, s"$fmt: ${parts.size} partitions")
+    assert(parts.flatMap(_.chunkRanges) == unpacked, fmt)
+    assert(parts.forall(p => p.start == p.chunks.head._1 && p.end == p.chunks.last._2), fmt)
+    val shift = if (c.zeroBasedStart) 1L else 0L
+    val m = Regions.matcher(regions.map(Regions.parse))
+    val want = spark.read.format(fmt).load(path).selectExpr(cols: _*).collect()
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && {
+        val lo = r.getLong(1) + shift
+        m.overlaps(r.getString(0), lo, if (r.isNullAt(2)) lo else r.getLong(2))
+      }).map(_.toString).toSeq
+    val got = df.selectExpr(cols: _*).collect().map(_.toString).toSeq
+    assert(want.nonEmpty && got == want, s"$fmt: ${got.size} rows, want ${want.size}")
+  }
+
+  test("20-region panels over the BAM, VCF and BCF fixtures: packed, each chunk once, file order") {
+    for ((fmt, path) <- Seq(("bam", s"$F/bam/indexed.bam"), ("vcf", s"$F/vcf/indexed.vcf.gz"),
+                            ("bcf", s"$F/vcf/indexed.bcf"))) {
+      // regions around seeded records of the file, 10 bp to 200 kb wide
+      val c = graft.sources.Formats.byName(fmt).coordinates.get
+      val rows = spark.read.format(fmt).load(path).selectExpr(c.contig, c.start)
+        .where(s"${c.contig} IS NOT NULL").collect()
+      val rnd = new scala.util.Random(11)
+      val regions = (1 to 20).map { _ =>
+        val r = rows(rnd.nextInt(rows.length))
+        val lo = math.max(1L, r.getLong(1) - rnd.nextInt(1000))
+        s"${r.getString(0)}:$lo-${lo + math.pow(10, 1 + 4.3 * rnd.nextDouble()).toLong}"
+      }
+      checkPacked(fmt, path, regions)
+    }
+  }
+
+  test("a packed partition reads its chunks in turn: rows == its chunks read one partition each") {
+    import graft.sources.core.{GraftConf, GraftInputPartition, GraftReaderFactory}
+    import graft.sources.{BaiIndex, CsiIndex, TabixIndex}
+    val conf = spark.sessionState.newHadoopConf()
+    for ((fmt, path, idx) <- Seq(
+        ("bam", s"$F/bam/indexed.bam", BaiIndex.load(s"$F/bam/indexed.bam", conf).get),
+        ("vcf", s"$F/vcf/indexed.vcf.gz", TabixIndex.load(s"$F/vcf/indexed.vcf.gz", conf).get),
+        ("bcf", s"$F/vcf/indexed.bcf", CsiIndex.load(s"$F/vcf/indexed.bcf", conf).get))) {
+      // every other leaf-bin chunk of the file: disjoint, record-bounded,
+      // with gaps between them, across both contigs
+      val leaves = idx.refs.flatMap(_.bins.filter(_._1 >= 4681).values.flatten)
+        .map(c => (c.beg, c.end)).sortBy(_._1)
+      val chunks = leaves.zipWithIndex.collect { case (c, i) if i % 2 == 0 => c }
+      assert(chunks.size > 20, s"$fmt: ${chunks.size} chunks")
+      val full = spark.read.format(fmt).load(path).schema
+      val c = graft.sources.Formats.byName(fmt).coordinates.get
+      val required = org.apache.spark.sql.types.StructType(Seq(c.contig, c.start).map(full(_)))
+      val factory = GraftReaderFactory(graft.sources.Formats.byName(fmt), full, required,
+        Map("path" -> path), GraftConf.broadcast(spark))
+      def read(p: GraftInputPartition): Seq[String] = {
+        val r = factory.createReader(p)
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => r.get().toSeq(required).mkString(":")).toList
+        finally r.close()
+      }
+      val len = new java.io.File(path).length
+      val packed = read(GraftInputPartition(path, chunks.head._1, chunks.last._2, len,
+        bgzfChunk = true, chunks = chunks))
+      val one = chunks.flatMap(c => read(GraftInputPartition(path, c._1, c._2, len, bgzfChunk = true)))
+      assert(packed.nonEmpty && packed == one, s"$fmt: ${packed.size} vs ${one.size} rows")
     }
   }
 
@@ -297,18 +385,29 @@ class MultiRegionQuerySpec extends AnyFunSuite {
     assert(got == want)
     assert(want.size > 100, s"panel matched only ${want.size} rows — fixture too sparse to prove anything")
 
-    // scale gate: the planned partition set must be index-chunk reads,
-    // COALESCED far below one-partition-per-region
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val sel = multi.selectExpr("seqname", "start")
-    sel.collect()
-    val parts = sel.queryExecution.executedPlan
-      .collect { case b: BatchScanExec => b }
-      .head.scan.toBatch.planInputPartitions().toSeq
-      .map(_.asInstanceOf[graft.sources.core.GraftInputPartition])
-    assert(parts.nonEmpty && parts.forall(_.bgzfChunk),
-      s"expected index-chunk partitions, got ${parts.take(3)}")
-    assert(parts.size < 100,
-      s"${parts.size} partitions for 1000 regions — chunk coalescing is not working")
+    // scale gate: index-chunk reads, packed into at most one partition
+    // per core, each chunk once, rows in file order
+    checkPacked("gff", dataFile, regions)
+  }
+
+  test("20 far-apart regions over a written 2 MB GFF: 20 index chunks, packed per core") {
+    // high-entropy attributes keep the file ~2.5 MB compressed, so the
+    // regions, 2 Mb apart, sit more than the 64 KB coalescing gap apart
+    // and stay 20 chunks; one partition each would be 20 tasks
+    val df = spark.range(40000).selectExpr("'chr1' AS seqname", "'synth' AS source",
+      "'feature' AS type", "id * 1000 + 1 AS start", "id * 1000 + 500 AS end",
+      "cast(1.0 as float) AS score", "'+' AS strand", "cast(null as string) AS phase",
+      "map('h', array(sha2(cast(id as string), 256))) AS attributes")
+    val dir = java.nio.file.Files.createTempDirectory("graft-packed").toString
+    df.repartition(1).sortWithinPartitions("start").write.mode("overwrite")
+      .option("compression", "bgzf").option("index", "tabix").format("gff").save(dir)
+    val dataFile = new java.io.File(dir).listFiles.map(_.getPath).find(_.endsWith(".gff.gz")).get
+    val regions = (0 until 20).map(i => s"chr1:${i * 2000000L + 7000}-${i * 2000000L + 8000}")
+    val unpacked = graft.sources.GffFormat.regionChunks(dataFile, regions,
+      spark.sessionState.newHadoopConf()).get
+    assert(unpacked.size == 20, unpacked.size)
+    checkPacked("gff", dataFile, regions)
+    assert(scanPartitions(GraftIO.read_gff(spark, dataFile, Map("regions" -> regions.mkString(";"))))
+      .exists(_.chunks.size > 1))
   }
 }

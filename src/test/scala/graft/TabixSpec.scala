@@ -105,4 +105,50 @@ class TabixSpec extends AnyFunSuite {
     val fallback = partitions(GraftIO.vcf_query(spark, "src/test/resources/fixtures/vcf/test.vcf.gz", "1"))
     assert(fallback.forall(!_.bgzfChunk))
   }
+
+  test("max_off: the chunks right of a region's end are dropped (written GFF + tabix)") {
+    // chr1 window k (16 kb leaf bins): a 10 bp feature at k*16384+101 and
+    // a 20 kb one at k*16384+201 (two leaves: a level-4 bin, or a
+    // higher one where it crosses a 128 kb or 1 Mb boundary). The long
+    // features interleave with the short ones in file order, so each is
+    // its own chunk of the upper bins the region's bin list includes.
+    val df = spark.range(64).selectExpr("id AS k").selectExpr(
+      "explode(array(k * 16384 + 101, k * 16384 + 201)) AS start")
+      .selectExpr("'chr1' AS seqname", "'synth' AS source", "'feature' AS type", "start",
+        "start + IF(start % 16384 = 101, 9, 19999) AS end", "cast(1.0 as float) AS score",
+        "'+' AS strand", "cast(null as string) AS phase",
+        "map('s', array(cast(start as string))) AS attributes")
+    val dir = java.nio.file.Files.createTempDirectory("graft-maxoff").toString
+    df.repartition(1).sortWithinPartitions("start").write.mode("overwrite")
+      .option("compression", "bgzf").option("index", "tabix").format("gff").save(dir)
+    val data = new java.io.File(dir).listFiles.map(_.getPath).find(_.endsWith(".gff.gz")).get
+    val idx = graft.sources.TabixIndex.load(data, spark.sessionState.newHadoopConf()).get
+    // window 9's short feature: its leaf, the long features of windows
+    // 8 and 9 (the linear index starts at window 8's), one chunk merged;
+    // without the right-side clip also windows 10-14's long features
+    // (level-4 bin), 15, 23, ..., 55 (level 3) and 63 (level 2): 13
+    val lo = 9 * 16384 + 101
+    val chunks = idx.queryByName("chr1", lo - 1, lo + 9)
+    assert(chunks.size == 1, chunks)
+    val got = GraftIO.read_gff(spark, data, Map("region" -> s"chr1:$lo-${lo + 9}"))
+      .selectExpr("start").collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == Seq(8 * 16384 + 201L, lo.toLong))
+  }
+
+  test("max_off: clamps a chunk that straddles it; walks up from a first child") {
+    import graft.sources.BinnedIndex.{Chunk, Index, RefIndex}
+    // leaves 4681 (window 0) .. 4688 (window 7) share parent 585; 4689
+    // is the first child of 586
+    val ref = RefIndex(Map(
+      4681 -> Seq(Chunk(100, 200)), 4682 -> Seq(Chunk(300, 400)), 4688 -> Seq(Chunk(550, 560)),
+      585 -> Seq(Chunk(150, 350), Chunk(400, 500), Chunk(650, 660)),
+      586 -> Seq(Chunk(600, 700))), Array.fill(8)(100L))
+    val idx = Index(IndexedSeq("c"), IndexedSeq(ref))
+    // max_off = 300 (leaf 4682): [150,350) clamps to [150,300), later chunks go
+    assert(idx.queryByRid(0, 0, 16384) == Seq(Chunk(100, 300)))
+    // window 7: the next leaf 4689 is a first child, so its parent 586
+    // gives max_off = 600
+    assert(idx.queryByRid(0, 7 * 16384, 8 * 16384) ==
+      Seq(Chunk(150, 350), Chunk(400, 500), Chunk(550, 560)))
+  }
 }
