@@ -84,18 +84,14 @@ object BamFormat extends GraftFormat {
   /** BAI fast path (falls back to scan+filter). rid comes from the BAM
     * header's reference order, read on the driver ONCE at plan time,
     * however many regions the batch carries. */
-  override def regionChunks(path: String, regions: Seq[String],
+  override def regionChunks(path: String, regions: Seq[Regions.Region],
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     BaiIndex.load(path, conf).map { idx =>
       val raw = GraftFiles.open(path, conf)
       val refs =
         try readHeader(new DataInputStream(Compression.wrap(raw.stream, "gzip")))
         finally raw.in.close()
-      Regions.mergeChunks(regions.flatMap { region =>
-        val (chr, lo, hi) = VcfFormat.parseRegion(region)
-        idx.queryByRid(refs.indexOf(chr), math.max(lo - 1, 0), math.min(hi, idx.maxPos))
-          .map(c => (c.beg, c.end))
-      })
+      idx.chunksFor(regions, refs.indexOf(_))
     }
 
   override def coordinates: Option[Coordinates] = Some(Coordinates("reference", "start", "end"))

@@ -86,7 +86,7 @@ object BcfFormat extends GraftFormat {
   /** CSI fast path (falls back to scan+filter). rid comes from the BCF
     * header's ##contig order, read on the driver ONCE at plan time,
     * however many regions the batch carries. */
-  override def regionChunks(path: String, regions: Seq[String],
+  override def regionChunks(path: String, regions: Seq[Regions.Region],
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     CsiIndex.load(path, conf).map { idx =>
       val raw = GraftFiles.open(path, conf)
@@ -94,19 +94,11 @@ object BcfFormat extends GraftFormat {
         try dictionaries(headerText(new DataInputStream(
           Compression.wrap(raw.stream, "gzip"))).linesIterator.toSeq)._2
         finally raw.in.close()
-      Regions.mergeChunks(regions.flatMap { region =>
-        val (chr, lo, hi) = VcfFormat.parseRegion(region)
-        // name-addressed when the sidecar carries names (our own writer's
-        // tabix-flavored aux — robust when a part file holds only later
-        // contigs and rids renumber); rid arithmetic through the header's
-        // ##contig order otherwise (htslib BCF CSIs have empty aux)
-        val chunks =
-          if (idx.names.nonEmpty)
-            idx.queryByName(chr, math.max(lo - 1, 0), math.min(hi, idx.maxPos))
-          else
-            idx.queryByRid(contigs.indexOf(chr), math.max(lo - 1, 0), math.min(hi, idx.maxPos))
-        chunks.map(c => (c.beg, c.end))
-      })
+      // name-addressed when the sidecar carries names (our own writer's
+      // tabix-flavored aux — robust when a part file holds only later
+      // contigs and rids renumber); rid arithmetic through the header's
+      // ##contig order otherwise (htslib BCF CSIs have empty aux)
+      if (idx.names.nonEmpty) idx.chunksFor(regions) else idx.chunksFor(regions, contigs.indexOf(_))
     }
 
   override def coordinates: Option[Coordinates] = Some(Coordinates("chrom", "pos", "pos"))

@@ -191,7 +191,7 @@ object GraftIO {
     s.createDataset(regions)
       .repartition(math.min(regions.size, 32))
       .flatMap { r =>
-        val (name, lo, hi) = VcfFormat.parseRegion(r)
+        val (name, lo, hi) = Regions.parse(r)
         byName.value.get(name).map { e =>
           val lo2 = math.max(lo, 1L)
           val hi2 = math.min(hi, length(e))

@@ -154,7 +154,7 @@ abstract class GffLikeFormat(val name: String, col8: String) extends GraftFormat
     * .tbi sits next to the data). Same contract as the VCF/BCF/BAM
     * indexed queries: the index only prunes I/O; the scan's region row
     * test decides membership. */
-  override def regionChunks(path: String, regions: Seq[String],
+  override def regionChunks(path: String, regions: Seq[Regions.Region],
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     TabixChunks.forRegions(path, regions, conf)
 
@@ -259,7 +259,7 @@ object BedFormat extends GraftFormat {
   /** Tabix fast path for bgzipped BED, same contract as the GFF-like
     * formats (the index only prunes; the scan's region row test decides
     * membership). */
-  override def regionChunks(path: String, regions: Seq[String],
+  override def regionChunks(path: String, regions: Seq[Regions.Region],
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     TabixChunks.forRegions(path, regions, conf)
 

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-import graft.sources.core.Bgzf
+import graft.sources.core.{Bgzf, Regions}
 
 /** Binning-index machinery shared by tabix (.tbi), BAM (.bai) and CSI
   * (.csi) — the reference's indexed-region fast path (noodles-backed
@@ -30,11 +30,22 @@ object BinnedIndex {
       * silently drop matching records past it. */
     def maxPos: Long = 1L << (minShift + 3 * depth)
 
-    def queryByName(seq: String, beg0: Long, end0: Long): Seq[Chunk] = {
-      val rid = names.indexOf(seq)
-      if (rid < 0) Seq.empty // unknown contig: provably empty
-      else queryByRid(rid, beg0, end0)
-    }
+    /** [[queryByRid]] on the reference the index names `seq`; an
+      * unknown contig is provably empty. */
+    def queryByName(seq: String, beg0: Long, end0: Long): Seq[Chunk] =
+      queryByRid(names.indexOf(seq), beg0, end0)
+
+    /** The chunks of a region set, as merged and coalesced (begin, end)
+      * voff pairs ([[Regions.mergeChunks]]): each 1-based inclusive
+      * region probed at [lo − 1, min(hi, maxPos)) on the reference
+      * `rid` maps its contig to (−1 = absent: no chunks). `rid` is the
+      * index's own names, or for an index without names (BAI, BCF's
+      * CSI) the data file's header dictionary. */
+    def chunksFor(regions: Seq[Regions.Region],
+                  rid: String => Int = names.indexOf(_)): Seq[(Long, Long)] =
+      Regions.mergeChunks(regions.flatMap { case (chr, lo, hi) =>
+        queryByRid(rid(chr), math.max(lo - 1, 0), math.min(hi, maxPos)).map(c => (c.beg, c.end))
+      })
 
     /** Merged chunk ranges overlapping [beg0, end0) on reference rid,
       * trimmed on the left by the linear index (CSI: the leaf's loffset)
@@ -137,21 +148,13 @@ object BinnedIndex {
 }
 
 /** The shared .tbi/.csi chunk lookup for name-addressed text formats
-  * (VCF, GFF/GTF, BED): load whichever sidecar exists ONCE, probe it
-  * per region, union + coalesce the chunks. One implementation so a
-  * fix to the clamp/merge logic lands everywhere. */
+  * (VCF, GFF/GTF, BED): load whichever sidecar exists ONCE and probe it
+  * by the names it carries. */
 object TabixChunks {
-  def forRegions(path: String, regions: Seq[String],
-                 conf: Configuration): Option[Seq[(Long, Long)]] = {
-    if (!path.toLowerCase.endsWith(".gz")) return None
-    TabixIndex.load(path, conf).orElse(CsiIndex.load(path, conf)).map { idx =>
-      graft.sources.core.Regions.mergeChunks(regions.flatMap { region =>
-        val (chr, lo, hi) = graft.sources.core.Regions.parse(region)
-        idx.queryByName(chr, math.max(lo - 1, 0), math.min(hi, idx.maxPos))
-          .map(c => (c.beg, c.end))
-      })
-    }
-  }
+  def forRegions(path: String, regions: Seq[Regions.Region],
+                 conf: Configuration): Option[Seq[(Long, Long)]] =
+    if (!path.toLowerCase.endsWith(".gz")) None
+    else TabixIndex.load(path, conf).orElse(CsiIndex.load(path, conf)).map(_.chunksFor(regions))
 }
 
 /** Tabix .tbi: BGZF payload, magic "TBI\1", named references. */

@@ -161,14 +161,11 @@ object VcfFormat extends GraftFormat {
   /** Tabix fast path for bgzipped VCF (falls back to scan+filter):
     * index loaded once, probed per region, chunks unioned+coalesced
     * ([[TabixChunks]] — shared with the GFF-like and BED formats). */
-  override def regionChunks(path: String, regions: Seq[String],
+  override def regionChunks(path: String, regions: Seq[Regions.Region],
                             conf: Configuration): Option[Seq[(Long, Long)]] =
     TabixChunks.forRegions(path, regions, conf)
 
   override def coordinates: Option[Coordinates] = Some(Coordinates("chrom", "pos", "pos"))
-
-  /** Region grammar: 'chr' or 'chr:start-end' (1-based inclusive). */
-  def parseRegion(r: String): (String, Long, Long) = Regions.parse(r)
 
   override def read(split: GraftSplit, schema: StructType, in: InputStream,
                     options: Map[String, String]): Iterator[Array[Any]] = {

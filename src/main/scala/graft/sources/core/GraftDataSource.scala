@@ -122,8 +122,8 @@ final case class GraftScanBuilder(format: GraftFormat, full: StructType,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = StructType(requiredSchema.fields.map(f => full(full.fieldIndex(f.name))))
 
-  /** Keep every filter for index pruning ([[GraftPlanning]]) and hand
-    * all of them back: Spark's Filter above the scan evaluates them (the
+  /** Keep every filter for region inference ([[build]]) and hand all
+    * of them back: Spark's Filter above the scan evaluates them (the
     * reference's division of labor — DataFusion applies pushed
     * predicates above its scan too). The scan's only row test of its own
     * is region membership. */
@@ -133,17 +133,26 @@ final case class GraftScanBuilder(format: GraftFormat, full: StructType,
   }
   override def pushedFilters(): Array[Filter] = pushed
 
+  /** Resolve the scan's regions once: the `region`/`regions` options
+    * if set, else what the format's coordinates infer from the pushed
+    * filters. None = no regions (full scan, no row test); Some(Nil) =
+    * provably empty. Index pruning and the reader's row test both read
+    * this one value. */
   override def build(): Scan = {
     val regionOpt = options.keys.find(k => k.equalsIgnoreCase("region") || k.equalsIgnoreCase("regions"))
     if (regionOpt.isDefined && format.coordinates.isEmpty)
       throw new IllegalArgumentException(s"option '${regionOpt.get}' needs genomic " +
         s"coordinates; format '${format.name}' has none")
-    GraftScan(format, full, required, pushed, options)
+    val explicit = Regions.fromOptions(options)
+    val regions =
+      if (explicit.nonEmpty) Some(explicit.map(Regions.parse))
+      else format.coordinates.flatMap(_.regionsFrom(pushed.toSeq))
+    GraftScan(format, full, required, options, regions)
   }
 }
 
 final case class GraftScan(format: GraftFormat, full: StructType, required: StructType,
-                           filters: Array[Filter], options: Map[String, String])
+                           options: Map[String, String], regions: Option[Seq[Regions.Region]])
     extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -192,23 +201,23 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
     override def numRows(): java.util.OptionalLong = rows
   }
   override def description(): String =
-    s"GraftScan(${format.name}, cols=[${required.fieldNames.mkString(",")}], " +
-      s"filters=[${filters.mkString(",")}])"
+    s"GraftScan(${format.name}, cols=[${required.fieldNames.mkString(",")}]" +
+      regions.fold("")(rs => s", regions=${rs.size}") + ")"
 
   override def planInputPartitions(): Array[InputPartition] =
     GraftPlanning.partitionsFor(format, files, GraftPlanning.maxSplitOf(options),
-      options, conf, filters.toSeq).toArray
+      options, conf, regions).toArray
 
   /** Micro-batch streaming over an arriving-files directory: the same
-    * formats, split planning, projection/filter plumbing, and reader as
+    * formats, split planning, projection, regions, and reader as
     * the batch path, driven by a file-set offset (see
     * [[GraftMicroBatchStream]]). */
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    GraftMicroBatchStream(format, full, required, filters, options,
+    GraftMicroBatchStream(format, full, required, options, regions,
       GraftConf.broadcast(SparkSession.active))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(format, full, required, options, bconf)
+    GraftReaderFactory(format, full, required, options, regions.map(Regions.matcher), bconf)
 }
 
 /** Input-partition planning shared by the batch scan and the
@@ -229,15 +238,24 @@ private[core] object GraftPlanning {
     maxSplit
   }
 
+  /** A scan's partitions for its resolved `regions` (see
+    * [[GraftScanBuilder.build]]). With regions, each file is read
+    * through its index when the format has one (tabix for VCF, BAI for
+    * BAM, CSI for BCF — the reference's noodles-backed indexed queries,
+    * SURVEY.md §3.3): the format loads the index once and returns one
+    * merged chunk set for all the regions, and executors read only
+    * those blocks, a file's chunks packed into about one partition per
+    * core of the scan's total chunk bytes. Provably empty regions plan
+    * no partition; a file without an index is read in full
+    * ([[fileSplits]]). */
   def partitionsFor(format: GraftFormat, files: Seq[org.apache.hadoop.fs.FileStatus],
                     maxSplit: Long, options: Map[String, String],
                     conf: Configuration,
-                    filters: Seq[Filter] = Nil): Seq[GraftInputPartition] = {
-    val indexed = files.map(st =>
-      st -> indexedChunks(format, st.getPath.toString, options, conf, filters))
-    // index-driven pruning: executors read only the blocks the index
-    // says can match, a file's chunks packed into about one partition
-    // per core of the scan's total chunk bytes
+                    regions: Option[Seq[Regions.Region]]): Seq[GraftInputPartition] = {
+    val indexed = files.map(st => st -> regions.flatMap {
+      case Nil => Some(Nil)
+      case rs => format.regionChunks(st.getPath.toString, rs, conf)
+    })
     lazy val target = {
       val total = indexed.flatMap(_._2).flatten.map(chunkBytes).sum
       val spark = SparkSession.active
@@ -325,34 +343,6 @@ private[core] object GraftPlanning {
         s"($len bytes); raise maxSplitBytes")
     n.toInt
   }
-
-  /** Index fast path, delegated to the format (tabix for VCF, BAI for
-    * BAM, CSI for BCF — the reference's noodles-backed indexed queries,
-    * SURVEY.md §3.3). Handles both the single `region` option and the
-    * batched `regions` list ([[Regions]]): the format loads its index
-    * once and returns one merged chunk set for the whole batch.
-    * Phase-1 scan+filter remains the fallback and the correctness
-    * baseline. */
-  private def indexedChunks(format: GraftFormat, path: String,
-      options: Map[String, String], conf: Configuration,
-      filters: Seq[Filter]): Option[Seq[(Long, Long)]] = {
-    val explicit = Regions.fromOptions(options)
-    // no explicit region? infer one from the pushed filters — a
-    // declarative `WHERE chrom = '1' AND pos BETWEEN a AND b` prunes
-    // through the index exactly like the region option (soundness
-    // argument at [[Coordinates]]; Spark re-applies the filters above
-    // the scan either way)
-    val inferred: Option[Seq[String]] =
-      if (explicit.nonEmpty) Some(explicit)
-      else format.coordinates.flatMap(_.regionsFrom(filters))
-    inferred match {
-      case None => None
-      // contradictory conjunction: zero partitions, PROVABLE from the
-      // filters alone — no index required
-      case Some(Nil) => Some(Seq.empty)
-      case Some(rs) => format.regionChunks(path, rs, conf)
-    }
-  }
 }
 
 /** One task's input. An index-chunk partition (`bgzfChunk`) reads the
@@ -367,30 +357,34 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
   def chunkRanges: Seq[(Long, Long)] = if (chunks.isEmpty) Seq((start, end)) else chunks
 }
 
+/** Reads a scan's partitions. `inRegion` is the membership test of the
+  * scan's resolved regions (built once on the driver), None when the
+  * scan has none. */
 final case class GraftReaderFactory(format: GraftFormat, full: StructType,
                                     required: StructType, options: Map[String, String],
+                                    inRegion: Option[Regions.Matcher],
                                     bconf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
   /** The open path: (full-schema value iterator, close), filtered by
-    * region membership when the read carries a region option;
-    * `createReader` projects it to the required columns. */
+    * region membership when the scan has regions; `createReader`
+    * projects it to the required columns. */
   private def openIterator(p: GraftInputPartition): (Iterator[Array[Any]], () => Unit) = {
     // session Hadoop conf broadcast from the driver: spark.hadoop.* (s3a
     // credentials, endpoints, ...) must reach executor-side FS access
     val conf = bconf.value.value
     // the scan's one row test, from the format's declared coordinates
-    // (build() rejects a region option on a format without them); every
+    // (a scan has regions only when its format declares them); every
     // other predicate is left to Spark's Filter above the scan
-    val inRegion = Regions.matcherFromOptions(options).map(m => (format.coordinates.get, m))
+    val test = inRegion.map(m => (format.coordinates.get, m))
     // projection (Spark adds the post-scan filters' columns) plus the
     // coordinates the region test reads: parsers may skip the work of
     // materializing any other top-level column
     val needed = Some(required.fieldNames.toSet ++
-      inRegion.toSeq.flatMap { case (c, _) => Seq(c.contig, c.start, c.end) })
+      test.toSeq.flatMap { case (c, _) => Seq(c.contig, c.start, c.end) })
     def rows(split: GraftSplit, stream: java.io.InputStream): Iterator[Array[Any]] = {
       val it = format.read(split, full, stream, options)
-      inRegion.fold(it) { case (c, m) => it.filter(c.matches(full, m)) }
+      test.fold(it) { case (c, m) => it.filter(c.matches(full, m)) }
     }
     val raw = GraftFiles.open(p.path, conf)
     val codec = format.forcedCodec.getOrElse(Compression.of(p.path, options)._1)

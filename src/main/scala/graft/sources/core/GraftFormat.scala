@@ -46,23 +46,25 @@ trait GraftFormat extends Serializable {
   /** Writer support (None = read-only format). */
   def formatter: Option[RecordFormatter] = None
 
-  /** Index-driven fast path: when a region query (single region or a
-    * batched region LIST — see [[Regions]]) can be served from a
-    * sibling index file (.tbi/.bai/.csi), return the merged BGZF
-    * virtual-offset chunks to scan; None = full scan + filter fallback.
-    * Implementations load the index and any header dictionary ONCE and
-    * probe it per region — a thousand-region panel must not mean a
-    * thousand index loads. The scan's region row test (see
-    * [[Coordinates]]) is applied to chunk rows too, so an index can only
-    * prune I/O, never change results. */
-  def regionChunks(path: String, regions: Seq[String],
+  /** Index-driven fast path: when a scan's regions (a region option,
+    * a batched region LIST — see [[Regions]] — or regions inferred from
+    * pushed filters) can be served from a sibling index file
+    * (.tbi/.bai/.csi), return the merged BGZF virtual-offset chunks to
+    * scan; None = full scan. Implementations load the index and any
+    * header dictionary ONCE and probe it per region
+    * ([[graft.sources.BinnedIndex.Index.chunksFor]]) — a thousand-region
+    * panel must not mean a thousand index loads. The scan's region row
+    * test (see [[Coordinates]]) reads the same regions and is applied
+    * to chunk rows too, so an index can only prune I/O, never change
+    * results. */
+  def regionChunks(path: String, regions: Seq[Regions.Region],
                    conf: org.apache.hadoop.conf.Configuration): Option[Seq[(Long, Long)]] = None
 
   /** The columns that place a record on the genome, or None for a
     * format whose records have no position (FASTQ, SAM text, ...). One
-    * declaration serves both region uses: the scan's row test for the
-    * `region`/`regions` options, and index-pruning regions inferred from
-    * pushed filters (see [[Coordinates]]). */
+    * declaration serves both sources of a scan's regions: the
+    * `region`/`regions` options and regions inferred from pushed
+    * filters (see [[Coordinates]]). */
   def coordinates: Option[Coordinates] = None
 
   /** Schema; `paths` lets header-driven formats (VCF) peek at a file. */
@@ -83,33 +85,39 @@ trait GraftFormat extends Serializable {
   * `pos` as both start and end.
   *
   * Row test ([[matches]]): the record overlaps a region. A null contig
-  * or start never matches; a null end matches as the point at start.
+  * or start never matches; a null end, or an end before the start (a
+  * BAM read whose CIGAR consumes no reference, such as `10S`), matches
+  * as the point at start — the one base htslib's `bam_endpos` gives
+  * such a record.
   *
   * Filter inference: `WHERE contig = '1' AND start BETWEEN a AND b`
-  * hits the tabix/CSI/BAI index with no region option — declarative
+  * gives the scan the regions a `region` option would — declarative
   * predicates become index pruning the way parquet predicates become
-  * partition pruning (see [[Regions.fromFilters]]). Soundness for
-  * every indexed format, point- or interval-anchored: a record whose
-  * START lies in [lo, hi] necessarily OVERLAPS [lo, hi], and the
-  * binning index returns every record overlapping the query region —
-  * so the pruned chunk set covers every row the filters can accept,
-  * and Spark re-applies the filters above the scan. Filters on the end
-  * column are ignored (less pruning, never less data). */
+  * partition pruning, and the same regions become the scan's row test
+  * (see [[Regions.fromFilters]]). Soundness for every format, point- or
+  * interval-anchored: a record whose START lies in [lo, hi] OVERLAPS
+  * [lo, hi] (its end is at or after its start, or reads as the point at
+  * start), and the binning index returns every record overlapping the
+  * query region — so neither the pruned chunk set nor the row test
+  * drops a row the filters accept, and Spark re-applies the filters
+  * above the scan. Filters on the end column are ignored (less pruning,
+  * never less data). */
 final case class Coordinates(contig: String, start: String, end: String,
                              zeroBasedStart: Boolean = false) {
 
-  /** Row test over full-schema rows of `schema` for one read's regions. */
+  /** Row test over full-schema rows of `schema` for one scan's regions. */
   def matches(schema: StructType, regions: Regions.Matcher): Array[Any] => Boolean = {
     val (c, s, e) = (schema.fieldIndex(contig), schema.fieldIndex(start), schema.fieldIndex(end))
     val shift = if (zeroBasedStart) 1L else 0L
     vals => vals(c) != null && vals(s) != null && {
       val lo = vals(s).asInstanceOf[Long] + shift
-      regions.overlaps(vals(c).toString, lo, if (vals(e) == null) lo else vals(e).asInstanceOf[Long])
+      regions.overlaps(vals(c).toString, lo,
+        if (vals(e) == null) lo else math.max(vals(e).asInstanceOf[Long], lo))
     }
   }
 
-  /** Index-pruning regions implied by pushed filters. */
-  def regionsFrom(filters: Seq[org.apache.spark.sql.sources.Filter]): Option[Seq[String]] =
+  /** Regions implied by pushed filters. */
+  def regionsFrom(filters: Seq[org.apache.spark.sql.sources.Filter]): Option[Seq[Regions.Region]] =
     Regions.fromFilters(filters, contig, start, if (zeroBasedStart) 1L else 0L)
 }
 
@@ -130,7 +138,7 @@ final case class GraftSplit(path: String, start: Long, end: Long, fileLen: Long,
                             neededCols: Option[Set[String]] = None) {
   /** Runtime column-needs from Catalyst's pruning (projection and
     * post-scan filter columns, plus the declared coordinates when the
-    * read filters by region). Parsers still emit full-schema rows — ordinals
+    * scan has regions). Parsers still emit full-schema rows — ordinals
     * must not shift — but may SKIP THE WORK of materializing expensive
     * unneeded columns (VCF info struct / genotype strings, BAM
     * sequence/quality decode): declared pruning in ReadSchema is only

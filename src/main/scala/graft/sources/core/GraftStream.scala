@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
@@ -52,8 +51,8 @@ object GraftStreamOffset {
   * only reference has no analog for. Batch and stream share EVERYTHING
   * below the offset logic: split planning ([[GraftPlanning]] — large
   * uncompressed/BGZF files still fan out into byte-range partitions
-  * inside a micro-batch), compression handling, projection + filter
-  * plumbing, and the [[GraftReaderFactory]] record readers.
+  * inside a micro-batch), compression handling, projection, the scan's
+  * resolved regions, and the [[GraftReaderFactory]] record readers.
   *
   * Contract: files are immutable once they appear (the standard file-
   * stream assumption). A file observed to GROW between offsets fails
@@ -62,8 +61,8 @@ object GraftStreamOffset {
   */
 final case class GraftMicroBatchStream(format: GraftFormat, full: StructType,
                                        required: StructType,
-                                       filters: Array[Filter],
                                        options: Map[String, String],
+                                       regions: Option[Seq[Regions.Region]],
                                        bconf: Broadcast[SerializableConfiguration])
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
@@ -170,15 +169,13 @@ final case class GraftMicroBatchStream(format: GraftFormat, full: StructType,
         s"streaming input file vanished before its batch was planned: $path")
       statuses
     }
-    // same index pruning as the batch path, including regions inferred
-    // from pushed filters (their only use in the stream) — each arriving
-    // file reads only its matching chunks
-    GraftPlanning.partitionsFor(format, arrived, maxSplit, options, conf,
-      filters.toSeq).toArray
+    // same index pruning as the batch path: each arriving file reads
+    // only its matching chunks
+    GraftPlanning.partitionsFor(format, arrived, maxSplit, options, conf, regions).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(format, full, required, options, bconf)
+    GraftReaderFactory(format, full, required, options, regions.map(Regions.matcher), bconf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -10,6 +10,8 @@ package graft.sources.core
   *   - `regions` — a semicolon- or whitespace-separated LIST. Commas
   *     cannot delimit: the region grammar accepts them as digit
   *     separators inside positions (`chr1:1,000-2,000`).
+  * Without them, a scan takes its regions from its pushed filters
+  * ([[fromFilters]]).
   *
   * Semantics are the UNION of the regions: a record is returned once if
   * it matches any region (records are never duplicated — the I/O layer
@@ -21,9 +23,18 @@ package graft.sources.core
   */
 object Regions {
 
+  /** One resolved region: contig and 1-based inclusive [lo, hi]
+    * (hi = Long.MaxValue: open-ended). A scan resolves its regions to
+    * these once, and both index pruning and the row test read them. */
+  type Region = (String, Long, Long)
+
   /** Region grammar: 'chr' or 'chr:start-end' (1-based inclusive;
-    * commas in positions tolerated, open-ended 'chr:start-' allowed). */
-  def parse(r: String): (String, Long, Long) =
+    * commas in positions tolerated, open-ended 'chr:start-' allowed).
+    * The grammar splits at the first ':', so a contig whose name holds
+    * one (GRCh38 HLA contigs such as 'HLA-A*01:01:01:01') cannot be
+    * addressed through a `region`/`regions` option; a WHERE on the
+    * contig column reaches it ([[fromFilters]]). */
+  def parse(r: String): Region =
     try r.split(":", 2) match {
       case Array(chr)         => (chr, 1L, Long.MaxValue)
       case Array(chr, range0) =>
@@ -79,7 +90,7 @@ object Regions {
     }
   }
 
-  def matcher(regions: Seq[(String, Long, Long)]): Matcher =
+  def matcher(regions: Seq[Region]): Matcher =
     new Matcher(regions.groupBy(_._1).map { case (chr, rs) =>
       val sorted = rs.map(r => (math.max(r._2, 1L), r._3)).sortBy(_._1)
       val los = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -94,31 +105,28 @@ object Regions {
       chr -> (los.toArray, his.toArray)
     })
 
-  /** Matcher for a read's options, or None when no region option set. */
-  def matcherFromOptions(options: Map[String, String]): Option[Matcher] = {
-    val rs = fromOptions(options)
-    if (rs.isEmpty) None else Some(matcher(rs.map(parse)))
-  }
-
   /** Infer a region list from Catalyst's PUSHED FILTERS — the piece
     * that makes `WHERE chrom = '1' AND pos BETWEEN a AND b` hit the
     * tabix/CSI index with no region option at all: declarative
     * predicates become index pruning, exactly like partition pruning
-    * on a parquet table. Only used to PRUNE I/O (Spark re-applies
-    * every filter above the scan), so an inference that is too wide is
-    * merely less effective and one that cannot be made (no contig
-    * constraint, OR-shapes, casts) returns Nil = full scan. The
+    * on a parquet table. The scan uses the result as it uses a region
+    * option, to prune I/O and as its row test; both are sound because
+    * every row the conjunction accepts overlaps these regions, and
+    * Spark re-applies every filter above the scan. An inference that is
+    * too wide is merely less effective, and one that cannot be made (no
+    * contig constraint, OR-shapes, casts) returns None = full scan. The
     * filters array is an implicit conjunction, which is what makes
     * combining the chrom and pos constraints sound. `posShift` maps a
     * position column value to its 1-based coordinate (1 for a 0-based
-    * start column). */
-  /** Result grammar: None = cannot infer (full scan); Some(Nil) = the
+    * start column).
+    *
+    * Result grammar: None = cannot infer (full scan); Some(Nil) = the
     * conjunction is PROVABLY EMPTY (contradictory chrom equalities or
     * an inverted position range — zero partitions, no index needed);
     * Some(regions) = prune through the index with these. */
   def fromFilters(filters: Seq[org.apache.spark.sql.sources.Filter],
                   chromCol: String, posCol: String,
-                  posShift: Long = 0L): Option[Seq[String]] = {
+                  posShift: Long = 0L): Option[Seq[Region]] = {
     import org.apache.spark.sql.sources._
     val chroms = filters.collect {
       case EqualTo(c, v: String) if c == chromCol => Seq(v)
@@ -127,12 +135,6 @@ object Regions {
         vs.toSeq.map(_.asInstanceOf[String])
     }
     if (chroms.isEmpty) return None // no contig constraint -> cannot prune
-    // the region-string grammar cannot carry a ':' inside a contig name
-    // (GRCh38 HLA contigs like 'HLA-A*01:01:01:01') — parse would split
-    // at the first ':' and address a nonexistent reference, silently
-    // pruning real rows. Bail out to a full scan for the whole batch
-    // (dropping only the affected chrom would ALSO lose its rows).
-    if (chroms.exists(_.exists(_.contains(':')))) return None
     def longOf(v: Any): Option[Long] = v match {
       case l: Long => Some(l)
       case i: Int => Some(i.toLong)
@@ -149,17 +151,15 @@ object Regions {
       case LessThanOrEqual(c, v) if c == posCol => longOf(v)
       case EqualTo(c, v) if c == posCol => longOf(v)
     }.flatten
-    // clamp to 1-based coordinates: 'pos > -2' must not emit a region
-    // string with a leading '-' (widening a lower bound is always
-    // sound for pruning)
+    // clamp to 1-based coordinates (widening a lower bound is always
+    // sound)
     val lo = math.max(1L, if (los.isEmpty) 1L else los.max + posShift)
     val hi = if (his.isEmpty) Long.MaxValue else math.min(his.min, Long.MaxValue - posShift) + posShift
     // intersect the per-conjunct chrom sets (multiple EqualTo on the
     // same column is a contradiction unless equal; In ∧ EqualTo narrows)
     val set = chroms.map(_.toSet).reduce(_ intersect _)
     if (set.isEmpty || hi < lo) return Some(Nil) // provably empty
-    Some(set.toSeq.sorted.map(c =>
-      if (lo == 1L && hi == Long.MaxValue) c else s"$c:$lo-$hi"))
+    Some(set.toSeq.sorted.map(c => (c, lo, hi)))
   }
 
   /** Union per-region BGZF chunk lists into a minimal partition set:

@@ -10,8 +10,9 @@ import graft.sources.core.Regions
   * `WHERE chrom = '1' AND pos BETWEEN a AND b` must hit the tabix/CSI/
   * BAI index with NO region option — the genomic analog of parquet
   * partition pruning. Row results must equal the unpruned scan+filter
-  * (the index only prunes; Spark re-applies the filters), and the
-  * plan must actually carry chunk partitions. */
+  * (the index and the scan's row test only drop rows the filters
+  * reject; Spark re-applies the filters), and the plan must actually
+  * carry chunk partitions. */
 class FilterIndexPruningSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkTestSession.get
@@ -28,19 +29,19 @@ class FilterIndexPruningSpec extends AnyFunSuite {
 
   test("Regions.fromFilters: bounds math, In, contradictions, no-contig, hostile names") {
     import org.apache.spark.sql.sources._
+    val all = Long.MaxValue
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1")), "chrom", "pos")
-      .contains(Seq("1")))
+      .contains(Seq(("1", 1L, all))))
     assert(Regions.fromFilters(Seq(
       EqualTo("chrom", "1"), GreaterThan("pos", 100L), LessThanOrEqual("pos", 200L)),
-      "chrom", "pos").contains(Seq("1:101-200")))
+      "chrom", "pos").contains(Seq(("1", 101L, 200L))))
     assert(Regions.fromFilters(Seq(
       In("chrom", Array("2", "1")), GreaterThanOrEqual("pos", 5L)),
-      "chrom", "pos").get.toSet ==
-      Set(s"1:5-${Long.MaxValue}", s"2:5-${Long.MaxValue}"))
+      "chrom", "pos").get.toSet == Set(("1", 5L, all), ("2", 5L, all)))
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1"), EqualTo("pos", 7L)),
-      "chrom", "pos").contains(Seq("1:7-7")))
+      "chrom", "pos").contains(Seq(("1", 7L, 7L))))
     assert(Regions.fromFilters(Seq(EqualNullSafe("chrom", "1")), "chrom", "pos")
-      .contains(Seq("1")))
+      .contains(Seq(("1", 1L, all))))
     // contradictions: PROVABLY empty (Some(Nil)), not a full scan
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1"), In("chrom", Array("2"))),
       "chrom", "pos").contains(Nil))
@@ -49,17 +50,17 @@ class FilterIndexPruningSpec extends AnyFunSuite {
       "chrom", "pos").contains(Nil))
     // no contig constraint -> cannot prune (None = full scan)
     assert(Regions.fromFilters(Seq(GreaterThan("pos", 100L)), "chrom", "pos").isEmpty)
-    // a contig name the region grammar cannot carry (':' — GRCh38 HLA
-    // contigs) must bail to a full scan, never address a wrong contig
+    // a contig name holding ':' (GRCh38 HLA contigs) is carried whole:
+    // regions are values, not strings for the region grammar to split
     assert(Regions.fromFilters(Seq(
       EqualTo("chrom", "HLA-A*01:01:01:01"), EqualTo("pos", 100L)),
-      "chrom", "pos").isEmpty)
+      "chrom", "pos").contains(Seq(("HLA-A*01:01:01:01", 100L, 100L))))
     // negative bounds clamp to the 1-based coordinate space
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1"), GreaterThan("pos", -2L)),
-      "chrom", "pos").contains(Seq("1")))
+      "chrom", "pos").contains(Seq(("1", 1L, all))))
     // filters on other columns are ignored, not misread
     assert(Regions.fromFilters(Seq(EqualTo("ref", "A"), EqualTo("chrom", "1")),
-      "chrom", "pos").contains(Seq("1")))
+      "chrom", "pos").contains(Seq(("1", 1L, all))))
   }
 
   test("contradictory filters plan ZERO partitions (provable without the index)") {
@@ -110,25 +111,30 @@ class FilterIndexPruningSpec extends AnyFunSuite {
   }
 
   test("GFF: seqname/start filters prune through a written .tbi; rows exact") {
+    // one contig holds ':' (GRCh38 HLA naming), which no region option
+    // can address; WHERE prunes it through the index all the same
+    val hla = "HLA-A*01:01:01:01"
     val dir = java.nio.file.Files.createTempDirectory("graft-gff-where").toString
     spark.range(600).selectExpr(
-      "concat('chr', id % 2) AS seqname", "'synth' AS source", "'feature' AS type",
+      s"if(id % 2 = 0, '$hla', 'chr1') AS seqname", "'synth' AS source", "'feature' AS type",
       "id * 1000 + 1 AS start", "id * 1000 + 1500 AS end", "cast(1.0 as float) AS score",
       "'+' AS strand", "cast(null as string) AS phase",
       "map('rid', array(cast(id as string))) AS attributes")
       .repartition(1).sortWithinPartitions("seqname", "start")
       .write.mode("overwrite").option("compression", "bgzf").option("index", "tabix")
       .format("gff").save(dir)
-    val filtered = GraftIO.read_gff(spark, dir)
-      .where(col("seqname") === "chr1" && col("start").between(100000L, 200000L))
-      .selectExpr("seqname", "start", "end")
-    val parts = chunkParts(filtered)
-    assert(parts.nonEmpty && parts.forall(_.bgzfChunk),
-      s"expected .tbi chunk partitions, got ${parts.take(3)}")
-    val want = GraftIO.read_gff(spark, dir).selectExpr("seqname", "start", "end").collect()
-      .filter(r => r.getString(0) == "chr1" && r.getLong(1) >= 100000L && r.getLong(1) <= 200000L)
-      .map(_.toString).sorted.toSeq
-    assert(filtered.collect().map(_.toString).sorted.toSeq == want && want.size == 50)
+    for (contig <- Seq("chr1", hla)) {
+      val filtered = GraftIO.read_gff(spark, dir)
+        .where(col("seqname") === contig && col("start").between(100000L, 200000L))
+        .selectExpr("seqname", "start", "end")
+      val parts = chunkParts(filtered)
+      assert(parts.nonEmpty && parts.forall(_.bgzfChunk),
+        s"$contig: expected .tbi chunk partitions, got ${parts.take(3)}")
+      val want = GraftIO.read_gff(spark, dir).selectExpr("seqname", "start", "end").collect()
+        .filter(r => r.getString(0) == contig && r.getLong(1) >= 100000L && r.getLong(1) <= 200000L)
+        .map(_.toString).sorted.toSeq
+      assert(filtered.collect().map(_.toString).sorted.toSeq == want && want.size == 50, contig)
+    }
   }
 
   test("BAM: reference/start filters prune through the .bai") {

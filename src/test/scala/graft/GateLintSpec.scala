@@ -42,15 +42,22 @@ class GateLintSpec extends AnyFunSuite {
     assert(!e3.getMessage.contains("array_join"))
   }
 
-  test("region options become a row test in one place: the scan's reader factory") {
+  test("one place resolves a scan's regions: the scan builder") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
-    val users = java.nio.file.Files.walk(root).iterator().asScala
+    def users(call: String): Seq[String] = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filter(p => java.nio.file.Files.readAllLines(p).asScala.exists(l =>
-        l.contains("matcherFromOptions(") && !l.contains("def matcherFromOptions(")))
+        l.contains(call) && !l.trim.startsWith("def ") && !l.trim.startsWith("*")))
       .map(root.relativize(_).toString).toSeq.sorted
-    assert(users == Seq("graft/sources/core/GraftDataSource.scala"), users)
+    // options and pushed filters become regions in GraftScanBuilder.build
+    for (call <- Seq("Regions.fromOptions(", ".regionsFrom("))
+      assert(users(call) == Seq("graft/sources/core/GraftDataSource.scala"), s"$call: ${users(call)}")
+    // no format's regionChunks re-parses region strings; fasta/twobit
+    // region fetches (DataSources.fetchRegions) parse their own
+    assert(users("Regions.parse") ==
+      Seq("graft/sources/DataSources.scala", "graft/sources/core/GraftDataSource.scala"),
+      users("Regions.parse"))
   }
 
   test("the Hadoop conf is shipped from one place: GraftConf") {

@@ -66,6 +66,12 @@ class MultiRegionQuerySpec extends AnyFunSuite {
     assert(far.size == 2)
   }
 
+  private def scanOf(df: DataFrame): graft.sources.core.GraftScan = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      .head.scan.asInstanceOf[graft.sources.core.GraftScan]
+  }
+
   // ---- the scan's one region row test ----
 
   test("region reads == full read filtered by the declared coordinates, all nine formats") {
@@ -86,22 +92,63 @@ class MultiRegionQuerySpec extends AnyFunSuite {
       ("gff", s"$F/gff/test.gff", "sq1:14-20", 1),
       ("gtf", s"$F/gtf/test.gtf", "chr1:12228-12613", 1),
       ("bed", file("t.bed", "chr1\t99\t.\tpt\nchr1\t100\t200\tiv\nchr2\t5\t6\tx\n"),
-        "chr1:100-100", 1))
+        "chr1:100-100", 1),
+      // indexed fixtures: the region and the WHERE read index chunks
+      ("vcf", s"$F/vcf/indexed.vcf.gz", "1:100000-500000", 38),
+      ("bcf", s"$F/vcf/indexed.bcf", "1:2000000-20000000", 83),
+      ("bam", s"$F/bam/indexed.bam", "chr1:1000000-9000000", 59))
     for ((fmt, path, spec, n) <- cases) {
       val c = graft.sources.Formats.byName(fmt).coordinates.get
       val shift = if (c.zeroBasedStart) 1L else 0L
       val m = Regions.matcher(Regions.split(spec).map(Regions.parse))
       val full = spark.read.format(fmt).load(path).selectExpr(c.contig, c.start, c.end).collect()
-      val want = full.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && {
+      val hits = full.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && {
         val lo = r.getLong(1) + shift
         m.overlaps(r.getString(0), lo, if (r.isNullAt(2)) lo else r.getLong(2))
-      }).map(_.toString).sorted.toSeq
+      })
+      val want = hits.map(_.toString).sorted.toSeq
       assert(want.size == n && full.length > n, s"$fmt: ${want.size} of ${full.length}")
       val opt = if (spec.contains(';')) "regions" else "region"
-      val got = spark.read.format(fmt).option(opt, spec).load(path)
-        .selectExpr(c.contig, c.start, c.end).collect().map(_.toString).sorted.toSeq
+      val region = spark.read.format(fmt).option(opt, spec).load(path)
+      val got = region.selectExpr(c.contig, c.start, c.end).collect().map(_.toString).sorted.toSeq
       assert(got == want, s"$fmt $opt=$spec")
+      // the same regions inferred from a WHERE give the same row test:
+      // it returns the rows of its unpushable twin, whose scan has no
+      // regions and reads everything
+      val (ctg, a) = (hits.head.getString(0), hits.head.getLong(1))
+      val cond = s"${c.contig} = '$ctg' AND ${c.start} BETWEEN $a AND ${a + 100}"
+      val where = spark.read.format(fmt).load(path).where(cond)
+      val twin = spark.read.format(fmt).load(path)
+        .where(s"concat(${c.contig}, '') = '$ctg' AND ${c.start} + 0 BETWEEN $a AND ${a + 100}")
+      val whereRows = where.collect().map(_.toString).sorted.toSeq
+      assert(whereRows.nonEmpty && whereRows == twin.collect().map(_.toString).sorted.toSeq,
+        s"$fmt WHERE $cond")
+      assert(scanOf(where).regions.nonEmpty && scanOf(twin).regions.isEmpty, fmt)
+      if (Seq(".tbi", ".csi", ".bai").exists(e => new java.io.File(path + e).exists))
+        for (df <- Seq(region, where))
+          assert(scanPartitions(df).nonEmpty && scanPartitions(df).forall(_.bgzfChunk), s"$fmt $path")
     }
+  }
+
+  test("a read with no reference span is returned at its base by bam_query and by WHERE") {
+    // CIGAR 10S consumes no reference, so the read's end is start - 1;
+    // htslib counts it as the one base at start (bam_endpos), and so
+    // does the row test
+    val dir = java.nio.file.Files.createTempDirectory("graft-zero-span").toString
+    spark.range(3).selectExpr(
+      "concat('r', id) AS name", "0 AS flag", "'c1' AS reference",
+      "100 + id * 10 AS start", "109 + id * 10 AS end",
+      "'30' AS mapping_quality", "if(id = 1, '10S', '10M') AS cigar",
+      "cast(null as string) AS mate_reference",
+      "'ACGTACGTAC' AS sequence", "repeat('I', 10) AS quality_score")
+      .coalesce(1).write.mode("overwrite").option("refs", "c1:1000").format("bam").save(dir)
+    val r1 = GraftIO.read_bam_file_records(spark, dir).where("name = 'r1'")
+      .selectExpr("start", "end").collect().head
+    assert(r1.getLong(1) == r1.getLong(0) - 1, r1)
+    def names(df: DataFrame): Seq[String] = df.select("name").collect().map(_.getString(0)).toSeq
+    assert(names(GraftIO.bam_query(spark, dir, "c1:110-110")) == Seq("r1"))
+    assert(names(GraftIO.read_bam_file_records(spark, dir)
+      .where("reference = 'c1' AND start BETWEEN 110 AND 110")) == Seq("r1"))
   }
 
   test("a region option on a format without coordinates fails naming option and format") {
@@ -116,12 +163,9 @@ class MultiRegionQuerySpec extends AnyFunSuite {
 
   // ---- chunk packing ----
 
-  private def scanPartitions(df: DataFrame): Seq[graft.sources.core.GraftInputPartition] = {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      .head.scan.toBatch.planInputPartitions().toSeq
+  private def scanPartitions(df: DataFrame): Seq[graft.sources.core.GraftInputPartition] =
+    scanOf(df).planInputPartitions().toSeq
       .map(_.asInstanceOf[graft.sources.core.GraftInputPartition])
-  }
 
   /** The packed plan of `regions` over one indexed file: at most one
     * partition per core, each chunk of the unpacked (one partition per
@@ -134,7 +178,8 @@ class MultiRegionQuerySpec extends AnyFunSuite {
     val cols = Seq(c.contig, c.start, c.end)
     val df = spark.read.format(fmt).option("regions", regions.mkString(";")).load(path)
     val parts = scanPartitions(df)
-    val unpacked = format.regionChunks(path, regions, spark.sessionState.newHadoopConf()).get
+    val unpacked = format.regionChunks(path, regions.map(Regions.parse),
+      spark.sessionState.newHadoopConf()).get
     assert(parts.nonEmpty && parts.forall(_.bgzfChunk), s"$fmt: ${parts.take(3)}")
     assert(parts.size <= spark.sparkContext.defaultParallelism, s"$fmt: ${parts.size} partitions")
     assert(parts.flatMap(_.chunkRanges) == unpacked, fmt)
@@ -185,7 +230,7 @@ class MultiRegionQuerySpec extends AnyFunSuite {
       val c = graft.sources.Formats.byName(fmt).coordinates.get
       val required = org.apache.spark.sql.types.StructType(Seq(c.contig, c.start).map(full(_)))
       val factory = GraftReaderFactory(graft.sources.Formats.byName(fmt), full, required,
-        Map("path" -> path), GraftConf.broadcast(spark))
+        Map("path" -> path), None, GraftConf.broadcast(spark))
       def read(p: GraftInputPartition): Seq[String] = {
         val r = factory.createReader(p)
         try Iterator.continually(r.next()).takeWhile(identity)
@@ -403,7 +448,7 @@ class MultiRegionQuerySpec extends AnyFunSuite {
       .option("compression", "bgzf").option("index", "tabix").format("gff").save(dir)
     val dataFile = new java.io.File(dir).listFiles.map(_.getPath).find(_.endsWith(".gff.gz")).get
     val regions = (0 until 20).map(i => s"chr1:${i * 2000000L + 7000}-${i * 2000000L + 8000}")
-    val unpacked = graft.sources.GffFormat.regionChunks(dataFile, regions,
+    val unpacked = graft.sources.GffFormat.regionChunks(dataFile, regions.map(Regions.parse),
       spark.sessionState.newHadoopConf()).get
     assert(unpacked.size == 20, unpacked.size)
     checkPacked("gff", dataFile, regions)

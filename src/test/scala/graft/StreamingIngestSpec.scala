@@ -144,7 +144,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     Files.write(dir.resolve("big.fasta"), recs.getBytes("UTF-8"))
     val schema = graft.sources.GraftIO.read_fasta(spark, dir.toString).schema
     val stream = GraftMicroBatchStream(graft.sources.FastaFormat, schema, schema,
-      Array.empty, Map("path" -> dir.toString, "maxsplitbytes" -> "128"),
+      Map("path" -> dir.toString, "maxsplitbytes" -> "128"), None,
       graft.sources.core.GraftConf.broadcast(spark))
     val end = stream.latestOffset(stream.initialOffset(),
       org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())

@@ -21,7 +21,7 @@ class TabixSpec extends AnyFunSuite {
   }
 
   private def baseline(region: String): Seq[String] = {
-    val (chr, lo, hi) = graft.sources.VcfFormat.parseRegion(region)
+    val (chr, lo, hi) = graft.sources.core.Regions.parse(region)
     GraftIO.read_vcf_file_records(spark, P)
       .where(s"chrom = '$chr' AND pos >= $lo AND pos <= $hi")
       .selectExpr("chrom", "pos", "info.dp").collect().map(_.toString).sorted.toSeq
@@ -70,7 +70,7 @@ class TabixSpec extends AnyFunSuite {
     for (region <- Seq("ref1", "chr1", "chr1:1000000-9000000", "ref1:1-5000", "chr1:39999999-40000000")) {
       val got = GraftIO.bam_query(spark, bam, region)
         .selectExpr("name", "start", "end").collect().map(_.toString).sorted.toSeq
-      val (chr, lo, hi) = graft.sources.VcfFormat.parseRegion(region)
+      val (chr, lo, hi) = graft.sources.core.Regions.parse(region)
       val base = GraftIO.read_bam_file_records(spark, bam)
         .where(s"reference = '$chr' AND start <= ${hi}L AND coalesce(end, start) >= ${lo}L")
         .selectExpr("name", "start", "end").collect().map(_.toString).sorted.toSeq
@@ -85,7 +85,7 @@ class TabixSpec extends AnyFunSuite {
     for (region <- Seq("1", "2", "1:2000000-20000000", "2:1-5000")) {
       val got = GraftIO.bcf_query(spark, bcf, region)
         .selectExpr("chrom", "pos", "info.dp").collect().map(_.toString).sorted.toSeq
-      val (chr, lo, hi) = graft.sources.VcfFormat.parseRegion(region)
+      val (chr, lo, hi) = graft.sources.core.Regions.parse(region)
       val base = GraftIO.read_bcf_file_records(spark, bcf)
         .where(s"chrom = '$chr' AND pos >= ${lo}L AND pos <= ${hi}L")
         .selectExpr("chrom", "pos", "info.dp").collect().map(_.toString).sorted.toSeq

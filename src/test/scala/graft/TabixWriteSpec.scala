@@ -55,7 +55,7 @@ class TabixWriteSpec extends AnyFunSuite {
       "chr0:2000000-2016384", "chr1:1-536870911", "chr2:777777-777777",
       "chr1", "chrNOPE:1-100")
     for (region <- regions) {
-      val (chr, lo, hi) = graft.sources.VcfFormat.parseRegion(region)
+      val (chr, lo, hi) = graft.sources.core.Regions.parse(region)
       val want = full
         .where(col("seqname") === chr && col("start") <= hi && col("end") >= lo)
         .selectExpr("seqname", "start", "end", "attributes['rid'][0] AS rid")

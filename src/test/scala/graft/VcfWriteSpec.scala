@@ -53,7 +53,7 @@ class VcfWriteSpec extends AnyFunSuite {
     val dataFile = dir + "/" + files.find(_.endsWith(".vcf.gz")).get
     val full = GraftIO.read_vcf_file_records(spark, dataFile)
     for (region <- Seq("1:100000-500000", "2:1-2000", "1", "1:1596930-1596930")) {
-      val (chr, lo, hi) = graft.sources.VcfFormat.parseRegion(region)
+      val (chr, lo, hi) = graft.sources.core.Regions.parse(region)
       val want = rows(full.where(s"chrom = '$chr' AND pos >= $lo AND pos <= $hi"),
         "chrom", "pos", "ref", "info.dp")
       val got = rows(GraftIO.vcf_query(spark, dataFile, region),
