@@ -38,13 +38,15 @@ object BinnedIndex {
     /** The chunks of a region set, as merged and coalesced (begin, end)
       * voff pairs ([[Regions.mergeChunks]]): each 1-based inclusive
       * region probed at [lo − 1, min(hi, maxPos)) on the reference
-      * `rid` maps its contig to (−1 = absent: no chunks). `rid` is the
-      * index's own names, or for an index without names (BAI, BCF's
-      * CSI) the data file's header dictionary. */
+      * `rid` maps its contig to (−1 = absent: no chunks), both ends kept
+      * at base 1 or later, where an index places a record lying before
+      * it. `rid` is the index's own names, or for an index without names
+      * (BAI, BCF's CSI) the data file's header dictionary. */
     def chunksFor(regions: Seq[Regions.Region],
                   rid: String => Int = names.indexOf(_)): Seq[(Long, Long)] =
       Regions.mergeChunks(regions.flatMap { case (chr, lo, hi) =>
-        queryByRid(rid(chr), math.max(lo - 1, 0), math.min(hi, maxPos)).map(c => (c.beg, c.end))
+        queryByRid(rid(chr), math.max(lo, 1L) - 1, math.max(math.min(hi, maxPos), 1L))
+          .map(c => (c.beg, c.end))
       })
 
     /** Merged chunk ranges overlapping [beg0, end0) on reference rid,

@@ -240,14 +240,11 @@ private[core] object GraftPlanning {
 
   /** A scan's partitions for its resolved `regions` (see
     * [[GraftScanBuilder.build]]). With regions, each file is read
-    * through its index when the format has one (tabix for VCF, BAI for
-    * BAM, CSI for BCF — the reference's noodles-backed indexed queries,
-    * SURVEY.md §3.3): the format loads the index once and returns one
-    * merged chunk set for all the regions, and executors read only
-    * those blocks, a file's chunks packed into about one partition per
-    * core of the scan's total chunk bytes. Provably empty regions plan
-    * no partition; a file without an index is read in full
-    * ([[fileSplits]]). */
+    * through its index when the format has one (tabix, BAI, CSI —
+    * SURVEY.md §3.3): one merged chunk set for all the regions, packed
+    * into about one partition per core of the scan's chunk bytes.
+    * Provably empty regions plan no partition; a file without an index
+    * is read in full ([[fileSplits]]). */
   def partitionsFor(format: GraftFormat, files: Seq[org.apache.hadoop.fs.FileStatus],
                     maxSplit: Long, options: Map[String, String],
                     conf: Configuration,

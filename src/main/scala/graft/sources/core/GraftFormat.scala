@@ -85,10 +85,11 @@ trait GraftFormat extends Serializable {
   * `pos` as both start and end.
   *
   * Row test ([[matches]]): the record overlaps a region. A null contig
-  * or start never matches; a null end, or an end before the start (a
-  * BAM read whose CIGAR consumes no reference, such as `10S`), matches
-  * as the point at start — the one base htslib's `bam_endpos` gives
-  * such a record.
+  * never matches, a null start only a region bounding no position
+  * ([[Regions.Matcher.holdsUnplaced]]); a null end, or an end before the
+  * start (a BAM read whose CIGAR consumes no reference, such as `10S`),
+  * matches as the point at start — the one base htslib's `bam_endpos`
+  * gives such a record.
   *
   * Filter inference: `WHERE contig = '1' AND start BETWEEN a AND b`
   * gives the scan the regions a `region` option would — declarative
@@ -109,10 +110,14 @@ final case class Coordinates(contig: String, start: String, end: String,
   def matches(schema: StructType, regions: Regions.Matcher): Array[Any] => Boolean = {
     val (c, s, e) = (schema.fieldIndex(contig), schema.fieldIndex(start), schema.fieldIndex(end))
     val shift = if (zeroBasedStart) 1L else 0L
-    vals => vals(c) != null && vals(s) != null && {
-      val lo = vals(s).asInstanceOf[Long] + shift
-      regions.overlaps(vals(c).toString, lo,
-        if (vals(e) == null) lo else math.max(vals(e).asInstanceOf[Long], lo))
+    vals => vals(c) != null && {
+      val chr = vals(c).toString
+      if (vals(s) == null) regions.holdsUnplaced(chr)
+      else {
+        val lo = vals(s).asInstanceOf[Long] + shift
+        regions.overlaps(chr, lo,
+          if (vals(e) == null) lo else math.max(vals(e).asInstanceOf[Long], lo))
+      }
     }
   }
 

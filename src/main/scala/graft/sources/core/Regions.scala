@@ -23,9 +23,10 @@ package graft.sources.core
   */
 object Regions {
 
-  /** One resolved region: contig and 1-based inclusive [lo, hi]
-    * (hi = Long.MaxValue: open-ended). A scan resolves its regions to
-    * these once, and both index pruning and the row test read them. */
+  /** One resolved region: contig and 1-based inclusive [lo, hi] (hi =
+    * Long.MaxValue: open-ended; lo = Long.MinValue: no lower bound, from
+    * [[fromFilters]] only). A scan resolves its regions to these once,
+    * and both index pruning and the row test read them. */
   type Region = (String, Long, Long)
 
   /** Region grammar: 'chr' or 'chr:start-end' (1-based inclusive;
@@ -67,6 +68,11 @@ object Regions {
   final class Matcher private[Regions] (
       byChr: Map[String, (Array[Long], Array[Long])]) extends Serializable {
 
+    /** A record on `chr` with no start: only a region bounding no
+      * position (inferred from a WHERE on the contig alone) holds it. */
+    def holdsUnplaced(chr: String): Boolean =
+      byChr.get(chr).exists { case (los, his) => los(0) == Long.MinValue && his(0) == Long.MaxValue }
+
     /** Point semantics: the one-base interval [pos, pos]. */
     def containsPoint(chr: String, pos: Long): Boolean = overlaps(chr, pos, pos)
 
@@ -92,7 +98,7 @@ object Regions {
 
   def matcher(regions: Seq[Region]): Matcher =
     new Matcher(regions.groupBy(_._1).map { case (chr, rs) =>
-      val sorted = rs.map(r => (math.max(r._2, 1L), r._3)).sortBy(_._1)
+      val sorted = rs.map(r => (r._2, r._3)).sortBy(_._1)
       val los = scala.collection.mutable.ArrayBuffer.empty[Long]
       val his = scala.collection.mutable.ArrayBuffer.empty[Long]
       sorted.foreach { case (lo, hi) =>
@@ -112,7 +118,10 @@ object Regions {
     * on a parquet table. The scan uses the result as it uses a region
     * option, to prune I/O and as its row test; both are sound because
     * every row the conjunction accepts overlaps these regions, and
-    * Spark re-applies every filter above the scan. An inference that is
+    * Spark re-applies every filter above the scan. So no bound is
+    * clamped to base 1: a VCF record at POS 0 passes `chrom = '1' AND
+    * pos < 10`, and a read placed with no position `reference = 'chr1'`
+    * ([[Matcher.holdsUnplaced]]). An inference that is
     * too wide is merely less effective, and one that cannot be made (no
     * contig constraint, OR-shapes, casts) returns None = full scan. The
     * filters array is an implicit conjunction, which is what makes
@@ -151,9 +160,7 @@ object Regions {
       case LessThanOrEqual(c, v) if c == posCol => longOf(v)
       case EqualTo(c, v) if c == posCol => longOf(v)
     }.flatten
-    // clamp to 1-based coordinates (widening a lower bound is always
-    // sound)
-    val lo = math.max(1L, if (los.isEmpty) 1L else los.max + posShift)
+    val lo = if (los.isEmpty) Long.MinValue else los.max + posShift
     val hi = if (his.isEmpty) Long.MaxValue else math.min(his.min, Long.MaxValue - posShift) + posShift
     // intersect the per-conjunct chrom sets (multiple EqualTo on the
     // same column is a contradiction unless equal; In ∧ EqualTo narrows)

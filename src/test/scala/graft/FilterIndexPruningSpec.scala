@@ -29,9 +29,10 @@ class FilterIndexPruningSpec extends AnyFunSuite {
 
   test("Regions.fromFilters: bounds math, In, contradictions, no-contig, hostile names") {
     import org.apache.spark.sql.sources._
-    val all = Long.MaxValue
+    val (none, all) = (Long.MinValue, Long.MaxValue)
+    // no position bound below: Long.MinValue, not base 1
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1")), "chrom", "pos")
-      .contains(Seq(("1", 1L, all))))
+      .contains(Seq(("1", none, all))))
     assert(Regions.fromFilters(Seq(
       EqualTo("chrom", "1"), GreaterThan("pos", 100L), LessThanOrEqual("pos", 200L)),
       "chrom", "pos").contains(Seq(("1", 101L, 200L))))
@@ -41,7 +42,7 @@ class FilterIndexPruningSpec extends AnyFunSuite {
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1"), EqualTo("pos", 7L)),
       "chrom", "pos").contains(Seq(("1", 7L, 7L))))
     assert(Regions.fromFilters(Seq(EqualNullSafe("chrom", "1")), "chrom", "pos")
-      .contains(Seq(("1", 1L, all))))
+      .contains(Seq(("1", none, all))))
     // contradictions: PROVABLY empty (Some(Nil)), not a full scan
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1"), In("chrom", Array("2"))),
       "chrom", "pos").contains(Nil))
@@ -55,12 +56,15 @@ class FilterIndexPruningSpec extends AnyFunSuite {
     assert(Regions.fromFilters(Seq(
       EqualTo("chrom", "HLA-A*01:01:01:01"), EqualTo("pos", 100L)),
       "chrom", "pos").contains(Seq(("HLA-A*01:01:01:01", 100L, 100L))))
-    // negative bounds clamp to the 1-based coordinate space
+    // bounds below base 1 are kept as given, not clamped: a VCF record
+    // at POS 0 passes both of these filters
     assert(Regions.fromFilters(Seq(EqualTo("chrom", "1"), GreaterThan("pos", -2L)),
-      "chrom", "pos").contains(Seq(("1", 1L, all))))
+      "chrom", "pos").contains(Seq(("1", -1L, all))))
+    assert(Regions.fromFilters(Seq(EqualTo("chrom", "1"), LessThanOrEqual("pos", 0L)),
+      "chrom", "pos").contains(Seq(("1", none, 0L))))
     // filters on other columns are ignored, not misread
     assert(Regions.fromFilters(Seq(EqualTo("ref", "A"), EqualTo("chrom", "1")),
-      "chrom", "pos").contains(Seq(("1", 1L, all))))
+      "chrom", "pos").contains(Seq(("1", none, all))))
   }
 
   test("contradictory filters plan ZERO partitions (provable without the index)") {

@@ -151,6 +151,44 @@ class MultiRegionQuerySpec extends AnyFunSuite {
       .where("reference = 'c1' AND start BETWEEN 110 AND 110")) == Seq("r1"))
   }
 
+  test("a WHERE's row test keeps a placed read with no position and a VCF record at POS 0") {
+    // both are valid records that no 1-based region holds: a read with a
+    // reference but POS 0 in SAM terms reads with a null start, and a
+    // VCF telomere record sits at POS 0. The filters below accept them,
+    // so the regions inferred from those filters must too
+    val dir = java.nio.file.Files.createTempDirectory("graft-unplaced")
+    val bam = dir.resolve("bam").toString
+    spark.range(3).selectExpr(
+      "concat('r', id) AS name", "if(id = 0, 4, 0) AS flag",
+      "if(id = 2, 'c2', 'c1') AS reference",
+      "if(id = 0, cast(null as bigint), 100 + id) AS start", "cast(null as bigint) AS end",
+      "'30' AS mapping_quality", "if(id = 0, cast(null as string), '10M') AS cigar",
+      "cast(null as string) AS mate_reference",
+      "'ACGTACGTAC' AS sequence", "repeat('I', 10) AS quality_score")
+      .coalesce(1).write.mode("overwrite").option("refs", "c1:1000,c2:1000").format("bam").save(bam)
+    val vcf = java.nio.file.Files.writeString(dir.resolve("t.vcf"),
+      "##fileformat=VCFv4.2\n##contig=<ID=1>\n##contig=<ID=2>\n" +
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n" +
+        "1\t0\ttel\tN\t.\t.\t.\t.\n1\t5\ta\tA\tG\t.\t.\t.\n" +
+        "1\t50\tb\tC\tT\t.\t.\t.\n2\t0\tc\tN\t.\t.\t.\t.\n").toString
+    val cases = Seq(
+      ("bam", bam, "reference", "start", Seq(
+        "reference = 'c1'" -> 2, "reference = 'c1' AND start IS NULL" -> 1,
+        "reference = 'c1' AND start < 500" -> 1)),
+      ("vcf", vcf, "chrom", "pos", Seq(
+        "chrom = '1'" -> 3, "chrom = '1' AND pos < 10" -> 2,
+        "chrom = '1' AND pos BETWEEN -5 AND 0" -> 1, "chrom = '1' AND pos >= 0" -> 3)))
+    for ((fmt, path, ctg, pos, wheres) <- cases; (cond, n) <- wheres) {
+      val where = spark.read.format(fmt).load(path).where(cond)
+      val twin = spark.read.format(fmt).load(path).where(
+        cond.replace(s"$ctg =", s"concat($ctg, '') =").replace(s"$pos ", s"($pos + 0) "))
+      val rows = where.collect().map(_.toString).sorted.toSeq
+      assert(scanOf(where).regions.nonEmpty && scanOf(twin).regions.isEmpty, s"$fmt $cond")
+      assert(rows.size == n && rows == twin.collect().map(_.toString).sorted.toSeq,
+        s"$fmt WHERE $cond: $rows")
+    }
+  }
+
   test("a region option on a format without coordinates fails naming option and format") {
     for ((fmt, path, opt) <- Seq(("fastq", s"$F/fastq/test.fastq", "region"),
                                  ("sam", s"$F/sam/example.sam", "regions"))) {
