@@ -65,14 +65,17 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
       throw new UnsupportedOperationException(s"format '${format.name}' is read-only"))
     val path = options.getOrElse("path",
       throw new IllegalArgumentException("write requires a path"))
-    val writeOpts = options ++ Seq("compression", "partitionby", "index")
-      .flatMap(k => Option(info.options().get(k)).map(k -> _))
+    val writeOpts = options ++ Seq("compression", Deflate.LevelOption, "partitionby", "index",
+      "index.minshift", "index.depth").flatMap(k => Option(info.options().get(k)).map(k -> _))
     new WriteBuilder with SupportsTruncate {
       private var doTruncate = false
       override def truncate(): WriteBuilder = { doTruncate = true; this }
       override def build(): Write = new Write {
         override def toBatch: BatchWrite = {
           val spark = SparkSession.active
+          // parses the write's settings: a bad option fails before the
+          // target is truncated
+          val write = GraftBatchWrite(fmt, info.schema(), path, writeOpts, GraftConf.broadcast(spark))
           val hconf = spark.sessionState.newHadoopConf()
           val p = new org.apache.hadoop.fs.Path(path)
           val fs = p.getFileSystem(hconf)
@@ -86,7 +89,7 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
               s"target '$path' already contains data; pass option force=true " +
                 "to append, or use mode(\"overwrite\") to replace (COPY ... FORCE semantics)")
           }
-          GraftBatchWrite(fmt, info.schema(), path, writeOpts, GraftConf.broadcast(spark))
+          write
         }
 
         /** writeStream into a format directory: per-epoch appends with
@@ -204,7 +207,11 @@ final case class GraftScan(format: GraftFormat, full: StructType, required: Stru
     s"GraftScan(${format.name}, cols=[${required.fieldNames.mkString(",")}]" +
       regions.fold("")(rs => s", regions=${rs.size}") + ")"
 
-  override def planInputPartitions(): Array[InputPartition] =
+  /** Planned once per scan, as `files` is listed once: Spark asks for
+    * the partitions more than once per query (the scan exec, then a
+    * copy of it), and each plan loads every file's index. */
+  override def planInputPartitions(): Array[InputPartition] = partitions
+  private lazy val partitions: Array[InputPartition] =
     GraftPlanning.partitionsFor(format, files, GraftPlanning.maxSplitOf(options),
       options, conf, regions).toArray
 

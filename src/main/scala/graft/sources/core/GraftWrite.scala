@@ -101,6 +101,60 @@ trait GenomicRecordFormatter extends RecordFormatter {
   def tabixConfig: (Int, Int, Int, Int, Char)
 }
 
+/** A write's codec, deflate level and sidecar index, parsed once on the
+  * driver when its batch or streaming write is built, so a bad value
+  * fails there, naming the option, before any task starts or any
+  * target is truncated; every writer task reads these values.
+  * `codec`: the format's forced codec, else the `compression` option
+  * (None = plain). `level`: the [[Deflate]] level of the gzip or bgzf
+  * stream and of its sidecar. `index`: tabix | csi | gzi. `csiMinShift`
+  * and `csiDepth`: the CSI binning scheme (`index.minshift`,
+  * `index.depth`; tabix fixes 14/5). */
+final case class WriteSettings(codec: Option[String], level: Int, index: Option[String],
+                               csiMinShift: Int, csiDepth: Int)
+
+object WriteSettings {
+  def parse(formatter: RecordFormatter, options: Map[String, String]): WriteSettings = {
+    val codec = formatter.writeForcedCodec
+      .orElse(options.get("compression").map(_.toLowerCase)).filter(_ != "none")
+    codec.foreach { c =>
+      require(Set("gzip", "bgzf", "zstd")(c), s"unknown compression '$c'")
+    }
+    val level = Deflate.levelOf(options)
+    require(level.isEmpty || codec.exists(c => c == "gzip" || c == "bgzf"),
+      s"option ${Deflate.LevelOption} applies to compression=gzip or bgzf, " +
+        s"not ${codec.getOrElse("none")}")
+    // Sidecar indexes demand BGZF framing (virtual offsets only exist
+    // there); tabix and csi also a formatter that can say where each
+    // record lives on the genome.
+    val index = options.get("index").map(_.toLowerCase).filter(_ != "none") match {
+      case None => None
+      case Some(k @ ("tabix" | "csi")) =>
+        require(codec.contains("bgzf"),
+          s"index=$k requires compression=bgzf (virtual offsets are BGZF coordinates)")
+        require(formatter.isInstanceOf[GenomicRecordFormatter],
+          s"index=$k: ${formatter.getClass.getSimpleName} has no genomic coordinates")
+        Some(k)
+      case Some("gzi") =>
+        // block-offset sidecar (bgzip -i): coordinate-free, works for
+        // ANY format — it indexes the compression, not the records
+        require(codec.contains("bgzf"),
+          "index=gzi requires compression=bgzf (it indexes BGZF blocks)")
+        Some("gzi")
+      case Some(other) =>
+        throw new IllegalArgumentException(
+          s"unknown index kind '$other' (want: tabix | csi | gzi)")
+    }
+    // a larger CSI depth addresses contigs past the classic 512 Mbp limit
+    def int(key: String, default: Int): Int = options.get(key).fold(default) { v =>
+      v.trim.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"option $key='$v': want an integer"))
+    }
+    WriteSettings(codec, level.getOrElse(Deflate.DefaultLevel), index,
+      int("index.minshift", 14), int("index.depth", 5))
+  }
+}
+
 /** Commit message: where the task attempt staged its bytes and where
   * each file belongs once the job commits (one entry per partition
   * directory the task wrote into). */
@@ -145,7 +199,8 @@ sealed trait GraftStagedWrite {
 }
 
 /** DSv2 BatchWrite: one part file per task partition, optional
-  * compression via the `compression` option ("gzip" | "zstd").
+  * compression via the `compression` option ("gzip" | "bgzf" | "zstd")
+  * at the `compression.level` deflate level ([[WriteSettings]]).
   * Distributed by construction — each executor streams its partition to
   * its own part file; nothing funnels through the driver.
   *
@@ -162,8 +217,10 @@ final case class GraftBatchWrite(formatter: RecordFormatter, schema: StructType,
                                  bconf: Broadcast[SerializableConfiguration])
     extends BatchWrite with GraftStagedWrite {
 
+  private val settings = WriteSettings.parse(formatter, options)
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriterFactory(formatter, schema, path, options, bconf, writeId)
+    GraftWriterFactory(formatter, schema, path, options, settings, bconf, writeId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     renameStaged(messages, replace = false)
@@ -197,11 +254,13 @@ final case class GraftStreamingWrite(formatter: RecordFormatter, schema: StructT
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite with GraftStagedWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
+  private val settings = WriteSettings.parse(formatter, options)
+
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
                                 epochId: Long): DataWriter[InternalRow] =
-        GraftWriterFactory(formatter, schema, path, options, bconf, writeId,
+        GraftWriterFactory(formatter, schema, path, options, settings, bconf, writeId,
           epoch = Some(epochId)).createWriter(partitionId, taskId)
     }
 
@@ -222,41 +281,14 @@ final case class GraftStreamingWrite(formatter: RecordFormatter, schema: StructT
 
 final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructType,
                                     path: String, options: Map[String, String],
+                                    settings: WriteSettings,
                                     bconf: Broadcast[SerializableConfiguration],
                                     writeId: String,
                                     epoch: Option[Long] = None)
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val codec = formatter.writeForcedCodec
-      .orElse(options.get("compression").map(_.toLowerCase)).filter(_ != "none")
-    // Sidecar tabix indexing: each part file gets its own .tbi, built in
-    // the task that writes it (no extra pass, no driver funnel). Demands
-    // BGZF framing (virtual offsets only exist there) and a formatter
-    // that can say where each record lives on the genome.
-    val indexKind: Option[String] =
-      options.get("index").map(_.toLowerCase).filter(_ != "none") match {
-        case None => None
-        case Some(k @ ("tabix" | "csi")) =>
-          require(codec.contains("bgzf"),
-            s"index=$k requires compression=bgzf (virtual offsets are BGZF coordinates)")
-          require(formatter.isInstanceOf[GenomicRecordFormatter],
-            s"index=$k: ${formatter.getClass.getSimpleName} has no genomic coordinates")
-          Some(k)
-        case Some("gzi") =>
-          // block-offset sidecar (bgzip -i): coordinate-free, works for
-          // ANY format — it indexes the compression, not the records
-          require(codec.contains("bgzf"),
-            "index=gzi requires compression=bgzf (it indexes BGZF blocks)")
-          Some("gzi")
-        case Some(other) =>
-          throw new IllegalArgumentException(
-            s"unknown index kind '$other' (want: tabix | csi | gzi)")
-      }
-    // CSI binning scheme (ignored for tabix, which fixes 14/5); a
-    // larger depth addresses contigs past the classic 512 Mbp limit
-    val csiMinShift = options.get("index.minshift").map(_.toInt).getOrElse(14)
-    val csiDepth = options.get("index.depth").map(_.toInt).getOrElse(5)
+    val WriteSettings(codec, level, indexKind, csiMinShift, csiDepth) = settings
     val ext = formatter.fileExtension + (codec match {
       case _ if formatter.writeForcedCodec.isDefined => ""
       case Some("gzip") | Some("bgzf") => ".gz" // bgzf IS gzip on the wire
@@ -329,17 +361,16 @@ final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructTy
       val dest = new Path(destDir, fileName)
       val rawOut: OutputStream = fs.create(temp, true)
       val out: OutputStream = codec match {
-        case Some("gzip") => new java.util.zip.GZIPOutputStream(rawOut, 1 << 16)
-        case Some("bgzf") => new BgzfOutputStream(new BufferedOutputStream(rawOut, 1 << 16))
-        case Some("zstd") => new com.github.luben.zstd.ZstdOutputStream(rawOut)
-        case Some(other)  => throw new IllegalArgumentException(s"unknown compression '$other'")
+        case Some("gzip") => Deflate.gzip(rawOut, level)
+        case Some("bgzf") => new BgzfOutputStream(new BufferedOutputStream(rawOut, 1 << 16), level)
+        case Some(_)      => new com.github.luben.zstd.ZstdOutputStream(rawOut) // zstd
         case None         => new BufferedOutputStream(rawOut, 1 << 16)
       }
       Sink(out, temp, dest,
         bgzf = out match { case b: BgzfOutputStream => Some(b); case _ => None },
         idx = indexKind.collect {
-          case "csi"   => new TabixIndexBuilder(csiMinShift, csiDepth)
-          case "tabix" => new TabixIndexBuilder()
+          case "csi"   => new TabixIndexBuilder(csiMinShift, csiDepth, level)
+          case "tabix" => new TabixIndexBuilder(level = level)
         })
     }
 

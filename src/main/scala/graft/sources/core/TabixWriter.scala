@@ -27,8 +27,11 @@ import scala.collection.mutable
   * nothing to the writer's shuffle or memory profile; every part file
   * gets its own sidecar in the task that wrote it (index build is
   * embarrassingly parallel, like the write).
+  *
+  * `level` is the [[Deflate]] level the sidecar's BGZF is written at.
   */
-final class TabixIndexBuilder(minShift: Int = 14, depth: Int = 5) {
+final class TabixIndexBuilder(minShift: Int = 14, depth: Int = 5,
+                              level: Int = Deflate.DefaultLevel) {
   import TabixIndexBuilder._
 
   private val maxPos = 1L << (minShift + 3 * depth)
@@ -48,11 +51,15 @@ final class TabixIndexBuilder(minShift: Int = 14, depth: Int = 5) {
   private var finished = false
 
   /** Register one record occupying [beg0, end0) (0-based half-open) on
-    * `name`, stored at BGZF virtual offsets [voffBeg, voffEnd). */
-  def add(name: String, beg0: Long, end0: Long, voffBeg: Long, voffEnd: Long): Unit = {
+    * `name`, stored at BGZF virtual offsets [voffBeg, voffEnd). A record
+    * before base 1 (a VCF POS 0 telomere) indexes as htslib's
+    * `hts_idx_push` clamps it: a begin below 0 at 0, an end at or below
+    * 0 at 1. */
+  def add(name: String, beg: Long, end: Long, voffBeg: Long, voffEnd: Long): Unit = {
     require(!finished, "TabixIndexBuilder: add after finish")
-    require(beg0 >= 0 && end0 > beg0,
-      s"TabixIndexBuilder: bad interval [$beg0, $end0) on $name")
+    val beg0 = math.max(beg, 0L)
+    val end0 = if (end <= 0) 1L else end
+    require(end0 > beg0, s"TabixIndexBuilder: bad interval [$beg, $end) on $name")
     require(end0 <= maxPos,
       s"TabixIndexBuilder: $name:$end0 exceeds this scheme's 2^${minShift + 3 * depth} " +
         "limit (use CSI with a larger depth)")
@@ -184,7 +191,7 @@ final class TabixIndexBuilder(minShift: Int = 14, depth: Int = 5) {
     refs.map(_.name + "\u0000").mkString.getBytes(StandardCharsets.UTF_8)
 
   private def writeBgzf(out: OutputStream, bb: ByteBuffer): Unit = {
-    val bgzf = new BgzfOutputStream(out)
+    val bgzf = new BgzfOutputStream(out, level)
     try bgzf.write(bb.array(), 0, bb.position())
     finally bgzf.close()
   }

@@ -250,6 +250,26 @@ class MultiRegionQuerySpec extends AnyFunSuite {
     }
   }
 
+  test("a scan plans its partitions once: the query's scan execs read that one plan") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    for ((fmt, path) <- Seq(("bam", s"$F/bam/indexed.bam"), ("vcf", s"$F/vcf/indexed.vcf.gz"),
+                            ("bcf", s"$F/vcf/indexed.bcf"))) {
+      val c = graft.sources.Formats.byName(fmt).coordinates.get
+      val contig = spark.read.format(fmt).load(path).where(s"${c.contig} IS NOT NULL")
+        .selectExpr(c.contig).head().getString(0)
+      val df = spark.read.format(fmt).option("region", s"$contig:1-2000000").load(path)
+      assert(df.collect().nonEmpty, fmt)
+      val exec = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }.head
+      val batch = exec.scan.toBatch
+      val planned = batch.planInputPartitions()
+      // every call hands back the first plan; a re-plan would reload
+      // each file's index and make new partitions
+      assert(planned eq batch.planInputPartitions(), fmt)
+      assert(exec.inputPartitions.nonEmpty && exec.inputPartitions.zip(planned).forall {
+        case (a, b) => a eq b }, fmt)
+    }
+  }
+
   test("a packed partition reads its chunks in turn: rows == its chunks read one partition each") {
     import graft.sources.core.{GraftConf, GraftInputPartition, GraftReaderFactory}
     import graft.sources.{BaiIndex, CsiIndex, TabixIndex}

@@ -62,6 +62,29 @@ class VcfWriteSpec extends AnyFunSuite {
     }
   }
 
+  test("a POS 0 record is indexed at base 1: bgzf + tabix write, WHERE through the index") {
+    val src = java.nio.file.Files.createTempDirectory("graft-vcfpos0")
+    val vcf = java.nio.file.Files.writeString(src.resolve("t.vcf"),
+      "##fileformat=VCFv4.2\n##contig=<ID=1>\n" +
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n" +
+        "1\t0\ttel\tN\t.\t.\t.\t.\n1\t5\ta\tA\tG\t.\t.\t.\n" +
+        "1\t50\tb\tC\tT\t.\t.\t.\n").toString
+    val dir = src.resolve("out").toString
+    GraftIO.read_vcf_file_records(spark, vcf).repartition(1)
+      .write.mode("overwrite").option("compression", "bgzf").option("index", "tabix")
+      .format("vcf").save(dir)
+    val files = new java.io.File(dir).listFiles.map(_.getName)
+    assert(files.exists(_.endsWith(".vcf.gz.tbi")), files.toSeq)
+    val indexed = spark.read.format("vcf").load(dir).where("chrom = '1' AND pos <= 5")
+    val plain = spark.read.format("vcf").load(vcf).where("concat(chrom, '') = '1' AND pos + 0 <= 5")
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val parts = indexed.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      .flatMap(_.inputPartitions).map(_.asInstanceOf[graft.sources.core.GraftInputPartition])
+    assert(parts.nonEmpty && parts.forall(_.bgzfChunk), "the WHERE must read through the .tbi")
+    assert(rows(indexed, "id", "pos") == rows(plain, "id", "pos"))
+    assert(rows(indexed, "id") == Seq("[a]", "[tel]"))
+  }
+
   test("ragged genotype arrays fail the write loudly, not as a corrupt file") {
     // dropping one sample from one record would render a row whose
     // sample-column count disagrees with the header's #CHROM line — a
