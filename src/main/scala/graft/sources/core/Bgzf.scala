@@ -539,52 +539,21 @@ object BgzfRecordSplit {
   }
 }
 
-/** The deflate level of every writer, BGZF and gzip alike, from the
-  * `compression.level` write option with htslib's semantics (`bgzip -l`):
-  * 0 writes stored blocks, 1-9 are the zlib levels, -1 is zlib's
-  * default (6). This file is the one place a `Deflater` or
-  * `GZIPOutputStream` is made (GateLintSpec), so every writer deflates
-  * at the level parsed here.
-  */
-object Deflate {
-  val LevelOption = "compression.level"
-
-  /** The level of a write that sets none: 4, the knee of the size/speed
-    * table measured with this writer (BENCH_NOTES): ~2.8x level 6's
-    * deflate rate for ~8.5% more bytes, and no slower than level 3
-    * while smaller than it. */
-  val DefaultLevel = 4
-
-  /** The `compression.level` of `options` (key case-insensitive), None
-    * when unset; anything but an integer in -1..9 fails naming the
-    * option and the value. */
-  def levelOf(options: Map[String, String]): Option[Int] =
-    options.collectFirst { case (k, v) if k.equalsIgnoreCase(LevelOption) => v }.map { v =>
-      v.trim.toIntOption.filter(l => l >= -1 && l <= 9).getOrElse(
-        throw new IllegalArgumentException(s"option $LevelOption='$v': want an " +
-          "integer from -1 to 9 (0 stored, 1-9 zlib levels, -1 zlib's default 6)"))
-    }
-
-  /** A single-member gzip stream deflating at `level`. */
-  def gzip(out: java.io.OutputStream, level: Int): java.io.OutputStream =
-    new java.util.zip.GZIPOutputStream(out, 1 << 16) { `def`.setLevel(level) }
-}
-
 /** BGZF writer: payload chunked into <=64 KiB blocks, each a gzip member
   * carrying the BC/BSIZE extra subfield, closed with the spec's 28-byte
   * EOF marker — output is readable by htslib/bgzip/tabix tooling and by
   * any plain multi-member gzip reader. One instance per part file
   * (executor-local); blocks are the compression unit, so a future
-  * indexer can address them by virtual offset. `level` is a
-  * [[Deflate]] level; level 0 (stored) still fits a block's 16-bit
-  * BSIZE: 0xff00 payload bytes store in 0xff05, a 0xff1f-byte block.
+  * indexer can address them by virtual offset. Blocks deflate at zlib
+  * level 4, the knee of the size/speed table measured with this writer
+  * (BENCH_NOTES): ~2.8x level 6's deflate rate for ~8.5% more bytes,
+  * and no slower than level 3 while smaller than it.
   */
-final class BgzfOutputStream(out: java.io.OutputStream, level: Int = Deflate.DefaultLevel)
-    extends java.io.OutputStream {
+final class BgzfOutputStream(out: java.io.OutputStream) extends java.io.OutputStream {
   private val MaxPayload = 0xff00 // htslib's block payload bound
   private val buf = new Array[Byte](MaxPayload)
   private var n = 0
-  private val deflater = new java.util.zip.Deflater(level, true) // raw deflate
+  private val deflater = new java.util.zip.Deflater(4, true) // raw deflate
   private val comp = new Array[Byte](MaxPayload + 1024)
   private var closed = false
   private var compressedWritten = 0L

@@ -65,8 +65,8 @@ final case class GraftTable(format: GraftFormat, tableSchema: StructType,
       throw new UnsupportedOperationException(s"format '${format.name}' is read-only"))
     val path = options.getOrElse("path",
       throw new IllegalArgumentException("write requires a path"))
-    val writeOpts = options ++ Seq("compression", Deflate.LevelOption, "partitionby", "index",
-      "index.minshift", "index.depth").flatMap(k => Option(info.options().get(k)).map(k -> _))
+    val writeOpts = options ++ Seq("compression", "partitionby", "index", "index.minshift",
+      "index.depth").flatMap(k => Option(info.options().get(k)).map(k -> _))
     new WriteBuilder with SupportsTruncate {
       private var doTruncate = false
       override def truncate(): WriteBuilder = { doTruncate = true; this }

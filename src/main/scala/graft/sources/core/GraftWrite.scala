@@ -101,16 +101,15 @@ trait GenomicRecordFormatter extends RecordFormatter {
   def tabixConfig: (Int, Int, Int, Int, Char)
 }
 
-/** A write's codec, deflate level and sidecar index, parsed once on the
-  * driver when its batch or streaming write is built, so a bad value
-  * fails there, naming the option, before any task starts or any
-  * target is truncated; every writer task reads these values.
-  * `codec`: the format's forced codec, else the `compression` option
-  * (None = plain). `level`: the [[Deflate]] level of the gzip or bgzf
-  * stream and of its sidecar. `index`: tabix | csi | gzi. `csiMinShift`
-  * and `csiDepth`: the CSI binning scheme (`index.minshift`,
-  * `index.depth`; tabix fixes 14/5). */
-final case class WriteSettings(codec: Option[String], level: Int, index: Option[String],
+/** A write's codec and sidecar index, parsed once on the driver when
+  * its batch or streaming write is built, so a bad value fails there,
+  * naming the option, before any task starts or any target is
+  * truncated; every writer task reads these values. `codec`: the
+  * format's forced codec, else the `compression` option (None =
+  * plain). `index`: tabix | csi | gzi. `csiMinShift` and `csiDepth`:
+  * the CSI binning scheme (`index.minshift`, `index.depth`; tabix
+  * fixes 14/5). */
+final case class WriteSettings(codec: Option[String], index: Option[String],
                                csiMinShift: Int, csiDepth: Int)
 
 object WriteSettings {
@@ -120,10 +119,6 @@ object WriteSettings {
     codec.foreach { c =>
       require(Set("gzip", "bgzf", "zstd")(c), s"unknown compression '$c'")
     }
-    val level = Deflate.levelOf(options)
-    require(level.isEmpty || codec.exists(c => c == "gzip" || c == "bgzf"),
-      s"option ${Deflate.LevelOption} applies to compression=gzip or bgzf, " +
-        s"not ${codec.getOrElse("none")}")
     // Sidecar indexes demand BGZF framing (virtual offsets only exist
     // there); tabix and csi also a formatter that can say where each
     // record lives on the genome.
@@ -150,8 +145,7 @@ object WriteSettings {
       v.trim.toIntOption.getOrElse(
         throw new IllegalArgumentException(s"option $key='$v': want an integer"))
     }
-    WriteSettings(codec, level.getOrElse(Deflate.DefaultLevel), index,
-      int("index.minshift", 14), int("index.depth", 5))
+    WriteSettings(codec, index, int("index.minshift", 14), int("index.depth", 5))
   }
 }
 
@@ -199,8 +193,8 @@ sealed trait GraftStagedWrite {
 }
 
 /** DSv2 BatchWrite: one part file per task partition, optional
-  * compression via the `compression` option ("gzip" | "bgzf" | "zstd")
-  * at the `compression.level` deflate level ([[WriteSettings]]).
+  * compression via the `compression` option ("gzip" | "bgzf" | "zstd",
+  * [[WriteSettings]]).
   * Distributed by construction — each executor streams its partition to
   * its own part file; nothing funnels through the driver.
   *
@@ -288,7 +282,7 @@ final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructTy
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val WriteSettings(codec, level, indexKind, csiMinShift, csiDepth) = settings
+    val WriteSettings(codec, indexKind, csiMinShift, csiDepth) = settings
     val ext = formatter.fileExtension + (codec match {
       case _ if formatter.writeForcedCodec.isDefined => ""
       case Some("gzip") | Some("bgzf") => ".gz" // bgzf IS gzip on the wire
@@ -361,16 +355,16 @@ final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructTy
       val dest = new Path(destDir, fileName)
       val rawOut: OutputStream = fs.create(temp, true)
       val out: OutputStream = codec match {
-        case Some("gzip") => Deflate.gzip(rawOut, level)
-        case Some("bgzf") => new BgzfOutputStream(new BufferedOutputStream(rawOut, 1 << 16), level)
+        case Some("gzip") => new java.util.zip.GZIPOutputStream(rawOut, 1 << 16)
+        case Some("bgzf") => new BgzfOutputStream(new BufferedOutputStream(rawOut, 1 << 16))
         case Some(_)      => new com.github.luben.zstd.ZstdOutputStream(rawOut) // zstd
         case None         => new BufferedOutputStream(rawOut, 1 << 16)
       }
       Sink(out, temp, dest,
         bgzf = out match { case b: BgzfOutputStream => Some(b); case _ => None },
         idx = indexKind.collect {
-          case "csi"   => new TabixIndexBuilder(csiMinShift, csiDepth, level)
-          case "tabix" => new TabixIndexBuilder(level = level)
+          case "csi"   => new TabixIndexBuilder(csiMinShift, csiDepth)
+          case "tabix" => new TabixIndexBuilder()
         })
     }
 

@@ -27,11 +27,8 @@ import scala.collection.mutable
   * nothing to the writer's shuffle or memory profile; every part file
   * gets its own sidecar in the task that wrote it (index build is
   * embarrassingly parallel, like the write).
-  *
-  * `level` is the [[Deflate]] level the sidecar's BGZF is written at.
   */
-final class TabixIndexBuilder(minShift: Int = 14, depth: Int = 5,
-                              level: Int = Deflate.DefaultLevel) {
+final class TabixIndexBuilder(minShift: Int = 14, depth: Int = 5) {
   import TabixIndexBuilder._
 
   private val maxPos = 1L << (minShift + 3 * depth)
@@ -191,7 +188,7 @@ final class TabixIndexBuilder(minShift: Int = 14, depth: Int = 5,
     refs.map(_.name + "\u0000").mkString.getBytes(StandardCharsets.UTF_8)
 
   private def writeBgzf(out: OutputStream, bb: ByteBuffer): Unit = {
-    val bgzf = new BgzfOutputStream(out, level)
+    val bgzf = new BgzfOutputStream(out)
     try bgzf.write(bb.array(), 0, bb.position())
     finally bgzf.close()
   }

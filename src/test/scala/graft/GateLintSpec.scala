@@ -60,18 +60,6 @@ class GateLintSpec extends AnyFunSuite {
       users("Regions.parse"))
   }
 
-  test("one place makes deflaters: core/Bgzf.scala, which parses the write level") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    for (call <- Seq("Deflater(", "GZIPOutputStream(")) {
-      val users = java.nio.file.Files.walk(root).iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => java.nio.file.Files.readAllLines(p).asScala.exists(_.contains(call)))
-        .map(root.relativize(_).toString).toSeq.sorted
-      assert(users == Seq("graft/sources/core/Bgzf.scala"), s"$call: $users")
-    }
-  }
-
   test("the Hadoop conf is shipped from one place: GraftConf") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -137,23 +135,6 @@ class StreamingWriteSpec extends AnyFunSuite {
     val got = graft.sources.GraftIO.read_fastq(spark, out.toString)
       .select("name").collect().map(_.getString(0)).toSeq
     assert(got == Seq("r1"))
-  }
-
-  test("a streaming bgzf write takes compression.level: level 0 stores the text verbatim") {
-    val in = tmp("graft-swrite-lvl-in")
-    val out = tmp("graft-swrite-lvl-out")
-    val ck = tmp("graft-swrite-lvl-ck").toString
-    writeFastq(in, "a.fastq", Seq(("r1", "ACGTACGT", "IIIIIIII")))
-    val q = spark.readStream.format("fastq").load(in.toString)
-      .writeStream.format("fastq")
-      .option("path", out.toString).option("checkpointLocation", ck)
-      .option("compression", "bgzf").option("compression.level", "0")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val parts = Files.list(out).iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
-    assert(parts.nonEmpty)
-    val bytes = parts.map(p => new String(Files.readAllBytes(p), "ISO-8859-1")).mkString
-    assert(bytes.contains("@r1\nACGTACGT\n+\nIIIIIIII\n"))
   }
 
   test("directory scans never read files under a _temporary staging namespace") {

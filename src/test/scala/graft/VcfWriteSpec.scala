@@ -85,6 +85,31 @@ class VcfWriteSpec extends AnyFunSuite {
     assert(rows(indexed, "id") == Seq("[a]", "[tel]"))
   }
 
+  /** A csi write with `opt` set to `v` into a target holding a file:
+    * the bad value fails on the driver, before an overwrite truncates
+    * the target. */
+  private def badCsiOption(opt: String, v: String): IllegalArgumentException = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vcfbad")
+    val keep = java.nio.file.Files.writeString(dir.resolve("keep.txt"), "x")
+    val e = intercept[IllegalArgumentException] {
+      GraftIO.read_vcf_file_records(spark, s"$F/test.vcf").write.mode("overwrite")
+        .option("compression", "bgzf").option("index", "csi").option(opt, v)
+        .format("vcf").save(dir.toString)
+    }
+    assert(java.nio.file.Files.exists(keep), s"$opt=$v truncated the target")
+    e
+  }
+
+  test("index.minshift must be an integer: the error names option and value") {
+    val e = badCsiOption("index.minshift", "fourteen")
+    assert(e.getMessage.contains("index.minshift") && e.getMessage.contains("'fourteen'"), e.getMessage)
+  }
+
+  test("index.depth must be an integer: the error names option and value") {
+    val e = badCsiOption("index.depth", "6x")
+    assert(e.getMessage.contains("index.depth") && e.getMessage.contains("'6x'"), e.getMessage)
+  }
+
   test("ragged genotype arrays fail the write loudly, not as a corrupt file") {
     // dropping one sample from one record would render a row whose
     // sample-column count disagrees with the header's #CHROM line — a
