@@ -23,14 +23,23 @@ object Bench {
                  else base.withExtensions(new GraftExtensions)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def runOnce(name: String): Double = {
+    /** One run: wall seconds (-1 on failure), and the generated-code
+      * compile seconds and classes compiled while it ran. */
+    final case class RunStats(s: Double, codegenS: Double, compiles: Long)
+    def runOnce(name: String): RunStats = {
+      import org.apache.spark.metrics.source.CodegenMetrics
+      import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      val c0 = CodeGenerator.compileTime
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        return RunStats(-1.0, 0.0, 0L)
       }
       val t = (System.nanoTime() - t0) / 1e9
+      val stats = RunStats(t, (CodeGenerator.compileTime - c0) / 1e9,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0)
       // per-entry isolation (outside the timed region): entries that
       // barrier intermediates leave localCheckpoint RDD blocks behind,
       // and ContextCleaner only reaps broadcasts after a GC notices the
@@ -44,7 +53,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       System.gc()
-      t
+      stats
     }
 
     // Attribution knob (driver never sets it): restrict the measured
@@ -75,17 +84,28 @@ object Bench {
     // pass), so the recorded per-query number is the median of N full
     // passes and the raw per-pass totals ride along for attribution.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
-    val perPass: Seq[Seq[(String, Double)]] =
+    val perPass: Seq[Seq[(String, RunStats)]] =
       (1 to passes).map(_ => names.map(n => n -> runOnce(n)))
     def median(xs: Seq[Double]): Double = {
       val ok = xs.filter(_ >= 0).sorted
       if (ok.isEmpty) -1.0 else ok(ok.size / 2)
     }
-    val results = names.map(n => n -> median(perPass.map(_.toMap.apply(n))))
+    def runsOf(n: String): Seq[RunStats] = perPass.map(_.toMap.apply(n))
+    val results = names.map(n => n -> median(runsOf(n).map(_.s)))
+    // codegen compile layer: per entry, the median compile seconds and
+    // classes compiled over the passes (a class evicted from Spark's
+    // 100-entry codegen cache between passes compiles again)
+    val codegen = names.map { n =>
+      val rs = runsOf(n).filter(_.s >= 0)
+      n -> (median(rs.map(_.codegenS)), median(rs.map(_.compiles.toDouble)).max(0.0).toLong)
+    }
+    val codegenTotal = codegen.map(_._2._1).filter(_ >= 0).sum
+    val cg = codegen.map { case (k, (cs, n)) => "\"" + k + "\":{\"s\":" + f"$cs%.4f" + ",\"n\":" + n + "}" }
+      .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val passTotals = perPass.map(p => f"${p.map(_._2).filter(_ >= 0).sum}%.4f")
+    val passTotals = perPass.map(p => f"${p.map(_._2.s).filter(_ >= 0).sum}%.4f")
       .mkString("[", ",", "]")
     val staging = graft.queries.Stage.stagingSeconds
     // Complete per-query JSON -> bench_full.json ONLY. It must NOT be
@@ -94,7 +114,7 @@ object Bench {
     // compact final line mid-JSON — every BENCH_r08..r12 artifact
     // carries `parsed: null` for exactly this reason (r12 verdict item
     // 1). The full map stays a committed file artifact.
-    val full = f"""{"note":"full per-query map (median of $passes passes)","value":$total%.4f,"total_s":$total%.4f,"pass_totals":$passTotals,"staging_s":$staging%.2f,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val full = f"""{"note":"full per-query map (median of $passes passes)","value":$total%.4f,"total_s":$total%.4f,"pass_totals":$passTotals,"staging_s":$staging%.2f,"codegen_total_s":$codegenTotal%.4f,"unit":"sec","queries":$qs,"codegen_s":$cg,"sf":"$sfDir"}"""
     // only the complete matrix may replace the committed artifact; a
     // restricted (ONLY/CORE) run writes its map under target/
     val fullPath = if (only.isDefined) "target/bench_full.json" else "bench_full.json"
@@ -110,7 +130,7 @@ object Bench {
     // also catches sbt's trailing [success] line with room to spare.
     val top = results.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total%.4f,"total_s":$total%.4f,"pass_totals":$passTotals,"staging_s":$staging%.2f,"unit":"sec","n_queries":${results.size},"queries":$top,"full":"$fullPath","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.4f,"total_s":$total%.4f,"pass_totals":$passTotals,"staging_s":$staging%.2f,"codegen_total_s":$codegenTotal%.2f,"unit":"sec","n_queries":${results.size},"queries":$top,"full":"$fullPath","sf":"$sfDir"}""")
     spark.stop()
   }
 }

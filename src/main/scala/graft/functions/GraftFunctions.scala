@@ -60,6 +60,9 @@ object GraftFunctions {
     "graft_min_gram_hash" -> (e => MinGramHash(e(0), e(1))),
     "graft_cosine_sim" -> (e => CosineSim(e(0), e(1))),
     "graft_l2_sq" -> (e => L2Sq(e(0), e(1))),
+    "graft_word_shingles" -> (e => WordShingles(e.head)),
+    "graft_minhash_bands" -> (e => MinhashBands(e.head)),
+    "graft_nearest_cell" -> (e => NearestCell(e(0), e(1))),
     "graft_lsh_bucket" -> (e => LshBucket(e(0), e(1))),
     "graft_label_margin_scores" -> (e => LabelMarginScores(e(0), e(1))),
     "graft_dot" -> (e => DotProduct(e(0), e(1))),

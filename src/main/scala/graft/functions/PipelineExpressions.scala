@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -184,4 +186,78 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(left = l, right = r)
   override def prettyName: String = "graft_cosine_sim"
+}
+
+case class MinhashBands(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("bh", LongType, nullable = false))), containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"minhash_bands requires ARRAY<STRING>, got $t")
+  }
+  override def nullSafeEval(sh: Any): Any =
+    PipelineKernels.minhashBands(sh.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.PipelineKernels.minhashBands($c)")
+  override protected def withNewChildInternal(c: Expression): MinhashBands = copy(child = c)
+  override def prettyName: String = "graft_minhash_bands"
+}
+
+/** graft_nearest_cell(v, cs): see [[PipelineKernels.nearestCell]]. Not
+  * null-intolerant in `v` (a null vector still picks the least cid);
+  * null when `cs` is null or empty. */
+case class NearestCell(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(DoubleType, _),
+          ArrayType(StructType(Array(
+            StructField(_, LongType, _, _),
+            StructField(_, ArrayType(DoubleType, _), _, _))), _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"nearest_cell requires (ARRAY<DOUBLE>, ARRAY<STRUCT<BIGINT, ARRAY<DOUBLE>>>), got $t")
+  }
+  override def eval(input: InternalRow): Any = {
+    val cs = right.eval(input)
+    if (cs == null) null
+    else PipelineKernels.nearestCell(
+      left.eval(input).asInstanceOf[ArrayData], cs.asInstanceOf[ArrayData])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = left.genCode(ctx)
+    val cs = right.genCode(ctx)
+    val best = ctx.freshName("best")
+    ev.copy(code = code"""
+      ${v.code}
+      ${cs.code}
+      boolean ${ev.isNull} = true;
+      long ${ev.value} = -1L;
+      if (!${cs.isNull}) {
+        java.lang.Long $best = graft.functions.PipelineKernels.nearestCell(
+          ${v.isNull} ? null : ${v.value}, ${cs.value});
+        if ($best != null) {
+          ${ev.isNull} = false;
+          ${ev.value} = $best;
+        }
+      }""")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): NearestCell =
+    copy(left = l, right = r)
+  override def prettyName: String = "graft_nearest_cell"
+}
+
+case class WordShingles(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"word_shingles requires ARRAY<STRING>, got $t")
+  }
+  override def nullSafeEval(w: Any): Any =
+    PipelineKernels.wordShingles(w.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, w => s"graft.functions.PipelineKernels.wordShingles($w)")
+  override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
+  override def prettyName: String = "graft_word_shingles"
 }

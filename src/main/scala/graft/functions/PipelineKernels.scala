@@ -93,6 +93,122 @@ object PipelineKernels {
     s
   }
 
+  /** The distinct 3-word shingles of a word array, in first-occurrence
+    * order — what
+    * `array_distinct(transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2])))`
+    * gives for a `w` of at least 3 words (concat_ws skips a null word).
+    * One loop per row instead of an interpreted lambda per shingle. */
+  def wordShingles(w: ArrayData): ArrayData = {
+    val n = w.numElements() - 2
+    val seen = new java.util.HashSet[UTF8String]()
+    val out = new java.util.ArrayList[UTF8String](math.max(n, 0))
+    val space = UTF8String.fromString(" ")
+    var i = 0
+    while (i < n) {
+      val parts = new java.util.ArrayList[UTF8String](3)
+      var k = i
+      while (k < i + 3) {
+        if (!w.isNullAt(k)) parts.add(w.getUTF8String(k))
+        k += 1
+      }
+      val g = UTF8String.concatWs(space, parts.toArray(new Array[UTF8String](0)): _*)
+      if (seen.add(g)) out.add(g)
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+  }
+
+  /** MinHash permutation constants (fixed seed; Spark-side only — the
+    * oracle never sees signatures, only the verified pair set).
+    * a < 2^30 keeps a * h32 (h32 < 2^32) under 2^62: no long overflow. */
+  val MinhashPerms: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(42)
+    Seq.fill(32)((rnd.nextInt(1 << 29).toLong * 2 + 1, rnd.nextInt(Int.MaxValue).toLong))
+  }
+  val P32 = 4294967311L // prime > 2^32
+  private val permA = MinhashPerms.map(_._1).toArray
+  private val permB = MinhashPerms.map(_._2).toArray
+
+  /** The 16 LSH band keys (band, bh) of one shingle set, a 32-permutation
+    * MinHash folded into two-row bands — bit-identical to the SQL it
+    * replaces: per shingle `xxhash64(g) & 0xffffffff` (Spark's seed 42,
+    * so a null shingle hashes to 42), per permutation the min of
+    * `(h * a + b) % P32`, per band `xxhash64(m[2j], m[2j+1])` with
+    * Spark's chained seed. An empty set has no bands. One loop per row
+    * instead of a 32-way min aggregate over exploded shingles. */
+  def minhashBands(sh: ArrayData): ArrayData = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    val n = sh.numElements()
+    if (n == 0) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    val mins = Array.fill(32)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val h = if (sh.isNullAt(i)) 42L else {
+        val g = sh.getUTF8String(i)
+        XXH64.hashUnsafeBytes(g.getBaseObject, g.getBaseOffset, g.numBytes, 42L) & 0xffffffffL
+      }
+      var p = 0
+      while (p < 32) {
+        val m = (h * permA(p) + permB(p)) % P32
+        if (m < mins(p)) mins(p) = m
+        p += 1
+      }
+      i += 1
+    }
+    val out = new Array[Any](16)
+    var j = 0
+    while (j < 16) {
+      out(j) = org.apache.spark.sql.catalyst.InternalRow(
+        j, XXH64.hashLong(mins(2 * j + 1), XXH64.hashLong(mins(2 * j), 42L)))
+      j += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** The cid of the (d, cid)-least centroid of `cs`
+    * (ARRAY<STRUCT<cid BIGINT, cv ARRAY<DOUBLE>>>) for vector `v`, with
+    * d = round(l2sq(v, cv), 6) — what
+    * `array_min(transform(cs, c -> struct(round(graft_l2_sq(v, c.cv), 6), c.cid))).cid`
+    * gives, including its orderings: a null d or cid sorts first, NaN
+    * sorts last and equals NaN. So a null `v` (every d null) yields the
+    * least cid, and an empty `cs` yields null. */
+  def nearestCell(v: ArrayData, cs: ArrayData): java.lang.Long = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val n = cs.numElements()
+    var found = false
+    var bestD: java.lang.Double = null
+    var bestCid: java.lang.Long = null
+    var i = 0
+    while (i < n) {
+      var d: java.lang.Double = null
+      var cid: java.lang.Long = null
+      if (!cs.isNullAt(i)) {
+        val c = cs.getStruct(i, 2)
+        if (!c.isNullAt(0)) cid = c.getLong(0)
+        if (v != null && !c.isNullAt(1)) d = round6(l2sq(v, c.getArray(1)))
+      }
+      val byD =
+        if (d == null) { if (bestD == null) 0 else -1 }
+        else if (bestD == null) 1
+        else compareDoubles(d, bestD)
+      val less = byD < 0 || (byD == 0 && bestCid != null &&
+        (cid == null || cid < bestCid))
+      if (!found || less) {
+        found = true
+        bestD = d
+        bestCid = cid
+      }
+      i += 1
+    }
+    bestCid
+  }
+
+  /** Spark's `round(x, 6)` on a double: HALF_UP on the shortest decimal
+    * form; NaN and infinities pass through. */
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
   /** Random-hyperplane LSH bucket: bit j of the result is set iff
     * dot(planes[j], v) >= 0, dots accumulated left-to-right — replays
     *   aggregate(transform(sequence(0, n-1), j ->

@@ -43,59 +43,35 @@ object CorpusOps {
         "string key, or monotonically_increasing_id with a join back).")
   }
 
-  /** MinHash permutation constants (fixed seed; Spark-side only — the
-    * oracle never sees signatures, only the verified pair set). */
-  private val MinhashPerms: Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(42)
-    // a < 2^30 keeps a * h32 (h32 < 2^32) under 2^62 — no ANSI overflow.
-    Seq.fill(32)((rnd.nextInt(1 << 29).toLong * 2 + 1, rnd.nextInt(Int.MaxValue).toLong))
-  }
-  private val P32 = 4294967311L // prime > 2^32
-
-  /** doc_id + distinct 3-word shingles from any (doc_id, text) frame. */
-  private[graft] def shingleSets(docs: DataFrame): DataFrame =
+  /** doc_id + distinct 3-word shingles from any (doc_id, text) frame
+    * (one kernel call per row,
+    * [[graft.functions.PipelineKernels.wordShingles]]). */
+  private[graft] def shingleSets(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(docs.sparkSession)
     docs
       .withColumn("w", split(col("text"), " "))
       .where(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        array_distinct(expr(
-          "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("sh"))
-
-  /** (doc_id, bb) banded MinHash bucket keys of a shingle-set frame —
-    * 32 permutation mins folded into 16 two-row bands; docs with
-    * J >= 0.8 collide in some band with near-certainty (r=2, b=16: the
-    * miss probability at the observed J >= 0.98 dup pairs is ~1e-24).
-    * This IS the LSH index: at scale it is computed once and
-    * persisted, then self-joined (full dedup) or probed by a new batch
-    * (incremental dedup). */
-  private[graft] def bandBucketsOf(sets: DataFrame): DataFrame = {
-    val hashed = sets.select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .withColumn("h32", expr("xxhash64(shingle) & 4294967295"))
-    val sigCols = MinhashPerms.zipWithIndex.map { case ((a, b), i) =>
-      min((col("h32") * a + b) % P32).as(s"m$i")
-    }
-    val sigs = hashed.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until 16).map { j =>
-      struct(lit(j).as("band"), xxhash64(col(s"m${2 * j}"), col(s"m${2 * j + 1}")).as("bh"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
+      .select(col("doc_id"), call_function("graft_word_shingles", col("w")).as("sh"))
   }
 
-  /** Per-row MinHash signature (array of the 32 permutation mins) as one
-    * SQL expression over a shingle-array column `sh` — the map-only
-    * formulation of the signature aggregate for rows arriving on a
-    * stream. Identical constants and arithmetic to [[bandBucketsOf]]
-    * (xxhash64 & 2^32-1, a*h+b mod P over the same distinct shingles),
-    * so stream-computed and index-computed bucket keys collide
-    * identically. */
-  private[graft] val PerRowMinhashSql: String = MinhashPerms.map { case (a, b) =>
-    s"array_min(transform(sh, g -> ((xxhash64(g) & 4294967295) * $a + $b) % $P32))"
-  }.mkString("array(", ", ", ")")
+  /** A shingle-set frame plus `bands`, its 16 banded MinHash bucket
+    * keys from one per-row kernel call
+    * ([[graft.functions.PipelineKernels.minhashBands]]): 32 permutation
+    * mins folded into 16 two-row bands; docs with J >= 0.8 collide in
+    * some band with near-certainty (r=2, b=16: the miss probability at
+    * the observed J >= 0.98 dup pairs is ~1e-24). Map-only, so a batch
+    * index and a stream's rows compute identical keys. */
+  private[graft] def withBands(sets: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(sets.sparkSession)
+    sets.withColumn("bands", call_function("graft_minhash_bands", col("sh")))
+  }
 
-  /** Band keys over a 32-min signature column `ms` (same 16x2 banding
-    * and field types as [[bandBucketsOf]]). */
-  private[graft] val PerRowBandsSql: String =
-    "transform(sequence(0, 15), j -> named_struct('band', j, 'bh', xxhash64(ms[2*j], ms[2*j+1])))"
+  /** (doc_id, bb) banded MinHash bucket keys of a shingle-set frame —
+    * this IS the LSH index: at scale it is computed once and
+    * persisted, then self-joined (full dedup) or probed by a new batch
+    * (incremental dedup). */
+  private[graft] def bandBucketsOf(sets: DataFrame): DataFrame =
+    withBands(sets).select(col("doc_id"), explode(col("bands")).as("bb"))
 
   /** Verified near-duplicate pairs over 3-word shingles via
     * MinHash(32)+LSH(16x2) candidate banding and exact verification.
@@ -116,20 +92,18 @@ object CorpusOps {
     // lineage stops the self-join below from re-deriving each side.
     // Trade-off at cluster scale: no lineage means an executor loss costs
     // a stage retry from the checkpoint job instead of a partition
-    // recompute — acceptable for a 2-job window; a multi-hour pipeline
-    // would use reliable checkpointing to the DFS instead.
-    val sets = shingles.transform(Exec.barrier)
+    // recompute — acceptable for a 1-job window; a multi-hour pipeline
+    // would use reliable checkpointing to the DFS instead. The band keys
+    // are a per-row kernel, so they ride in the same barrier: the
+    // bucket self-join reads them, the verify join reads `sh`.
+    val sets = withBands(shingles).transform(Exec.barrier)
     // Candidate pairs via an equi-self-join on the bucket key. Unlike a
     // per-bucket collect_set + pair explosion (one task owns the whole
     // bucket; needs a cap that silently DROPS hot buckets), the join
     // produces the exact candidate set and a stop-shingle-skewed bucket
     // is split across tasks by AQE's skew-join handling — pathological
     // skew degrades speed, never results.
-    // Checkpointed so the 32xmin signature aggregate runs ONCE: Catalyst
-    // plans the two join sides independently (no ReusedExchange fires —
-    // one side is a broadcast, the other a hash exchange) and would
-    // otherwise recompute the whole shingle->hash->agg pipeline per side.
-    val bucketed = bandBucketsOf(sets).transform(Exec.barrier)
+    val bucketed = sets.select(col("doc_id"), explode(col("bands")).as("bb"))
     val cand = bucketed.as("x").join(bucketed.as("y"),
         col("x.bb") === col("y.bb") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")).distinct()
@@ -342,8 +316,9 @@ object CorpusOps {
     * (node -> label(label(node))), so convergence takes O(log diameter)
     * rounds instead of O(diameter) — a diameter-4096 path converges in
     * ~12 rounds. Labels only ever decrease, so the label sum strictly
-    * decreases until the fixpoint and a single 1-row aggregate is the
-    * convergence check. Runs to TRUE convergence; if the (absurd) round
+    * decreases until the fixpoint; that sum, observed on each round's
+    * own barrier job ([[Exec.observedBarrier]]), is the convergence
+    * check. Runs to TRUE convergence; if the (absurd) round
     * bound trips, it throws rather than return partial labels. The loop
     * sizes its own shuffles from the edge count
     * ([[Exec.loopPartitions]]).
@@ -353,23 +328,23 @@ object CorpusOps {
     requireIntegralId(pairs, c(0), "connectedComponents")
     requireIntegralId(pairs, c(1), "connectedComponents")
     val edges = pairs.select(col(c(0)).cast("long"), col(c(1)).cast("long")).toDF("ea", "eb")
-    val sym = edges.union(edges.select(col("eb"), col("ea"))).toDF("src", "dst").cache()
-    val nEdges = sym.count() // forces the cache; sizes the loop's shuffles
+    // the edge count sizes the loop's shuffles; it and every label sum
+    // below are observed on their barrier's own job, no extra action
+    val labelSum = coalesce(sum(col("label")), lit(0L))
+    val (sym, nEdges) = Exec.observedBarrier(
+      edges.union(edges.select(col("eb"), col("ea"))).toDF("src", "dst"), count(lit(1)))
     Exec.withShufflePartitions(sym.sparkSession, Exec.loopPartitions(nEdges)) {
     // Seed with round 1 computed as ONE keyed agg: starting from
     // labels(x) = x, the first propagation round's output is exactly
     // min(node, min neighbor) — so fold it into the seed (one shuffle)
     // instead of paying a full join round to derive it. Same label
     // sequence from here on, one fewer round.
-    var labels = sym.groupBy(col("src").as("node"))
-      .agg(least(col("src"), min(col("dst"))).as("label"))
-      .transform(Exec.barrier)
-    // prevSum = the seed's own sum (a 1-row agg over checkpointed
-    // blocks): labels only decrease, so an unchanged sum == fixpoint —
-    // seeding the comparison lets an already-converged seed (cliques,
-    // star-shaped dup clusters) exit after ONE join round, not two.
-    var prevSum = labels.selectExpr("coalesce(sum(label), 0) AS s")
-      .collect()(0).getLong(0)
+    // prevSum = the seed's own sum: labels only decrease, so an
+    // unchanged sum == fixpoint — seeding the comparison lets an
+    // already-converged seed (cliques, star-shaped dup clusters) exit
+    // after ONE join round, not two.
+    var (labels, prevSum) = Exec.observedBarrier(sym.groupBy(col("src").as("node"))
+      .agg(least(col("src"), min(col("dst"))).as("label")), labelSum)
     var converged = false
     var rounds = 0
     val MaxRounds = 64 // log2-scale: diameter would need to exceed 2^64
@@ -389,22 +364,19 @@ object CorpusOps {
       // (labels by node, edges∪chain by src; the min-agg reuses the
       // join's partitioning).
       val edgesAll = sym.union(labels.select(col("label").as("src"), col("node").as("dst")))
-      // localCheckpoint doubles as per-round lineage truncation: without
-      // it each round's plan nests the previous round's, and the driver
+      // the barrier doubles as per-round lineage truncation: without it
+      // each round's plan nests the previous round's, and the driver
       // pays quadratic planning time by round ~10. Superseded rounds'
       // blocks are freed by the ContextCleaner once unreferenced.
-      val propagated = edgesAll.join(labels, col("src") === col("node"))
-        .groupBy(col("dst").as("node")).agg(min(col("label")).as("label"))
-        .transform(Exec.barrier)
-      val sum0 = propagated.selectExpr("coalesce(sum(label), 0) AS s")
-        .collect()(0).getLong(0)
+      val (propagated, sum0) = Exec.observedBarrier(
+        edgesAll.join(labels, col("src") === col("node"))
+          .groupBy(col("dst").as("node")).agg(min(col("label")).as("label")), labelSum)
       labels.unpersist()
       labels = propagated
       converged = sum0 == prevSum
       prevSum = sum0
       rounds += 1
     }
-    sym.unpersist()
     labels
     } // withShufflePartitions
   }
@@ -894,9 +866,10 @@ object CorpusOps {
                     minCosine: Double = 0.9, probes: Int = 1): DataFrame = {
     requireIntegralId(embeddings, idCol, "semanticDedup")
     require(k >= 1, s"semanticDedup: k ($k) must be >= 1")
+    // an array cast, not transform(x -> cast(x as double)): the same
+    // element casts, but codegen'd, so the scan's stage stays whole
     val e = embeddings.select(
-      col(idCol).cast("long").as("vec_id"),
-      expr(s"transform(`${vecCol.replace("`", "``")}`, x -> cast(x as double))").as("v"))
+      col(idCol).cast("long").as("vec_id"), col(vecCol).cast("array<double>").as("v"))
     val dropped = semanticDropped(e, k, minCosine, probes)
       .select(col("dropped_id").as(idCol))
     embeddings.join(dropped, Seq(idCol), "left_anti")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Execution helpers the library operators share (and the gate
@@ -37,7 +37,7 @@ private[graft] object Exec {
     * testdata ships each table as one small single-row-group parquet
     * file, so every scan is one partition — fine for the projection
     * feeding an aggregate, but a pipeline whose scan stage carries
-    * real per-row work (shingle explode + 32-permutation hashing,
+    * real per-row work (shingling + 32-permutation hashing,
     * codecs) runs that work on ONE core. `maxPartitionBytes` cannot
     * split below a row group, so the fix is an explicit key-hash
     * repartition right after the read (guide §2.5: unsplittable input
@@ -85,4 +85,15 @@ private[graft] object Exec {
   def barrier(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
+
+  /** [[barrier]] that also returns `metric`, a long-valued aggregate
+    * over the materialized rows (a row count, a label sum), read
+    * through an `Observation` on the barrier's own job: no second
+    * action over the checkpointed blocks. Both checkpoint kinds run
+    * their plan exactly once, so each row is observed once. */
+  def observedBarrier(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val out = barrier(df.observe(obs, metric.as("m")))
+    (out, obs.get("m").asInstanceOf[Long])
+  }
 }

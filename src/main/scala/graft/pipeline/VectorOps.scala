@@ -431,7 +431,7 @@ object VectorOps {
         .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("cid", "dim").agg(round(avg(col("x")), 9).as("m"))
         .groupBy("cid")
-        .agg(expr("transform(array_sort(collect_list(struct(dim, m))), p -> p.m)").as("cv"))
+        .agg(expr("array_sort(collect_list(struct(dim, m))).m").as("cv"))
     // barrier: c1 is consumed by the final assignment AND by callers
     // joining centroid stats — without it the corpus-wide centroid
     // aggregation (a full pass over the assigned corpus) re-derives
@@ -442,8 +442,8 @@ object VectorOps {
 
   /** Nearest-cell assignment of (vec_id, v) rows against a (cid, cv)
     * centroid frame — the shared map-only kernel: centroids pack into
-    * ONE broadcast row; probes = 1 takes the argmin inside a single
-    * expression, probes > 1 slices the same (d, cid)-sorted list and
+    * ONE broadcast row; probes = 1 takes the argmin in one native
+    * kernel call (graft_nearest_cell), probes > 1 slices the same (d, cid)-sorted list and
     * explodes one row per (vector, cell). Distances round to 6 so the
     * DuckDB oracle's row_number tie-break replays identically. */
   private[graft] def assignTo(e: DataFrame, centroids: DataFrame,
@@ -461,17 +461,20 @@ object VectorOps {
     val dExpr = "round(graft_l2_sq(v, c.cv), 6) AS d, c.cid AS cid"
     val packed = centroids.agg(expr("collect_list(struct(cid, cv))").as("cs"))
     val scored = e.crossJoin(broadcast(packed))
-    val withBest =
-      if (probes == 1)
-        scored.withColumn("best", expr(s"array_min(transform(cs, c -> struct($dExpr)))"))
+    // probes = 1: graft_nearest_cell is the argmin loop of
+    // array_min(transform(cs, c -> struct($dExpr))).cid, with its
+    // (d, cid) order and null semantics, without the interpreted lambda
+    val withCid =
+      if (probes == 1) scored.withColumn("cid", expr("graft_nearest_cell(v, cs)"))
       else
         scored.withColumn("best", explode(expr(
           s"slice(array_sort(transform(cs, c -> struct($dExpr))), 1, $probes)")))
+          .withColumn("cid", col("best.cid"))
     // carry every input column through (not just vec_id + v): callers
     // that thread payload columns alongside the vector (e.g. the radius
     // family's original-scale vectors) keep them without re-joining the
     // corpus by id after assignment
-    withBest.select(col("best.cid").as("cid") +: e.columns.map(col): _*)
+    withCid.select(col("cid") +: e.columns.map(col): _*)
   }
 
   /** Sign of hyperplane `j` in dimension `d`: the md5 parity of

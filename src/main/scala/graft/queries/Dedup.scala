@@ -9,10 +9,10 @@ import graft.pipeline.{CorpusOps, Exec}
   *
   *  - exact:   one groupBy on a content hash — single shuffle, partial
   *             aggregation map-side.
-  *  - MinHash+LSH: per-doc signatures are a single groupBy over exploded
-  *             shingles (map-side partial min); banding turns the O(n^2)
-  *             pair space into per-bucket joins, and only LSH candidates
-  *             are verified exactly. This is the scale path.
+  *  - MinHash+LSH: per-doc band keys come from one per-row kernel
+  *             (no shuffle); banding turns the O(n^2) pair space into
+  *             per-bucket joins, and only LSH candidates are verified
+  *             exactly. This is the scale path.
   *  - SimHash: per-doc 32-bit sketch via higher-order functions (no
   *             shuffle at all until the pair join).
   *  - n-gram Jaccard (exhaustive) and embedding cosine: exact quadratic
@@ -54,10 +54,11 @@ object Dedup {
     * sets, banded LSH buckets, and content hashes — what an incremental
     * (batch or streaming) delta probes against. */
   private[graft] def corpusDedupIndex(corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    // spread: signature hashing runs in the corpus scan stage
+    // spread: shingling and band hashing run in the corpus scan stage
     val c = Exec.spread(corpus, "doc_id")
-    val sets = CorpusOps.shingleSets(c).transform(Exec.barrier)
-    val buckets = CorpusOps.bandBucketsOf(sets).transform(Exec.barrier)
+    val sets = CorpusOps.withBands(CorpusOps.shingleSets(c)).transform(Exec.barrier)
+    val buckets = sets.select(col("doc_id"), explode(col("bands")).as("bb"))
+      .transform(Exec.barrier)
     val hashes = corpus
       .select(col("doc_id"), md5(col("text").cast("binary")).as("mh"))
       .transform(Exec.barrier)

@@ -246,12 +246,11 @@ object StreamingQ {
     // are probed against the PERSISTED corpus index (shingle sets, LSH
     // buckets, content hashes — materialized once, reused every
     // micro-batch). Everything on the stream side is per-row map work:
-    // the 32-min MinHash signature folds inside one expression (no
-    // signature aggregate, so NO streaming state anywhere — no
-    // watermark, no state store; stream-static inner joins are
-    // stateless), and the per-row band keys collide with the index's
-    // batch-computed keys because the arithmetic is shared
-    // (CorpusOps.PerRowMinhashSql). The delta is staged as two mtime-ordered
+    // the band keys come from one per-row kernel call (no signature
+    // aggregate, so NO streaming state anywhere — no watermark, no
+    // state store; stream-static inner joins are stateless), and they
+    // collide with the index's batch-computed keys because both sides
+    // call the same kernel (CorpusOps.withBands). The delta is staged as two mtime-ordered
     // files so matches provably emit across separate micro-batches; the
     // oracle is the same exhaustive cross-set scan as dedup_incremental
     // — streaming must find exactly the batch answer.
@@ -272,9 +271,8 @@ object StreamingQ {
         val stream = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(staged.toString)
-        val near = CorpusOps.shingleSets(stream)
-          .withColumn("ms", expr(CorpusOps.PerRowMinhashSql))
-          .withColumn("bb", explode(expr(CorpusOps.PerRowBandsSql)))
+        val near = CorpusOps.withBands(CorpusOps.shingleSets(stream))
+          .withColumn("bb", explode(col("bands")))
           .select(col("doc_id").as("batch_id"), col("sh"), col("bb"))
           .join(bucketsC.select(col("doc_id").as("corpus_id"), col("bb")), Seq("bb"))
           .join(setsC.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),

@@ -119,6 +119,11 @@ object VcfFormat extends GraftFormat {
     }
   }
 
+  /** Sample columns are declared by the #CHROM header line: 9th field
+    * is FORMAT, the rest are sample names -> raw genotype strings. */
+  private def hasSamples(header: Seq[String]): Boolean =
+    header.lastOption.filter(_.startsWith("#CHROM")).exists(_.split("\t").length > 8)
+
   private def headerOf(path: Path, conf: Configuration,
                        options: Map[String, String]): Seq[String] = {
     val raw = GraftFiles.open(path.toString, conf)
@@ -132,7 +137,13 @@ object VcfFormat extends GraftFormat {
 
   override def schema(paths: Seq[Path], conf: Configuration,
                       options: Map[String, String]): StructType = {
-    val header = headerOf(paths.head, conf, options)
+    // the writer takes a part's sample count from its first record, so a
+    // header-only part (partition 0 of a write whose rows all sit in
+    // other tasks) declares none: take the first header that declares
+    // samples, reading further parts only while none has
+    val headers = paths.iterator.map(headerOf(_, conf, options))
+    val first = headers.next()
+    val header = if (hasSamples(first)) first else headers.find(hasSamples).getOrElse(first)
     val infos = parseHeaderInfo(header.filter(_.startsWith("##")))
     val infoStruct = StructType(infos.map(f =>
       StructField(f.id.toLowerCase, f.sparkType)))
@@ -145,13 +156,8 @@ object VcfFormat extends GraftFormat {
       StructField("qual", FloatType),
       StructField("filter", StringType),
       StructField("info", infoStruct))
-    // sample columns are declared by the #CHROM header line: 9th field
-    // is FORMAT, the rest are sample names -> raw genotype strings
-    val hasSamples = header.lastOption
-      .filter(_.startsWith("#CHROM"))
-      .exists(_.split("\t").length > 8)
     StructType(
-      if (hasSamples)
+      if (hasSamples(header))
         base ++ (Seq(StructField("format", StringType),
           StructField("genotypes", ArrayType(StringType))) ++
           typedGenotypesSchema(header.filter(_.startsWith("##"))))

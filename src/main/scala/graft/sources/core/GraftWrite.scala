@@ -192,7 +192,8 @@ sealed trait GraftStagedWrite {
     catch { case _: Exception => }
 }
 
-/** DSv2 BatchWrite: one part file per task partition, optional
+/** DSv2 BatchWrite: one part file per task partition that holds rows
+  * (and always one for partition 0), optional
   * compression via the `compression` option ("gzip" | "bgzf" | "zstd",
   * [[WriteSettings]]).
   * Distributed by construction — each executor streams its partition to
@@ -444,11 +445,12 @@ final case class GraftWriterFactory(formatter: RecordFormatter, schema: StructTy
 
     new DataWriter[InternalRow] {
       private val streams = scala.collection.mutable.LinkedHashMap.empty[String, Sink]
-      // without partitionBy every record has the key "" and its stream
-      // opens now, so a zero-record task still commits an EMPTY part
-      // file — an overwrite with an empty frame must leave a readable
-      // (0-row) target, not a missing directory
-      if (partCols.isEmpty) streams("") = openStream("")
+      // streams open on their first record, so a task without rows
+      // commits no file — except partition 0 without partitionBy, which
+      // opens its stream now: Spark runs partition 0 even for an empty
+      // input, and an overwrite with an empty frame must leave a
+      // readable (0-row) target, not a missing directory
+      if (partCols.isEmpty && partitionId == 0) streams("") = openStream("")
       override def write(record: InternalRow): Unit = {
         val k = keyOf(record)
         writeRecord(streams.getOrElseUpdate(k, openStream(k)), record)

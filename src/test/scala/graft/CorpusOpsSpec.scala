@@ -34,6 +34,57 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
   }
 
+  test("connectedComponents runs barrier jobs only: edge count and label sums are observed on them") {
+    import org.apache.spark.sql.{DataFrame, Observation}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(f -> qe)
+    }
+    /** The actions since the last call, in order. Listener events
+      * arrive asynchronously but in order, so every action before a
+      * marker action's event is one of them. */
+    def drain(): Seq[String] = {
+      val marker = spark.range(1).observe(Observation(), count(lit(1)).as("n"))
+      marker.collect()
+      Iterator.continually(seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(e => e != null && (e._2 ne marker.queryExecution)).map(_._1).toList
+    }
+    def actionsOf(pairs: DataFrame): (Seq[String], DataFrame) = {
+      drain()
+      val labels = graft.pipeline.CorpusOps.connectedComponents(pairs)
+      (drain(), labels)
+    }
+    val clique = spark.range(6).crossJoin(spark.range(6).toDF("b"))
+      .where(col("id") < col("b")).toDF("a", "b")
+    val chain = spark.range(0, 2000).selectExpr("id AS id_a", "id + 1 AS id_b")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    spark.listenerManager.register(listener)
+    try {
+      for (reliable <- Seq(false, true)) {
+        if (reliable) spark.sparkContext.setCheckpointDir(ckpt)
+        val want = if (reliable) "checkpoint" else "localCheckpoint"
+        val (cliqueActions, cl) = actionsOf(clique)
+        // sym, seed, and one round that finds the seed already converged
+        assert(cliqueActions == Seq.fill(3)(want), s"clique, $want")
+        val c = cl.agg(count(lit(1)), countDistinct(col("label")), max(col("label"))).collect()(0)
+        assert((c.getLong(0), c.getLong(1), c.getLong(2)) == (6L, 1L, 0L))
+        val (chainActions, ch) = actionsOf(chain)
+        assert(chainActions.nonEmpty && chainActions.forall(_ == want),
+          s"chain, $want: ${chainActions.mkString(", ")}")
+        val r = ch.agg(min(col("label")), max(col("label")), count(lit(1))).collect()(0)
+        assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (0L, 0L, 2001L))
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sparkContext.setCheckpointDir(null)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
+
   test("canonicalPerCluster keeps the best-quality member, singletons untouched") {
     import spark.implicits._
     val docs = Seq(

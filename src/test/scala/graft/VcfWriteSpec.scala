@@ -138,6 +138,39 @@ class VcfWriteSpec extends AnyFunSuite {
       Seq("chrom", "pos", "id", "ref", "alt", "qual", "filter", "info"))
   }
 
+  test("tasks without rows commit no part file, partition 0 always does; reads back through the .tbi") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-vcfw5").toString
+    val orig = GraftIO.read_vcf_file_records(spark, s"$F/samples.vcf")
+    val recs = orig.collect().sortBy(_.getAs[Long]("pos")).toSeq
+    // 4 write tasks; every record sits in partition 2
+    val rdd = spark.sparkContext.parallelize(0 until 4, 4)
+      .mapPartitionsWithIndex((i, _) => if (i == 2) recs.iterator else Iterator.empty)
+    spark.createDataFrame(rdd, orig.schema).write.mode("overwrite")
+      .option("compression", "bgzf").option("index", "tabix")
+      .format("vcf").save(dir)
+    def names(ext: String) = new java.io.File(dir).listFiles.map(_.getName)
+      .filter(_.endsWith(ext)).map(_.take("part-00000".length)).sorted.toSeq
+    assert(names(".vcf.gz") == Seq("part-00000", "part-00002"))
+    assert(names(".vcf.gz.tbi") == Seq("part-00000", "part-00002"))
+    // part-00000 is header-only, so it declares no samples; the
+    // directory's schema still carries them (from part-00002)
+    val cols = Seq("chrom", "pos", "ref", "format", "genotypes")
+    val back = GraftIO.read_vcf_file_records(spark, dir)
+    assert(back.schema == orig.schema)
+    assert(rows(back, cols: _*) == rows(orig, cols: _*))
+    // and through the .tbi sidecars
+    assert(rows(GraftIO.vcf_query(spark, dir, "1"), cols: _*) == rows(orig, cols: _*))
+    // an empty overwrite still leaves one readable, header-only part
+    orig.where("pos < 0").repartition(4).write.mode("overwrite")
+      .option("compression", "bgzf").option("index", "tabix")
+      .format("vcf").save(dir)
+    assert(names(".vcf.gz") == Seq("part-00000"))
+    val empty = GraftIO.read_vcf_file_records(spark, dir)
+    assert(empty.count() == 0)
+    assert(empty.schema.fieldNames.take(8).toSeq ==
+      Seq("chrom", "pos", "id", "ref", "alt", "qual", "filter", "info"))
+  }
+
   test("'.' is the missing Integer/Float INFO value, as a scalar and as a list element") {
     val src = java.nio.file.Files.createTempDirectory("graft-vcfmiss")
     java.nio.file.Files.write(src.resolve("m.vcf"), ("##fileformat=VCFv4.2\n" +
